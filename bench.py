@@ -82,10 +82,8 @@ PINS = {
     # baseline (2026-08-17, dedicated session, n=5, cold dropped): warm
     # median 2.02, floor 1.75; full-session runs ~10-25% above isolated.
     "dedup_minhash_fast": 3.0,              # r13 idle warm 2.02
-    # stamp proof pair: the distributed gate must beat the serial twin at
-    # 2M rows. Round-11 isolated pair: gate 6.98 / serial 9.45 (the
-    # serial floor — its isolated warm runs 8.8-9.8; round-10 full-
-    # session 11.26 was aged). gate pin covers full-session aging.
+    # 2M-row emission stamp (serial window + dense output path); the pin
+    # covers full-session aging.
     "stamp_2m_gate_default": 10.5,          # warm 6.98 (r10 full 9.58)
     # Suite-total tripwire (round-11 verdict ask #5; renamed from
     # headline_queries_total per ADVICE r12 — the sum spans EVERY timed
@@ -638,19 +636,30 @@ def _recheck_missed_pins(pin_report: dict) -> dict:
             capture_output=True, text=True,
             timeout=300 + 240 * len(missed),
         )
+        skipped = []
         for line in proc.stdout.splitlines():
             line = line.strip()
             if not line.startswith("{"):
                 continue
-            rec = json.loads(line)
-            name = rec.pop("entry")
-            rec["pin"] = PINS[name]
-            rec["hit"] = rec["warm_median"] <= PINS[name]
-            out[name] = rec
+            # One malformed line (no entry, no warm_median, an entry not
+            # in PINS, bad JSON) is skipped and recorded, never fatal.
+            try:
+                rec = json.loads(line)
+                name = rec.pop("entry")
+                pin = PINS[name]
+                hit = rec["warm_median"] <= pin
+            except (ValueError, KeyError, TypeError) as e:
+                skipped.append(f"{type(e).__name__}: {e}: {line[:200]}")
+                continue
+            out[name] = {**rec, "pin": pin, "hit": hit}
+        for line in skipped:
+            print(f"pin_miss_recheck skipped line: {line}", file=sys.stderr)
         for name in missed:
             if name not in out:
                 tail = (proc.stderr or "")[-300:]
                 out[name] = {"error": f"no recheck result (rc={proc.returncode}): {tail}"}
+                if skipped:
+                    out[name]["skipped_lines"] = skipped
     except (OSError, subprocess.TimeoutExpired, ValueError) as e:
         for name in missed:
             out.setdefault(name, {"error": f"{type(e).__name__}: {e}"})
@@ -897,16 +906,8 @@ def main() -> None:
             # Mid-chain emission-order stamp under state >> slice:
             # continuous agg over the 1M-row events ledger (100k keys) ->
             # plain projection, 3 invocations; each invocation stamps the
-            # ~100-200k-row correction stream. PIN: <= 5.5 s (round-8
-            # measured 4.9 single-partition). The distributed stamp
-            # (range partition + per-partition offset bases, forced via
-            # spark.kamu.stampDistributedMinRows=0) measured 6.6 s at
-            # this emission scale — its extra shuffle + Arrow stage only
-            # amortize at million-row emissions (see the stamp_2m_*
-            # proof pair below), hence the 1M-row default gate — which
-            # since round 9 reads the EMISSION frame's own count, not
-            # input bytes — keeping small emissions on the lazy
-            # single-partition window.
+            # ~100-200k-row correction stream with the single-partition
+            # window. PIN: <= 5.5 s (round-8 measured 4.9).
             ("stress_changelog_stamp_x10_3inv", CHANGELOG_STAMP_STEPS, ev_invs),
             # Changelog as-of at state >> slice: a 100k-key continuous
             # aggregate's correction stream maintains the versioned view,
@@ -941,28 +942,13 @@ def main() -> None:
             timings[tag], runs = _median_runs(_one_stress)
             print(f"{tag}: {timings[tag]}s (runs: {runs})", file=sys.stderr)
 
-        # Distributed emission-stamp proof: a ~2M-row emission (every
-        # input row its own group key, events x20) feeding a projection
-        # crosses the spark.kamu.stampDistributedMinRows=1M default, so
-        # the DEFAULT gate range-partitions the stamp; the
-        # *_serial_forced twin pins the single-partition window on the
-        # identical workload. Round-9 calibration on an idle box (n=3
-        # medians): serial/distributed = 5.6/4.7 s at 1M rows, 11.6/8.8
-        # at 2M, 17.0/11.9 at 4M — distributed wins at and above the 1M
-        # default, while the ~150k-row emissions of
-        # stress_changelog_stamp_x10_3inv stay on the serial path it
-        # loses at (4.9 vs 6.6 s, round-8 measurement). Round-10
-        # re-calibration (dedicated session, warm): distributed 9.4 /
-        # serial 10.6 at 2M — direction confirmed. Round-11 idle-box
-        # pair (n=4, cold dropped): gate 6.98 / serial 9.45 — the gate
-        # wins 26% on a clean twin; round-10's full-session serial 11.26
-        # was aged, not a serial regression. Gate PIN <= 10.5 (PINS
-        # table); the serial twin stays unpinned as the diagnostic
-        # floor (isolated warm 8.8-9.8). CAUTION: a host
-        # CPU-steal window (load avg << nproc during a saturating run)
-        # inflates and can even INVERT this pair; re-probe with a known
-        # entry (dedup_minhash warm ~2.5 s healthy) before reading a
-        # full-bench number from such a window as real.
+        # Emission-stamp scale entry: a ~2M-row emission (every input row
+        # its own group key, events x20) feeding a projection, stamped by
+        # the serial window and written through the dense output path.
+        # PIN <= 10.5 (PINS table). CAUTION: a host CPU-steal window (load
+        # avg << nproc during a saturating run) inflates this entry;
+        # re-probe with a known entry (dedup_minhash warm ~2.5 s healthy)
+        # before reading a full-bench number from such a window as real.
         from pyspark.sql import functions as BF
 
         from kamu_engine_flink_spark.sinks.parquet import write_single_parquet
@@ -998,24 +984,15 @@ def main() -> None:
             (None, "SELECT event_time, k, s FROM g"),
         ]
         stamp_invs = [[("a", stamp_path, stamp_wm)]]
-        for tag, forced in (
-            ("stamp_2m_gate_default", None),
-            ("stamp_2m_serial_forced", str(1 << 60)),
-        ):
-            if forced is not None:
-                spark.conf.set("spark.kamu.stampDistributedMinRows", forced)
-            try:
-                rep_seq = iter(range(SUBSEC_REPS))
-                timings[tag], runs = _median_runs(
-                    lambda tag=tag: _stress_transform_x10(
-                        spark, stamp_invs, STAMP2M_STEPS, workdir,
-                        f"{tag}-r{next(rep_seq)}",
-                    )
-                )
-            finally:
-                if forced is not None:
-                    spark.conf.unset("spark.kamu.stampDistributedMinRows")
-            print(f"{tag}: {timings[tag]}s (runs: {runs})", file=sys.stderr)
+        tag = "stamp_2m_gate_default"
+        rep_seq = iter(range(SUBSEC_REPS))
+        timings[tag], runs = _median_runs(
+            lambda: _stress_transform_x10(
+                spark, stamp_invs, STAMP2M_STEPS, workdir,
+                f"{tag}-r{next(rep_seq)}",
+            )
+        )
+        print(f"{tag}: {timings[tag]}s (runs: {runs})", file=sys.stderr)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -1064,21 +1041,6 @@ def main() -> None:
         "queries": timings,
         "sf": sf_num,
         "pins": pin_report,
-        # Round-13 semantics fix (measurement, not workload): the flag
-        # asserted the DEFAULT gate strictly beats the forced-serial
-        # twin. Since the dense-seq output fast path landed, the default
-        # gate CHOOSES the serial+dense plan for this chain shape at 2M
-        # rows (engine/transform._dense_chain_to_output) — both twins
-        # now run the same optimal plan and a strict < is a jitter coin
-        # flip. The flag now asserts the default is never WORSE than the
-        # forced twin beyond a 10% jitter band, which is the property
-        # the pair exists to prove.
-        "stamp_gate_wins": (
-            timings.get("stamp_2m_gate_default") is not None
-            and timings.get("stamp_2m_serial_forced") is not None
-            and timings["stamp_2m_gate_default"]
-            <= 1.10 * timings["stamp_2m_serial_forced"]
-        ),
         "pin_miss_recheck": pin_miss_recheck,
     }
     # The full per-query map (~60 keys) grew past the driver's stdout
@@ -1128,7 +1090,6 @@ def main() -> None:
         "pins_missed": sorted(
             k for k, v in pin_report.items() if not v["hit"]
         ),
-        "stamp_gate_wins": detail["stamp_gate_wins"],
         "detail": "BENCH_DETAIL.json",
     }
     if pin_miss_recheck:

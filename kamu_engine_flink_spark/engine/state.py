@@ -274,13 +274,12 @@ class StateStore:
         self._written.add(f"{name}.parquet")
 
     def _num_buckets(self) -> int:
-        # One implementation of parse-with-fallback (ADVICE r13): the
-        # bucket-count conf falls back to the session's shuffle partition
-        # count, itself read with the same two-arg no-exception form.
+        # The bucket-count conf falls back to the session's shuffle
+        # partition count, read only when that fallback is needed.
         return conf_int(
             self.spark,
             _NUM_BUCKETS_CONF,
-            conf_int(self.spark, "spark.sql.shuffle.partitions", 32),
+            lambda: conf_int(self.spark, "spark.sql.shuffle.partitions", 32),
         )
 
     def _compact_after(self) -> int:

@@ -32,6 +32,7 @@ import os
 import re
 from datetime import datetime
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -51,7 +52,6 @@ from ..operators import (
     window_join,
 )
 from ..operators.base import StepContext, StepResult
-from ..session import conf_int
 from ..plans import classify as C
 from ..plans import multi_join as MJ
 from ..protocol.model import (
@@ -68,135 +68,14 @@ from .state import StateStore
 
 SEQ = "__seq"
 
-# Below this many input-slice bytes the mid-chain emission-order stamp
-# stays a single-partition window (lazy, zero extra jobs — right for the
-# small per-invocation emissions of most chains); above it, the stamp
-# range-partitions so a multi-million-row correction stream feeding a
-# projection never serializes through one task.
-# The distributed emission stamp pays a range-partition sampling pass and
-# a per-partition-count collect; the single-partition window stamp pays a
-# one-partition sort of the whole emission. The gate reads the EMISSION
-# frame's own row count (the input slice is no proxy: a join blow-up or a
-# wide correction stream can amplify a small slice into a multi-million-row
-# emission, which is exactly the case the distributed path exists for).
-# Default threshold measured on local[32] at bench scale: the
-# single-partition sort still wins at ~200k rows (4.9 s vs 6.6 s,
-# bench.py stress_changelog_stamp entry) and loses by ~2x at ~4M rows
-# (bench.py stamp_dist_crossover entry); 1M sits at the measured
-# crossover.
-_STAMP_DIST_CONF = "spark.kamu.stampDistributedMinRows"
-_STAMP_DIST_DEFAULT = 1_000_000
-# When the chain provably ends in the dense output fast path
-# (_dense_chain_to_output), the serial stamp is kept at ANY emission size
-# with NO gate materialization while this conf is UNSET (the default; see
-# the fast-path branch in execute_transform) — its single serial pass
-# replaces BOTH serial passes of the windowed path, and the distributed
-# alternatives re-measured SLOWER even at 2M rows (r14 interleaved A/B:
-# serial 4.25 s vs range+coalesce 4.91 vs cached JVM-stamp 4.83; the
-# one-task encode of the single-file contract dominates and the
-# alternatives add a sampling pass / cache cycle on top). SETTING the
-# conf restores the counted gate, with this constant as the fallback cap
-# only when the set value fails int() parsing — the escape hatch for a
-# real cluster where one task's n log n sort eventually loses.
-_STAMP_DENSE_SERIAL_CONF = "spark.kamu.stampDenseSerialMaxRows"
-_STAMP_DENSE_SERIAL_DEFAULT = 4_000_000
-
-
-def _stamp_emission_seq(spark, df, order_cols, pinned, persisted=False):
-    """Distributed emission-order stamp: range-partition on order_cols
-    (partitions come out globally ordered) + in-partition sort, derive
-    per-partition base offsets from a prefix sum over the (tiny)
-    per-partition counts, and add base + position in one Arrow pass —
-    the sink's partitioned-ledger trick (sinks/parquet.py:84-123)
-    applied mid-chain. Same order as the single-partition window stamp;
-    ties across a range boundary can land on either side, which is the
-    existing contract (equal tuples are interchangeable)."""
-    from pyspark import StorageLevel
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    # Pin the emission BEFORE range partitioning: the range partitioner's
-    # sampling pass would otherwise recompute the whole upstream (state
-    # union + fold) a second time. (Skipped when the caller's gate
-    # already pinned and counted the frame.)
-    if not persisted:
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        pinned.append(df)
-    n = spark.sparkContext.defaultParallelism
-    ordered = df.repartitionByRange(
-        n, *[F.col(c).asc() for c in order_cols]
-    ).sortWithinPartitions(*[F.col(c).asc() for c in order_cols])
-    tagged = ordered.withColumn("__pid", F.spark_partition_id()).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    pinned.append(tagged)
-    counts = {
-        r["__pid"]: r["cnt"]
-        for r in tagged.groupBy("__pid")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
-    }
-    base, acc = {}, 0
-    for pid in sorted(counts):
-        base[pid] = acc
-        acc += counts[pid]
-    # Not explicitly destroyed: the stamped frame is consumed lazily by
-    # later steps/output, so the broadcast must outlive this function;
-    # it is unreferenced after the invocation and GC'd with the plan.
-    bbase = spark.sparkContext.broadcast(base)
-    has_seq = SEQ in df.columns
-
-    def stamp(it):
-        # Per-pid cursors, re-seeded from the broadcast base whenever the
-        # pid changes: a downstream coalesce(1) (the dense-seq output fast
-        # path) fuses this pass into one task that iterates SEVERAL range
-        # partitions, and an Arrow batch can even straddle two of them —
-        # so seq values derive from each row's own pid run, never from
-        # "the task's partition".
-        import numpy as np
-
-        cur_pid, cursor = None, 0
-        for pdf in it:
-            if not len(pdf):
-                continue
-            pids = pdf["__pid"].to_numpy()
-            seqs = np.empty(len(pdf), dtype="int64")
-            bounds = [0, *(np.flatnonzero(np.diff(pids)) + 1), len(pdf)]
-            for s, e in zip(bounds, bounds[1:]):
-                pid = int(pids[s])
-                if pid != cur_pid:
-                    cur_pid, cursor = pid, bbase.value[pid]
-                seqs[s:e] = np.arange(cursor, cursor + (e - s))
-                cursor += e - s
-            out = pdf.drop(columns="__pid")
-            # Overwrites in place when __seq already exists (re-stamp of a
-            # forwarded ledger offset), appends otherwise — either way the
-            # column ORDER matches `schema` below, so star expansion over
-            # the alias view is unchanged.
-            out[SEQ] = seqs
-            yield out
-
-    fields = [
-        StructField(f.name, LongType(), True) if f.name == SEQ else f
-        for f in df.schema.fields
-    ]
-    if not has_seq:
-        fields.append(StructField(SEQ, LongType(), True))
-    return tagged.mapInPandas(stamp, StructType(fields))
-
 
 def _dense_chain_to_output(alias: str, later_steps, all_names: set) -> bool:
     """True when `alias` provably reaches the FINAL step through pure 1:1
     projections only — the shape where the dense output fast path
-    (_assemble_output) fires. The stamp gate then keeps the SERIAL stamp
-    at ANY emission size: the chain's one unavoidable serial pass (the
-    stamp, folded into the write task's lineage) replaces BOTH serial
-    passes of the windowed path, and beats the distributed stamp + serial
-    windowed assembly (measured on the 2M-row stamp_2m twins: serial+
-    dense 7.6 s vs distributed+windowed 9.2 s; the crossover the 1M size
-    gate encodes only exists when the output pass cannot be skipped).
+    (_assemble_output) fires. The emission is then computed exactly once,
+    inside the one output job, so the stamp needs no pin and no count.
     Conservative: a second consumer, a name rebind, or any
-    non-pure-projection hop returns False — the size gate then decides
-    as before."""
+    non-pure-projection hop returns False."""
     cur = alias
     for j, s2 in enumerate(later_steps):
         refs2 = C.referenced_views(s2.query, all_names)
@@ -492,105 +371,20 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                         for s2 in steps[i + 1 :]
                     )
                 ):
-                    dist_min = conf_int(
-                        spark, _STAMP_DIST_CONF, _STAMP_DIST_DEFAULT
-                    )
-                    dense_cap_raw = spark.conf.get(
-                        _STAMP_DENSE_SERIAL_CONF, None
-                    )
-                    if dist_min <= 0:
-                        # Forced distributed (tests / calibration).
-                        adf = _stamp_emission_seq(
-                            spark, adf, result.order_cols, pinned
-                        )
-                    elif dense_cap_raw is None and _dense_chain_to_output(
+                    if not _dense_chain_to_output(
                         step.alias, steps[i + 1 :], all_names
                     ):
-                        # Provably dense chain (single consumer, pure 1:1
-                        # projections to the FINAL step): serial stamp with
-                        # NO gate materialization — skip the persist and
-                        # the count entirely. The gate exists to choose
-                        # serial vs distributed by size, but for a dense
-                        # chain the distributed variant cannot win at ANY
-                        # size: its output pass (not dense-marked, see the
-                        # serial-branch note below) still ends in the same
-                        # one-task sort-by-__seq + encode + single-file
-                        # write that the serial stamp's one task performs —
-                        # a strict superset of work (range shuffle + Arrow
-                        # stamp + persist on top). The old 4M cap was
-                        # extrapolated from the PRE-dense r9 calibration,
-                        # where the serial path paid the windowed output
-                        # pass twice; with the dense output path that
-                        # second pass does not exist. Setting
-                        # spark.kamu.stampDenseSerialMaxRows restores the
-                        # counted gate (tests force tiny caps; a real
-                        # cluster can re-enable the escape hatch). Single
-                        # consumer means the un-persisted emission is
-                        # computed exactly once, inside the one output job
-                        # — the persist here was a pure cache-write cost
-                        # (~1.5 s of the 2M-row stamp twin's 8.3 s).
-                        w = Window.partitionBy(F.lit(0)).orderBy(
-                            *[F.col(c).asc() for c in result.order_cols]
-                        )
-                        adf = adf.repartition(1).withColumn(
-                            SEQ, (F.row_number().over(w) - 1).cast("long")
-                        )
-                        dense_views.add(step.alias)
-                    else:
-                        # Gate on the emission frame ITSELF: pin it and
-                        # count. The pin is not overhead — both stamp
-                        # paths re-read the frame (the window stamp's
-                        # one-partition sort would otherwise recompute
-                        # the whole upstream state union + fold), and
-                        # the count is then a cached-partition scan.
-                        from pyspark import StorageLevel
-
+                        # Read concurrently by flush_deferred's state-save and output jobs.
                         adf = adf.persist(StorageLevel.MEMORY_AND_DISK)
                         pinned.append(adf)
-                        n_rows = adf.count()
-                        # A chain that provably ends in the dense output
-                        # fast path raises the serial stamp's crossover:
-                        # its one serial pass replaces BOTH serial passes
-                        # of the windowed path (measured on the 2M-row
-                        # stamp_2m twins: serial+dense 7.6 s vs
-                        # distributed+windowed-output 9.2 s). This counted
-                        # path only runs for dense chains when the cap
-                        # conf is explicitly set (see the fast path above);
-                        # the cap then returns huge emissions to the
-                        # distributed stamp.
-                        try:
-                            dense_cap = int(dense_cap_raw)
-                        except (TypeError, ValueError):
-                            dense_cap = _STAMP_DENSE_SERIAL_DEFAULT
-                        if n_rows >= dist_min and not (
-                            n_rows < dense_cap
-                            and _dense_chain_to_output(
-                                step.alias, steps[i + 1 :], all_names
-                            )
-                        ):
-                            adf = _stamp_emission_seq(
-                                spark, adf, result.order_cols, pinned,
-                                persisted=True,
-                            )
-                        else:
-                            w = Window.partitionBy(F.lit(0)).orderBy(
-                                *[F.col(c).asc() for c in result.order_cols]
-                            )
-                            adf = adf.repartition(1).withColumn(
-                                SEQ, (F.row_number().over(w) - 1).cast("long")
-                            )
-                            # Only the SERIAL stamp marks the alias dense.
-                            # The distributed stamp's seq is equally dense,
-                            # but letting the output fast path skip its
-                            # final sort would make the sink's coalesce(1)
-                            # fuse the stamp's mapInPandas into the single
-                            # write task — a serial Arrow round trip of
-                            # the whole emission, measured SLOWER than the
-                            # JVM repartition(1)+sort it replaces (13.3 vs
-                            # 11.8 s on the 2M-row stamp_2m_gate twin; the
-                            # serial case wins 8.9 vs 10.9 s because both
-                            # of its passes were already one JVM task).
-                            dense_views.add(step.alias)
+                        adf.count()
+                    w = Window.partitionBy(F.lit(0)).orderBy(
+                        *[F.col(c).asc() for c in result.order_cols]
+                    )
+                    adf = adf.repartition(1).withColumn(
+                        SEQ, (F.row_number().over(w) - 1).cast("long")
+                    )
+                    dense_views.add(step.alias)
                 views[step.alias] = adf
                 adf.createOrReplaceTempView(step.alias)
                 event_time_cols[step.alias] = request.vocab.event_time_column

@@ -1086,13 +1086,18 @@ def _fold_matches(buf, spec, wm_val, process_all=False):
         # time and retained state.
         final = process_all
         att = {"n": n_proc, "final": final}
+        # NaT rows sort last but view as int64-min: search only the
+        # non-NaT prefix, which is the only sorted part.
+        if within_ns is not None:
+            ts_ns_valid = ts_ns_g[: int((ts_ns_g != _NAT_NS).sum())]
 
         def set_attempt(s0):
             if within_ns is None:
                 return
             wlimit_ns = ts_ns_g[s0] + within_ns
             att["n"] = min(
-                n_proc, int(np.searchsorted(ts_ns_g, wlimit_ns, side="right"))
+                n_proc,
+                int(np.searchsorted(ts_ns_valid, wlimit_ns, side="right")),
             )
             att["final"] = final or (wm_ns is not None and wm_ns >= wlimit_ns)
 

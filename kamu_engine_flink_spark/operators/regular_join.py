@@ -151,31 +151,6 @@ def _flag_matched(
     )
 
 
-# Optional: a new slice whose on-disk bytes stay under this bound
-# broadcasts into the probes against accumulated state, so the
-# (unboundedly growing) state side plans NO exchange and NO sort.
-# MEASURED at sf0.1 x10 over 3 chained invocations on local[32] (n=3
-# medians): hint 8.87s/15.53s vs no-hint 8.20s/14.86s for the
-# INNER/FULL entries — the forced broadcast's driver round-trip LOSES
-# to a same-JVM shuffle, and AQE's runtime SMJ->BHJ conversion already
-# covers the small-slice case without one. Default 0 (disabled); on a
-# multi-node cluster where slice << state and the state-side exchange
-# is real network IO, set spark.kamu.join.sliceBroadcastMaxBytes to the
-# largest slice size worth a broadcast (e.g. 128 MiB). State itself is
-# NEVER hinted (the test_plan_shapes.py rule — a forced broadcast of an
-# unbounded relation is a driver OOM at scale).
-_SLICE_BROADCAST_MAX = 0
-_SLICE_BROADCAST_CONF = "spark.kamu.join.sliceBroadcastMaxBytes"
-
-
-def _slice_hinted(ctx: StepContext, view: str, df: DataFrame) -> DataFrame:
-    size = ctx.slice_sizes.get(view)
-    if size is None:
-        return df  # chained step alias: no file-backed size to trust
-    limit = int(ctx.spark.conf.get(_SLICE_BROADCAST_CONF, str(_SLICE_BROADCAST_MAX)))
-    return F.broadcast(df) if limit > 0 and size <= limit else df
-
-
 def execute_regular_join(ctx: StepContext, sql: str) -> StepResult:
     spec = parse_regular_join(sql, set(ctx.views))
     if spec is None:
@@ -268,17 +243,15 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
     # is joined DIRECTLY (a union with the new slice would discard its
     # output partitioning and force a full-history exchange).
     wm = min_watermark(ctx.new_wms.get(lv), ctx.new_wms.get(rv))
-    bl = _slice_hinted(ctx, lv, new_left)
-    br = _slice_hinted(ctx, rv, new_right)
-    pairs_new = _run_with_views(ctx, inner_sql, {lv: bl, rv_bind: br}, wm, restore=False)
+    pairs_new = _run_with_views(ctx, inner_sql, {lv: new_left, rv_bind: new_right}, wm, restore=False)
     if first:
         pairs = pairs_new
     else:
         pairs = (
-            _run_with_views(ctx, inner_sql, {lv: bl, rv_bind: old_right}, wm, restore=False)
+            _run_with_views(ctx, inner_sql, {lv: new_left, rv_bind: old_right}, wm, restore=False)
             .unionByName(pairs_new)
             .unionByName(
-                _run_with_views(ctx, inner_sql, {lv: old_left, rv_bind: br}, wm, restore=False)
+                _run_with_views(ctx, inner_sql, {lv: old_left, rv_bind: new_right}, wm, restore=False)
             )
         )
 
@@ -305,10 +278,10 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
         # Anti-chain: first against the (bucketed) accumulated right rows —
         # exchange-free on the state side — then against the new slice.
         new_unmatched_l = (
-            bl.alias(la)
+            new_left.alias(la)
             .join(old_right.alias(ra), cond, "left_anti")
             .alias(la)
-            .join(br.alias(ra), cond, "left_anti")
+            .join(new_right.alias(ra), cond, "left_anti")
         )
         # Old padded lefts whose FIRST match arrived this run: retract the
         # pad (op 1 = DELETE, emitted before this invocation's pairs),
@@ -319,10 +292,10 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
             still_unmatched_l = flagged_l.filter(~F.col(_MATCHED)).drop(_MATCHED)
         else:
             newly_matched_l = old_unmatched_l.alias(la).join(
-                br.alias(ra), cond, "left_semi"
+                new_right.alias(ra), cond, "left_semi"
             )
             still_unmatched_l = old_unmatched_l.alias(la).join(
-                br.alias(ra), cond, "left_anti"
+                new_right.alias(ra), cond, "left_anti"
             )
         saves.append(
             (left_unm_name, still_unmatched_l.unionByName(new_unmatched_l), lkeys)
@@ -344,10 +317,10 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
             else ctx.state.load_df(right_unm_name, schema=new_right.schema)
         )
         new_unmatched_r = (
-            br.alias(ra)
+            new_right.alias(ra)
             .join(old_left.alias(la), cond, "left_anti")
             .alias(ra)
-            .join(bl.alias(la), cond, "left_anti")
+            .join(new_left.alias(la), cond, "left_anti")
         )
         if keys is not None:
             flagged_r = _flag_matched(old_unmatched_r, new_left, keys, False)
@@ -355,10 +328,10 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
             still_unmatched_r = flagged_r.filter(~F.col(_MATCHED)).drop(_MATCHED)
         else:
             newly_matched_r = old_unmatched_r.alias(ra).join(
-                bl.alias(la), cond, "left_semi"
+                new_left.alias(la), cond, "left_semi"
             )
             still_unmatched_r = old_unmatched_r.alias(ra).join(
-                bl.alias(la), cond, "left_anti"
+                new_left.alias(la), cond, "left_anti"
             )
         saves.append(
             (right_unm_name, still_unmatched_r.unionByName(new_unmatched_r), rkeys)
@@ -385,7 +358,7 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
             # pad runs; identical output (the slice-invariance tests
             # cross-validate this path against the general one). The
             # probes above still feed the unmatched state.
-            result = _tag(_run_with_views(ctx, sql, {lv: bl, rv_bind: br}, wm, restore=False), OP_APPEND, 1)
+            result = _tag(_run_with_views(ctx, sql, {lv: new_left, rv_bind: new_right}, wm, restore=False), OP_APPEND, 1)
         else:
             result = _tag(pairs, OP_APPEND, 1)
             for p in pad_parts:

@@ -10,6 +10,7 @@ skew-join handling, vectorized reads.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -79,7 +80,9 @@ def engine_session(
 _WARNED_BAD_CONF: set[str] = set()
 
 
-def conf_int(spark: SparkSession, key: str, default: int) -> int:
+def conf_int(
+    spark: SparkSession, key: str, default: int | Callable[[], int]
+) -> int:
     """Session conf as int without the missing-key exception round trips.
 
     `spark.conf.get(key)` on an unset key raises in the JVM and PySpark's
@@ -89,19 +92,19 @@ def conf_int(spark: SparkSession, key: str, default: int) -> int:
     hot path, so the try/except-miss pattern was a fixed per-invocation
     driver cost. Unset or non-integer values fall back to `default`,
     matching the try/except sites this replaces; a set-but-unparsable
-    value additionally warns once per key."""
+    value additionally warns once per key. A callable `default` is
+    evaluated only when the fallback is actually needed."""
     v = spark.conf.get(key, None)
-    if v is None:
-        return default
-    try:
-        return int(v)
-    except (TypeError, ValueError):
-        if key not in _WARNED_BAD_CONF:
-            _WARNED_BAD_CONF.add(key)
-            import logging
+    if v is not None:
+        try:
+            return int(v)
+        except (TypeError, ValueError):
+            if key not in _WARNED_BAD_CONF:
+                _WARNED_BAD_CONF.add(key)
+                import logging
 
-            logging.getLogger(__name__).warning(
-                "conf %s is set to %r, which is not an int — using the "
-                "engine default %d", key, v, default,
-            )
-        return default
+                logging.getLogger(__name__).warning(
+                    "conf %s is set to %r, which is not an int — using the "
+                    "engine default", key, v,
+                )
+    return default() if callable(default) else default

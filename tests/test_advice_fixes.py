@@ -329,3 +329,30 @@ def test_state_finish_partial_link_fallback(spark, tmp_path, monkeypatch):
     got = sorted(os.listdir(new / "foo.parquet"))
     assert got == ["a.parquet", "b.parquet"]
     assert (new / "foo.parquet" / "b.parquet").read_bytes() == b"bbb"
+
+
+def test_state_num_buckets_reads_fallback_only_when_unset(tmp_path):
+    """ADVICE r14: the bucket count reads spark.sql.shuffle.partitions only
+    when spark.kamu.state.numBuckets is unset — one conf round trip when
+    the bucket conf is set."""
+    from types import SimpleNamespace
+
+    from kamu_engine_flink_spark.engine.state import StateStore
+
+    confs, reads = {}, []
+
+    def get(key, default=None):
+        reads.append(key)
+        return confs.get(key, default)
+
+    store = StateStore(
+        SimpleNamespace(conf=SimpleNamespace(get=get)), None, str(tmp_path)
+    )
+    confs["spark.kamu.state.numBuckets"] = "7"
+    assert store._num_buckets() == 7
+    assert reads == ["spark.kamu.state.numBuckets"]
+
+    reads.clear()
+    confs = {"spark.sql.shuffle.partitions": "5"}
+    assert store._num_buckets() == 5
+    assert reads == ["spark.kamu.state.numBuckets", "spark.sql.shuffle.partitions"]

@@ -9,10 +9,10 @@
    probe releases gate on the JOINT watermark — when the build side runs
    ahead (dimension-ahead-of-facts), versions in (joint_wm, build_wm]
    affect only still-buffered probes and must be kept (Flink keeps them).
-3. engine/transform.py distributed-stamp gate: keyed on total INPUT slice
-   bytes; now keys on the EMISSION frame's own row count, so an
-   amplifying chain distributes and a large-input/small-emission chain
-   stays on the cheap single-partition window.
+3. engine/transform.py emission stamp: once keyed on total INPUT slice
+   bytes; the stamp is now one serial window over the emission itself,
+   so large-input/small-emission and amplifying chains both stamp
+   exactly their emission.
 """
 
 import os
@@ -187,59 +187,33 @@ def _agg_inputs(tmp_path, name, rows, wm):
              "schema_file": a, "watermark": wm}]
 
 
-def test_stamp_gate_keys_on_emission_not_input(spark, tmp_path, monkeypatch):
-    """The distributed-stamp gate must read the EMISSION frame's row
-    count: a many-row input folding to a tiny emission stays on the
-    single-partition window; a small input emitting past the threshold
-    goes distributed."""
-    import kamu_engine_flink_spark.engine.transform as T
+def test_stamp_gate_keys_on_emission_not_input(spark, tmp_path):
+    """A many-row input folding to a one-row emission, and a small input
+    emitting one row per key through a WHERE consumer (the non-dense,
+    pinned-and-counted stamp), both output exactly their emission."""
+    # Case A: 200 input rows fold to ONE key -> emission of 1 row.
+    runner = TransformRunner(
+        spark, tmp_path, queries=[(AGG, "g"), (PROJ, None)],
+    )
+    rows = [(i, 0, ts(2), ts(1, 0, 1), "X", 1) for i in range(200)]
+    resp, out = runner.run(
+        _agg_inputs(tmp_path, "big_in", rows, ts(1, 1)), system_time=ts(2)
+    )
+    got = [(r["op"], r["symbol"], r["s"])
+           for r in pq.read_table(out).to_pylist()]
+    assert got == [(0, "X", 200)]
 
-    calls = []
-    orig = T._stamp_emission_seq
-
-    def spy(*a, **k):
-        calls.append(1)
-        return orig(*a, **k)
-
-    monkeypatch.setattr(T, "_stamp_emission_seq", spy)
-    spark.conf.set("spark.kamu.stampDistributedMinRows", "6")
-    try:
-        # Case A: 200 input rows fold to ONE key -> emission of 1 row,
-        # far below the threshold: single-partition window, no call.
-        runner = TransformRunner(
-            spark, tmp_path, queries=[(AGG, "g"), (PROJ, None)],
-        )
-        rows = [(i, 0, ts(2), ts(1, 0, 1), "X", 1) for i in range(200)]
-        resp, out = runner.run(
-            _agg_inputs(tmp_path, "big_in", rows, ts(1, 1)), system_time=ts(2)
-        )
-        got = [(r["op"], r["symbol"], r["s"])
-               for r in pq.read_table(out).to_pylist()]
-        assert got == [(0, "X", 200)]
-        assert calls == [], "tiny emission must not take the distributed path"
-
-        # Case B: 8 input rows over 8 keys -> emission of 8 rows crosses
-        # the threshold: distributed path, exactly one call. (Under the
-        # old input-bytes gate this slice — a fraction of case A's — kept
-        # the serial window.) The consumer is a WHERE filter rather than
-        # a pure projection: a pure-projection chain is dense-eligible
-        # and the round-13 dense-aware gate (transform.
-        # _dense_chain_to_output) would legitimately keep it serial —
-        # the SIZE gate this test pins only decides for chains that
-        # cannot take the dense output fast path.
-        runner2 = TransformRunner(
-            spark, tmp_path / "b",
-            queries=[(AGG, "g"),
-                     ("SELECT event_time, symbol, s FROM g WHERE s >= 0", None)],
-        )
-        rows2 = [(i, 0, ts(2), ts(1, 0, 1), f"S{i}", 10 + i) for i in range(8)]
-        resp2, out2 = runner2.run(
-            _agg_inputs(tmp_path / "b", "small_in", rows2, ts(1, 1)),
-            system_time=ts(2),
-        )
-        got2 = sorted((r["op"], r["symbol"], r["s"])
-                      for r in pq.read_table(out2).to_pylist())
-        assert got2 == [(0, f"S{i}", 10 + i) for i in range(8)]
-        assert calls == [1], "amplified emission must distribute"
-    finally:
-        spark.conf.unset("spark.kamu.stampDistributedMinRows")
+    # Case B: 8 input rows over 8 keys -> emission of 8 rows.
+    runner2 = TransformRunner(
+        spark, tmp_path / "b",
+        queries=[(AGG, "g"),
+                 ("SELECT event_time, symbol, s FROM g WHERE s >= 0", None)],
+    )
+    rows2 = [(i, 0, ts(2), ts(1, 0, 1), f"S{i}", 10 + i) for i in range(8)]
+    resp2, out2 = runner2.run(
+        _agg_inputs(tmp_path / "b", "small_in", rows2, ts(1, 1)),
+        system_time=ts(2),
+    )
+    got2 = sorted((r["op"], r["symbol"], r["s"])
+                  for r in pq.read_table(out2).to_pylist())
+    assert got2 == [(0, f"S{i}", 10 + i) for i in range(8)]

@@ -93,3 +93,34 @@ def test_subprocess_timeout_reported(monkeypatch):
     monkeypatch.setattr(subprocess, "run", fake_run)
     out = bench._recheck_missed_pins(_report(dedup_minhash_fast=3.0))
     assert "TimeoutExpired" in out["dedup_minhash_fast"]["error"]
+
+
+def test_malformed_lines_skipped_and_recorded(monkeypatch, capsys):
+    """A line without `entry`, without `warm_median`, naming an entry not
+    in PINS, or not parsing as JSON is skipped and recorded; the valid
+    lines still land and the run never raises."""
+    good = {"entry": "dedup_minhash_fast", "runs": [9.0, 1.0, 1.2, 1.1],
+            "warm_median": 1.1}
+    lines = [
+        json.dumps({"runs": [1.0], "warm_median": 1.0}),
+        json.dumps({"entry": "stress_keyed_topn_x10_3inv", "runs": [1.0]}),
+        json.dumps({"entry": "no_such_entry", "warm_median": 1.0}),
+        "{not json",
+        json.dumps(good),
+    ]
+
+    def fake_run(cmd, **kw):
+        return types.SimpleNamespace(
+            stdout="\n".join(lines) + "\n", stderr="", returncode=0
+        )
+
+    monkeypatch.setattr(subprocess, "run", fake_run)
+    out = bench._recheck_missed_pins(
+        _report(dedup_minhash_fast=3.0, stress_keyed_topn_x10_3inv=9.5)
+    )
+    assert out["dedup_minhash_fast"]["hit"] is True
+    rec = out["stress_keyed_topn_x10_3inv"]
+    assert "no recheck result" in rec["error"]
+    assert len(rec["skipped_lines"]) == 4
+    assert "no_such_entry" in " ".join(rec["skipped_lines"])
+    assert capsys.readouterr().err.count("skipped line") == 4

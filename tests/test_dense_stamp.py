@@ -2,19 +2,12 @@
 final step is a pure projection over an alias the engine SERIALLY
 stamped, offsets become __seq + next_offset and the second serial
 repartition(1) + window pass is skipped. The output file (offsets, row
-order, every cell) must be IDENTICAL to the non-dense path's. The
-distributed stamp deliberately does NOT mark its alias dense (the sink's
-coalesce(1) would fuse its mapInPandas into the single write task —
-measured slower than the JVM sort it replaces); the dist=True arm pins
-that the chain stays byte-identical there too, under Arrow batches small
-enough to straddle range-partition boundaries."""
+order, every cell) must be IDENTICAL to the non-dense path's."""
 
 from types import SimpleNamespace
 
 import pyarrow.parquet as pq
-import pytest
 
-import kamu_engine_flink_spark.engine.transform as T
 import kamu_engine_flink_spark.operators.map_step as map_step
 from kamu_engine_flink_spark.engine.transform import _dense_chain_to_output
 from kamu_engine_flink_spark.operators.base import StepContext
@@ -26,66 +19,51 @@ AGG = """SELECT cast(now() as timestamp(3)) as event_time,
 PROJ = "SELECT event_time, symbol, s FROM g"
 
 
-def _chain_outputs(spark, tmp_path, subdir, queries, dist=False, batch=None):
+def _chain_outputs(spark, tmp_path, subdir, queries):
     """Run a 2-invocation agg->projection chain; return both raw outputs
     (every column, file order) and the offset-interval responses."""
     base = tmp_path / subdir
     base.mkdir()
     runner = TransformRunner(spark, base, queries=queries)
-    if dist:
-        spark.conf.set("spark.kamu.stampDistributedMinRows", "0")
-    if batch is not None:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", str(batch))
-    try:
-        outs = []
-        for i in (1, 2):
-            p = str(base / "in" / f"a_r{i}.parquet")
-            # 61 keys (not batch-aligned) so a small Arrow batch size
-            # straddles range-partition boundaries in a fused task.
-            ticker_slice(
-                p,
+    outs = []
+    for i in (1, 2):
+        p = str(base / "in" / f"a_r{i}.parquet")
+        ticker_slice(
+            p,
+            [
+                (k, 0, ts(1 + i), ts(1, 0, i), f"S{k:02d}", 10 * i + k)
+                for k in range(61)
+            ],
+        )
+        resp, out = runner.run(
+            [{"alias": "a", "data_paths": [p], "schema_file": p,
+              "watermark": ts(1, i, 0)}],
+            system_time=ts(1 + i),
+        )
+        # now() in the agg maps to real wall clock -> event_time
+        # differs between the A and B runs; drop it (every other
+        # cell, the offsets and the file row order must be equal).
+        outs.append(
+            (
+                resp.new_offset_interval,
                 [
-                    (k, 0, ts(1 + i), ts(1, 0, i), f"S{k:02d}", 10 * i + k)
-                    for k in range(61)
+                    {k: v for k, v in r.items() if k != "event_time"}
+                    for r in pq.read_table(out).to_pylist()
                 ],
             )
-            resp, out = runner.run(
-                [{"alias": "a", "data_paths": [p], "schema_file": p,
-                  "watermark": ts(1, i, 0)}],
-                system_time=ts(1 + i),
-            )
-            # now() in the agg maps to real wall clock -> event_time
-            # differs between the A and B runs; drop it (every other
-            # cell, the offsets and the file row order must be equal).
-            outs.append(
-                (
-                    resp.new_offset_interval,
-                    [
-                        {k: v for k, v in r.items() if k != "event_time"}
-                        for r in pq.read_table(out).to_pylist()
-                    ],
-                )
-            )
-        return outs
-    finally:
-        if dist:
-            spark.conf.unset("spark.kamu.stampDistributedMinRows")
-        if batch is not None:
-            spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+        )
+    return outs
 
 
 def _no_dense(monkeypatch):
     monkeypatch.setattr(map_step, "_dense_projection", lambda *a, **k: False)
 
 
-@pytest.mark.parametrize("dist,batch", [(False, None), (True, 7)])
-def test_dense_output_identical_to_windowed_path(
-    spark, tmp_path, monkeypatch, dist, batch
-):
+def test_dense_output_identical_to_windowed_path(spark, tmp_path, monkeypatch):
     queries = [(AGG, "g"), (PROJ, None)]
-    dense = _chain_outputs(spark, tmp_path, "dense", queries, dist, batch)
+    dense = _chain_outputs(spark, tmp_path, "dense", queries)
     _no_dense(monkeypatch)
-    slow = _chain_outputs(spark, tmp_path, "slow", queries, dist, batch)
+    slow = _chain_outputs(spark, tmp_path, "slow", queries)
     assert dense == slow  # offsets, file row order, every cell
     # And the dense run's own invariants: contiguous offsets across runs.
     (oi1, rows1), (oi2, rows2) = dense
@@ -118,8 +96,9 @@ def _steps(*qa):
 
 
 def test_dense_chain_walk():
-    """The stamp gate's chain predictor: alias must reach the FINAL step
-    through single-consumer pure projections only."""
+    """The stamp's chain predictor (skip the pin + count or not): alias
+    must reach the FINAL step through single-consumer pure projections
+    only."""
     names = {"a", "g", "p1", "t"}
     ok = _steps(("SELECT x, y FROM g", None))
     assert _dense_chain_to_output("g", ok, names)
@@ -145,62 +124,13 @@ def test_dense_chain_walk():
         assert not _dense_chain_to_output("g", steps, names), steps
 
 
-def test_gate_prefers_serial_stamp_for_dense_chain(spark, tmp_path, monkeypatch):
-    """With the distributed gate forced low (1 row), a dense-eligible
-    chain still takes the SERIAL stamp (the dense fast path makes it the
-    better plan) while a WHERE-consumer chain takes the distributed
-    stamp; a tiny dense-serial cap returns even the dense chain to the
-    distributed stamp. Outputs stay correct in all three."""
-    calls = []
-    real = T._stamp_emission_seq
-
-    def spy(*a, **k):
-        calls.append(1)
-        return real(*a, **k)
-
-    monkeypatch.setattr(T, "_stamp_emission_seq", spy)
-    spark.conf.set("spark.kamu.stampDistributedMinRows", "1")
-    try:
-        dense = _chain_outputs(spark, tmp_path, "dense", [(AGG, "g"), (PROJ, None)])
-        assert not calls  # dense chain: serial stamp despite the low gate
-        assert [r["offset"] for r in dense[1][1]] == list(
-            range(dense[1][0].start, dense[1][0].end + 1)
-        )
-        flt = _chain_outputs(
-            spark, tmp_path, "flt",
-            [(AGG, "g"), ("SELECT event_time, symbol, s FROM g WHERE s >= 0", None)],
-        )
-        assert calls  # WHERE consumer: distributed stamp as before
-        assert [r["offset"] for r in flt[1][1]] == list(
-            range(flt[1][0].start, flt[1][0].end + 1)
-        )
-        calls.clear()
-        spark.conf.set("spark.kamu.stampDenseSerialMaxRows", "1")
-        try:
-            capped = _chain_outputs(
-                spark, tmp_path, "capped", [(AGG, "g"), (PROJ, None)]
-            )
-            assert calls  # over the dense-serial cap: distributed again
-            assert capped[0][1] == dense[0][1] and len(capped[1][1]) == len(
-                dense[1][1]
-            )
-        finally:
-            spark.conf.unset("spark.kamu.stampDenseSerialMaxRows")
-    finally:
-        spark.conf.unset("spark.kamu.stampDistributedMinRows")
-
-
 def test_dense_chain_skips_gate_count(spark, tmp_path, monkeypatch):
-    """With the dense-serial cap conf UNSET (the default), a
-    dense-eligible chain takes the serial stamp with NO gate
-    materialization: the gate issues no count() action at all (the
-    emission computes once, inside the output job). Setting the cap
-    restores the counted gate. Outputs must be identical either way
-    (modulo now()-derived event_time, which _chain_outputs drops)."""
+    """A dense-eligible chain stamps with NO materialization: no count()
+    action at all (the emission computes once, inside the output job)."""
     # Patch the implementation class the session ACTUALLY returns (ADVICE
     # r13: a hardcoded pyspark.sql.classic import pins the spy to the
     # non-Connect path and a module move would leave it observing nothing;
-    # n_gated >= 2 below additionally proves the spy fires at all).
+    # the non-dense control below proves the spy fires at all).
     CDF = type(spark.range(1))
 
     counts = []
@@ -211,24 +141,13 @@ def test_dense_chain_skips_gate_count(spark, tmp_path, monkeypatch):
         return real_count(self)
 
     monkeypatch.setattr(CDF, "count", spy)
-    spark.conf.set("spark.kamu.stampDistributedMinRows", "1")
-    try:
-        fast = _chain_outputs(spark, tmp_path, "nocnt", [(AGG, "g"), (PROJ, None)])
-        n_fast = len(counts)
-        counts.clear()
-        spark.conf.set("spark.kamu.stampDenseSerialMaxRows", "4000000")
-        try:
-            gated = _chain_outputs(
-                spark, tmp_path, "cnt", [(AGG, "g"), (PROJ, None)]
-            )
-            n_gated = len(counts)
-        finally:
-            spark.conf.unset("spark.kamu.stampDenseSerialMaxRows")
-    finally:
-        spark.conf.unset("spark.kamu.stampDistributedMinRows")
-    assert n_fast == 0, "dense fast path must not count the emission"
-    assert n_gated >= 2, "cap set: the counted gate must run per invocation"
-    assert fast == gated  # offsets, file row order, every remaining cell
+    _chain_outputs(spark, tmp_path, "nocnt", [(AGG, "g"), (PROJ, None)])
+    assert not counts, "dense chain must not count the emission"
+    _chain_outputs(
+        spark, tmp_path, "cnt",
+        [(AGG, "g"), ("SELECT event_time, symbol, s FROM g WHERE s >= 0", None)],
+    )
+    assert len(counts) >= 2, "a non-dense chain pins and counts per invocation"
 
 
 def test_dense_projection_disqualifiers(spark):

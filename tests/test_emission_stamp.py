@@ -1,26 +1,17 @@
-"""The distributed mid-chain emission-order stamp (engine/transform.
-_stamp_emission_seq): range-partitioned sort + per-partition offset bases
-must produce EXACTLY the emission order of the single-partition window
-stamp — pair adjacency and per-branch ordering included — when forced on
-via spark.kamu.stampDistributedMinRows=0."""
+"""The mid-chain emission-order stamp (engine/transform.py): a changelog
+alias consumed by a MAP step is stamped with its emission order by one
+single-partition window, so correction-pair adjacency and per-branch
+union order survive into the consumer's output."""
 
 import os
 
 import pyarrow.parquet as pq
-import pytest
 
 from .helpers import TransformRunner, ticker_slice, ts
 
 LEFT_JOIN = """SELECT a.event_time as event_time, a.symbol as symbol,
   a.price as a_price, b.price as b_price
 FROM a LEFT JOIN b ON a.symbol = b.symbol"""
-
-
-@pytest.fixture()
-def dist_stamp(spark):
-    spark.conf.set("spark.kamu.stampDistributedMinRows", "0")
-    yield
-    spark.conf.unset("spark.kamu.stampDistributedMinRows")
 
 
 def _two_stream_inputs(tmp_path, name, a_rows, b_rows, wm):
@@ -36,9 +27,9 @@ def _two_stream_inputs(tmp_path, name, a_rows, b_rows, wm):
     ]
 
 
-def test_map_over_changelog_order_distributed(dist_stamp, spark, tmp_path):
-    """The pad retraction must still precede the replacing pair when the
-    stamp runs range-partitioned."""
+def test_map_over_changelog_order(spark, tmp_path):
+    """The pad retraction precedes the replacing pair through a
+    projection over the LEFT JOIN changelog."""
     runner = TransformRunner(
         spark, tmp_path,
         queries=[(LEFT_JOIN, "j"),
@@ -65,11 +56,10 @@ def test_map_over_changelog_order_distributed(dist_stamp, spark, tmp_path):
     assert _r(out2) == [(1, "A", None), (0, "A", 7)]
 
 
-def test_changelog_topn_filter_pairs_distributed(dist_stamp, spark, tmp_path):
-    """Many correction pairs spread across range partitions: the filter's
+def test_changelog_topn_filter_pairs(spark, tmp_path):
+    """Many correction pairs from many input partitions: the filter's
     lag/lead pair rewrite still sees op-2 adjacent-before op-3 (the pairs
-    tie on GSEQ's key/rank prefix and split only on SUB, so a range
-    boundary between the two halves must not reorder them)."""
+    tie on GSEQ's key/rank prefix and split only on SUB)."""
     agg = """SELECT cast(now() as timestamp(3)) as event_time,
   symbol, sum(price) as s FROM a GROUP BY symbol"""
     topn = """SELECT cast(now() as timestamp(3)) as event_time, symbol, s, rnk FROM (
@@ -89,7 +79,7 @@ def test_changelog_topn_filter_pairs_distributed(dist_stamp, spark, tmp_path):
             system_time=ts(1 + i),
         )
 
-    n_keys = 48  # > defaultParallelism so pairs straddle range partitions
+    n_keys = 48  # > defaultParallelism: pairs come from several partitions
     resp, out = _run(
         "r1",
         [(k, 0, ts(2), ts(1, 0, 1), f"S{k:02d}", 10 + k) for k in range(n_keys)],
@@ -105,9 +95,9 @@ def test_changelog_topn_filter_pairs_distributed(dist_stamp, spark, tmp_path):
     assert sorted(rows) == [(0, f"S{k:02d}", 110 + k) for k in range(n_keys)]
 
 
-def test_union_branch_order_distributed(dist_stamp, spark, tmp_path):
-    """Branch-major union emission order survives the distributed stamp
-    (order_cols = [branch, seq] range-partitions on the branch first)."""
+def test_union_branch_order(spark, tmp_path):
+    """Branch-major union emission order survives the stamp
+    (order_cols = [branch, seq] sorts on the branch first)."""
     union = ("SELECT event_time, symbol, b_price FROM j "
              "UNION ALL SELECT event_time, symbol, price as b_price FROM c")
     agg = """SELECT cast(now() as timestamp(3)) as event_time,

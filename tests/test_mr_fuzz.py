@@ -149,3 +149,38 @@ def test_match_recognize_random_slicing_folds_to_batch(
         f"\npattern={pat} split={split}\nrows={sorted(rows)}"
         f"\nsliced={sliced}\nsingle={single}"
     )
+
+
+def test_within_bound_holds_with_null_event_times(spark, tmp_path):
+    """Null event times sort after every timestamp within a key, so the
+    WITHIN horizon search must stay inside the non-null prefix: a spike
+    past the dip's 2-minute horizon must not match just because the key
+    also carries null-event-time rows."""
+    query = _query("A C").replace(
+        "PATTERN (A C)", "PATTERN (A C) WITHIN INTERVAL '2' MINUTE"
+    )
+    runner = TransformRunner(spark, str(tmp_path), [(query, None)])
+    st_time = ts(20)
+    path = str(tmp_path / "s0.parquet")
+    _slice(
+        path,
+        [
+            (0, st_time, ts(1, 0, 1), "A", 1),  # dip; horizon 00:03
+            (1, st_time, ts(1, 0, 6), "A", 200),  # spike past the horizon
+            (2, st_time, None, "A", 500),
+            (3, st_time, None, "A", 500),
+            (4, st_time, ts(1, 0, 1), "B", 1),  # dip; horizon 00:03
+            (5, st_time, ts(1, 0, 2), "B", 200),  # spike inside it
+            (6, st_time, None, "B", 500),
+            (7, st_time, None, "B", 500),
+        ],
+    )
+    _, out = runner.run(
+        [{"alias": "tickers", "schema_file": path, "data_paths": [path],
+          "watermark": ts(1, 0, 10)}],
+        system_time=st_time,
+    )
+    got = sorted(
+        (r.symbol, r.spike) for r in spark.read.parquet(out).collect()
+    )
+    assert got == [("B", 200)]

@@ -527,10 +527,10 @@ GROUP BY o.order_id"""
 
 
 def test_slice_broadcast_hint_opt_in_same_results(spark, tmp_path):
-    """spark.kamu.join.sliceBroadcastMaxBytes opts the new slice into a
-    broadcast against accumulated state (the multi-node slice<<state
-    regime; measured net-negative on local[32], so default-off). The
-    pad/retract changelog must be identical with the hint active."""
+    """FULL JOIN resume where only one side has a new slice: the new
+    slice probes the persisted state, the pad retracts and the pair
+    emits. (The name predates the removal of the slice-broadcast
+    option; this is the one join plan now.)"""
     q = """SELECT
   coalesce(o.event_time, s.event_time) as event_time,
   coalesce(o.order_id, s.order_id) as order_id,
@@ -539,41 +539,37 @@ def test_slice_broadcast_hint_opt_in_same_results(spark, tmp_path):
 FROM orders as o
 FULL JOIN shipments as s
 ON o.order_id = s.order_id"""
-    spark.conf.set("spark.kamu.join.sliceBroadcastMaxBytes", str(128 << 20))
-    try:
-        runner = TransformRunner(spark, tmp_path, queries=[(q, None)])
-        o1 = str(tmp_path / "in" / "o1.parquet")
-        s1 = str(tmp_path / "in" / "s1.parquet")
-        orders_slice(o1, [(0, 0, ts(2), ts(1), 1, 10), (1, 0, ts(2), ts(1), 2, 20)])
-        shipments_slice(s1, [(0, ts(2), ts(1), 1, 4)])
-        resp, out = runner.run(
-            [
-                {"alias": "orders", "data_paths": [o1], "schema_file": o1, "watermark": ts(1, 1)},
-                {"alias": "shipments", "data_paths": [s1], "schema_file": s1, "watermark": ts(1, 1)},
-            ],
-            system_time=ts(2),
-        )
-        r1 = pq.read_table(out).to_pylist()
-        # order 1 pairs; order 2 pads.
-        assert sorted(
-            (r["op"], r["order_id"], r["ordered"], r["shipped"]) for r in r1
-        ) == [(0, 1, 10, 4), (0, 2, 20, None)]
+    runner = TransformRunner(spark, tmp_path, queries=[(q, None)])
+    o1 = str(tmp_path / "in" / "o1.parquet")
+    s1 = str(tmp_path / "in" / "s1.parquet")
+    orders_slice(o1, [(0, 0, ts(2), ts(1), 1, 10), (1, 0, ts(2), ts(1), 2, 20)])
+    shipments_slice(s1, [(0, ts(2), ts(1), 1, 4)])
+    resp, out = runner.run(
+        [
+            {"alias": "orders", "data_paths": [o1], "schema_file": o1, "watermark": ts(1, 1)},
+            {"alias": "shipments", "data_paths": [s1], "schema_file": s1, "watermark": ts(1, 1)},
+        ],
+        system_time=ts(2),
+    )
+    r1 = pq.read_table(out).to_pylist()
+    # order 1 pairs; order 2 pads.
+    assert sorted(
+        (r["op"], r["order_id"], r["ordered"], r["shipped"]) for r in r1
+    ) == [(0, 1, 10, 4), (0, 2, 20, None)]
 
-        # Run 2: order 2's shipment arrives — pad retracts, pair emits,
-        # probing the persisted state WITH the broadcast hint active.
-        s2 = str(tmp_path / "in" / "s2.parquet")
-        shipments_slice(s2, [(1, ts(3), ts(1), 2, 9)])
-        resp2, out2 = runner.run(
-            [
-                {"alias": "orders", "data_paths": [], "schema_file": o1, "watermark": ts(1, 2)},
-                {"alias": "shipments", "data_paths": [s2], "schema_file": s1, "watermark": ts(1, 2)},
-            ],
-            system_time=ts(3),
-        )
-        r2 = pq.read_table(out2).to_pylist()
-        assert [(r["op"], r["order_id"], r["ordered"], r["shipped"]) for r in r2] == [
-            (1, 2, 20, None),
-            (0, 2, 20, 9),
-        ]
-    finally:
-        spark.conf.unset("spark.kamu.join.sliceBroadcastMaxBytes")
+    # Run 2: order 2's shipment arrives — pad retracts, pair emits,
+    # probing the persisted state.
+    s2 = str(tmp_path / "in" / "s2.parquet")
+    shipments_slice(s2, [(1, ts(3), ts(1), 2, 9)])
+    resp2, out2 = runner.run(
+        [
+            {"alias": "orders", "data_paths": [], "schema_file": o1, "watermark": ts(1, 2)},
+            {"alias": "shipments", "data_paths": [s2], "schema_file": s1, "watermark": ts(1, 2)},
+        ],
+        system_time=ts(3),
+    )
+    r2 = pq.read_table(out2).to_pylist()
+    assert [(r["op"], r["order_id"], r["ordered"], r["shipped"]) for r in r2] == [
+        (1, 2, 20, None),
+        (0, 2, 20, 9),
+    ]

@@ -14,10 +14,10 @@ Usage:
 
 ENTRY is any bench entry name: a queries() registry entry (timed with
 the noop sink like the bench HEADLINE section), an odf_transform_*
-single invocation, a stress_*_x10_3inv chained-invocation entry, or a
-stamp_2m_* twin. Timings are wall seconds, same methodology as bench.py
-(this tool exists so adjudication does not require a full suite run);
-it changes nothing and writes nothing under the repo.
+single invocation, a stress_*_x10_3inv chained-invocation entry, or
+stamp_2m_gate_default. Timings are wall seconds, same methodology as
+bench.py (this tool exists so adjudication does not require a full suite
+run); it changes nothing and writes nothing under the repo.
 """
 
 from __future__ import annotations
@@ -156,15 +156,15 @@ class _Runner:
         if name == "stress_minhash_cluster_x10":
             return bench._stress_dedup_cluster(self.spark, self.sf_dir)
 
-        if name.startswith("stamp_2m_"):
-            return self._stamp_2m(forced=name.endswith("serial_forced"))
+        if name == "stamp_2m_gate_default":
+            return self._stamp_2m()
 
         raise KeyError(
             f"unknown entry {name!r} (not in queries() and no stress/stamp "
             f"mapping here — if bench.py gained an entry, add it above)"
         )
 
-    def _stamp_2m(self, forced: bool) -> float:
+    def _stamp_2m(self) -> float:
         key = "stamp2m"
         if key not in self._cache:
             from pyspark.sql import functions as F
@@ -208,16 +208,10 @@ class _Runner:
             ),
             (None, "SELECT event_time, k, s FROM g"),
         ]
-        if forced:
-            self.spark.conf.set("spark.kamu.stampDistributedMinRows", str(1 << 60))
-        try:
-            return bench._stress_transform_x10(
-                self.spark, [[("a", path, wm)]], steps, self.workdir,
-                f"stamp2m-iso{time.monotonic_ns()}",
-            )
-        finally:
-            if forced:
-                self.spark.conf.unset("spark.kamu.stampDistributedMinRows")
+        return bench._stress_transform_x10(
+            self.spark, [[("a", path, wm)]], steps, self.workdir,
+            f"stamp2m-iso{time.monotonic_ns()}",
+        )
 
 
 def _sql_execs(ui, app_id):
