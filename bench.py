@@ -1011,6 +1011,12 @@ def main() -> None:
         file=sys.stderr,
     )
 
+    _finish(spark, timings, sf_num)
+
+
+def _finish(spark, timings: dict[str, float], sf_num) -> None:
+    """Pin report, pin-miss recheck and the result JSON of a finished
+    run. Stops the bench's session before the recheck starts its own."""
     total = round(sum(timings.values()), 3)
     pinnable = {**timings, "suite_total": total}
     pin_report = {
@@ -1031,7 +1037,9 @@ def main() -> None:
     # conviction instead of a bare pins_missed list. suite_total is a
     # composite with no single entry to isolate; its adjudication IS the
     # per-entry rechecks. Timings above are final before this runs, so
-    # the recheck cannot perturb them.
+    # the recheck cannot perturb them; the bench's own session is stopped
+    # first so its JVM does not compete with the recheck's fresh one.
+    spark.stop()
     pin_miss_recheck = _recheck_missed_pins(pin_report)
     detail = {
         "metric": "suite_total",

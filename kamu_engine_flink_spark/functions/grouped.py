@@ -4,26 +4,26 @@
 a per-group Arrow round-trip. At high key cardinality (the 100 TB shape:
 millions of user_id-grade keys, a handful of rows each) that per-group
 framework overhead — slicing, FFI, one Arrow batch per group — dominates
-end-to-end runtime by orders of magnitude (measured ~0.5 ms/group even for
-a no-op fold).
+end-to-end runtime by orders of magnitude.
 
-`grouped_map_batched` keeps the same per-group Python fold contract but
-amortizes the framework cost across whole Arrow batches:
+`grouped_map_batched` amortizes the framework cost across whole Arrow
+batches:
 
   1. hash-partition by the keys (all rows of a key land in one partition),
   2. sort within partitions by (keys..., sort_cols...) so groups are
      contiguous runs and each group arrives pre-sorted,
-  3. mapInPandas: stream the partition's Arrow batches, split each batch
-     into complete key runs, CARRY the tail run to the next batch (a group
-     may straddle batch boundaries), fold each complete group, and emit
-     ONE output DataFrame per input batch.
+  3. mapInPandas: stream the partition's Arrow batches, find the key-run
+     starts once per batch, CARRY the tail run to the next batch (a group
+     may straddle batch boundaries), and fold every complete run of the
+     chunk in ONE `batch_fold(chunk_pdf, starts)` call that emits ONE
+     output DataFrame per input batch.
 
-The fold receives exactly what applyInPandas would have passed (all
-columns, one key's rows) and returns a list of record dicts; missing keys
-become NULL, matching applyInPandas' column-aligned construction.
+The fold works on index ranges `[starts[g], starts[g+1])` (the last run
+ends at `len(chunk_pdf)`), so no per-group pandas frame is ever built. It
+returns a list of record dicts; missing keys become NULL.
 
-Null keys are preserved as groups (pandas NaN-equality is handled in the
-run splitter), matching Spark groupBy semantics.
+Null keys are preserved as groups (NaN == NaN and None == None in the run
+splitter), matching Spark groupBy semantics.
 """
 
 from __future__ import annotations
@@ -33,52 +33,54 @@ from collections.abc import Callable, Iterator
 from pyspark.sql import DataFrame
 
 
-def _run_boundaries(pdf, keys):
-    """Boolean Series: True where the key tuple differs from the previous
-    row (NaN == NaN). Position 0 is always True."""
-    m = None
+def run_starts(pdf, keys):
+    """int64 ndarray of the 0-based rows where the key tuple differs from
+    the previous row; position 0 is always a start (empty frame: empty
+    array). Nulls compare equal to each other (NaN, NaT, None, pd.NA),
+    never to a value."""
+    import numpy as np
+
+    n = len(pdf)
+    if n == 0:
+        return np.empty(0, dtype=np.int64)
+    same = np.ones(n - 1, dtype=bool)
     for k in keys:
         s = pdf[k]
-        p = s.shift()
-        neq = ~((s == p) | (s.isna() & p.isna()))
-        m = neq if m is None else (m | neq)
-    m.iloc[0] = True
-    return m
+        null = s.isna().to_numpy()
+        a = s.to_numpy()
+        if a.dtype == object:
+            # One null spelling, so the elementwise == below sees only
+            # None (== None) and never pd.NA (whose == is ambiguous).
+            a = a.copy()
+            a[null] = None
+        same &= (a[1:] == a[:-1]) | (null[1:] & null[:-1])
+    return np.concatenate(([0], np.flatnonzero(~same) + 1))
 
 
 def grouped_map_batched(
     df: DataFrame,
     keys: list[str],
-    fold_records: Callable[..., list[dict]] | None,
+    batch_fold: Callable[..., list[dict]],
     out_schema,
     sort_cols: list[str] | None = None,
-    batch_fold: Callable[..., list[dict]] | None = None,
 ) -> DataFrame:
-    """Apply `fold_records(group_pdf) -> list[dict]` once per distinct key,
-    with batch-amortized overhead. See module docstring for the contract.
-
-    `batch_fold(chunk_pdf, starts) -> list[dict]` is the vectorized
-    alternative: ONE call per Arrow chunk with the 0-based offsets where
-    each key's run begins (always containing 0; run end = next start or
-    len). An operator whose per-group work is array-friendly skips the
-    per-group pandas slicing entirely — at user_id-grade cardinality the
-    groupby/_chop/Series construction otherwise dominates the fold
-    (profiled ~10x the matcher cost on the MATCH_RECOGNIZE stress corpus).
-    Exactly one of `fold_records`/`batch_fold` must be provided.
-    """
+    """Apply `batch_fold(chunk_pdf, starts) -> list[dict]` to chunks of
+    complete key runs. `starts` are the 0-based offsets where each key's
+    run begins (always containing 0; run end = next start or len). See
+    the module docstring for the contract."""
     if not keys:
         raise ValueError("grouped_map_batched requires at least one key")
-    if (fold_records is None) == (batch_fold is None):
-        raise ValueError("provide exactly one of fold_records/batch_fold")
     out_names = [f.name for f in out_schema.fields]
 
     def mapper(batches) -> Iterator:
-        import numpy as np
         import pandas as pd
 
         carry = None
 
-        def recs_frame(recs):
+        def fold(pdf, starts):
+            recs = batch_fold(pdf, starts)
+            if not recs:
+                return None
             # Column-wise construction: pandas' list-of-dicts inference
             # walks every cell; this is ~3x faster on wide outputs.
             return pd.DataFrame(
@@ -86,46 +88,31 @@ def grouped_map_batched(
                 columns=out_names,
             )
 
-        def fold_groups(pdf):
-            bounds = _run_boundaries(pdf, keys)
-            if batch_fold is not None:
-                starts = np.flatnonzero(bounds.to_numpy()).tolist()
-                return batch_fold(pdf, starts)
-            recs: list[dict] = []
-            for _, g in pdf.groupby(bounds.cumsum(), sort=False):
-                recs.extend(fold_records(g.reset_index(drop=True)))
-            return recs
-
         for pdf in batches:
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
                 carry = None
-            n = len(pdf)
-            if n == 0:
+            if len(pdf) == 0:
                 continue
-            # Split off the trailing run (rows sharing the last row's key):
-            # it may continue into the next Arrow batch.
-            bounds = _run_boundaries(pdf, keys)
-            starts = bounds[bounds].index
-            tail_start = starts[-1]
+            # The trailing run (rows sharing the last row's key) may
+            # continue into the next Arrow batch: carry it.
+            starts = run_starts(pdf, keys)
+            tail_start = int(starts[-1])
             carry = pdf.iloc[tail_start:].reset_index(drop=True)
-            head = pdf.iloc[:tail_start]
-            if len(head):
-                recs = fold_groups(head)
-                if recs:
-                    yield recs_frame(recs)
+            if tail_start:
+                out = fold(pdf.iloc[:tail_start], starts[:-1].tolist())
+                if out is not None:
+                    yield out
         if carry is not None and len(carry):
-            recs = fold_groups(carry)
-            if recs:
-                yield recs_frame(recs)
+            out = fold(carry, [0])
+            if out is not None:
+                yield out
 
-    # Explicit partition count: a keys-only repartition is AQE-coalescible,
-    # and the fold's shuffle is tiny in BYTES (pruned survivors) while the
-    # stage's cost is per-ROW Python CPU — AQE's advisory-size coalescing
-    # (64 MB) collapses it to 1-2 partitions and serializes the whole fold
-    # onto one core (measured: the keyed Top-N fold ran 14 s single-task
-    # at bench scale). A user-specified count is exempt from coalescing;
-    # defaultParallelism scales with the cluster.
+    # Explicit partition count: a keys-only repartition is AQE-coalescible
+    # by bytes, while this stage's cost is per-row Python CPU, so AQE
+    # would collapse it onto one or two cores (OPTIMIZATION_r13.md §1).
+    # A user-specified count is exempt from coalescing; defaultParallelism
+    # scales with the cluster.
     n = df.sparkSession.sparkContext.defaultParallelism
     ordered = df.repartition(n, *keys).sortWithinPartitions(
         *keys, *(sort_cols or [])

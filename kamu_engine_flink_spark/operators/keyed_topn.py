@@ -11,16 +11,18 @@ contract per key: every input record that changes its key's ranking
 emits CorrectFrom(op=2)/CorrectTo(op=3) pairs immediately, in ascending
 place order, interleaved across keys by arrival (ledger offset) order.
 
-Spark-first derivation: unlike the global form (whose changelog is a
-driver-side fold because record i's corrections depend on the state
+Spark-first derivation: unlike the global form (whose changelog is ONE
+sequential fold because record i's corrections depend on the state
 after record i-1 *globally*), per-key changelogs are independent — only
 the emission order interleaves keys, and that is fully determined by
 (triggering record's ledger offset, place). So the fold distributes as
-ONE `applyInPandas` over the key columns: each group folds (previous
-state ∪ its slice rows in ledger order) through the same running-top-N
-simulation, emitting changelog rows tagged with the trigger's offset.
-No driver-side collect anywhere; state is the per-key <=N-row ranking
-table, partitioned by key.
+ONE `grouped_map_batched` over the key columns: the chunk-level fold
+(`topn.make_batch_fold`) extracts each column once per Arrow chunk, then
+replays every key run (previous state ∪ its slice rows in ledger order)
+on index ranges through the same running-top-N simulation, emitting
+changelog rows tagged with the trigger's offset. No driver-side collect
+anywhere; state is the per-key <=N-row ranking table, partitioned by
+key.
 """
 
 from __future__ import annotations
@@ -48,7 +50,7 @@ from .topn import (
     SUB_COL,
     _dedupe_columns,
     _prune_partition_local,
-    make_fold_group,
+    make_batch_fold,
 )
 
 _PART_ORDER_RE = re.compile(
@@ -157,12 +159,12 @@ def execute_keyed_topn(ctx: StepContext, sql: str, spec) -> StepResult:
             StructField(KIND_COL, IntegerType()),
         ]
     )
-    fold_group = make_fold_group(value_cols, rank_col, order, spec.limit)
+    fold_batch = make_batch_fold(value_cols, rank_col, order, spec.limit)
 
     from ..functions.grouped import grouped_map_batched
 
     folded = ctx.pin(
-        grouped_map_batched(unioned, part_keys, fold_group, fold_schema)
+        grouped_map_batched(unioned, part_keys, fold_batch, fold_schema)
     )
     keep = folded.filter(F.col(KIND_COL) == 1).select(rank_col, *value_cols)
     if untouched_state is not None:

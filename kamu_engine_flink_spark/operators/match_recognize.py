@@ -1294,10 +1294,9 @@ def _fold_matches(buf, spec, wm_val, process_all=False):
         return grouped_map_batched(
             with_preds,
             keys,
-            None,
+            fold_batch,
             out_schema,
             sort_cols=[time_col, SEQ_INPUT],
-            batch_fold=fold_batch,
         )
 
     def fold(pdf):

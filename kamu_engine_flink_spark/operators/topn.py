@@ -13,11 +13,12 @@ no records can touch a Top-N: a distributed prefilter keeps only rows that
 beat the current N-th entry (threshold is monotone within a batch, so
 filtering against the previous state is exact), then a partition-local
 running-top-N prune bounds survivors to ~N*ln(rows/partition) per
-partition. The survivors fold through ONE distributed `applyInPandas`
-group (the same machinery as the keyed variant, keyed by a constant) —
-no data row ever materializes on the driver; the only driver-side values
-are the single N-th-place threshold row. State is the <=N-row ranking
-table.
+partition. The survivors fold through `grouped_map_batched` keyed by a
+constant, so they form one key run; the chunk-level fold
+(`make_batch_fold`, shared with the keyed variant) extracts each column
+once per Arrow chunk and replays every run on index ranges. No data row
+ever materializes on the driver; the only driver-side values are the
+single N-th-place threshold row. State is the <=N-row ranking table.
 
 Supported shape (the reference's only tested one): an outer projection over
 `(SELECT row_number() OVER (ORDER BY <col> [DESC]) AS <rank>, <cols> FROM
@@ -244,8 +245,8 @@ def fold_records(ranking, rows, order, limit):
     (gseq, sub, op, place, row) — gseq is the triggering row's ledger
     offset, sub orders one record's corrections (ascending place, op 2
     before 3). `order` is the composite [(col, descending), ...] rank
-    order (beats_key semantics). Shared by the global driver fold and the
-    per-key distributed fold (keyed_topn.py)."""
+    order (beats_key semantics). The sequential core of the chunk fold
+    (make_batch_fold) shared by the global and keyed executors."""
     order_cols_ = [c for c, _ in order]
     if len(order_cols_) == 1:
         col0 = order_cols_[0]
@@ -302,20 +303,36 @@ def fold_records(ranking, rows, order, limit):
         del ranking[limit:]  # beyond-N tail can never resurface
 
 
-def make_fold_group(value_cols, rank_col, order, limit):
-    """Build the applyInPandas group fold shared by the global and keyed
-    Top-N executors. The group pdf is the union of (previous state rows —
-    rank_col set) and (slice rows — rank_col null, ordered by SEQ_INPUT);
-    the fold replays the slice through the running ranking and returns
-    changelog records (KIND 0, ordered by GSEQ/SUB) plus the group's new
-    ranking (KIND 1). `order` is the composite [(col, descending), ...]
-    rank order."""
+def make_batch_fold(value_cols, rank_col, order, limit):
+    """Build the `grouped_map_batched` chunk fold shared by the global and
+    keyed Top-N executors: `fold_batch(pdf, starts)` folds every key run
+    `[starts[g], starts[g+1])` of one Arrow chunk. A run is the union of
+    (previous state rows — rank_col set) and (slice rows — rank_col null,
+    replayed in SEQ_INPUT order) of one key; each run yields changelog
+    records (KIND 0, ordered by GSEQ/SUB) plus its new ranking (KIND 1).
+    `order` is the composite [(col, descending), ...] rank order."""
     order_cols_ = [c for c, _ in order]
+    # Single-column fast path: scalar order keys and a direction-
+    # specialized compare — the prepass below touches every slice row.
+    single = len(order) == 1
+    if single:
+        desc0 = order[0][1]
 
-    def fold_group(pdf) -> list[dict[str, Any]]:
-        # Hot path at high key cardinality: plain per-column Python lists
-        # instead of an astype(object) copy + iterrows (row-at-a-time
-        # pandas was the round-2 profile's top cost in this fold).
+        def _beats(v, ev):
+            # Identical semantics to beats_key (ties do not displace,
+            # DESC nulls last / ASC nulls first).
+            if v is None:
+                return (not desc0) and ev is not None
+            if ev is None:
+                return desc0
+            return (v > ev) if desc0 else (v < ev)
+
+    else:
+
+        def _beats(v, ev):
+            return beats_key(v, ev, order)
+
+    def fold_batch(pdf, starts) -> list[dict[str, Any]]:
         import pandas as pd
 
         def _nullify(x):
@@ -325,95 +342,73 @@ def make_fold_group(value_cols, rank_col, order, limit):
                 return None
             return x
 
-        # Round-5 refinement: a row emits changelog iff it ENTERS the
-        # running top-N, which depends only on the ORDER-column sequence
-        # (fold_records admits a row iff it beats the running Nth value;
-        # non-entering rows never mutate the ranking). A scalar prepass
-        # over just (rank, seq, order) picks the entering rows, so the
-        # O(rows x cols) dict materialization runs on the survivors only
-        # — about N*H(rows/key) of rows/key under uniform arrival, a
-        # large constant-factor cut on big slices.
+        # Column extraction once per chunk, not per key: plain Python
+        # lists, positionally indexed by the run ranges below. Columns
+        # the prepass reads on every row are nullified up front; value
+        # columns only for the rows that reach fold_records.
         n = len(pdf)
         rank_v = [_nullify(x) for x in pdf[rank_col].tolist()]
         seq_v = [_nullify(x) for x in pdf[SEQ_INPUT].tolist()]
         ov_lists = [
             [_nullify(x) for x in pdf[c].tolist()] for c in order_cols_
         ]
-        # Single-column fast path: scalar order keys and a direction-
-        # specialized compare — this prepass touches every slice row.
-        single = len(ov_lists) == 1
         order_v = ov_lists[0] if single else list(zip(*ov_lists))
-        state_idx = sorted(
-            (i for i in range(n) if rank_v[i] is not None),
-            key=lambda i: rank_v[i],
-        )
-        slice_idx = sorted(
-            (i for i in range(n) if rank_v[i] is None), key=lambda i: seq_v[i]
-        )
+        raw_vals = [(c, pdf[c].tolist()) for c in value_cols]
 
-        if single:
-            desc0 = order[0][1]
+        def _row(i):
+            return {c: _nullify(vals[i]) for c, vals in raw_vals}
 
-            def _beats(v, ev):
-                # Identical semantics to beats_key (ties do not displace,
-                # DESC nulls last / ASC nulls first).
-                if v is None:
-                    return (not desc0) and ev is not None
-                if ev is None:
-                    return desc0
-                return (v > ev) if desc0 else (v < ev)
-
-        else:
-
-            def _beats(v, ev):
-                return beats_key(v, ev, order)
-
-        top_vals = [order_v[i] for i in state_idx[:limit]]
-        entering: list[int] = []
-        for i in slice_idx:
-            v = order_v[i]
-            if len(top_vals) >= limit and not _beats(v, top_vals[-1]):
-                continue
-            entering.append(i)
-            lo, hi = 0, len(top_vals)
-            while lo < hi:
-                mid = (lo + hi) // 2
-                if _beats(v, top_vals[mid]):
-                    hi = mid
-                else:
-                    lo = mid + 1
-            top_vals.insert(lo, v)
-            del top_vals[limit:]
-
-        need_idx = state_idx + entering
-        sub_cols = {
-            c: [_nullify(x) for x in pdf[c].iloc[need_idx].tolist()]
-            for c in value_cols
-        }
-        m_state = len(state_idx)
-        ranking: list[dict[str, Any]] = [
-            {c: sub_cols[c][j] for c in value_cols} for j in range(m_state)
-        ]
-        rows = [
-            ({c: sub_cols[c][j] for c in value_cols}, seq_v[need_idx[j]])
-            for j in range(m_state, len(need_idx))
-        ]
         out: list[dict[str, Any]] = []
-        for gseq, sub, op, place, row in fold_records(
-            ranking, rows, order, limit
-        ):
-            out.append(
-                {**row, rank_col: place, OP_COL: op, GSEQ_COL: gseq,
-                 SUB_COL: sub, KIND_COL: 0}
+        ends = [*starts[1:], n]
+        for gs, ge in zip(starts, ends):
+            state_idx = sorted(
+                (i for i in range(gs, ge) if rank_v[i] is not None),
+                key=rank_v.__getitem__,
             )
-        for i, row in enumerate(ranking[:limit]):
-            out.append(
-                {**row, rank_col: i + 1, OP_COL: None, GSEQ_COL: None,
-                 SUB_COL: None, KIND_COL: 1}
+            slice_idx = sorted(
+                (i for i in range(gs, ge) if rank_v[i] is None),
+                key=seq_v.__getitem__,
             )
+            # A row emits changelog iff it ENTERS the running top-N, which
+            # depends only on the order-column sequence (fold_records
+            # admits a row iff it beats the running Nth value; rows that
+            # do not enter never mutate the ranking). This scalar prepass
+            # picks the entering rows, so the per-row dicts are built for
+            # state and entering rows only.
+            top_vals = [order_v[i] for i in state_idx[:limit]]
+            entering: list[int] = []
+            for i in slice_idx:
+                v = order_v[i]
+                if len(top_vals) >= limit and not _beats(v, top_vals[-1]):
+                    continue
+                entering.append(i)
+                lo, hi = 0, len(top_vals)
+                while lo < hi:
+                    mid = (lo + hi) // 2
+                    if _beats(v, top_vals[mid]):
+                        hi = mid
+                    else:
+                        lo = mid + 1
+                top_vals.insert(lo, v)
+                del top_vals[limit:]
+
+            ranking = [_row(i) for i in state_idx]
+            rows = [(_row(i), seq_v[i]) for i in entering]
+            for gseq, sub, op, place, row in fold_records(
+                ranking, rows, order, limit
+            ):
+                out.append(
+                    {**row, rank_col: place, OP_COL: op, GSEQ_COL: gseq,
+                     SUB_COL: sub, KIND_COL: 0}
+                )
+            for i, row in enumerate(ranking[:limit]):
+                out.append(
+                    {**row, rank_col: i + 1, OP_COL: None, GSEQ_COL: None,
+                     SUB_COL: None, KIND_COL: 1}
+                )
         return out
 
-    return fold_group
+    return fold_batch
 
 
 def execute_topn(ctx: StepContext, sql: str) -> StepResult:
@@ -513,9 +508,8 @@ def execute_topn(ctx: StepContext, sql: str) -> StepResult:
     candidates = _prune_partition_local(candidates, order, spec.limit)
 
     # Distributed fold: the global changelog is inherently one sequential
-    # fold, so run it as ONE applyInPandas group (constant key) over
-    # (previous state ∪ pruned survivors) — the same machinery as the
-    # keyed variant. No data row ever materializes on the driver; the
+    # fold, so run it as ONE key run (constant key) over (previous state ∪
+    # pruned survivors) — the same chunk fold as the keyed variant. No data row ever materializes on the driver; the
     # reference runs the whole job at parallelism 1 (SURVEY §3), so a
     # single fold task over the pruned handful is the faithful — and
     # bounded — physical shape.
@@ -539,9 +533,9 @@ def execute_topn(ctx: StepContext, sql: str) -> StepResult:
     )
     from ..functions.grouped import grouped_map_batched
 
-    fold_group = make_fold_group(value_cols, rank_col, order, spec.limit)
+    fold_batch = make_batch_fold(value_cols, rank_col, order, spec.limit)
     folded = ctx.pin(
-        grouped_map_batched(unioned, [GROUP_COL], fold_group, fold_schema)
+        grouped_map_batched(unioned, [GROUP_COL], fold_batch, fold_schema)
     )
     # Materialize the pin NOW: the deferred state save and the output write
     # later run as concurrent jobs, and Spark's cache races rather than

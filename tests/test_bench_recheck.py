@@ -124,3 +124,27 @@ def test_malformed_lines_skipped_and_recorded(monkeypatch, capsys):
     assert len(rec["skipped_lines"]) == 4
     assert "no_such_entry" in " ".join(rec["skipped_lines"])
     assert capsys.readouterr().err.count("skipped line") == 4
+
+
+def test_session_stopped_before_recheck(monkeypatch, tmp_path, capsys):
+    """The recheck starts a fresh JVM; the bench's own session must be
+    stopped before it, so the two never compete for the host."""
+    events = []
+
+    class FakeSpark:
+        def stop(self):
+            events.append("stop")
+
+    def fake_recheck(pin_report):
+        events.append("recheck")
+        return {}
+
+    monkeypatch.setattr(bench, "_recheck_missed_pins", fake_recheck)
+    # BENCH_DETAIL.json goes next to bench.py: keep the real one untouched.
+    monkeypatch.setattr(bench, "__file__", str(tmp_path / "bench.py"))
+    timings = {name: 1.0 for name in bench.PINS if name != "suite_total"}
+    bench._finish(FakeSpark(), timings, 0.1)
+    assert events == ["stop", "recheck"]
+    assert json.loads((tmp_path / "BENCH_DETAIL.json").read_text())["queries"] == timings
+    compact = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert compact["metric"] == "suite_total"

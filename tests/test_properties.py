@@ -331,3 +331,89 @@ def test_fold_records_composite_order_matches_brute_force(vals, limit):
                 sub += 1
         prev_top = top
     assert got == expected
+
+
+# ---------------------------------------------------------------------------
+# Top-N chunk fold contract: make_batch_fold(...)(chunk_pdf, starts) over a
+# multi-key chunk must equal the concatenation of per-key fold_records runs
+# (state rows ranked by place, slice rows replayed in __seq order), each
+# followed by the key's new ranking.
+
+opt_small = st.one_of(st.none(), st.integers(min_value=0, max_value=5))
+key_runs = st.lists(
+    st.tuples(
+        st.lists(st.tuples(opt_small, opt_small), max_size=6),  # state history
+        st.lists(st.tuples(opt_small, opt_small), max_size=12),  # slice rows
+    ),
+    min_size=1,
+    max_size=5,
+)
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    key_runs,
+    st.integers(min_value=1, max_value=3),
+    st.booleans(),
+    st.booleans(),
+    st.randoms(use_true_random=False),
+)
+def test_batch_fold_equals_per_key_fold_records(
+    runs, limit, descending, composite, rnd
+):
+    import pandas as pd
+    from hypothesis import assume
+
+    from kamu_engine_flink_spark.functions.grouped import run_starts
+    from kamu_engine_flink_spark.operators.topn import (
+        GSEQ_COL,
+        KIND_COL,
+        OP_COL,
+        SEQ_INPUT,
+        SUB_COL,
+        fold_records,
+        make_batch_fold,
+    )
+
+    order = [("v", descending)] + ([("w", not descending)] if composite else [])
+    value_cols = ["k", "v", "w"]
+    chunk_rows: list[dict] = []
+    expected: list[dict] = []
+    seq = 0
+    for g, (history, slice_vals) in enumerate(runs):
+        if not history and not slice_vals:
+            continue
+        key = None if g == 1 else f"k{g}"
+        # A valid previous state: the ranking that folding `history` leaves.
+        state: list = []
+        for _ in fold_records(
+            state,
+            [({"k": key, "v": v, "w": w}, -1) for v, w in history],
+            order,
+            limit,
+        ):
+            pass
+        run = [{"place": p + 1, **r, SEQ_INPUT: None} for p, r in enumerate(state)]
+        slice_rows = []
+        for v, w in slice_vals:
+            slice_rows.append(({"k": key, "v": v, "w": w}, seq))
+            run.append({"place": None, "k": key, "v": v, "w": w, SEQ_INPUT: seq})
+            seq += 1
+        rnd.shuffle(run)  # the fold sorts state by place and slice by __seq
+        chunk_rows.extend(run)
+
+        ranking = [dict(r) for r in state]
+        for gseq, sub, op, place, row in fold_records(
+            ranking, slice_rows, order, limit
+        ):
+            expected.append({**row, "place": place, OP_COL: op, GSEQ_COL: gseq,
+                             SUB_COL: sub, KIND_COL: 0})
+        for i, row in enumerate(ranking):
+            expected.append({**row, "place": i + 1, OP_COL: None,
+                             GSEQ_COL: None, SUB_COL: None, KIND_COL: 1})
+    assume(chunk_rows)
+
+    pdf = pd.DataFrame(chunk_rows, columns=["place", *value_cols, SEQ_INPUT])
+    starts = run_starts(pdf, ["k"]).tolist()
+    got = make_batch_fold(value_cols, "place", order, limit)(pdf, starts)
+    assert got == expected
