@@ -47,8 +47,8 @@ from kamu_engine_flink_spark.session import engine_session
 # the compact final line. Pins are set from ISOLATED-warm baselines
 # (dedicated session, n>=3 warm, cold rep dropped) plus full-session
 # headroom — the aged-JVM full bench runs ~10-25% above isolated on these
-# (two-regime protocol; see the hygiene note below and bench.py:832-838
-# CPU-steal caveat). A MISS means: re-measure in a dedicated session
+# (two-regime protocol; see the hygiene note in main() and the CPU-steal
+# caveat in STRESS_ENTRIES). A MISS means: re-measure in a dedicated session
 # before calling a regression; only an isolated-warm median above the pin
 # is real.
 PINS = {
@@ -361,6 +361,61 @@ FROM purchases as p LEFT JOIN clicks as c ON p.user_id = c.user_id""",
 ]
 
 
+# Group-per-row aggregate feeding a projection over the 2M-row stamp
+# ledger (_stamp_2m_ledger): a ~2M-row emission stamped by the serial
+# window and written through the dense output path.
+STAMP2M_STEPS = [
+    (
+        "g",
+        """SELECT cast(now() as timestamp(3)) as event_time,
+  k, sum(v) as s FROM a GROUP BY k""",
+    ),
+    (None, "SELECT event_time, k, s FROM g"),
+]
+
+# The pinned scale entries, one table for bench.main() and
+# tools/isobench.py: name -> (steps, input set, temporal tables). Steps
+# are one SQL string or [(alias, sql)]; the input set names the fixture
+# stress_invocations() builds — the 10x ledgers split into 3 chained
+# invocations (state restore, horizon eviction and cross-invocation
+# buffers all inside the measured time), or the 2M-row stamp ledger as
+# one. "documents" is the MinHash clustering pipeline
+# (_stress_dedup_cluster), not a transform chain. Pins and their
+# baselines: PINS above.
+STRESS_ENTRIES = {
+    "stress_interval_join_x10_3inv": (JOIN_SQL, "join", ()),
+    "stress_full_join_x10_3inv": (FULL_JOIN_SQL, "join", ()),
+    "stress_keyed_topn_x10_3inv": (KEYED_TOPN_SQL, "events", ()),
+    "stress_over_agg_x10_3inv": (OVER_AGG_SQL, "events", ()),
+    "stress_match_recognize_x10_3inv": (MATCH_RECOGNIZE_SQL, "events", ()),
+    # Retractable Top-N over an updating aggregate at 10x key
+    # cardinality: the agg's op 0/2/3 stream feeds the rank's signed
+    # ledger; the GLOBAL rank re-nets its single group — a linear scan +
+    # TakeOrdered over O(live agg keys).
+    "stress_changelog_topn_x10_3inv": (CHANGELOG_TOPN_STEPS, "purchases", ()),
+    # Mid-chain emission-order stamp under state >> slice: each
+    # invocation stamps the ~100-200k-row correction stream of a 100k-key
+    # continuous agg with the single-partition window.
+    "stress_changelog_stamp_x10_3inv": (CHANGELOG_STAMP_STEPS, "events", ()),
+    # Changelog as-of at state >> slice: a 100k-key continuous
+    # aggregate's correction stream maintains the versioned view, probed
+    # by ~200k clicks per invocation.
+    "stress_changelog_asof_x10_3inv": (
+        CHANGELOG_ASOF_STEPS, "join", (("rates", "user_id"),)
+    ),
+    # Stateful EXCEPT: per-tuple branch counts bucketed by fingerprint;
+    # the merge plans no state-side exchange.
+    "stress_setop_except_x10_3inv": (SETOP_EXCEPT_STEPS, "join", ()),
+    # CAUTION: a host CPU-steal window (load avg << nproc during a
+    # saturating run) inflates this entry; re-probe with a known entry
+    # (dedup_minhash warm ~2.5 s healthy) before reading a full-bench
+    # number from such a window as real.
+    "stamp_2m_gate_default": (STAMP2M_STEPS, "stamp2m", ()),
+    # documents x10 -> MinHash+LSH pairs -> connected components.
+    "stress_minhash_cluster_x10": (None, "documents", ()),
+}
+
+
 def _odf_ledger(
     spark, sf_dir: str, workdir: str, name: str = "events",
     event_type: str | None = None, user_mod: int | None = None,
@@ -611,6 +666,73 @@ def _stress_dedup_cluster(spark, sf_dir: str) -> float:
     return round(time.perf_counter() - t0, 3)
 
 
+def _stamp_2m_ledger(spark, sf_dir: str, workdir: str):
+    """~2M-row ledger, every row its own group key (events x20), as one
+    slice file. Returns (path, watermark)."""
+    from pyspark.sql import functions as F
+
+    from kamu_engine_flink_spark.sinks.parquet import write_single_parquet
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    big = (
+        ev.crossJoin(spark.range(20).select(F.col("id").alias("__rep")))
+        .select(
+            (F.col("event_id") * 20 + F.col("__rep")).alias("offset"),
+            F.lit(0).cast("int").alias("op"),
+            F.to_timestamp(F.lit("2020-01-01 00:00:00")).alias("system_time"),
+            F.col("ts").alias("event_time"),
+            F.concat(
+                F.col("user_id"), F.lit("#"), F.col("__rep"),
+                F.lit("#"), F.col("event_id"),
+            ).alias("k"),
+            F.floor(F.col("value") * 100).cast("long").alias("v"),
+        )
+    )
+    path = os.path.join(workdir, "stamp2m.parquet")
+    write_single_parquet(big, path)
+    wm = spark.read.parquet(path).agg({"event_time": "max"}).collect()[0][0]
+    return path, wm
+
+
+# x10 input set -> the events.parquet event_type it keeps (None: all).
+_X10_EVENT_TYPES = {"events": None, "purchases": "purchase", "clicks": "click"}
+
+
+def stress_invocations(spark, sf_dir: str, workdir: str, input_set: str,
+                       cache: dict) -> list:
+    """Per-invocation [(alias, slice_path, wm)] lists of one STRESS_ENTRIES
+    input set, built once per `cache` (prep cost stays out of timings)."""
+    if input_set not in cache:
+        if input_set == "stamp2m":
+            invs = [[("a", *_stamp_2m_ledger(spark, sf_dir, workdir))]]
+        elif input_set == "join":
+            p = stress_invocations(spark, sf_dir, workdir, "purchases", cache)
+            c = stress_invocations(spark, sf_dir, workdir, "clicks", cache)
+            invs = [pi + ci for pi, ci in zip(p, c)]
+        else:
+            invs = [
+                [(input_set, path, wm)]
+                for path, wm in _x10_sliced_ledgers(
+                    spark, sf_dir, workdir, input_set,
+                    _X10_EVENT_TYPES[input_set],
+                )
+            ]
+        cache[input_set] = invs
+    return cache[input_set]
+
+
+def run_stress_entry(spark, sf_dir: str, workdir: str, name: str, tag: str,
+                     cache: dict) -> float:
+    """One timed run of STRESS_ENTRIES[name], in seconds."""
+    steps, input_set, temporal_tables = STRESS_ENTRIES[name]
+    if input_set == "documents":
+        return _stress_dedup_cluster(spark, sf_dir)
+    invs = stress_invocations(spark, sf_dir, workdir, input_set, cache)
+    return _stress_transform_x10(
+        spark, invs, steps, workdir, tag, temporal_tables=temporal_tables
+    )
+
+
 def _recheck_missed_pins(pin_report: dict) -> dict:
     """Isolated-warm re-measure of every missed per-entry pin via
     tools/isobench.py in a SUBPROCESS (fresh JVM + session + fixtures —
@@ -851,165 +973,28 @@ def main() -> None:
             except Exception:
                 pass
 
+        # Scale-stress entries (STRESS_ENTRIES; the matching state-size
+        # contracts are asserted in tests/test_state_stress.py). Fixtures
+        # are built before the timed reps; hygiene runs before each rep,
+        # outside the timed region (the runners time themselves).
         _hygiene()
-        # Scale-stress: the four stateful transforms over the events ledger
-        # replicated x10 (1M rows, 10x user_id cardinality) split into 3
-        # chained invocations — state restore, horizon eviction, and
-        # cross-invocation buffers all inside the measured time. The
-        # matching state-size contracts are asserted in
-        # tests/test_state_stress.py.
-        ev_slices = _x10_sliced_ledgers(spark, sf_dir, workdir)
-        p_slices = _x10_sliced_ledgers(spark, sf_dir, workdir, "purchases", "purchase")
-        c_slices = _x10_sliced_ledgers(spark, sf_dir, workdir, "clicks", "click")
-        ev_invs = [[("events", p, wm)] for (p, wm) in ev_slices]
-        join_invs = [
-            [("purchases", pp, pwm), ("clicks", cp, cwm)]
-            for (pp, pwm), (cp, cwm) in zip(p_slices, c_slices)
-        ]
-        p_stress_invs = [[("purchases", pp, pwm)] for (pp, pwm) in p_slices]
-        for tag, sql, invs in (
-            # The four entries below gained mechanical pins in round 11
-            # (PINS table at the top of this file) from idle-box
-            # baselines (2026-08-16, dedicated session, n=4, cold
-            # dropped): interval_join warm 4.05, full_join 8.90,
-            # keyed_topn 6.56, over_agg 4.72 — after drifting +10-24% in
-            # the round-10 full bench with untouched code (adjudicated
-            # session aging; the same isolated protocol cleared the
-            # whole odf_transform cluster this round).
-            ("stress_interval_join_x10_3inv", JOIN_SQL, join_invs),
-            ("stress_full_join_x10_3inv", FULL_JOIN_SQL, join_invs),
-            ("stress_keyed_topn_x10_3inv", KEYED_TOPN_SQL, ev_invs),
-            ("stress_over_agg_x10_3inv", OVER_AGG_SQL, ev_invs),
-            # Round-9 idle-box re-baseline (dedicated session, n=3,
-            # 2026-08-16): 21.7 cold, 7.44, 7.19 — median 7.44 vs
-            # round-8's full-bench 8.31 and round-7's 6.34. The round-8
-            # +31% was session drift (code untouched). With per-rep
-            # hygiene the round-9 local full bench measured 6.14 —
-            # expect ~6-7.5; above 8.5 is a real regression.
-            ("stress_match_recognize_x10_3inv", MATCH_RECOGNIZE_SQL, ev_invs),
-            # Retractable Top-N over an updating aggregate at 10x key
-            # cardinality across 3 chained invocations: the agg's op 0/2/3
-            # stream feeds the rank's signed ledger. The agg folds
-            # O(touched keys); the GLOBAL rank re-nets its single group —
-            # a linear scan + TakeOrdered over O(live agg keys), the same
-            # order as the agg state itself (rank positions shift
-            # globally, so no key restriction applies).
-            # PIN: <= 8.5 s. Round-9 idle-box re-baseline (dedicated
-            # session, n=6, 2026-08-16): cold 21.2, then 8.38, 6.86,
-            # 6.68, 6.99, 6.69 — warm floor 6.7, warm median 6.9, SAME
-            # code as round-8's 10.02 full-bench median; the gap was
-            # session aging (JVM heap after ~60 prior entries). With the
-            # per-rep cache/GC hygiene below, the round-9 local full
-            # bench measured 5.54 (n=3 median) — full-session now tracks
-            # the warm regime, so the round-8 pin of 8.5 stands.
-            ("stress_changelog_topn_x10_3inv", CHANGELOG_TOPN_STEPS, p_stress_invs),
-            # Mid-chain emission-order stamp under state >> slice:
-            # continuous agg over the 1M-row events ledger (100k keys) ->
-            # plain projection, 3 invocations; each invocation stamps the
-            # ~100-200k-row correction stream with the single-partition
-            # window. PIN: <= 5.5 s (round-8 measured 4.9).
-            ("stress_changelog_stamp_x10_3inv", CHANGELOG_STAMP_STEPS, ev_invs),
-            # Changelog as-of at state >> slice: a 100k-key continuous
-            # aggregate's correction stream maintains the versioned view,
-            # probed by ~200k clicks per invocation across 3 chained
-            # invocations (version-state appends, probe buffering, and
-            # watermark releases all in the measured time). PIN: <= 10.5 s
-            # (round-8 measured 10.2 n=3 median, warm floor ~7.7).
-            ("stress_changelog_asof_x10_3inv", CHANGELOG_ASOF_STEPS, join_invs),
-            # Stateful EXCEPT over the 10x purchase/click ledgers (state =
-            # per-tuple branch counts, bucketed by fingerprint; the merge
-            # plans no state-side exchange). PIN: <= 8.5 s. Round-9
-            # introduction measurements: dedicated session n=4 warm
-            # median 6.5 (floor 6.0); full local bench BEFORE per-rep
-            # hygiene [7.5, 10.3, 20.9] (aged-session pathology), AFTER
-            # per-rep hygiene 5.65 n=3 median — the hygiene collapsed the
-            # full-session/isolated gap, so one pin suffices.
-            ("stress_setop_except_x10_3inv", SETOP_EXCEPT_STEPS, join_invs),
-        ):
+        cache: dict = {}
+        for name, (_, input_set, _) in STRESS_ENTRIES.items():
+            if input_set != "documents":
+                stress_invocations(spark, sf_dir, workdir, input_set, cache)
             rep_seq = iter(range(SUBSEC_REPS))
-            tts = (
-                [("rates", "user_id")]
-                if sql is CHANGELOG_ASOF_STEPS
-                else ()
-            )
-            def _one_stress(tag=tag, sql=sql, invs=invs, tts=tts):
+
+            def _one_stress(name=name, rep_seq=rep_seq):
                 _hygiene()
-                return _stress_transform_x10(
-                    spark, invs, sql, workdir, f"{tag}-r{next(rep_seq)}",
-                    temporal_tables=tts,
+                return run_stress_entry(
+                    spark, sf_dir, workdir, name, f"{name}-r{next(rep_seq)}",
+                    cache,
                 )
 
-            timings[tag], runs = _median_runs(_one_stress)
-            print(f"{tag}: {timings[tag]}s (runs: {runs})", file=sys.stderr)
-
-        # Emission-stamp scale entry: a ~2M-row emission (every input row
-        # its own group key, events x20) feeding a projection, stamped by
-        # the serial window and written through the dense output path.
-        # PIN <= 10.5 (PINS table). CAUTION: a host CPU-steal window (load
-        # avg << nproc during a saturating run) inflates this entry;
-        # re-probe with a known entry (dedup_minhash warm ~2.5 s healthy)
-        # before reading a full-bench number from such a window as real.
-        from pyspark.sql import functions as BF
-
-        from kamu_engine_flink_spark.sinks.parquet import write_single_parquet
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        big = (
-            ev.crossJoin(spark.range(20).select(BF.col("id").alias("__rep")))
-            .select(
-                (BF.col("event_id") * 20 + BF.col("__rep")).alias("offset"),
-                BF.lit(0).cast("int").alias("op"),
-                BF.to_timestamp(BF.lit("2020-01-01 00:00:00")).alias(
-                    "system_time"
-                ),
-                BF.col("ts").alias("event_time"),
-                BF.concat(
-                    BF.col("user_id"), BF.lit("#"), BF.col("__rep"),
-                    BF.lit("#"), BF.col("event_id"),
-                ).alias("k"),
-                BF.floor(BF.col("value") * 100).cast("long").alias("v"),
-            )
-        )
-        stamp_path = os.path.join(workdir, "stamp2m.parquet")
-        write_single_parquet(big, stamp_path)
-        stamp_wm = (
-            spark.read.parquet(stamp_path).agg({"event_time": "max"}).collect()[0][0]
-        )
-        STAMP2M_STEPS = [
-            (
-                "g",
-                """SELECT cast(now() as timestamp(3)) as event_time,
-  k, sum(v) as s FROM a GROUP BY k""",
-            ),
-            (None, "SELECT event_time, k, s FROM g"),
-        ]
-        stamp_invs = [[("a", stamp_path, stamp_wm)]]
-        tag = "stamp_2m_gate_default"
-        rep_seq = iter(range(SUBSEC_REPS))
-        timings[tag], runs = _median_runs(
-            lambda: _stress_transform_x10(
-                spark, stamp_invs, STAMP2M_STEPS, workdir,
-                f"{tag}-r{next(rep_seq)}",
-            )
-        )
-        print(f"{tag}: {timings[tag]}s (runs: {runs})", file=sys.stderr)
+            timings[name], runs = _median_runs(_one_stress)
+            print(f"{name}: {timings[name]}s (runs: {runs})", file=sys.stderr)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
-
-    # Scale-stress: the MinHash->LSH-pairs->connected-components pipeline on
-    # the documents corpus replicated x10 (50k docs at sf0.1, every doc in a
-    # >=10-clone duplicate cluster). Exercises the banded bucket join and the
-    # label-propagation component rounds at 10x the registry size. Median of
-    # REPS runs like every other entry — the multi-job iterative pipeline is
-    # the noisiest number in the file. PIN: <= 11 (PINS table; round-11
-    # idle-box warm median 7.40, r10 full-session 10.03).
-    runs = [_stress_dedup_cluster(spark, sf_dir) for _ in range(REPS)]
-    timings["stress_minhash_cluster_x10"] = round(statistics.median(runs), 3)
-    print(
-        f"stress_minhash_cluster_x10: {timings['stress_minhash_cluster_x10']}s"
-        f" (runs: {[round(r, 3) for r in runs]})",
-        file=sys.stderr,
-    )
 
     _finish(spark, timings, sf_num)
 

@@ -7,7 +7,6 @@ the checkpoint directory — tar-compatible with the adapter transport
 contract (adapter/src/adapter.rs:233-258):
 
     watermarks.json     per-input + per-step watermark state
-    offset.json         (reserved; nextOffset arrives in the request)
     <name>.parquet/     operator state relations (window buffers, join
                         buffers, temporal versions, Top-N tables)
 
@@ -23,26 +22,24 @@ import os
 import shutil
 import uuid
 from datetime import datetime, timezone
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
-
-from ..session import conf_int
-
-# Conf key for the state bucket count. Buckets are baked into a relation at
-# first write (recorded in its sidecar); later appends reuse the recorded
-# count, so changing the conf mid-stream only affects NEW relations. On the
-# test/bench box 32 matches spark.sql.shuffle.partitions; a real cluster
-# sizes this to executors x cores.
-_NUM_BUCKETS_CONF = "spark.kamu.state.numBuckets"
 
 # Append-only relations add up to num_buckets files per invocation (one
 # generation). Past this many data files the append compacts: one full
 # bucketed rewrite folds all generations back to one file per bucket, so
 # long-lived streams see amortized O(slice) appends with periodic O(state)
 # compactions instead of unbounded file-count growth (RocksDB/LSM shape).
-_COMPACT_FILES_CONF = "spark.kamu.state.compactAfterFiles"
-_COMPACT_FILES_DEFAULT = 512
+_COMPACT_AFTER_FILES = 512
+
+# append_or_fold: a relation whose operator can fold its history (net a
+# signed ledger, prune versions below a watermark) is rewritten as that
+# fold once its bytes exceed this multiple of the size measured after the
+# last fold, and at least the minimum below.
+_FOLD_GROWTH = 4
+_FOLD_MIN_BYTES = 8 << 20
 
 
 def _has_data_files(path: str) -> bool:
@@ -69,8 +66,14 @@ class StateStore:
     """Read state from the previous checkpoint dir, write to the new one.
 
     The reference mutates an untarred copy of the previous checkpoint; we
-    keep the dirs immutable: every run rewrites its full (small) state into
-    `new_dir`. Relations it did not touch are copied forward.
+    keep the dirs immutable: a run writes the relations it changes into
+    `new_dir` — a rewrite, or for append relations the previous files
+    hard-linked forward plus the delta — and `finish` links every
+    relation it did not touch forward.
+
+    Every relation write is queued by `save_df` and runs in
+    `flush_deferred`; this class alone decides how a relation is written
+    (bucket count, append vs rewrite, compaction).
     """
 
     def __init__(self, spark: SparkSession, prev_dir: str | None, new_dir: str):
@@ -79,12 +82,10 @@ class StateStore:
         self.new_dir = new_dir
         os.makedirs(new_dir, exist_ok=True)
         self._written: set[str] = set()
-        # When deferral is on, save_df queues (name, df) instead of
-        # writing; flush_deferred() runs every queued write — plus an
-        # optional extra action (the invocation's output write) — with
-        # overlapping jobs. Safe because loads only ever read PREV_DIR:
-        # nothing reads a relation written this invocation.
-        self._deferred: list | None = None
+        # Writes queued by save_df, run by flush_deferred. Deferring is
+        # safe because loads only ever read PREV_DIR: nothing reads a
+        # relation written this invocation.
+        self._deferred: list = []
 
     # -- JSON scalars ------------------------------------------------------
 
@@ -196,7 +197,8 @@ class StateStore:
         append: bool = False,
         pre_partitioned: bool = False,
     ) -> None:
-        """Persist a state relation into the new checkpoint dir.
+        """Queue a state relation for `flush_deferred` to write into the
+        new checkpoint dir.
 
         bucket_by: hash-bucket the files by these columns (see load_df) so
             next invocation's state-side joins are exchange-free.
@@ -214,10 +216,42 @@ class StateStore:
             assigns each ROW its bucket file); misaligned partitions only
             cost extra small files.
         """
-        if self._deferred is not None:
-            self._deferred.append((name, df, bucket_by, append, pre_partitioned))
+        self._deferred.append((name, df, bucket_by, append, pre_partitioned))
+
+    def append_or_fold(
+        self,
+        name: str,
+        delta: DataFrame,
+        bucket_by: list[str] | None,
+        fold: Callable[[], DataFrame | None],
+        force: bool = False,
+    ) -> None:
+        """Save a relation that grows by `delta` per invocation but whose
+        history the operator can fold without changing its meaning
+        (netting a signed ledger, pruning versions below a watermark).
+
+        The common case appends the delta: O(slice). Once the relation's
+        bytes exceed _FOLD_GROWTH x the size measured after its last fold
+        (and _FOLD_MIN_BYTES), it is rewritten as `fold()` instead —
+        amortized O(slice) appends with periodic O(state) folds. `fold`
+        returns None to keep appending (nothing can be folded yet);
+        `force` asks for the fold regardless of size. The floor lives in
+        a `<name>.compact.json` sidecar and is measured lazily: a fold
+        records None and the next invocation records the folded size."""
+        meta_name = f"{name}.compact.json"
+        floor = (self.load_json(meta_name) or {}).get("floor")
+        cur_bytes = self.relation_bytes(name) or 0
+        grown = floor is not None and cur_bytes > max(
+            _FOLD_GROWTH * floor, _FOLD_MIN_BYTES
+        )
+        folded = fold() if force or grown else None
+        if folded is not None:
+            self.save_df(name, folded, bucket_by=bucket_by)
+            self.save_json(meta_name, {"floor": None})
             return
-        self._write_df(name, df, bucket_by, append, pre_partitioned)
+        self.save_df(name, delta, bucket_by=bucket_by, append=True)
+        if floor is None:
+            self.save_json(meta_name, {"floor": cur_bytes})
 
     def _write_df(
         self,
@@ -239,12 +273,12 @@ class StateStore:
             n_files = sum(
                 1 for e in os.listdir(prev_path) if not e.startswith(("_", "."))
             )
-            if prev_buckets == bucket_by and n_files < self._compact_after():
+            if prev_buckets == bucket_by and n_files < _COMPACT_AFTER_FILES:
                 self._append_delta(
                     name, path, prev_path, df, bucket_by, prev_meta
                 )
                 return
-            # Layout changed (conf/bucket-key change between runs) or the
+            # Layout changed (bucket-key change between runs) or the
             # generation count crossed the compaction bound: fold every
             # accumulated file into one bucketed rewrite.
             prev = self.load_df(name)
@@ -253,16 +287,7 @@ class StateStore:
         if bucket_by:
             num = self._num_buckets()
             self._write_bucketed(path, df, bucket_by, num, pre_partitioned)
-            self.save_json(
-                self._meta_name(name),
-                {
-                    "bucket_by": bucket_by,
-                    "num_buckets": num,
-                    # Written-schema record: load_df rebuilds the bucketed
-                    # scan from this instead of a per-load footer inference.
-                    "schema": df.schema.jsonValue(),
-                },
-            )
+            self._save_bucket_meta(name, bucket_by, num, df.schema)
         else:
             # The input of this write may include the previous state at the
             # same logical name (read from prev_dir), so no self-overwrite
@@ -273,17 +298,20 @@ class StateStore:
             self._written.add(self._meta_name(name))
         self._written.add(f"{name}.parquet")
 
-    def _num_buckets(self) -> int:
-        # The bucket-count conf falls back to the session's shuffle
-        # partition count, read only when that fallback is needed.
-        return conf_int(
-            self.spark,
-            _NUM_BUCKETS_CONF,
-            lambda: conf_int(self.spark, "spark.sql.shuffle.partitions", 32),
+    def _save_bucket_meta(
+        self, name: str, bucket_by: list[str], num: int, schema: StructType
+    ) -> None:
+        # Written-schema record: load_df rebuilds the bucketed scan from
+        # this instead of a per-load footer inference.
+        self.save_json(
+            self._meta_name(name),
+            {"bucket_by": bucket_by, "num_buckets": num, "schema": schema.jsonValue()},
         )
 
-    def _compact_after(self) -> int:
-        return conf_int(self.spark, _COMPACT_FILES_CONF, _COMPACT_FILES_DEFAULT)
+    def _num_buckets(self) -> int:
+        # Only a NEW relation reads this: the count is recorded in its
+        # sidecar and every later append reuses the recorded count.
+        return int(self.spark.conf.get("spark.sql.shuffle.partitions"))
 
     def _write_bucketed(
         self,
@@ -342,16 +370,9 @@ class StateStore:
         if bucket_by:
             num = int((prev_meta or {}).get("num_buckets") or self._num_buckets())
             self._write_bucketed(staging, delta, bucket_by, num)
-            self.save_json(
-                self._meta_name(name),
-                {
-                    "bucket_by": bucket_by,
-                    "num_buckets": num,
-                    # Delta layout must match the relation's, so the delta
-                    # schema IS the relation schema (see the append guard).
-                    "schema": delta.schema.jsonValue(),
-                },
-            )
+            # Delta layout must match the relation's, so the delta schema
+            # IS the relation schema (see the append guard).
+            self._save_bucket_meta(name, bucket_by, num, delta.schema)
         else:
             delta.write.mode("overwrite").parquet(staging)
         prefix = uuid.uuid4().hex[:8]
@@ -364,16 +385,13 @@ class StateStore:
         shutil.rmtree(staging, ignore_errors=True)
         self._written.add(f"{name}.parquet")
 
-    def begin_deferred(self) -> None:
-        self._deferred = []
-
     def flush_deferred(self, also=None) -> None:
         """Run every queued state write — and `also` (a zero-arg callable,
-        typically the output write) — with overlapping job submission,
-        then leave deferral mode. DataFrame plans are resolved at
-        creation, so later temp-view rebinding cannot change a queued
-        write; per-relation names are unique per invocation."""
-        pending, self._deferred = self._deferred or [], None
+        typically the output write) — with overlapping job submission.
+        DataFrame plans are resolved at creation, so later temp-view
+        rebinding cannot change a queued write; per-relation names are
+        unique per invocation."""
+        pending, self._deferred = self._deferred, []
         actions = [lambda it=it: self._write_df(*it) for it in pending]
         if also is not None:
             actions.append(also)
@@ -389,30 +407,12 @@ class StateStore:
             for f in futures:
                 f.result()
 
-    def save_dfs(self, items) -> None:
-        """Save several INDEPENDENT state relations with overlapping jobs
-        (concurrent submission from one thread per relation — each write
-        is its own output, so the cluster schedules them side by side
-        instead of serializing the actions). Items are (name, df[,
-        bucket_by[, append[, pre_partitioned]]]) tuples."""
-        items = [(*it, None, False, False)[:5] for it in items]
-        if self._deferred is not None:
-            self._deferred.extend(items)
-            return
-        if len(items) == 1:
-            self._write_df(*items[0])
-            return
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(items)) as pool:
-            futures = [pool.submit(self._write_df, *it) for it in items]
-            for f in futures:
-                f.result()
-
     def finish(self) -> None:
         """Carry forward any previous-state entries this run didn't rewrite.
         Hard-links where possible (checkpoint dirs are immutable once
         written, so shared file bodies are safe) — O(files), not O(bytes)."""
+        if self._deferred:
+            raise RuntimeError("state writes queued after flush_deferred")
         if not self.prev_dir or not os.path.isdir(self.prev_dir):
             return
         for entry in os.listdir(self.prev_dir):

@@ -170,7 +170,6 @@ def _effective_watermark(
 
 def execute_transform(spark: SparkSession, request: TransformRequest) -> TransformResponse:
     state = StateStore(spark, request.prev_checkpoint_path, request.new_checkpoint_path)
-    state.begin_deferred()
     saved_wms = state.load_watermarks()
 
     views: dict[str, DataFrame] = {}

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..engine.state import StateStore
 from ..protocol.model import TransformRequest
-from ..session import conf_int
 
 
 @dataclass
@@ -215,46 +214,31 @@ def maintain_signed_ledger(
     bucket_by: list[str] | None,
     full: "DataFrame | None" = None,
 ) -> None:
-    """Persist a signed-multiset ledger: the common case appends only the
-    invocation's signed rows — O(slice). But an upstream changelog emits a
-    +1/-1 pair per touched tuple EVERY invocation, so an append-only
-    ledger grows with changelog volume, not live rows. Netting the ledger
-    (groupBy tuple, sum sign, drop zero nets) is semantics-preserving
-    (every consumer folds by summing signs), so once the accumulated
-    bytes exceed 4x the size measured after the last compaction — floor
-    tracked in a `<name>.compact.json` sidecar, measured lazily on the
-    following invocation — the history folds back to one row per live
-    tuple: amortized O(slice) appends with periodic O(state) compactions
-    (Flink retains only live rows continuously).
+    """Persist a signed-multiset ledger: append the invocation's signed
+    rows, folded by StateStore.append_or_fold once the ledger has grown.
+    An upstream changelog emits a +1/-1 pair per touched tuple EVERY
+    invocation, so an append-only ledger grows with changelog volume, not
+    live rows. The fold nets the ledger (groupBy tuple, sum sign, drop
+    zero nets) — semantics-preserving, since every consumer folds by
+    summing signs — back to one row per live tuple (Flink retains only
+    live rows continuously).
 
     `full` optionally passes the already-loaded prior ledger so the
-    compaction rewrite reuses its (bucketed) scan."""
+    fold reuses its (bucketed) scan."""
     from pyspark.sql import functions as F
 
-    meta_name = f"{name}.compact.json"
-    meta = ctx.state.load_json(meta_name) or {}
-    cur_bytes = ctx.state.relation_bytes(name) or 0
-    floor = meta.get("floor")
-    min_bytes = conf_int(
-        ctx.spark, "spark.kamu.state.ledgerCompactMinBytes", 8 << 20
-    )
-    if floor is not None and cur_bytes > max(4 * floor, min_bytes):
+    def net() -> "DataFrame":
         ledger = (
             full
             if full is not None
             else ctx.state.load_df(name, schema=delta.schema)
         )
         sign_type = delta.schema[sign_col].dataType
-        compacted = (
+        return (
             ledger.unionByName(delta)
             .groupBy(*value_cols)
             .agg(F.sum(sign_col).cast(sign_type).alias(sign_col))
             .filter(F.col(sign_col) != 0)
         )
-        ctx.state.save_df(name, compacted, bucket_by=bucket_by)
-        # floor=None -> the next invocation records the compacted size.
-        ctx.state.save_json(meta_name, {"floor": None})
-    else:
-        ctx.state.save_df(name, delta, bucket_by=bucket_by, append=True)
-        if floor is None:
-            ctx.state.save_json(meta_name, {"floor": cur_bytes})
+
+    ctx.state.append_or_fold(name, delta, bucket_by, net)

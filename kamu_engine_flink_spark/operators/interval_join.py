@@ -194,7 +194,8 @@ def _interval_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
         keep_right = flagged_right.filter(
             F.col(spec.right_time_col) >= F.lit(wm_l + spec.lower)
         )
-    ctx.state.save_dfs([(left_state, keep_left), (right_state, keep_right)])
+    ctx.state.save_df(left_state, keep_left)
+    ctx.state.save_df(right_state, keep_right)
 
     out_wm = None
     if joint_wm is not None:

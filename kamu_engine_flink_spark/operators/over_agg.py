@@ -496,11 +496,10 @@ def _execute_unbounded(ctx: StepContext, sql: str, spec) -> StepResult:
         keep_acc = acc.drop("__gk") if not keys else acc
         if untouched_acc is not None:
             keep_acc = untouched_acc.unionByName(keep_acc)
-        ctx.state.save_dfs(
-            [
-                (buffer_name, buf),
-                (acc_name, keep_acc, keys or None, False, untouched_acc is not None),
-            ]
+        ctx.state.save_df(buffer_name, buf)
+        ctx.state.save_df(
+            acc_name, keep_acc, keys or None,
+            pre_partitioned=untouched_acc is not None,
         )
         return StepResult(df=result, watermark=new_wm,
                           order_cols=[spec.time_col, SEQ_INPUT])
@@ -550,11 +549,10 @@ def _execute_unbounded(ctx: StepContext, sql: str, spec) -> StepResult:
     )
     if untouched_acc is not None:
         new_acc = untouched_acc.select(*acc_cols).unionByName(new_acc)
-    ctx.state.save_dfs(
-        [
-            (acc_name, new_acc, keys or None, False, untouched_acc is not None),
-            (buffer_name, buf.filter(t > F.lit(new_wm))),
-        ]
+    ctx.state.save_df(
+        acc_name, new_acc, keys or None,
+        pre_partitioned=untouched_acc is not None,
     )
+    ctx.state.save_df(buffer_name, buf.filter(t > F.lit(new_wm)))
 
     return StepResult(df=result, watermark=new_wm, order_cols=[spec.time_col, SEQ_INPUT])

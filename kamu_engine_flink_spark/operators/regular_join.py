@@ -259,14 +259,17 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
     empty_right = new_right.limit(0)
     retract_parts: list[DataFrame] = []
     pad_parts: list[DataFrame] = []
-    saves: list[tuple] = [
-        (left_rows_name, new_left, lkeys, True)
-        if mig_unm_l is None
-        else (left_rows_name, old_left.unionByName(new_left), lkeys, False),
-        (right_rows_name, new_right, rkeys, True)
-        if mig_unm_r is None
-        else (right_rows_name, old_right.unionByName(new_right), rkeys, False),
-    ]
+    # Full-history state (Flink regular-join semantics — no horizon to
+    # evict by; a self-join persists each side under its own state key).
+    # Rows relations append only this run's slice.
+    if mig_unm_l is None:
+        ctx.state.save_df(left_rows_name, new_left, lkeys, append=True)
+    else:
+        ctx.state.save_df(left_rows_name, old_left.unionByName(new_left), lkeys)
+    if mig_unm_r is None:
+        ctx.state.save_df(right_rows_name, new_right, rkeys, append=True)
+    else:
+        ctx.state.save_df(right_rows_name, old_right.unionByName(new_right), rkeys)
 
     if pad_left:
         old_unmatched_l = (
@@ -297,8 +300,8 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
             still_unmatched_l = old_unmatched_l.alias(la).join(
                 new_right.alias(ra), cond, "left_anti"
             )
-        saves.append(
-            (left_unm_name, still_unmatched_l.unionByName(new_unmatched_l), lkeys)
+        ctx.state.save_df(
+            left_unm_name, still_unmatched_l.unionByName(new_unmatched_l), lkeys
         )
         pad_parts.append(
             _run_with_views(ctx, sql, {lv: new_unmatched_l, rv_bind: empty_right}, wm, restore=False)
@@ -333,8 +336,8 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
             still_unmatched_r = old_unmatched_r.alias(ra).join(
                 new_left.alias(la), cond, "left_anti"
             )
-        saves.append(
-            (right_unm_name, still_unmatched_r.unionByName(new_unmatched_r), rkeys)
+        ctx.state.save_df(
+            right_unm_name, still_unmatched_r.unionByName(new_unmatched_r), rkeys
         )
         pad_parts.append(
             _run_with_views(ctx, sql, {lv: empty_left, rv_bind: new_unmatched_r}, wm, restore=False)
@@ -367,12 +370,6 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
                 result = result.unionByName(_tag(r, OP_RETRACT, 0))
     else:
         result = pairs
-
-    # Full-history state (Flink regular-join semantics — no horizon to
-    # evict by; a self-join persists each side under its own state key).
-    # Rows relations append only this run's slice; the saves are
-    # independent outputs flushed with overlapping jobs.
-    ctx.state.save_dfs(saves)
 
     order_cols = [c for c in result.columns if c != _PHASE]
     out_et = ctx.request.vocab.event_time_column

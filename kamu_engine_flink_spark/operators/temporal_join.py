@@ -15,9 +15,9 @@ and let the dialect layer (plans/dialect.py) rewrite both Flink spellings
 join Catalyst can plan — and broadcast when the versioned side is small,
 which is the common dimension-table case at scale. Version state appends
 O(slice) per invocation (bucketed by the PK, so the validity window plans
-no state-side exchange); a size-triggered compaction prunes versions no
-longer valid at the joint watermark, keeping state bounded by key
-cardinality (within 4x), not history length.
+no state-side exchange); a size-triggered fold prunes versions no longer
+valid at the joint watermark, keeping state bounded by key cardinality,
+not history length.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from ..plans.classify import referenced_views
 from ..plans.dialect import VALID_FROM, VALID_TO, VERSIONS_SUFFIX, rewrite_query
 from ..protocol.model import InvalidQueryError, TemporalTable
-from ..session import conf_int
 from .base import StepContext, StepResult, min_watermark
 
 
@@ -40,6 +39,15 @@ def with_validity(versions: DataFrame, primary_key: list[str], event_time_col: s
     return versions.withColumn(VALID_FROM, F.col(event_time_col)).withColumn(
         VALID_TO, F.lead(event_time_col).over(w)
     )
+
+
+def _reachable(versioned: DataFrame, joint_wm) -> DataFrame:
+    """The versions a future probe (event_time > joint_wm) can resolve to:
+    the latest version per key at or before the watermark, plus every
+    later one."""
+    return versioned.filter(
+        F.col(VALID_TO).isNull() | (F.col(VALID_TO) > F.lit(joint_wm))
+    ).drop(VALID_FROM, VALID_TO)
 
 
 def resolve_temporal_table(ctx: StepContext, name: str) -> TemporalTable:
@@ -209,7 +217,7 @@ def _parse_sides(ctx: StepContext, sql: str):
 
 
 def _changelog_version_state(
-    ctx: StepContext, build_df, build_et: str, pk: list, joint_wm, probe_saves
+    ctx: StepContext, build_df, build_et: str, pk: list, joint_wm
 ) -> DataFrame:
     """Maintain the CHANGELOG-fed version ledger and return the resolvable
     (live-version) validity view.
@@ -222,12 +230,10 @@ def _changelog_version_state(
     yield validity intervals exactly like the append-only executor.
 
     Scale shape: the version state is an append-only relation bucketed by
-    the PK — one O(slice) delta append per invocation, with the same
-    size-triggered compaction as the Top-N ledger (fold to versions still
-    reachable at the joint watermark). Validity derivation is a window
-    over the bucketed scan (no exchange on the state side). probe_saves
-    ((name, df) tuples) batch with compaction rewrites so all state
-    writes stay parallel.
+    the PK — one O(slice) delta append per invocation, folded like the
+    Top-N ledger (StateStore.append_or_fold) to the versions still
+    reachable at the joint watermark. Validity derivation is a window
+    over the bucketed scan (no exchange on the state side).
     """
     from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
@@ -294,33 +300,13 @@ def _changelog_version_state(
     )
     resolvable = versioned.filter(~F.col(TOMB)).drop(TOMB, VSEQ)
 
-    # State maintenance: O(slice) delta append; size-triggered compaction
-    # folds to versions still reachable at the joint watermark (the
-    # latest version per key at or before it — tombstones included, so a
-    # dead key stays dead — plus everything after it).
-    compact_meta = f"{versions_state}.compact.json"
-    cmeta = ctx.state.load_json(compact_meta) or {}
-    cur_bytes = ctx.state.relation_bytes(versions_state) or 0
-    floor = cmeta.get("floor")
-    min_bytes = conf_int(
-        ctx.spark, "spark.kamu.state.ledgerCompactMinBytes", 8 << 20
-    )
-    if (
-        floor is not None
-        and joint_wm is not None
-        and cur_bytes > max(4 * floor, min_bytes)
-    ):
-        pruned = versioned.filter(
-            F.col(VALID_TO).isNull() | (F.col(VALID_TO) > F.lit(joint_wm))
-        ).drop(VALID_FROM, VALID_TO)
-        ctx.state.save_dfs([*probe_saves, (versions_state, pruned, pk)])
-        ctx.state.save_json(compact_meta, {"floor": None})
-    else:
-        ctx.state.save_df(versions_state, delta, bucket_by=pk, append=True)
-        for name, df in probe_saves:
-            ctx.state.save_df(name, df)
-        if floor is None:
-            ctx.state.save_json(compact_meta, {"floor": cur_bytes})
+    # State maintenance: O(slice) delta append, folded to the versions
+    # still reachable at the joint watermark (tombstones included, so a
+    # dead key stays dead).
+    def prune() -> DataFrame | None:
+        return None if joint_wm is None else _reachable(versioned, joint_wm)
+
+    ctx.state.append_or_fold(versions_state, delta, pk, prune)
     ctx.state.save_json(
         meta_name,
         {
@@ -380,8 +366,9 @@ def execute_changelog_temporal_join(ctx: StepContext, sql: str) -> StepResult:
         release = probe_all.limit(0)
         keep = probe_all
 
+    ctx.state.save_df(probe_state, keep)
     resolvable = _changelog_version_state(
-        ctx, ctx.views[build], build_et, pk, joint_wm, [(probe_state, keep)]
+        ctx, ctx.views[build], build_et, pk, joint_wm
     )
 
     release.createOrReplaceTempView(probe)
@@ -506,15 +493,13 @@ def _execute_updating_probe(
         release = probe_all.limit(0)
         keep = probe_all
 
+    ctx.state.save_df(probe_state, keep)
     build_df = ctx.views[build]
     if OP_COL in build_df.columns:
-        resolvable = _changelog_version_state(
-            ctx, build_df, build_et, pk, joint_wm, [(probe_state, keep)]
-        )
+        resolvable = _changelog_version_state(ctx, build_df, build_et, pk, joint_wm)
     else:
         resolvable = _appendonly_version_state(
-            ctx, build, build_et, tt.primary_key, joint_wm,
-            [(probe_state, keep)],
+            ctx, build, build_et, tt.primary_key, joint_wm
         )
     ctx.state.save_json(pmeta_name, {"inv": pinv + 1})
 
@@ -565,7 +550,7 @@ def _iso(value):
 
 
 def _appendonly_version_state(
-    ctx: StepContext, build: str, build_et: str, pk: list, joint_wm, probe_saves
+    ctx: StepContext, build: str, build_et: str, pk: list, joint_wm
 ) -> DataFrame:
     """Maintain the APPEND-ONLY version ledger of temporal table `build`
     and return the validity view.
@@ -579,12 +564,10 @@ def _appendonly_version_state(
     build slice, bucketed by the PK — O(slice) per invocation, and the
     next run's validity window plans no exchange on the state side.
     Unreachable versions (future probes have event_time > joint_wm, so
-    only versions valid at or after it matter) are dropped by the
-    size-triggered compaction rewrite instead of a full O(state) rewrite
-    EVERY invocation; between compactions state holds at most 4x the
-    reachable versions. A legacy (or pre-bucketing) relation migrates
-    through the compaction path on first touch. probe_saves ((name, df)
-    tuples) batch with compaction rewrites so state writes stay parallel.
+    only versions valid at or after it matter) are dropped by the fold
+    StateStore.append_or_fold runs once the relation has grown, instead
+    of a full O(state) rewrite EVERY invocation. A legacy (or
+    pre-bucketing) relation migrates through the fold on first touch.
     """
     versions_state = f"{ctx.step_key}-versions-{build}"
     # One-time migration: checkpoints from engine revisions before the
@@ -607,34 +590,14 @@ def _appendonly_version_state(
     versions = ctx.pin(prev_versions.unionByName(ctx.views[build]))
     versioned = with_validity(versions, pk, build_et)
 
-    compact_meta = f"{versions_state}.compact.json"
-    cmeta = ctx.state.load_json(compact_meta) or {}
-    cur_bytes = ctx.state.relation_bytes(versions_state) or 0
-    floor = cmeta.get("floor")
-    min_bytes = conf_int(
-        ctx.spark, "spark.kamu.state.ledgerCompactMinBytes", 8 << 20
+    def prune() -> DataFrame | None:
+        if joint_wm is None:
+            return versions if migrating else None
+        return _reachable(versioned, joint_wm)
+
+    ctx.state.append_or_fold(
+        versions_state, ctx.views[build], pk, prune, force=migrating
     )
-    if migrating or (
-        floor is not None
-        and joint_wm is not None
-        and cur_bytes > max(4 * floor, min_bytes)
-    ):
-        if joint_wm is not None:
-            pruned = versioned.filter(
-                F.col(VALID_TO).isNull() | (F.col(VALID_TO) > F.lit(joint_wm))
-            ).drop(VALID_FROM, VALID_TO)
-        else:
-            pruned = versions
-        ctx.state.save_dfs([*probe_saves, (versions_state, pruned, pk)])
-        ctx.state.save_json(compact_meta, {"floor": None})
-    else:
-        ctx.state.save_df(
-            versions_state, ctx.views[build], bucket_by=pk, append=True
-        )
-        for name, df in probe_saves:
-            ctx.state.save_df(name, df)
-        if floor is None:
-            ctx.state.save_json(compact_meta, {"floor": cur_bytes})
     return versioned
 
 
@@ -659,8 +622,9 @@ def execute_temporal_join(ctx: StepContext, sql: str) -> StepResult:
         release = probe_all.limit(0)
         keep = probe_all
 
+    ctx.state.save_df(probe_state, keep)
     versioned = _appendonly_version_state(
-        ctx, build, build_et, tt.primary_key, joint_wm, [(probe_state, keep)]
+        ctx, build, build_et, tt.primary_key, joint_wm
     )
 
     release.createOrReplaceTempView(probe)

@@ -10,7 +10,6 @@ skew-join handling, vectorized reads.
 from __future__ import annotations
 
 import os
-from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -72,39 +71,3 @@ def engine_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-# Keys already warned about once (ADVICE r13: a SET-but-malformed conf
-# silently reverting to its default is indistinguishable from unset; warn
-# once per key so misconfiguration is visible without flooding hot paths).
-_WARNED_BAD_CONF: set[str] = set()
-
-
-def conf_int(
-    spark: SparkSession, key: str, default: int | Callable[[], int]
-) -> int:
-    """Session conf as int without the missing-key exception round trips.
-
-    `spark.conf.get(key)` on an unset key raises in the JVM and PySpark's
-    exception conversion performs several extra py4j round trips (~40 ms
-    per call, measured); the two-arg form is one plain round trip
-    (~0.3 ms). These gate/threshold confs are read on every invocation's
-    hot path, so the try/except-miss pattern was a fixed per-invocation
-    driver cost. Unset or non-integer values fall back to `default`,
-    matching the try/except sites this replaces; a set-but-unparsable
-    value additionally warns once per key. A callable `default` is
-    evaluated only when the fallback is actually needed."""
-    v = spark.conf.get(key, None)
-    if v is not None:
-        try:
-            return int(v)
-        except (TypeError, ValueError):
-            if key not in _WARNED_BAD_CONF:
-                _WARNED_BAD_CONF.add(key)
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "conf %s is set to %r, which is not an int — using the "
-                    "engine default", key, v,
-                )
-    return default() if callable(default) else default

@@ -14,6 +14,7 @@
    with a clear error instead of an opaque duplicate-field failure.
 """
 
+import json
 import os
 import shutil
 
@@ -331,28 +332,43 @@ def test_state_finish_partial_link_fallback(spark, tmp_path, monkeypatch):
     assert (new / "foo.parquet" / "b.parquet").read_bytes() == b"bbb"
 
 
-def test_state_num_buckets_reads_fallback_only_when_unset(tmp_path):
-    """ADVICE r14: the bucket count reads spark.sql.shuffle.partitions only
-    when spark.kamu.state.numBuckets is unset — one conf round trip when
-    the bucket conf is set."""
-    from types import SimpleNamespace
+def test_state_bucket_count_fixed_at_relation_creation(spark, tmp_path):
+    """A relation's bucket count is baked in at its first write (recorded
+    in its sidecar): a later append reuses the recorded count even when
+    spark.sql.shuffle.partitions has changed since, so the linked-forward
+    files and the delta's files stay one bucketing."""
+    import re
 
     from kamu_engine_flink_spark.engine.state import StateStore
 
-    confs, reads = {}, []
+    def write(prev, new, lo, append):
+        store = StateStore(spark, prev, new)
+        rows = spark.range(lo, lo + 20).selectExpr("id as k", "-id as v")
+        store.save_df("rows", rows, bucket_by=["k"], append=append)
+        store.flush_deferred()
+        store.finish()
 
-    def get(key, default=None):
-        reads.append(key)
-        return confs.get(key, default)
+    cp0, cp1 = str(tmp_path / "cp0"), str(tmp_path / "cp1")
+    prev_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "4")
+        write(None, cp0, 0, append=False)
+        spark.conf.set("spark.sql.shuffle.partitions", "6")
+        write(cp0, cp1, 20, append=True)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev_partitions)
 
-    store = StateStore(
-        SimpleNamespace(conf=SimpleNamespace(get=get)), None, str(tmp_path)
+    with open(os.path.join(cp1, "rows.buckets.json")) as f:
+        assert json.load(f)["num_buckets"] == 4
+    files = [
+        e for e in os.listdir(os.path.join(cp1, "rows.parquet"))
+        if not e.startswith(("_", "."))
+    ]
+    ids = {int(re.search(r"_(\d{5})\.c\d{3}", e).group(1)) for e in files}
+    assert ids == {0, 1, 2, 3}
+    # Both generations are present: 4 linked files plus the delta's.
+    assert len(files) == 8
+    loaded = StateStore(spark, cp1, str(tmp_path / "scratch")).load_df("rows")
+    assert sorted(tuple(r) for r in loaded.collect()) == sorted(
+        (i, -i) for i in range(40)
     )
-    confs["spark.kamu.state.numBuckets"] = "7"
-    assert store._num_buckets() == 7
-    assert reads == ["spark.kamu.state.numBuckets"]
-
-    reads.clear()
-    confs = {"spark.sql.shuffle.partitions": "5"}
-    assert store._num_buckets() == 5
-    assert reads == ["spark.kamu.state.numBuckets", "spark.sql.shuffle.partitions"]

@@ -21,6 +21,7 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
+from kamu_engine_flink_spark.engine import state as state_mod
 from kamu_engine_flink_spark.protocol.model import InvalidQueryError
 
 from .helpers import TransformRunner, ticker_slice, ts
@@ -217,15 +218,15 @@ def test_changelog_union_star_branch(spark, tmp_path):
 def test_changelog_topn_ledger_compacts(spark, tmp_path):
     """Per-invocation churn on one key: the persisted ledger must track
     LIVE rows (netted multiset), not total changelog volume (advisor
-    round-7 low). Compaction threshold forced to zero via conf."""
+    round-7 low). Compaction minimum forced to zero."""
     agg = """SELECT cast(now() as timestamp(3)) as event_time,
   symbol, sum(price) as s FROM a GROUP BY symbol"""
     topn = """SELECT cast(now() as timestamp(3)) as event_time, symbol, s, rnk FROM (
   SELECT symbol, s, row_number() over (partition by symbol order by s desc) as rnk FROM g
 ) WHERE rnk <= 2"""
     runner = TransformRunner(spark, tmp_path, queries=[(agg, "g"), (topn, None)])
-    spark.conf.set("spark.kamu.state.ledgerCompactMinBytes", "0")
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(state_mod, "_FOLD_MIN_BYTES", 0)
         n_inv = 10
         state = {}
         for i in range(1, n_inv + 1):
@@ -258,8 +259,6 @@ def test_changelog_topn_ledger_compacts(spark, tmp_path):
             os.path.join(runner.prev_checkpoint, ledger_dirs[0])
         ).num_rows
         assert n_rows <= 8, f"ledger not compacted: {n_rows} rows"
-    finally:
-        spark.conf.unset("spark.kamu.state.ledgerCompactMinBytes")
 
 
 def test_changelog_join_ledger_compacts(spark, tmp_path):
@@ -275,8 +274,8 @@ FROM g JOIN c ON g.symbol = c.symbol"""
     runner = TransformRunner(
         spark, tmp_path, queries=[(agg, "g"), (join, None)]
     )
-    spark.conf.set("spark.kamu.state.ledgerCompactMinBytes", "0")
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(state_mod, "_FOLD_MIN_BYTES", 0)
         n_inv = 10
         state = {}
         for i in range(1, n_inv + 1):
@@ -309,5 +308,3 @@ FROM g JOIN c ON g.symbol = c.symbol"""
                 os.path.join(runner.prev_checkpoint, dirs[0])
             ).num_rows
             assert n_rows <= 6, f"{side} not compacted: {n_rows} rows"
-    finally:
-        spark.conf.unset("spark.kamu.state.ledgerCompactMinBytes")

@@ -20,6 +20,7 @@ import os
 import pyarrow.parquet as pq
 import pytest
 
+from kamu_engine_flink_spark.engine import state as state_mod
 from kamu_engine_flink_spark.protocol.model import InvalidQueryError
 
 from .helpers import TransformRunner, ticker_slice, ts
@@ -282,8 +283,8 @@ def test_asof_changelog_version_state_compacts(spark, tmp_path):
         spark, tmp_path, queries=[(RATES, "rates"), (ASOF, None)],
         temporal_tables=[("rates", "symbol")],
     )
-    spark.conf.set("spark.kamu.state.ledgerCompactMinBytes", "0")
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(state_mod, "_FOLD_MIN_BYTES", 0)
         n_inv = 8
         for i in range(1, n_inv + 1):
             # Rate grows by 1 each invocation (version at day i); a
@@ -309,8 +310,6 @@ def test_asof_changelog_version_state_compacts(spark, tmp_path):
         # 8 versions written; only the latest (plus at most a couple of
         # uncompacted generations) survive the watermark prune.
         assert n_rows <= 4, f"versions not compacted: {n_rows} rows"
-    finally:
-        spark.conf.unset("spark.kamu.state.ledgerCompactMinBytes")
 
 
 def test_asof_left_join_pads_before_first_version(spark, tmp_path):

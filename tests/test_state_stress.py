@@ -401,19 +401,21 @@ def test_unbounded_agg_state_is_o_keys(spark, tmp_path):
         assert _state_rows(runner, "unbounded-acc") == keys
 
 
-def test_append_only_state_compacts_past_file_bound(spark, tmp_path):
+def test_append_only_state_compacts_past_file_bound(spark, tmp_path, monkeypatch):
     """Append-only relations add ~num_buckets files per invocation; past
-    spark.kamu.state.compactAfterFiles the append folds every generation
+    state._COMPACT_AFTER_FILES the append folds every generation
     into one bucketed rewrite (LSM-style), keeping file counts bounded on
     long-lived streams while rows stay exact."""
     import os
 
     from pyspark.sql import functions as F
 
+    from kamu_engine_flink_spark.engine import state as state_mod
     from kamu_engine_flink_spark.engine.state import StateStore
 
-    spark.conf.set("spark.kamu.state.compactAfterFiles", "12")
-    spark.conf.set("spark.kamu.state.numBuckets", "4")
+    monkeypatch.setattr(state_mod, "_COMPACT_AFTER_FILES", 12)
+    prev_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
         prev = None
         total = 0
@@ -424,6 +426,7 @@ def test_append_only_state_compacts_past_file_bound(spark, tmp_path):
                 (F.col("id") % 7).alias("k"), F.col("id").alias("v")
             )
             st.save_df("rows", delta, bucket_by=["k"], append=True)
+            st.flush_deferred()
             total += 10
             rel = os.path.join(new_dir, "rows.parquet")
             n_files = sum(
@@ -444,5 +447,4 @@ def test_append_only_state_compacts_past_file_bound(spark, tmp_path):
         )
         assert final_files < 24
     finally:
-        spark.conf.unset("spark.kamu.state.compactAfterFiles")
-        spark.conf.unset("spark.kamu.state.numBuckets")
+        spark.conf.set("spark.sql.shuffle.partitions", prev_partitions)

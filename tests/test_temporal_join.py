@@ -10,6 +10,9 @@ from datetime import timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
+
+from kamu_engine_flink_spark.engine import state as state_mod
 
 from .helpers import TransformRunner, ticker_slice, ts, write_input_slice
 
@@ -160,8 +163,8 @@ ON t.symbol = s.symbol"""
         spark, tmp_path, queries=[(query, None)],
         temporal_tables=[("stocks.owned", "symbol")],
     )
-    spark.conf.set("spark.kamu.state.ledgerCompactMinBytes", "0")
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(state_mod, "_FOLD_MIN_BYTES", 0)
         n_inv = 8
         for i in range(1, n_inv + 1):
             t = str(tmp_path / "tickers" / f"t{i}.parquet")
@@ -193,8 +196,6 @@ ON t.symbol = s.symbol"""
         # 8 versions written; only the reachable tail (plus at most a
         # couple of uncompacted generations) survives.
         assert n_rows <= 4, f"versions not compacted: {n_rows} rows"
-    finally:
-        spark.conf.unset("spark.kamu.state.ledgerCompactMinBytes")
 
 
 # ---------------------------------------------------------------------------

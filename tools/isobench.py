@@ -12,10 +12,9 @@ UI-enabled session and prints the per-SQL-execution wall breakdown
 Usage:
     python tools/isobench.py [--reps N] [--profile] ENTRY [ENTRY ...]
 
-ENTRY is any bench entry name: a queries() registry entry (timed with
-the noop sink like the bench HEADLINE section), an odf_transform_*
-single invocation, a stress_*_x10_3inv chained-invocation entry, or
-stamp_2m_gate_default. Timings are wall seconds, same methodology as
+ENTRY is a queries() registry entry (timed with the noop sink like the
+bench HEADLINE section) or a bench.STRESS_ENTRIES entry (the stress_*
+chains, stamp_2m_gate_default and stress_minhash_cluster_x10). Timings are wall seconds, same methodology as
 bench.py (this tool exists so adjudication does not require a full suite
 run); it changes nothing and writes nothing under the repo.
 """
@@ -74,40 +73,9 @@ class _Runner:
         self.spark, self.sf_dir, self.workdir = spark, sf_dir, workdir
         self._cache = {}
 
-    def _ledger(self, name, event_type=None, user_mod=None):
-        key = (name, event_type, user_mod)
-        if key not in self._cache:
-            self._cache[key] = bench._odf_ledger(
-                self.spark, self.sf_dir, self.workdir, name,
-                event_type, user_mod=user_mod,
-            )
-        return self._cache[key]
-
-    def _slices(self, name="events", event_type=None):
-        key = ("x10", name, event_type)
-        if key not in self._cache:
-            if event_type is None:
-                self._cache[key] = bench._x10_sliced_ledgers(
-                    self.spark, self.sf_dir, self.workdir
-                )
-            else:
-                self._cache[key] = bench._x10_sliced_ledgers(
-                    self.spark, self.sf_dir, self.workdir, name, event_type
-                )
-        return self._cache[key]
-
-    def _join_invs(self):
-        p = self._slices("purchases", "purchase")
-        c = self._slices("clicks", "click")
-        return [
-            [("purchases", pp, pwm), ("clicks", cp, cwm)]
-            for (pp, pwm), (cp, cwm) in zip(p, c)
-        ]
-
     # --- entry resolution -------------------------------------------------
-    # Mirrors the (tag, sql, inputs) tables inline in bench.main(); kept in
-    # one place here so a bench change shows up as a loud KeyError, not a
-    # silently stale measurement.
+    # Stress/stamp entries come from bench.STRESS_ENTRIES, the table
+    # bench.main() runs, so the two cannot drift apart.
     def run_once(self, name: str) -> float:
         qs = entrymod.queries()
         if name in qs:
@@ -116,101 +84,15 @@ class _Runner:
             df.write.format("noop").mode("overwrite").save()
             return time.perf_counter() - t0
 
-        if name.startswith("stress_") and name != "stress_minhash_cluster_x10":
-            sqls = {
-                "stress_interval_join_x10_3inv": bench.JOIN_SQL,
-                "stress_full_join_x10_3inv": bench.FULL_JOIN_SQL,
-                "stress_keyed_topn_x10_3inv": bench.KEYED_TOPN_SQL,
-                "stress_over_agg_x10_3inv": bench.OVER_AGG_SQL,
-                "stress_match_recognize_x10_3inv": bench.MATCH_RECOGNIZE_SQL,
-                "stress_changelog_topn_x10_3inv": bench.CHANGELOG_TOPN_STEPS,
-                "stress_changelog_stamp_x10_3inv": bench.CHANGELOG_STAMP_STEPS,
-                "stress_changelog_asof_x10_3inv": bench.CHANGELOG_ASOF_STEPS,
-                "stress_setop_except_x10_3inv": bench.SETOP_EXCEPT_STEPS,
-            }
-            sql = sqls[name]
-            if name in (
-                "stress_interval_join_x10_3inv",
-                "stress_full_join_x10_3inv",
-                "stress_changelog_asof_x10_3inv",
-                "stress_setop_except_x10_3inv",
-            ):
-                invs = self._join_invs()
-            elif name == "stress_changelog_topn_x10_3inv":
-                invs = [
-                    [("purchases", pp, pwm)]
-                    for (pp, pwm) in self._slices("purchases", "purchase")
-                ]
-            else:
-                invs = [[("events", p, wm)] for (p, wm) in self._slices()]
-            tts = (
-                [("rates", "user_id")]
-                if sql is bench.CHANGELOG_ASOF_STEPS
-                else ()
+        if name in bench.STRESS_ENTRIES:
+            return bench.run_stress_entry(
+                self.spark, self.sf_dir, self.workdir, name,
+                f"{name}-iso{time.monotonic_ns()}", self._cache,
             )
-            tag = f"{name}-iso{time.monotonic_ns()}"
-            return bench._stress_transform_x10(
-                self.spark, invs, sql, self.workdir, tag, temporal_tables=tts
-            )
-
-        if name == "stress_minhash_cluster_x10":
-            return bench._stress_dedup_cluster(self.spark, self.sf_dir)
-
-        if name == "stamp_2m_gate_default":
-            return self._stamp_2m()
 
         raise KeyError(
-            f"unknown entry {name!r} (not in queries() and no stress/stamp "
-            f"mapping here — if bench.py gained an entry, add it above)"
-        )
-
-    def _stamp_2m(self) -> float:
-        key = "stamp2m"
-        if key not in self._cache:
-            from pyspark.sql import functions as F
-
-            from kamu_engine_flink_spark.sinks.parquet import (
-                write_single_parquet,
-            )
-
-            ev = self.spark.read.parquet(f"{self.sf_dir}/events.parquet")
-            big = (
-                ev.crossJoin(
-                    self.spark.range(20).select(F.col("id").alias("__rep"))
-                ).select(
-                    (F.col("event_id") * 20 + F.col("__rep")).alias("offset"),
-                    F.lit(0).cast("int").alias("op"),
-                    F.to_timestamp(F.lit("2020-01-01 00:00:00")).alias(
-                        "system_time"
-                    ),
-                    F.col("ts").alias("event_time"),
-                    F.concat(
-                        F.col("user_id"), F.lit("#"), F.col("__rep"),
-                        F.lit("#"), F.col("event_id"),
-                    ).alias("k"),
-                    F.floor(F.col("value") * 100).cast("long").alias("v"),
-                )
-            )
-            path = os.path.join(self.workdir, "stamp2m.parquet")
-            write_single_parquet(big, path)
-            wm = (
-                self.spark.read.parquet(path)
-                .agg({"event_time": "max"})
-                .collect()[0][0]
-            )
-            self._cache[key] = (path, wm)
-        path, wm = self._cache[key]
-        steps = [
-            (
-                "g",
-                """SELECT cast(now() as timestamp(3)) as event_time,
-  k, sum(v) as s FROM a GROUP BY k""",
-            ),
-            (None, "SELECT event_time, k, s FROM g"),
-        ]
-        return bench._stress_transform_x10(
-            self.spark, [[("a", path, wm)]], steps, self.workdir,
-            f"stamp2m-iso{time.monotonic_ns()}",
+            f"unknown entry {name!r} (not in queries() or "
+            f"bench.STRESS_ENTRIES)"
         )
 
 
