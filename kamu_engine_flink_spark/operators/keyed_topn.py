@@ -20,9 +20,14 @@ ONE `grouped_map_batched` over the key columns: the chunk-level fold
 (`topn.make_batch_fold`) extracts each column once per Arrow chunk, then
 replays every key run (previous state ∪ its slice rows in ledger order)
 on index ranges through the same running-top-N simulation, emitting
-changelog rows tagged with the trigger's offset. No driver-side collect
-anywhere; state is the per-key <=N-row ranking table, partitioned by
-key.
+changelog rows tagged with the trigger's offset. The fold reads the raw
+slice and is the invocation's only Python stage: its scalar prepass
+drops every row that cannot enter its key's running top-N, so a separate
+prune stage would only add a shuffle. A hot key's run spans many Arrow
+batches; while it is carried, the same prepass (`topn.make_run_filter`)
+keeps only its state and entering rows, so its memory stays bounded at
+about N*ln(rows). No driver-side collect anywhere; state is the per-key
+<=N-row ranking table, partitioned by key.
 """
 
 from __future__ import annotations
@@ -49,8 +54,8 @@ from .topn import (
     SEQ_INPUT,
     SUB_COL,
     _dedupe_columns,
-    _prune_partition_local,
     make_batch_fold,
+    make_run_filter,
 )
 
 _PART_ORDER_RE = re.compile(
@@ -124,29 +129,30 @@ def execute_keyed_topn(ctx: StepContext, sql: str, spec) -> StepResult:
     if rank_col not in prev_state.columns and "place" in prev_state.columns:
         prev_state = prev_state.withColumnRenamed("place", rank_col)
 
-    # Union (state ∪ slice) on a common schema; fold output carries both the
-    # changelog and the key's new ranking (KIND_COL splits them afterward).
-    pruned = _prune_partition_local(
-        incoming, order, spec.limit, part_keys=part_keys
-    )
     # Touched-keys fold: a key with no row in this slice cannot change its
-    # ranking, so only the state of keys PRESENT in the slice enters the
-    # Python fold — a semi/anti probe against the slice's key set over
-    # the BUCKETED state relation (exchange-free on the state side;
-    # NULL-key groups route to active unconditionally, see base.py).
+    # ranking, so only the state of keys PRESENT in the slice (`incoming`)
+    # enters the Python fold — a semi/anti probe against the slice's key
+    # set over the BUCKETED state relation (exchange-free on the state
+    # side; NULL-key groups route to active unconditionally, see base.py).
     # Untouched keys' rows flow straight to the state save. Fold cost is
     # O(touched keys), not O(all keys ever seen) — gated on state >> slice
     # (when the slice plausibly touches most keys, the probes are pure
     # overhead on an unavoidable full fold).
     if state_split_worthwhile(ctx, state_name, src):
-        pruned = ctx.pin(pruned)
+        if src not in ctx.slice_sizes:
+            # A chained alias is not persisted: pin it, so the key probe
+            # and the union below read one computed slice.
+            incoming = ctx.pin(incoming)
         active_state, untouched_state = split_touched_state(
-            prev_state, part_keys, pruned.select(*part_keys).distinct()
+            prev_state, part_keys, incoming.select(*part_keys).distinct()
         )
     else:
         active_state, untouched_state = prev_state, None
+    # Union (state ∪ raw slice) on a common schema; fold output carries
+    # both the changelog and the key's new ranking (KIND_COL splits them
+    # afterward).
     unioned = active_state.withColumn(SEQ_INPUT, F.lit(None).cast("long")).unionByName(
-        pruned.withColumn(rank_col, F.lit(None).cast("long")).select(
+        incoming.withColumn(rank_col, F.lit(None).cast("long")).select(
             rank_col, *value_cols, SEQ_INPUT
         )
     )
@@ -163,8 +169,15 @@ def execute_keyed_topn(ctx: StepContext, sql: str, spec) -> StepResult:
 
     from ..functions.grouped import grouped_map_batched
 
+    # Runs sorted by SEQ_INPUT (state rows, null, first): a hot key's run
+    # spans many Arrow batches, and the run filter keeps only the rows of
+    # it that can still enter the top N while it is carried.
     folded = ctx.pin(
-        grouped_map_batched(unioned, part_keys, fold_batch, fold_schema)
+        grouped_map_batched(
+            unioned, part_keys, fold_batch, fold_schema,
+            sort_cols=[SEQ_INPUT],
+            run_filter=make_run_filter(rank_col, order, spec.limit),
+        )
     )
     keep = folded.filter(F.col(KIND_COL) == 1).select(rank_col, *value_cols)
     if untouched_state is not None:

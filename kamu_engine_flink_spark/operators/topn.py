@@ -16,9 +16,12 @@ running-top-N prune bounds survivors to ~N*ln(rows/partition) per
 partition. The survivors fold through `grouped_map_batched` keyed by a
 constant, so they form one key run; the chunk-level fold
 (`make_batch_fold`, shared with the keyed variant) extracts each column
-once per Arrow chunk and replays every run on index ranges. No data row
-ever materializes on the driver; the only driver-side values are the
-single N-th-place threshold row. State is the <=N-row ranking table.
+once per Arrow chunk and replays every run on index ranges. The prune
+exists because this fold is one task; the keyed variant (keyed_topn.py)
+folds its raw slice across all key partitions, and the fold's own
+prepass drops the rows a prune would. No data row ever materializes on
+the driver; the only driver-side values are the single N-th-place
+threshold row. State is the <=N-row ranking table.
 
 Supported shape (the reference's only tested one): an outer projection over
 `(SELECT row_number() OVER (ORDER BY <col> [DESC]) AS <rank>, <cols> FROM
@@ -28,6 +31,7 @@ Supported shape (the reference's only tested one): an outer projection over
 from __future__ import annotations
 
 import re
+from datetime import datetime
 from typing import Any
 
 from pyspark.sql import functions as F
@@ -95,21 +99,19 @@ def beats_key(vals, evals, order) -> bool:
     return False
 
 
-def _prune_partition_local(df, order: list[tuple[str, bool]], limit: int,
-                           part_keys=()):
+def _prune_partition_local(df, order: list[tuple[str, bool]], limit: int):
     """Keep only rows that enter a PARTITION-LOCAL running top-N processed
-    in ledger (__seq) order — per `part_keys` group when given (the keyed
-    rank/dedup executor), globally otherwise. Safely conservative: dropped
-    rows are beaten or tied by >= limit earlier rows locally, hence
-    globally, so they can never enter the visible top-N (ties insert after
-    equals, so a tie counts as beaten). Survivors stream on to the exact
-    fold.
+    in ledger (__seq) order. Safely conservative: dropped rows are beaten
+    or tied by >= limit earlier rows locally, hence globally, so they can
+    never enter the visible top-N (ties insert after equals, so a tie
+    counts as beaten). Survivors stream on to the exact fold, which for
+    the global Top-N is a single task.
 
     Type-generic: the running top-N is a sorted (best-to-worst) list of
     composite order keys wrapped in a rank comparator, so any orderable
     types prune under any per-column direction mix. Rows with a missing
-    order value or key (None and the NaN/NaT that nullable columns become
-    in Arrow batches — pd.isna covers both) pass through to the fold
+    order value (None and the NaN/NaT that nullable columns become in
+    Arrow batches — pd.isna covers both) pass through to the fold
     untouched and are never pushed into the list, where NaN comparisons
     would corrupt it.
     """
@@ -134,13 +136,11 @@ def _prune_partition_local(df, order: list[tuple[str, bool]], limit: int,
     descending0 = order[0][1]
 
     def batches(it):
-        # The running top-N state carries ACROSS Arrow batches within a
+        # The running top-N carries ACROSS Arrow batches within a
         # partition (sound because the partition is seq-sorted below):
-        # survivors per key shrink from ~N*ln(rows/key/batch) per batch to
-        # ~N*ln(rows/key/partition) total — the difference between pruning
-        # 26% and pruning 80% when batches hold few rows per key.
-        best: dict = {}
-        glob: list = []  # global (no part_keys) fast path
+        # survivors shrink from ~N*ln(rows/batch) per batch to
+        # ~N*ln(rows/partition) total.
+        lst: list = []
         for pdf in it:
             if not len(pdf):
                 continue
@@ -154,23 +154,11 @@ def _prune_partition_local(df, order: list[tuple[str, bool]], limit: int,
             null_mask = pd.isna(pdf[order[0][0]]).to_numpy()
             for c, _ in order[1:]:
                 null_mask = null_mask | pd.isna(pdf[c]).to_numpy()
-            if part_keys:
-                key_lists = [pdf[k].tolist() for k in part_keys]
-                for k in part_keys:
-                    null_mask = null_mask | pd.isna(pdf[k]).to_numpy()
-                kt = (
-                    key_lists[0]
-                    if len(key_lists) == 1
-                    else list(zip(*key_lists))
-                )
-            else:
-                kt = None
             if single:
                 for i, v in enumerate(vals):
                     if null_mask[i]:
                         keep.append(True)
                         continue
-                    lst = best.setdefault(kt[i], []) if part_keys else glob
                     if len(lst) < limit:
                         bisect.insort(lst, v)
                         keep.append(True)
@@ -194,7 +182,6 @@ def _prune_partition_local(df, order: list[tuple[str, bool]], limit: int,
                         keep.append(True)
                         continue
                     k = _K(v)
-                    lst = best.setdefault(kt[i], []) if part_keys else glob
                     if len(lst) < limit:
                         bisect.insort(lst, k)
                         keep.append(True)
@@ -207,22 +194,15 @@ def _prune_partition_local(df, order: list[tuple[str, bool]], limit: int,
             yield pdf[keep]
 
     # Widen a narrow input first: a single-file slice scan arrives as ONE
-    # partition, which would run this per-row Python pass on one core. The
-    # keyed form spreads by HASH of the partition keys (all rows of a key
-    # stay together, so the prune keeps its exact per-key survivor bound);
-    # the global form spreads round-robin (per-partition survivor bounds
-    # grow ~n_partitions x N*ln(rows/partition) — still tiny vs the input).
-    # The explicit count is exempt from AQE coalescing, which prices
-    # shuffles by bytes and would collapse this CPU-per-row stage.
+    # partition, which would run this per-row Python pass on one core.
+    # Spread by hash of the (unique) ledger offset — deterministic, with
+    # no round-robin sort-before-repartition pass; per-partition survivor
+    # bounds grow ~n_partitions x N*ln(rows/partition), still tiny vs the
+    # input. The explicit count is exempt from AQE coalescing, which
+    # prices shuffles by bytes and would collapse this CPU-per-row stage.
     n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < n:
-        # Global form: hash on the (unique) ledger offset — deterministic
-        # spread with no round-robin sort-before-repartition pass.
-        df = (
-            df.repartition(n, *part_keys)
-            if part_keys
-            else df.repartition(n, F.col(SEQ_INPUT))
-        )
+        df = df.repartition(n, F.col(SEQ_INPUT))
     # Partition-level seq sort (no shuffle): makes Arrow batches arrive in
     # ledger order, which the cross-batch carry above relies on — dropped
     # rows are then beaten only by genuinely EARLIER rows.
@@ -303,17 +283,28 @@ def fold_records(ranking, rows, order, limit):
         del ranking[limit:]  # beyond-N tail can never resurface
 
 
-def make_batch_fold(value_cols, rank_col, order, limit):
-    """Build the `grouped_map_batched` chunk fold shared by the global and
-    keyed Top-N executors: `fold_batch(pdf, starts)` folds every key run
-    `[starts[g], starts[g+1])` of one Arrow chunk. A run is the union of
-    (previous state rows — rank_col set) and (slice rows — rank_col null,
-    replayed in SEQ_INPUT order) of one key; each run yields changelog
-    records (KIND 0, ordered by GSEQ/SUB) plus its new ranking (KIND 1).
-    `order` is the composite [(col, descending), ...] rank order."""
+def _nullify(x):
+    """None for every null spelling of an Arrow chunk cell (None, NaT,
+    NaN), the value otherwise. NaN and pandas' NaT (a datetime subclass)
+    are the cells unequal to themselves."""
+    if x is None:
+        return None
+    if isinstance(x, (float, datetime)) and x != x:
+        return None
+    return x
+
+
+def _running_top(order, limit):
+    """The running-top-N prepass shared by the chunk fold and the run
+    filter: `(order_keys, enters)`. `order_keys(pdf)` lists every row's
+    order key (a scalar for a single-column order, else a tuple; nulls
+    as None). `enters(top, v)` says whether key `v` enters the running
+    top-N `top` (best-to-worst keys, at most `limit`) and inserts it if
+    so. A row enters iff fold_records admits it; rows that do not enter
+    never change `top` nor emit changelog."""
     order_cols_ = [c for c, _ in order]
     # Single-column fast path: scalar order keys and a direction-
-    # specialized compare — the prepass below touches every slice row.
+    # specialized compare — the prepass touches every slice row.
     single = len(order) == 1
     if single:
         desc0 = order[0][1]
@@ -332,16 +323,40 @@ def make_batch_fold(value_cols, rank_col, order, limit):
         def _beats(v, ev):
             return beats_key(v, ev, order)
 
+    def order_keys(pdf) -> list:
+        ov_lists = [
+            [_nullify(x) for x in pdf[c].tolist()] for c in order_cols_
+        ]
+        return ov_lists[0] if single else list(zip(*ov_lists))
+
+    def enters(top, v) -> bool:
+        if len(top) >= limit and not _beats(v, top[-1]):
+            return False
+        lo, hi = 0, len(top)
+        while lo < hi:
+            mid = (lo + hi) // 2
+            if _beats(v, top[mid]):
+                hi = mid
+            else:
+                lo = mid + 1
+        top.insert(lo, v)
+        del top[limit:]
+        return True
+
+    return order_keys, enters
+
+
+def make_batch_fold(value_cols, rank_col, order, limit):
+    """Build the `grouped_map_batched` chunk fold shared by the global and
+    keyed Top-N executors: `fold_batch(pdf, starts)` folds every key run
+    `[starts[g], starts[g+1])` of one Arrow chunk. A run is the union of
+    (previous state rows — rank_col set) and (slice rows — rank_col null,
+    replayed in SEQ_INPUT order) of one key; each run yields changelog
+    records (KIND 0, ordered by GSEQ/SUB) plus its new ranking (KIND 1).
+    `order` is the composite [(col, descending), ...] rank order."""
+    order_keys, enters = _running_top(order, limit)
+
     def fold_batch(pdf, starts) -> list[dict[str, Any]]:
-        import pandas as pd
-
-        def _nullify(x):
-            if x is None or x is pd.NaT:
-                return None
-            if isinstance(x, float) and x != x:
-                return None
-            return x
-
         # Column extraction once per chunk, not per key: plain Python
         # lists, positionally indexed by the run ranges below. Columns
         # the prepass reads on every row are nullified up front; value
@@ -349,10 +364,7 @@ def make_batch_fold(value_cols, rank_col, order, limit):
         n = len(pdf)
         rank_v = [_nullify(x) for x in pdf[rank_col].tolist()]
         seq_v = [_nullify(x) for x in pdf[SEQ_INPUT].tolist()]
-        ov_lists = [
-            [_nullify(x) for x in pdf[c].tolist()] for c in order_cols_
-        ]
-        order_v = ov_lists[0] if single else list(zip(*ov_lists))
+        order_v = order_keys(pdf)
         raw_vals = [(c, pdf[c].tolist()) for c in value_cols]
 
         def _row(i):
@@ -370,27 +382,11 @@ def make_batch_fold(value_cols, rank_col, order, limit):
                 key=seq_v.__getitem__,
             )
             # A row emits changelog iff it ENTERS the running top-N, which
-            # depends only on the order-column sequence (fold_records
-            # admits a row iff it beats the running Nth value; rows that
-            # do not enter never mutate the ranking). This scalar prepass
-            # picks the entering rows, so the per-row dicts are built for
-            # state and entering rows only.
-            top_vals = [order_v[i] for i in state_idx[:limit]]
-            entering: list[int] = []
-            for i in slice_idx:
-                v = order_v[i]
-                if len(top_vals) >= limit and not _beats(v, top_vals[-1]):
-                    continue
-                entering.append(i)
-                lo, hi = 0, len(top_vals)
-                while lo < hi:
-                    mid = (lo + hi) // 2
-                    if _beats(v, top_vals[mid]):
-                        hi = mid
-                    else:
-                        lo = mid + 1
-                top_vals.insert(lo, v)
-                del top_vals[limit:]
+            # depends only on the order-column sequence. This scalar
+            # prepass picks the entering rows, so the per-row dicts are
+            # built for state and entering rows only.
+            top = [order_v[i] for i in state_idx[:limit]]
+            entering = [i for i in slice_idx if enters(top, order_v[i])]
 
             ranking = [_row(i) for i in state_idx]
             rows = [(_row(i), seq_v[i]) for i in entering]
@@ -409,6 +405,40 @@ def make_batch_fold(value_cols, rank_col, order, limit):
         return out
 
     return fold_batch
+
+
+def make_run_filter(rank_col, order, limit):
+    """Per-run filter factory for `grouped_map_batched(run_filter=...)`
+    under `sort_cols=[SEQ_INPUT]`: a key run's pieces then arrive with its
+    state rows (null SEQ_INPUT sorts first) before its slice rows, in
+    ledger order. The filter keeps every state row and the slice rows
+    that enter the running top-N, the only rows `make_batch_fold`'s
+    prepass passes on, so the fold's output is unchanged and a hot key's
+    carried run holds its state plus ~N*ln(rows) rows."""
+    order_keys, enters = _running_top(order, limit)
+
+    def new_run():
+        state: list = []  # (rank, order key) of the run's state rows
+        top = None
+
+        def keep(pdf):
+            nonlocal top
+            mask = []
+            ranks = [_nullify(x) for x in pdf[rank_col].tolist()]
+            for r, v in zip(ranks, order_keys(pdf)):
+                if r is not None:
+                    state.append((r, v))
+                    mask.append(True)
+                    continue
+                if top is None:  # first slice row: seed as the fold does
+                    top = [v for _, v in sorted(state, key=lambda t: t[0])]
+                    del top[limit:]
+                mask.append(enters(top, v))
+            return pdf[mask]
+
+        return keep
+
+    return new_run
 
 
 def execute_topn(ctx: StepContext, sql: str) -> StepResult:

@@ -125,9 +125,9 @@ def test_keyed_topn_changelog_and_resume(spark, tmp_path):
 
 
 def test_keyed_topn_randomized_vs_simulation(spark, tmp_path):
-    """2000 random rows over 20 keys through the distributed fold (with
-    the partition-local prune) must produce exactly the changelog of a
-    driver-side per-key simulation interleaved by ledger offset."""
+    """2000 random rows over 20 keys through the distributed fold of the
+    raw slice must produce exactly the changelog of a driver-side per-key
+    simulation interleaved by ledger offset."""
     import random
 
     from kamu_engine_flink_spark.operators.topn import fold_records
@@ -228,8 +228,7 @@ from (
 
 def test_keyed_topn_null_scores(spark, tmp_path):
     """NULL scores follow row_number's null ordering (DESC ranks nulls
-    last): a null enters the ranking only while places are free, and the
-    prune must pass nulls through to the fold untouched."""
+    last): a null enters the ranking only while places are free."""
     runner = _runner(spark, tmp_path, KEYED_TOPN_QUERY)
     s1 = str(tmp_path / "in" / "s1.parquet")
     match_scores_slice(
@@ -354,7 +353,7 @@ def _state_table(runner):
 def test_keyed_topn_runs_straddling_arrow_batches(spark, tmp_path):
     """Key runs split across Arrow batches must fold exactly as whole runs.
     At 5 records per batch every key below (>= 20 fold rows: scores rise,
-    so nearly every row enters its top-2 and survives the prune) crosses
+    so nearly every row enters its top-2) crosses
     several batch boundaries in the grouped fold, as does the NULL-key
     group; the changelog and the saved state of two resumed invocations
     must equal the default-batch run's."""
@@ -394,3 +393,188 @@ def test_keyed_topn_runs_straddling_arrow_batches(spark, tmp_path):
     assert small_outs == default_outs
     assert small_state == default_state
     assert len(default_state) == 2 * len(names)
+
+
+def test_keyed_topn_hot_key_straddles_many_arrow_batches(spark, tmp_path):
+    """One hot key of ~20k rows per invocation, folded from the raw slice
+    at 100 records per Arrow batch, is one run carried across ~200
+    batches. Over two resumed invocations its changelog and saved state
+    must equal the default-batch run's."""
+    import random
+
+    rng = random.Random(23)
+
+    def rows(start, n, day):
+        return [
+            (start + i, 0, ts(day), ts(1, 0, 0),
+             "hot" if i % 50 else f"p{i % 7}", rng.randrange(1_000_000))
+            for i in range(n)
+        ]
+
+    s1 = str(tmp_path / "in" / "s1.parquet")
+    s2 = str(tmp_path / "in" / "s2.parquet")
+    match_scores_slice(s1, rows(0, 20_400, 5))
+    match_scores_slice(s2, rows(20_400, 20_400, 6))
+
+    def chain(sub):
+        runner = _runner(spark, tmp_path / sub, KEYED_TOPN_QUERY)
+        outs = []
+        for path, wm, st in ((s1, ts(3), ts(10)), (s2, ts(4), ts(11))):
+            _resp, out = runner.run([_input(path, wm)], system_time=st)
+            outs.append(_read_rows(out))
+        return outs, _state_table(runner)
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default_outs, default_state = chain("default")
+    spark.conf.set(conf, "100")
+    try:
+        small_outs, small_state = chain("small")
+    finally:
+        spark.conf.unset(conf)
+    assert all(default_outs)
+    assert any(r[4] == "hot" for r in default_outs[1])
+    assert small_outs == default_outs
+    assert small_state == default_state
+    assert len(default_state) == 2 * 8  # "hot" and p0..p6, top-2 each
+
+
+def _fold_plans(spark, tmp_path, queries, monkeypatch, invocations=1):
+    """Physical plan text of every `folded` frame (the one carrying the
+    fold's kind column) pinned by `invocations` resumed invocations of
+    the `queries` steps (the last one a Top-N)."""
+    from kamu_engine_flink_spark.operators.base import StepContext
+    from kamu_engine_flink_spark.operators.topn import KIND_COL
+
+    plans = []
+    real_pin = StepContext.pin
+
+    def recording_pin(self, df):
+        if KIND_COL in df.columns:
+            # A fresh projection: its plan is not yet served by the cache.
+            plans.append(
+                df.select("*")._jdf.queryExecution().executedPlan().toString()
+            )
+        return real_pin(self, df)
+
+    monkeypatch.setattr(StepContext, "pin", recording_pin)
+    runner = TransformRunner(
+        spark,
+        tmp_path,
+        queries=queries,
+        vocab=DatasetVocabulary(event_time_column="placed_at"),
+    )
+    for inv in range(invocations):
+        path = str(tmp_path / "in" / f"s{inv}.parquet")
+        match_scores_slice(
+            path,
+            [
+                (200 * inv + i, 0, ts(5 + inv), ts(1), f"p{i % 5}", (i * 37) % 101)
+                for i in range(200)
+            ],
+        )
+        runner.run([_input(path, ts(3 + inv))], system_time=ts(10 + inv))
+    return plans
+
+
+def _count_nodes(plan, name):
+    import re
+
+    return len(re.findall(rf"(?m)^[\s:+\-*()\d]*{name}\b", plan))
+
+
+def test_keyed_topn_fold_is_the_only_python_stage(spark, tmp_path, monkeypatch):
+    """A keyed Top-N step folds its raw slice: the `folded` frame's
+    physical plan has exactly one MapInPandas (the fold) and one exchange
+    (its key repartition). The global Top-N keeps its partition-local
+    prune before the single-task fold: two of each. Over a chained alias
+    the second invocation runs the touched-keys split (the slice size is
+    unknown), and the slice is pinned: the key probe and the union both
+    read the one cached slice, and the fold is still the only Python
+    stage."""
+    from .test_topn import TOPN_QUERY
+
+    (keyed,) = _fold_plans(
+        spark, tmp_path / "keyed", [(KEYED_TOPN_QUERY, None)], monkeypatch
+    )
+    assert _count_nodes(keyed, "MapInPandas") == 1, keyed
+    assert _count_nodes(keyed, "Exchange") == 1, keyed
+
+    (glob,) = _fold_plans(
+        spark, tmp_path / "global", [(TOPN_QUERY, None)], monkeypatch
+    )
+    assert _count_nodes(glob, "MapInPandas") == 2, glob
+    assert _count_nodes(glob, "Exchange") == 2, glob
+
+    chained = [
+        (
+            "select match_time, player_name, score * 2 as score "
+            "from match_scores",
+            "doubled",
+        ),
+        (KEYED_TOPN_QUERY.replace("from match_scores", "from doubled"), None),
+    ]
+    _first, split = _fold_plans(
+        spark, tmp_path / "chained", chained, monkeypatch, invocations=2
+    )
+    assert "LeftSemi" in split, split
+    assert _count_nodes(split, "MapInPandas") == 1, split
+    assert _count_nodes(split, "InMemoryTableScan") == 2, split
+
+
+def test_keyed_topn_hot_run_is_filtered_while_carried(monkeypatch):
+    """A hot key's run over 50 Arrow chunks of 100 rows is never
+    concatenated whole: the run filter keeps the key's state rows and the
+    slice rows that enter its top-2 as the pieces arrive, and the fold of
+    the filtered run equals the fold of the whole run. Covers a DESC
+    order with a state seed and an ASC composite order with null scores
+    (ASC ranks nulls first)."""
+    import random
+
+    import pandas as pd
+
+    from kamu_engine_flink_spark.functions.grouped import complete_runs
+    from kamu_engine_flink_spark.operators.topn import (
+        SEQ_INPUT,
+        make_batch_fold,
+        make_run_filter,
+    )
+
+    concatenated = []
+    real_concat = pd.concat
+
+    def counting_concat(objs, *args, **kwargs):
+        objs = list(objs)
+        concatenated.append(sum(len(o) for o in objs))
+        return real_concat(objs, *args, **kwargs)
+
+    rng = random.Random(5)
+    for order, state in (
+        ([("score", True)], [(1, 900_000, "s0"), (2, 850_000, "s1")]),
+        ([("score", False), ("name", True)], []),
+    ):
+        n = 5000
+        scores = [rng.randrange(1_000_000) for _ in range(n)]
+        if not state:
+            scores = [None if i % 97 == 0 else v for i, v in enumerate(scores)]
+        full = pd.DataFrame(
+            {
+                "place": [r for r, _, _ in state] + [None] * n,
+                "k": "hot",
+                "score": [v for _, v, _ in state] + scores,
+                "name": [m for _, _, m in state] + [f"n{i % 13}" for i in range(n)],
+                SEQ_INPUT: [None] * len(state) + list(range(n)),
+            }
+        )
+        chunks = [full.iloc[o:o + 100] for o in range(0, len(full), 100)]
+        fold = make_batch_fold(["k", "score", "name"], "place", order, 2)
+
+        concatenated.clear()
+        monkeypatch.setattr(pd, "concat", counting_concat)
+        runs = list(
+            complete_runs(chunks, ["k"], make_run_filter("place", order, 2))
+        )
+        monkeypatch.undo()
+        (run,) = runs
+        assert len(concatenated) == 1 and concatenated[0] < 200, concatenated
+        assert len(run[0]) >= len(state) + 2
+        assert fold(*run) == fold(full, [0])

@@ -1,9 +1,12 @@
 """Local stand-in for the driver's correctness gate.
 
 Runs every __spark_entry__.queries() entry and its oracle_sql() twin on the
-same sf dir, sorts columns by name and rows by value, and compares
-cell-by-cell after canonical normalization (the strictest plausible
-version of the driver's value-hash). Exit 1 on any mismatch.
+same sf dir, in the engine's session (`engine_session`, local cores from
+$SPARK_GRAFT_CPUS), sorts columns by name and rows by value, and compares
+the row multisets after canonical normalization (the strictest plausible
+form of a value-hash comparison). A mismatch prints the first oracle
+row Spark lacks and the first Spark row the oracle lacks. Exit 1 on any
+mismatch.
 
 Usage: python tools/crosscheck.py [sf_dir] [query ...]
 """
@@ -12,6 +15,7 @@ from __future__ import annotations
 
 import math
 import sys
+from collections import Counter
 from datetime import date, datetime
 
 import duckdb
@@ -50,16 +54,11 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
-    from pyspark.sql import SparkSession
+    from kamu_engine_flink_spark.session import engine_session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # The engine's own session (local[$SPARK_GRAFT_CPUS], its shuffle
+    # partitions, UTC, AQE): entries run under the settings they ship with.
+    spark = engine_session(app_name="crosscheck")
 
     con = duckdb.connect()
     for t in TABLES:
@@ -96,14 +95,15 @@ def main():
             failures.append((name, f"columns {sc} vs {dc}"))
             print(f"FAIL {name}: columns {sc} vs {dc}")
             continue
-        if len(sr) != len(dr):
-            failures.append((name, f"rowcount {len(sr)} vs {len(dr)}"))
-            print(f"FAIL {name}: rowcount {len(sr)} vs {len(dr)}")
-            continue
-        bad = [(a, b) for a, b in zip(sr, dr) if a != b]
-        if bad:
-            failures.append((name, f"{len(bad)} differing rows"))
-            print(f"FAIL {name}: {len(bad)}/{len(sr)} rows differ; first: \n  spark={bad[0][0]}\n  duck ={bad[0][1]}\n  cols={sc}")
+        missing = list((Counter(dr) - Counter(sr)).elements())
+        extra = list((Counter(sr) - Counter(dr)).elements())
+        if missing or extra:
+            failures.append((name, f"{len(missing)} missing, {len(extra)} extra rows"))
+            print(
+                f"FAIL {name}: {len(missing)} missing / {len(extra)} extra of "
+                f"{len(dr)} rows; cols={sc}\n  first missing={missing[:1]}"
+                f"\n  first extra  ={extra[:1]}"
+            )
             continue
         print(f"PASS {name}: {len(sr)} rows exact")
     print(f"\n{len(failures)} failures" if failures else "\nALL PASS")
