@@ -1726,7 +1726,7 @@ def match_recognize_dip_spike_events(spark: SparkSession, sf_dir: str) -> DataFr
     """MATCH_RECOGNIZE (CEP) batch twin: per-user dip->spike adjacency
     (value < 2 immediately followed by value > 18) via the real pattern
     matcher (operators/match_recognize.py — JVM-side DEFINE predicates,
-    per-key applyInPandas fold). The two predicates are disjoint, so
+    per-key grouped_map_batched fold). The two predicates are disjoint, so
     AFTER MATCH SKIP PAST LAST ROW can never suppress a later pair and
     the oracle is expressible with a single lead() window."""
     from kamu_engine_flink_spark.operators.match_recognize import (

@@ -216,17 +216,6 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
         )
 
     slice_sizes: dict[str, int] = {}
-    for input_def in request.query_inputs:
-        alias = alias_map[input_def.query_alias]
-        views[alias] = _open_input(spark, input_def)
-        views[alias].createOrReplaceTempView(alias)
-        event_time_cols[alias] = input_def.vocab.event_time_column
-        prev_wms[alias] = saved_wms.get(alias)
-        new_wms[alias] = _effective_watermark(prev_wms[alias], input_def)
-        slice_sizes[alias] = sum(
-            os.path.getsize(p) for p in input_def.data_paths if os.path.exists(p)
-        )
-
     steps = list(request.transform.queries)
     result: StepResult | None = None
     pinned: list[DataFrame] = []
@@ -236,12 +225,24 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
     # serial pass, and lets a chained projection skip an identity
     # re-stamp. Shared across steps like `views`.
     dense_views: set[str] = set()
-    # Pinned (MEMORY_AND_DISK) DataFrames must be released even when an
-    # executor step, the output write, or the state save raises — a
-    # long-lived adapter process runs many invocations on one session and
-    # would otherwise leak the cache on every failure.
+    # Pinned (MEMORY_AND_DISK) DataFrames and registered views must be
+    # released even when an input open, an executor step, the output
+    # write, or the state save raises — a long-lived adapter process runs
+    # many invocations on one session and would otherwise leak them on
+    # every failure.
     mj_count = 0
     try:
+        for input_def in request.query_inputs:
+            alias = alias_map[input_def.query_alias]
+            views[alias] = _open_input(spark, input_def)
+            views[alias].createOrReplaceTempView(alias)
+            event_time_cols[alias] = input_def.vocab.event_time_column
+            prev_wms[alias] = saved_wms.get(alias)
+            new_wms[alias] = _effective_watermark(prev_wms[alias], input_def)
+            slice_sizes[alias] = sum(
+                os.path.getsize(p) for p in input_def.data_paths if os.path.exists(p)
+            )
+
         i = -1
         while i + 1 < len(steps):
             i += 1
@@ -377,12 +378,7 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                         adf = adf.persist(StorageLevel.MEMORY_AND_DISK)
                         pinned.append(adf)
                         adf.count()
-                    w = Window.partitionBy(F.lit(0)).orderBy(
-                        *[F.col(c).asc() for c in result.order_cols]
-                    )
-                    adf = adf.repartition(1).withColumn(
-                        SEQ, (F.row_number().over(w) - 1).cast("long")
-                    )
+                    adf = _stamp(adf, SEQ, result.order_cols, 0)
                     dense_views.add(step.alias)
                 views[step.alias] = adf
                 adf.createOrReplaceTempView(step.alias)
@@ -417,6 +413,11 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
     finally:
         for df in pinned:
             df.unpersist()
+        # Inputs, step and multi-join aliases, temporal-table names: on a
+        # shared session a leftover view would let a later request's SQL
+        # read this invocation's data instead of failing.
+        for name in set(views) | set(alias_map.values()):
+            spark.catalog.dropTempView(name)
 
     return TransformResponse(
         new_offset_interval=(
@@ -425,6 +426,31 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
             else None
         ),
         new_watermark=result.watermark,
+    )
+
+
+def _stamp(
+    df: DataFrame, col: str, order_cols: list[str] | None, base: int
+) -> DataFrame:
+    """Number the rows of `df` base, base+1, ... into `col` on one
+    partition: in `order_cols` order when given, else in the frame's
+    natural (narrow-plan) order. The one offset and `__seq` stamp."""
+    if order_cols:
+        # One round-robin shuffle to a single partition, with the
+        # deterministic sort folded into the numbering window (the
+        # window operator sorts its partition anyway). A global orderBy
+        # would add a range-partitioner SAMPLING job + an extra sort for
+        # the same single-partition result.
+        w = Window.partitionBy(F.lit(0)).orderBy(
+            *[F.col(c).asc() for c in order_cols]
+        )
+        n = F.row_number().over(w) - 1
+        return df.repartition(1).withColumn(col, (n + F.lit(base)).cast("long"))
+    # Natural order must be preserved -> coalesce (partitions concatenate
+    # in index order). On the single partition 0 the id is the row's
+    # position, so no sort is needed.
+    return df.coalesce(1).withColumn(
+        col, (F.monotonically_increasing_id() + F.lit(base)).cast("long")
     )
 
 
@@ -456,8 +482,8 @@ def _assemble_output(
         # engine's own mid-chain stamp guarantees both, and a pure
         # projection preserves them. The offset is then arithmetic and
         # the sink's coalesce(1) (partitions concatenate in index
-        # order) keeps rows in offset order: the serial
-        # repartition(1) + whole-emission window sort below is skipped.
+        # order) keeps rows in offset order: the serial _stamp below,
+        # a repartition(1) + whole-emission window sort, is skipped.
         return _finalize_output(
             df.withColumn(
                 vocab.offset_column,
@@ -466,26 +492,11 @@ def _assemble_output(
             request,
             user_cols,
         )
-    if result.order_cols:
-        # One round-robin shuffle to a single partition, with the
-        # deterministic sort folded into the offset-stamping window (the
-        # window operator sorts its partition anyway). A global orderBy
-        # here would add a range-partitioner SAMPLING job + an extra sort
-        # per invocation for the same single-partition result.
-        df = df.repartition(1)
-        w = Window.partitionBy(F.lit(0)).orderBy(
-            *[F.col(c).asc() for c in result.order_cols]
-        )
-    else:
-        # Natural (narrow-plan) order must be preserved -> coalesce, and
-        # number rows by physical position.
-        df = df.coalesce(1)
-        w = Window.partitionBy(F.lit(0)).orderBy(F.monotonically_increasing_id())
-    df = df.withColumn(
-        vocab.offset_column,
-        (F.row_number().over(w) - 1 + F.lit(request.next_offset)).cast("long"),
+    return _finalize_output(
+        _stamp(df, vocab.offset_column, result.order_cols, request.next_offset),
+        request,
+        user_cols,
     )
-    return _finalize_output(df, request, user_cols)
 
 
 def _finalize_output(

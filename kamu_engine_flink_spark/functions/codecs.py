@@ -2,11 +2,10 @@
 
 PIL/soundfile are not installable in this environment, but real decode is
 still possible for the formats whose containers the standard library can
-unpack: PNG (zlib inflate + filter reversal — full pixel decode for the
-common 8-bit non-interlaced color types), WAV (RIFF/`wave` module — full
-PCM sample access), and header-level metadata for JPEG (SOF markers),
-GIF and BMP. The multimodal operators try these before falling back to
-their deterministic digest fakes, and a PIL/soundfile import still wins
+unpack: WAV (RIFF/`wave` module — full PCM sample access), and
+header-level metadata for PNG, JPEG (SOF markers), GIF and BMP. The
+multimodal operators try these before falling back to their
+deterministic digest fakes, and a PIL/soundfile import still wins
 when one appears in the environment.
 
 Every decoder takes raw bytes and raises ValueError on data it cannot
@@ -17,98 +16,13 @@ from __future__ import annotations
 
 import io
 import struct
-import zlib
 
 # ---------------------------------------------------------------------------
-# PNG — full decode (8-bit, non-interlaced; gray/RGB/gray+alpha/RGBA/palette)
+# PNG / JPEG / GIF / BMP — header-level metadata (dimensions without decode)
 # ---------------------------------------------------------------------------
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 _PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-def decode_png(data: bytes) -> dict:
-    """Decode a PNG into {'width','height','channels','format','pixels'}
-    where pixels is a flat bytes object of unfiltered 8-bit samples in
-    row-major (h, w, channels) order (palette images are expanded to RGB).
-    Raises ValueError for non-PNG bytes or unsupported variants
-    (bit depth != 8, interlaced)."""
-    if len(data) < 8 or data[:8] != _PNG_SIG:
-        raise ValueError("not a PNG")
-    pos, width, height, bitd, color, interlace = 8, None, None, None, None, None
-    idat, plte = [], None
-    while pos + 8 <= len(data):
-        (length,) = struct.unpack(">I", data[pos : pos + 4])
-        ctype = data[pos + 4 : pos + 8]
-        body = data[pos + 8 : pos + 8 + length]
-        if ctype == b"IHDR":
-            width, height, bitd, color, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", body
-            )
-        elif ctype == b"PLTE":
-            plte = body
-        elif ctype == b"IDAT":
-            idat.append(body)
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length  # length + type + crc
-    if width is None or not idat:
-        raise ValueError("PNG missing IHDR/IDAT")
-    if bitd != 8 or interlace != 0 or color not in _PNG_CHANNELS:
-        raise ValueError(f"unsupported PNG variant (depth={bitd}, color={color}, interlace={interlace})")
-    ch = _PNG_CHANNELS[color]
-    raw = zlib.decompress(b"".join(idat))
-    stride = width * ch
-    if len(raw) < height * (stride + 1):
-        raise ValueError("PNG pixel data truncated")
-    out = bytearray(height * stride)
-    prev = bytearray(stride)
-    for y in range(height):
-        base = y * (stride + 1)
-        ftype = raw[base]
-        line = bytearray(raw[base + 1 : base + 1 + stride])
-        if ftype == 1:  # Sub
-            for i in range(ch, stride):
-                line[i] = (line[i] + line[i - ch]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                left = line[i - ch] if i >= ch else 0
-                line[i] = (line[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                left = line[i - ch] if i >= ch else 0
-                ul = prev[i - ch] if i >= ch else 0
-                line[i] = (line[i] + _paeth(left, prev[i], ul)) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"unknown PNG filter {ftype}")
-        out[y * stride : (y + 1) * stride] = line
-        prev = line
-    if color == 3:  # palette -> RGB
-        if plte is None:
-            raise ValueError("palette PNG missing PLTE")
-        rgb = bytearray(height * width * 3)
-        for i, idx in enumerate(out):
-            rgb[3 * i : 3 * i + 3] = plte[3 * idx : 3 * idx + 3]
-        return {"width": width, "height": height, "channels": 3, "format": "png",
-                "pixels": bytes(rgb)}
-    return {"width": width, "height": height, "channels": ch, "format": "png",
-            "pixels": bytes(out)}
-
-
-# ---------------------------------------------------------------------------
-# JPEG / GIF / BMP — header-level metadata (dimensions without full decode)
-# ---------------------------------------------------------------------------
 
 _JPEG_SOF = {0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB,
              0xCD, 0xCE, 0xCF}

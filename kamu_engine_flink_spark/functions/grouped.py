@@ -1,7 +1,7 @@
 """Batched grouped-map: a mapInPandas replacement for per-key applyInPandas.
 
-`DataFrame.groupBy(keys).applyInPandas(fn)` invokes `fn` once per key with
-a per-group Arrow round-trip. At high key cardinality (the 100 TB shape:
+`DataFrame.groupBy(keys).applyInPandas` invokes its function once per key
+with a per-group Arrow round-trip. At high key cardinality (the 100 TB shape:
 millions of user_id-grade keys, a handful of rows each) that per-group
 framework overhead — slicing, FFI, one Arrow batch per group — dominates
 end-to-end runtime by orders of magnitude.

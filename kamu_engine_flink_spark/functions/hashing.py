@@ -13,17 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """Distinct character k-grams of the normalized text."""
-    padded = F.when(F.length(col) < k, F.rpad(col, k, "_")).otherwise(col)
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.length(padded) - (k - 1), F.lit(1))),
-            lambda i: padded.substr(i, F.lit(k)),
-        )
-    )
-
-
 def word_ngrams(tokens_col: Column, n: int = 3) -> Column:
     """Distinct word n-grams (joined with single spaces) of a token array."""
     return F.array_distinct(

@@ -208,13 +208,6 @@ def quantize_embedding(vec_col: str) -> Column:
     )
 
 
-def int_dot(a_col: str, b_col: str) -> Column:
-    """Exact integer dot product of two quantized vectors."""
-    return F.expr(
-        f"aggregate(zip_with({a_col}, {b_col}, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
-    )
-
-
 def plane_component(i: int, j: int, prefix: str = "plane") -> int:
     """Integer hyperplane component (i, j) = (h32(md5('<prefix>-i-j'))
     mod 2001) - 1000 — the exact derivation the DuckDB oracle replays

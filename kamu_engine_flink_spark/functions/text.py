@@ -60,10 +60,6 @@ def punct_ratio(col: Column) -> Column:
     return _class_count(col, r"[^A-Za-z0-9\s]") / F.greatest(F.length(col), F.lit(1))
 
 
-def whitespace_ratio(col: Column) -> Column:
-    return _class_count(col, r"\s") / F.greatest(F.length(col), F.lit(1))
-
-
 def stopword_hits(col: Column, lang: str = "en") -> Column:
     """How many tokens are stopwords of `lang`."""
     words = F.array(*[F.lit(w) for w in STOPWORDS[lang]])

@@ -60,12 +60,13 @@ NEXT in DEFINE (forward navigation needs lookahead) are out.
 Spark-first derivation: DEFINE predicates compile to boolean columns
 evaluated JVM-side (whole-stage codegen) BEFORE the per-key fold, so the
 Python matcher touches only booleans. Matching distributes as one
-applyInPandas over the partition keys. Row-time semantics: only rows at
-or under the watermark enter the matcher (later rows could still get
-predecessors); a partial match at the processed boundary suspends, and
-its rows — exactly the suffix from the current attempt start — persist
-to the next invocation. AFTER MATCH SKIP PAST LAST ROW means at most one
-active attempt per key, so that suffix IS the whole per-key state.
+grouped_map_batched fold over the partition keys. Row-time semantics:
+only rows at or under the watermark enter the matcher (later rows could
+still get predecessors); a partial match at the processed boundary
+suspends, and its rows — exactly the suffix from the current attempt
+start — persist to the next invocation. AFTER MATCH SKIP PAST LAST ROW
+means at most one active attempt per key, so that suffix IS the whole
+per-key state.
 """
 
 from __future__ import annotations
@@ -910,7 +911,6 @@ def _fold_matches(buf, spec, wm_val, process_all=False):
             StructField(KIND_COL, LongType()),
         ]
     )
-    out_names = [f.name for f in out_schema.fields]
     elements = spec["elements"]
     measures = spec["measures"]
     n_elem = len(elements)
@@ -1007,10 +1007,9 @@ def _fold_matches(buf, spec, wm_val, process_all=False):
         within_ns, preds_b, mrctx_b, mrdone_b, mrcount_b, batch_col,
     ):
         n = ge - gs
-        # Defensive order check, same rule as the old per-key fold: only
-        # physically reorder when the slice isn't already (ts, seq)-sorted
-        # (it always is when fed by grouped_map_batched; the no-keys path
-        # passes one unsorted global group).
+        # Reorder only when the run isn't (ts, seq)-sorted in numpy's
+        # order: grouped_map_batched sorts NULL event times first, while
+        # lexsort puts NaT last.
         order = None
         if n > 1:
             lex = np.lexsort((seq_b[gs:ge], ts_dt_b[gs:ge]))
@@ -1284,29 +1283,22 @@ def _fold_matches(buf, spec, wm_val, process_all=False):
                         _emit(rec, d, kind=2)
         return out
 
-    if keys:
-        # Batch-amortized grouped map: at user_id-grade key cardinality a
-        # per-key applyInPandas pays ~0.5 ms of framework overhead per key
-        # (one Arrow round-trip each); the mapInPandas run-splitter folds
-        # thousands of contiguous key groups per Arrow batch instead.
-        from ..functions.grouped import grouped_map_batched
+    # Batch-amortized grouped map: at user_id-grade key cardinality a
+    # per-key applyInPandas pays ~0.5 ms of framework overhead per key
+    # (one Arrow round-trip each); the mapInPandas run-splitter folds
+    # thousands of contiguous key groups per Arrow batch instead. Without
+    # PARTITION BY, a constant key makes the whole frame one run.
+    from ..functions.grouped import grouped_map_batched
 
-        return grouped_map_batched(
-            with_preds,
-            keys,
-            fold_batch,
-            out_schema,
-            sort_cols=[time_col, SEQ_INPUT],
-        )
-
-    def fold(pdf):
-        import pandas as pd
-
-        # One global group spanning the whole frame (and unsorted input:
-        # _fold_group's order check handles the physical sort).
-        return pd.DataFrame(fold_batch(pdf, [0]), columns=out_names)
-
-    return with_preds.groupBy(F.lit(0).alias("__gk")).applyInPandas(fold, out_schema)
+    if not keys:
+        with_preds = with_preds.withColumn("__gk", F.lit(0))
+    return grouped_map_batched(
+        with_preds,
+        keys or ["__gk"],
+        fold_batch,
+        out_schema,
+        sort_cols=[time_col, SEQ_INPUT],
+    )
 
 
 def match_recognize_batch(spark, df, sql: str):

@@ -1,17 +1,16 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media payloads are opaque `binary` columns with typed metadata structs.
-Decode / feature-extraction / resize / frame-sampling run as Arrow-batched
+Decode / frame-sampling / audio-windowing run as Arrow-batched
 `mapInPandas` stages — the Spark-side contract (schema, batch shape,
 partitioning) is real and tested. The codec step resolves in order:
 
 - PIL / soundfile when importable (not present in this container);
-- pure-stdlib decoders (functions/codecs.py): FULL pixel decode for
-  8-bit non-interlaced PNG and PCM decode for RIFF/WAV, header metadata
-  for JPEG/GIF/BMP — so `deterministic_fake=False` is a real path for
-  those containers;
+- pure-stdlib decoders (functions/codecs.py): PCM decode for RIFF/WAV,
+  header metadata for PNG/JPEG/GIF/BMP — so `deterministic_fake=False`
+  is a real path for those containers;
 - `deterministic_fake=True` (default) derives reproducible
-  metadata/features from the payload hash for container formats nothing
+  metadata from the payload hash for container formats nothing
   present can read (the synthetic testdata payloads are such bytes).
 
 At scale, the important properties are already here: media bytes never
@@ -26,10 +25,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -49,8 +45,8 @@ IMAGE_META_SCHEMA = StructType(
 
 def _decode_image_bytes(payload: bytes):
     """Real image decode: PIL when available, else the pure-stdlib
-    container parsers (functions/codecs.py — full PNG pixel decode,
-    header metadata for JPEG/GIF/BMP). Raises NotImplementedError only
+    container parsers (functions/codecs.py — header metadata for
+    PNG/JPEG/GIF/BMP). Raises NotImplementedError only
     for containers nothing present can read."""
     try:
         from PIL import Image
@@ -100,51 +96,6 @@ def decode_images(
                 metas.append({"width": w, "height": h, "channels": c, "format": fmt})
             pdf = pdf.copy()
             pdf["image_meta"] = metas
-            yield pdf
-
-    return df.mapInPandas(batches, out_schema)
-
-
-def image_features(
-    df: DataFrame,
-    payload_col: str = "payload",
-    dim: int = 16,
-    deterministic_fake: bool = True,
-) -> DataFrame:
-    """Attach a float feature vector per image (stubbed: digest-derived)."""
-    out_schema = StructType(df.schema.fields + [StructField("features", ArrayType(FloatType()))])
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            feats = []
-            for payload in pdf[payload_col]:
-                raw = bytes(payload) if payload is not None else b""
-                if not deterministic_fake:
-                    # Real features from real pixels: dim-bucket mean
-                    # intensities over the PNG's unfiltered sample stream.
-                    from ..functions import codecs
-
-                    try:
-                        px = codecs.decode_png(raw)["pixels"]
-                    except ValueError as e:
-                        raise NotImplementedError(
-                            f"real feature extraction needs a decodable image: {e}"
-                        ) from e
-                    arr = np.frombuffer(px, dtype=np.uint8)
-                    if arr.size == 0:
-                        feats.append([0.0] * dim)
-                        continue
-                    buckets = np.array_split(arr.astype(np.float64), dim)
-                    feats.append(
-                        [float(b.mean()) / 255.0 if b.size else 0.0 for b in buckets]
-                    )
-                    continue
-                d = hashlib.sha256(raw).digest()
-                feats.append([(d[i % 32] - 128) / 128.0 for i in range(dim)])
-            pdf = pdf.copy()
-            pdf["features"] = feats
             yield pdf
 
     return df.mapInPandas(batches, out_schema)

@@ -46,86 +46,3 @@ def write_single_parquet(df: DataFrame, path: str, *, sorted_single: bool = True
     import pyarrow.parquet as pq
 
     return pq.ParquetFile(path).metadata.num_rows
-
-
-def write_partitioned_ledger(
-    df: DataFrame,
-    path: str,
-    *,
-    next_offset: int = 0,
-    order_cols: list[str] | None = None,
-    offset_col: str = "offset",
-    num_partitions: int | None = None,
-) -> int:
-    """The 100 TB escape hatch for the single-file ODF output contract: a
-    PARTITIONED parquet ledger directory with exact, contiguous, globally
-    ordered offsets — no coalesce(1) anywhere, so the write scales with
-    the cluster instead of serializing through one task.
-
-    Mechanics: range-repartition + in-partition sort on `order_cols`
-    (partitions are globally ordered), persist that one shuffle, count
-    rows per partition (a driver-side dict of size = #partitions), derive
-    each partition's base offset by prefix sum, and stamp
-    base + within-partition position in an Arrow mapInPandas pass. Offsets
-    are deterministic whenever `order_cols` is a total order (ties may
-    land on either side of a range boundary otherwise — same caveat as
-    any distributed sort).
-
-    Returns the row count. The single-file `write_single_parquet` remains
-    the ODF-contract path; this is the forward path for outputs too large
-    for one file (reference comparison: the Flink sink buffers the whole
-    result on one heap — ParuqetSink.scala:29-80 — so this shape has no
-    reference equivalent at all)."""
-    import pandas as pd  # noqa: F401  (mapInPandas batches)
-    from pyspark import StorageLevel
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    if order_cols:
-        n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        ordered = df.repartitionByRange(n, *[F.col(c) for c in order_cols])
-        ordered = ordered.sortWithinPartitions(*order_cols)
-    else:
-        ordered = df
-    tagged = ordered.withColumn("__pid", F.spark_partition_id()).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
-        counts = {
-            r["__pid"]: r["cnt"]
-            for r in tagged.groupBy("__pid")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .collect()
-        }
-        base: dict[int, int] = {}
-        acc = next_offset
-        for pid in sorted(counts):
-            base[pid] = acc
-            acc += counts[pid]
-        bbase = df.sparkSession.sparkContext.broadcast(base)
-
-        def stamp(it):
-            cursor = None
-            for pdf in it:
-                if not len(pdf):
-                    continue
-                pid = int(pdf["__pid"].iloc[0])
-                if cursor is None:
-                    cursor = bbase.value[pid]
-                out = pdf.drop(columns="__pid").copy()
-                out.insert(0, offset_col, range(cursor, cursor + len(pdf)))
-                cursor += len(pdf)
-                yield out
-
-        out_schema = StructType(
-            [StructField(offset_col, LongType(), False)] + list(df.schema.fields)
-        )
-        stamped = tagged.mapInPandas(stamp, out_schema)
-        stamped.write.mode("overwrite").option("compression", "snappy").parquet(path)
-        return acc - next_offset
-    finally:
-        tagged.unpersist()
-        try:
-            bbase.destroy()
-        except NameError:
-            pass  # broadcast never created (write failed before it)

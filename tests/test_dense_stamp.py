@@ -7,10 +7,16 @@ order, every cell) must be IDENTICAL to the non-dense path's."""
 from types import SimpleNamespace
 
 import pyarrow.parquet as pq
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
 import kamu_engine_flink_spark.operators.map_step as map_step
-from kamu_engine_flink_spark.engine.transform import _dense_chain_to_output
-from kamu_engine_flink_spark.operators.base import StepContext
+from kamu_engine_flink_spark.engine.transform import (
+    _assemble_output,
+    _dense_chain_to_output,
+)
+from kamu_engine_flink_spark.operators.base import StepContext, StepResult
+from kamu_engine_flink_spark.protocol.model import Transform, TransformRequest
 
 from .helpers import TransformRunner, ticker_slice, ts
 
@@ -175,3 +181,34 @@ def test_dense_projection_disqualifiers(spark):
     # Source not dense-stamped this invocation -> not dense.
     ctx.dense_seq_views.clear()
     assert not map_step._dense_projection(ctx, ok, ["g"])
+
+
+def test_stamp_without_order_cols_is_positional(spark, tmp_path):
+    """An emission with no order_cols keeps its natural order: over a
+    4-partition input, offset = next_offset + row position, rows in the
+    order the window-numbered stamp gave, and no Window in the plan."""
+    df = spark.range(0, 1000, 1, 4).select(
+        "id", F.timestamp_seconds("id").alias("event_time")
+    )
+    assert df.rdd.getNumPartitions() == 4
+    request = TransformRequest(
+        transform=Transform(queries=[]),
+        query_inputs=[],
+        system_time=ts(2),
+        next_offset=17,
+        prev_checkpoint_path=None,
+        new_checkpoint_path=str(tmp_path / "cp"),
+        new_data_path=str(tmp_path / "out.parquet"),
+    )
+    out = _assemble_output(spark, request, StepResult(df=df, watermark=None))
+    rows = [(r["offset"], r["id"]) for r in out.collect()]
+    assert rows == [(17 + i, i) for i in range(1000)]
+    w = Window.partitionBy(F.lit(0)).orderBy(F.monotonically_increasing_id())
+    windowed = df.coalesce(1).withColumn("offset", F.row_number().over(w) + 16)
+    assert [(r["offset"], r["id"]) for r in windowed.collect()] == rows
+
+    def plan(frame):
+        return frame._jdf.queryExecution().executedPlan().toString()
+
+    assert "Window" in plan(windowed)
+    assert "Window" not in plan(out)

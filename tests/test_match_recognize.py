@@ -1094,3 +1094,62 @@ MATCH_RECOGNIZE (
     ticker_slice(s1, [(0, 0, ts(2), ts(1, 0, 1), "A", 5)])
     with pytest.raises(InvalidQueryError, match="inside and outside"):
         runner.run([_input(s1, ts(1, 0, 5))], system_time=ts(2))
+
+
+def test_no_partition_by_matches_constant_key(spark, tmp_path):
+    """Without PARTITION BY the whole stream is one group. Over two
+    resumed invocations (a match suspended across the boundary) and in
+    batch, it must match exactly like PARTITION BY a constant column,
+    with that column dropped."""
+    from kamu_engine_flink_spark.operators.match_recognize import (
+        match_recognize_batch,
+    )
+
+    no_keys = MR_QUERY.replace("  PARTITION BY symbol\n", "")
+    assert "PARTITION BY" not in no_keys
+    slices = [
+        [
+            (0, 0, ts(2), ts(1, 0, 1), "A", 5),
+            (1, 0, ts(2), ts(1, 0, 2), "A", 20),
+            (2, 0, ts(2), ts(1, 0, 4), "A", 120),
+            (3, 0, ts(2), ts(1, 0, 3), "A", 50),
+            (4, 0, ts(2), ts(1, 0, 5), "A", 7),
+            (5, 0, ts(2), ts(1, 0, 6), "A", 30),
+        ],
+        [
+            (6, 0, ts(3), ts(1, 0, 7), "A", 150),
+            (7, 0, ts(3), ts(1, 0, 8), "A", 4),
+            (8, 0, ts(3), ts(1, 0, 9), "A", 101),
+        ],
+    ]
+
+    def streamed(query, name):
+        runner = TransformRunner(spark, tmp_path / name, queries=[(query, None)])
+        outs = []
+        for i, rows in enumerate(slices):
+            p = str(tmp_path / name / "in" / f"s{i}.parquet")
+            ticker_slice(p, rows)
+            _, out = runner.run([_input(p, rows[-1][3])], system_time=ts(2 + i))
+            outs.append([
+                {k: v for k, v in r.items() if k != "symbol"}
+                for r in pq.read_table(out).to_pylist()
+            ])
+        return outs
+
+    keyed = streamed(MR_QUERY, "keyed")
+    assert [len(o) for o in keyed] == [1, 2]
+    assert streamed(no_keys, "global") == keyed
+
+    df = spark.createDataFrame(
+        [(r[3], r[4], r[5], r[0]) for rows in slices for r in rows],
+        "event_time timestamp, symbol string, price int, __seq long",
+    )
+
+    def batch(query):
+        out = match_recognize_batch(spark, df, query)
+        return sorted(
+            tuple(r[c] for c in out.columns if c != "symbol") for r in out.collect()
+        )
+
+    assert len(batch(MR_QUERY)) == 3
+    assert batch(no_keys) == batch(MR_QUERY)

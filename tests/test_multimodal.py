@@ -38,13 +38,6 @@ def test_decode_images_schema_and_determinism(media):
     assert meta.format in ("png", "jpeg", "webp")
 
 
-def test_image_features_shape(media):
-    out = multimodal.image_features(media, dim=16)
-    feats = out.select("features").first()[0]
-    assert len(feats) == 16
-    assert all(-1.0 <= v <= 1.0 for v in feats)
-
-
 def test_sample_frames_explosion(media):
     frames = multimodal.sample_frames(media, every_ms=1000)
     counts = {r.media_id: r.n for r in frames.groupBy("media_id").agg(F.count("*").alias("n")).collect()}
@@ -140,15 +133,6 @@ def test_decode_images_real_png(spark):
     assert got[2] == {"width": 2, "height": 2, "channels": 3, "format": "png"}
 
 
-def test_image_features_real_pixels(spark):
-    """Features from REAL decoded pixels: a uniform white PNG must yield
-    all-1.0 bucket means."""
-    white = _make_png(4, 4, [[255] * 12 for _ in range(4)])
-    df = spark.createDataFrame([(1, bytearray(white))], ["media_id", "payload"])
-    row = multimodal.image_features(df, dim=8, deterministic_fake=False).collect()[0]
-    assert row["features"] == [1.0] * 8
-
-
 def test_decode_audio_real_wav(spark):
     wav = _make_wav(sample_rate=8000, n_frames=4000)  # 500 ms mono
     df = spark.createDataFrame([(1, bytearray(wav))], ["media_id", "payload"])
@@ -174,60 +158,3 @@ def test_decode_real_path_unreadable_container_raises(spark):
         multimodal.decode_images(df, deterministic_fake=False).collect()
     assert "NotImplementedError" in str(ei.value) or "codec" in str(ei.value)
     assert multimodal.decode_images(df, deterministic_fake=True).count() == 1
-
-
-def test_png_filter_reversal_roundtrip():
-    """decode_png must reverse every PNG filter type: re-encode known
-    pixels with each filter and compare the decode to ground truth."""
-    import struct
-    import zlib
-
-    from kamu_engine_flink_spark.functions.codecs import decode_png
-
-    width, height, ch = 5, 4, 3
-    truth = bytes((x * 37 + 11) % 256 for x in range(width * height * ch))
-    stride = width * ch
-
-    def enc_row(ftype, row, prev):
-        out = bytearray()
-        for i, v in enumerate(row):
-            left = row[i - ch] if i >= ch else 0
-            up = prev[i]
-            ul = prev[i - ch] if i >= ch else 0
-            if ftype == 0:
-                out.append(v)
-            elif ftype == 1:
-                out.append((v - left) & 0xFF)
-            elif ftype == 2:
-                out.append((v - up) & 0xFF)
-            elif ftype == 3:
-                out.append((v - ((left + up) >> 1)) & 0xFF)
-            else:
-                p = left + up - ul
-                pa, pb, pc = abs(p - left), abs(p - up), abs(p - ul)
-                pred = left if (pa <= pb and pa <= pc) else (up if pb <= pc else ul)
-                out.append((v - pred) & 0xFF)
-        return bytes(out)
-
-    for ftype in range(5):
-        raw = bytearray()
-        prev = bytes(stride)
-        for y in range(height):
-            row = truth[y * stride : (y + 1) * stride]
-            raw += bytes([ftype]) + enc_row(ftype, row, prev)
-            prev = row
-
-        def chunk(ctype, body):
-            return (
-                struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-            )
-
-        png = (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0))
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b"")
-        )
-        dec = decode_png(png)
-        assert dec["pixels"] == truth, f"filter {ftype} reversal failed"

@@ -40,47 +40,3 @@ def test_salted_agg_matches_plain_groupby(spark):
         F.max("v").alias("hi"),
     )
     assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_partitioned_ledger_offsets_exact(spark, tmp_path):
-    """The partitioned ledger sink must stamp contiguous, globally ordered
-    offsets across MANY part files without any coalesce(1)."""
-    import glob
-
-    import duckdb
-    from pyspark.sql import functions as F
-
-    from kamu_engine_flink_spark.sinks.parquet import write_partitioned_ledger
-
-    n = 100_000
-    df = (
-        spark.range(n)
-        .select(
-            F.col("id"),
-            (F.hash(F.col("id").cast("string")) % 1000).alias("v"),
-        )
-        .repartition(16)
-    )
-    path = str(tmp_path / "ledger.parquet")
-    count = write_partitioned_ledger(
-        df, path, next_offset=100, order_cols=["v", "id"], num_partitions=16
-    )
-    assert count == n
-    assert len(glob.glob(path + "/part-*.parquet")) > 1  # genuinely partitioned
-
-    con = duckdb.connect()
-    lo, hi, distinct = con.execute(
-        f"SELECT min(\"offset\"), max(\"offset\"), count(DISTINCT \"offset\") FROM '{path}/*.parquet'"
-    ).fetchone()
-    assert (lo, hi, distinct) == (100, 100 + n - 1, n)
-    # Offsets follow the (v, id) total order.
-    violations = con.execute(
-        f"""
-        WITH s AS (SELECT "offset", v, id,
-                          lag(v) OVER w AS pv, lag(id) OVER w AS pid
-                   FROM '{path}/*.parquet' WINDOW w AS (ORDER BY "offset"))
-        SELECT count(*) FROM s
-        WHERE pv IS NOT NULL AND (v < pv OR (v = pv AND id < pid))
-        """
-    ).fetchone()[0]
-    assert violations == 0

@@ -11,10 +11,12 @@ is dropped.
 """
 
 import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
 
 from kamu_engine_flink_spark.protocol.model import DatasetVocabulary
 
-from .helpers import TransformRunner, ts
+from .helpers import TransformRunner, ticker_slice, ts
 from .test_interval_join import orders_slice, shipments_slice
 
 RJ_QUERY = """SELECT
@@ -135,3 +137,22 @@ ON a.order_id = b.order_id"""
     from kamu_engine_flink_spark.operators.regular_join import _SELF_RIGHT
 
     assert not spark.catalog.tableExists(_SELF_RIGHT)
+
+
+def test_transform_drops_its_views(spark, tmp_path):
+    """Request A registers input `events`; request B, on the same
+    session, has only input `other` but its SQL reads `events`. B must
+    fail to resolve `events`, not read A's slice."""
+    events = str(tmp_path / "events.parquet")
+    other = str(tmp_path / "other.parquet")
+    ticker_slice(events, [(0, 0, ts(2), ts(1), "A", 10), (1, 0, ts(2), ts(1), "B", 20)])
+    ticker_slice(other, [(0, 0, ts(2), ts(1), "C", 30)])
+    a = TransformRunner(
+        spark, tmp_path / "a", queries=[("SELECT event_time, symbol FROM events", None)]
+    )
+    a.run([{"alias": "events", "data_paths": [events], "schema_file": events}], ts(3))
+    b = TransformRunner(
+        spark, tmp_path / "b", queries=[("SELECT event_time, symbol FROM events", None)]
+    )
+    with pytest.raises(AnalysisException, match="events"):
+        b.run([{"alias": "other", "data_paths": [other], "schema_file": other}], ts(3))
