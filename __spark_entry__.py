@@ -1798,9 +1798,10 @@ def match_recognize_exclusion_events(spark: SparkSession, sf_dir: str) -> DataFr
 
 
 def dedup_keep_last_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flink Deduplication pattern batch twin (operators/keyed_topn.py
-    runs the stateful changelog form): latest event per user, ties broken
-    by ledger position (event_id) for a deterministic winner."""
+    """Flink Deduplication pattern batch twin (the keyed form of
+    operators/topn.py runs the stateful changelog form): latest event per
+    user, ties broken by ledger position (event_id) for a deterministic
+    winner."""
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     return (
@@ -7204,7 +7205,7 @@ def oracle_sql() -> dict[str, str]:
                    CAST(probe.op AS INTEGER) AS op,
                    CAST(probe.pk AS BIGINT) AS user_id,
                    probe.tms AS probe_ts_ms,
-                   probe.val AS total_cents,
+                   CAST(probe.val AS BIGINT) AS total_cents,
                    b.rate AS rate_cents
             FROM probe
             JOIN (SELECT pk, tms, rate FROM best WHERE rn = 1) b

@@ -29,7 +29,6 @@ Pipeline per invocation:
 from __future__ import annotations
 
 import os
-import re
 from datetime import datetime
 
 from pyspark import StorageLevel
@@ -37,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators import (
-    changelog_join,
     distinct_step,
     interval_join,
     map_step,
@@ -322,21 +320,9 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                     "updating stream; other step kinds would misread "
                     "correction/retraction rows as appends"
                 )
-            if changelog_refs and kind == C.TEMPORAL_JOIN:
-                result = temporal_join.execute_changelog_temporal_join(
-                    ctx, step.query
-                )
-            elif changelog_refs and kind == C.REGULAR_JOIN:
-                result = changelog_join.execute_changelog_join(ctx, step.query)
-            elif changelog_refs and kind == C.TOPN:
-                from ..operators import changelog_topn as CT
-
-                spec_t = C.parse_topn(step.query)
-                if spec_t is None:
-                    raise InvalidQueryError("unsupported Top-N query shape")
-                result = CT.execute_changelog_topn(ctx, step.query, spec_t)
-            else:
-                result = _EXECUTORS[kind](ctx, step.query)
+            # Executors of the accepted kinds pick their changelog variant
+            # themselves when a view they read is updating.
+            result = _EXECUTORS[kind](ctx, step.query)
             if step.alias:
                 adf = result.df
                 # A changelog-emitting alias consumed by a downstream

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..engine.state import StateStore
 from ..protocol.model import TransformRequest
 
+OP_COL = "__op"  # the op tag column of an updating (changelog-emitting) view
+
 
 @dataclass
 class StepContext:
@@ -82,6 +84,12 @@ def min_watermark(*wms: datetime | None) -> datetime | None:
     if not present:
         return None
     return min(present)
+
+
+def reads_updating(ctx: StepContext, *views: str) -> bool:
+    """True when one of `views` is updating: it carries the op tag column,
+    so the step must run its changelog variant."""
+    return any(OP_COL in ctx.views[v].columns for v in views)
 
 
 def split_touched_state(

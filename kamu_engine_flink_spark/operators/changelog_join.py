@@ -44,12 +44,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..plans.classify import parse_regular_join
 from ..protocol.model import InvalidQueryError
-from .base import StepContext, StepResult, min_watermark
+from .base import OP_COL, StepContext, StepResult, min_watermark
 from .map_step import SEQ_INPUT
 from .regular_join import _run_with_views, _view_scope, equi_keys
-from .topn import OP_COL
 
 _SELF_RIGHT = "__cj_self_right"
 
@@ -148,12 +146,9 @@ def _explode_copies(net: DataFrame, strict: bool = False) -> DataFrame:
     )
 
 
-def execute_changelog_join(ctx: StepContext, sql: str) -> StepResult:
-    spec = parse_regular_join(sql, set(ctx.views))
-    if spec is None:
-        raise InvalidQueryError(
-            "changelog join executor could not parse the join shape"
-        )
+def execute_changelog_join(ctx: StepContext, sql: str, spec) -> StepResult:
+    """The regular join `spec` (parsed by regular_join) with at least one
+    updating side."""
     rv_bind = (
         _SELF_RIGHT if spec.left_view == spec.right_view else spec.right_view
     )

@@ -52,88 +52,41 @@ changelog idiom).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..plans.dialect import rewrite_query
-from ..protocol.model import InvalidQueryError
-from .base import StepContext, StepResult
-from .keyed_topn import parse_keyed_order
+from .base import OP_COL, StepContext, StepResult, maintain_signed_ledger
 from .topn import (
-    _INNER_FROM_RE,
-    _ORDER_RE,
-    _SHAPE_RE,
     GSEQ_COL,
-    OP_COL,
+    SEQ_INPUT,
     SUB_COL,
-    _dedupe_columns,
-    parse_order_items,
+    RankStep,
+    prepend_select,
+    project_outer,
+    require_keys,
 )
 
 SIGN = "__ct_sign"
 CNT = "__ct_cnt"
 
-_RANK_STRIP_RE = re.compile(
-    r"row_number\s*\(\s*\)\s+over\s*\([^)]*\)\s+as\s+[`\w]+\s*,?",
-    re.IGNORECASE,
-)
 
+def execute_changelog_topn(ctx: StepContext, step: RankStep) -> StepResult:
+    """The rank step `step` (parsed by topn.parse_rank_step) over an
+    updating view."""
+    part_keys, order = step.keys, step.order
+    rank_col, limit = step.rank_col, step.limit
 
-def execute_changelog_topn(ctx: StepContext, sql: str, spec) -> StepResult:
-    shape = _SHAPE_RE.search(sql.strip())
-    if shape is None:
-        raise InvalidQueryError("unsupported Top-N query shape")
-    keyed = parse_keyed_order(sql)
-    if keyed is not None:
-        part_keys, order = keyed
-    else:
-        order_m = _ORDER_RE.search(sql)
-        order = (
-            parse_order_items(order_m.group("items")) if order_m else []
-        )
-        if not order:
-            raise InvalidQueryError("unsupported Top-N query shape")
-        part_keys = []
-    inner_sql = shape.group("inner").strip()
-    from_m = _INNER_FROM_RE.search(inner_sql)
-    if not from_m:
-        raise InvalidQueryError("Top-N subquery must read a single view")
-    src = from_m.group(1).strip("`")
-    if src not in ctx.views:
-        raise InvalidQueryError(f"Top-N subquery reads unknown view {src!r}")
-    rank_col = spec.rank_alias
-    limit = spec.limit
-
-    # The ranked subquery's projection over the slice, signed by op. A
-    # rank item at the END of the select list leaves a trailing comma
-    # behind the strip — remove it.
-    inner_no_rank = _RANK_STRIP_RE.sub("", inner_sql)
-    inner_no_rank = re.sub(
-        r",\s*(FROM\b)", r" \1", inner_no_rank, flags=re.IGNORECASE
-    )
+    # The ranked subquery's projection over the slice, signed by op.
+    inner_no_rank = step.inner_no_rank
     if OP_COL not in inner_no_rank:
-        inner_no_rank = re.sub(
-            r"^\s*select\s+",
-            f"SELECT {OP_COL}, ",
-            inner_no_rank,
-            count=1,
-            flags=re.IGNORECASE,
-        )
-    from .map_step import SEQ_INPUT
-
+        inner_no_rank = prepend_select(inner_no_rank, OP_COL)
     incoming = ctx.spark.sql(rewrite_query(inner_no_rank))
     if SEQ_INPUT in incoming.columns:  # star projection pulled it through
         incoming = incoming.drop(SEQ_INPUT)
     value_cols = [c for c in incoming.columns if c != OP_COL]
-    missing = [k for k in part_keys if k not in value_cols]
-    if missing:
-        raise InvalidQueryError(
-            f"Top-N PARTITION BY keys must appear in the subquery "
-            f"projection; missing: {missing}"
-        )
+    require_keys(step, value_cols)
     sign = (
         F.when(F.col(OP_COL).isin(1, 2), F.lit(-1))
         .otherwise(F.lit(1))
@@ -287,27 +240,9 @@ def execute_changelog_topn(ctx: StepContext, sql: str, spec) -> StepResult:
     # compaction so state tracks LIVE rows, not changelog volume (an
     # upstream continuous aggregate emits a +1/-1 pair per touched key
     # EVERY invocation) — operators/base.maintain_signed_ledger.
-    from .base import maintain_signed_ledger
-
     maintain_signed_ledger(
         ctx, ledger_name, delta, value_cols, SIGN, part_keys or None,
         full=ledger,
     )
 
-    # Re-apply the user's outer projection over the diff changelog.
-    view_name = f"__cl_topn_{ctx.step_key.replace('-', '_')}"
-    diff.createOrReplaceTempView(view_name)
-    injected = re.sub(
-        r"^select\s+",
-        f"SELECT {OP_COL}, {GSEQ_COL}, {SUB_COL}, ",
-        shape.group("outer"),
-        count=1,
-        flags=re.IGNORECASE,
-    )
-    final_sql = f"{injected} FROM {view_name} {shape.group('tail')}"
-    result = _dedupe_columns(ctx.spark.sql(rewrite_query(final_sql)))
-    return StepResult(
-        df=result,
-        watermark=ctx.new_wms.get(src),
-        order_cols=[GSEQ_COL, SUB_COL],
-    )
+    return project_outer(ctx, step, diff)

@@ -53,8 +53,7 @@ from pyspark.sql.types import IntegerType
 from ..plans.classify import parse_regular_join
 from ..plans.dialect import rewrite_query
 from ..protocol.model import OP_APPEND, OP_RETRACT, InvalidQueryError
-from .base import StepContext, StepResult, min_watermark
-from .topn import OP_COL
+from .base import OP_COL, StepContext, StepResult, min_watermark, reads_updating
 
 _MATCHED = "__rj_matched"
 _PHASE = "__emit_phase"  # 0 = pad retractions, 1 = pads + pairs
@@ -155,6 +154,11 @@ def execute_regular_join(ctx: StepContext, sql: str) -> StepResult:
     spec = parse_regular_join(sql, set(ctx.views))
     if spec is None:
         raise InvalidQueryError("regular join executor could not parse the join shape")
+    if reads_updating(ctx, spec.left_view, spec.right_view):
+        # Local import: changelog_join builds on this module's helpers.
+        from .changelog_join import execute_changelog_join
+
+        return execute_changelog_join(ctx, sql, spec)
     rv_bind = _SELF_RIGHT if spec.left_view == spec.right_view else spec.right_view
     with _view_scope(ctx, (spec.left_view, rv_bind)):
         return _regular_join_body(ctx, sql, spec)

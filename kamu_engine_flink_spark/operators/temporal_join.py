@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from ..plans.classify import referenced_views
 from ..plans.dialect import VALID_FROM, VALID_TO, VERSIONS_SUFFIX, rewrite_query
 from ..protocol.model import InvalidQueryError, TemporalTable
-from .base import StepContext, StepResult, min_watermark
+from .base import OP_COL, StepContext, StepResult, min_watermark, reads_updating
 
 
 def with_validity(versions: DataFrame, primary_key: list[str], event_time_col: str) -> DataFrame:
@@ -238,7 +238,6 @@ def _changelog_version_state(
     from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
     from .map_step import SEQ_INPUT
-    from .topn import OP_COL
 
     value_cols = [c for c in build_df.columns if not c.startswith("__")]
     if any(p not in value_cols for p in pk) or build_et not in value_cols:
@@ -321,7 +320,7 @@ def _changelog_version_state(
     return resolvable
 
 
-def execute_changelog_temporal_join(ctx: StepContext, sql: str) -> StepResult:
+def execute_changelog_temporal_join(ctx: StepContext, sql: str, sides) -> StepResult:
     """Temporal (as-of) join with at least one UPDATING
     (changelog-emitting) side — Flink's event-time temporal join, which
     accepts a changelog on either side (reference surface via planner
@@ -345,10 +344,8 @@ def execute_changelog_temporal_join(ctx: StepContext, sql: str) -> StepResult:
     Finality mirrors Flink: probe rows release when the joint watermark
     passes their event time.
     """
-    from .topn import OP_COL
-
-    build, probe, tt, pk, build_et, probe_et = _parse_sides(ctx, sql)
-    if OP_COL in ctx.views[probe].columns:
+    build, probe, tt, pk, build_et, probe_et = sides
+    if reads_updating(ctx, probe):
         return _execute_updating_probe(
             ctx, sql, build, probe, tt, pk, build_et, probe_et
         )
@@ -441,7 +438,6 @@ def _execute_updating_probe(
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
     from .map_step import SEQ_INPUT
-    from .topn import OP_COL
 
     probe_df = ctx.views[probe]
     if SEQ_INPUT not in probe_df.columns:
@@ -602,7 +598,10 @@ def _appendonly_version_state(
 
 
 def execute_temporal_join(ctx: StepContext, sql: str) -> StepResult:
-    build, probe, tt, _pk, build_et, probe_et = _parse_sides(ctx, sql)
+    sides = _parse_sides(ctx, sql)
+    build, probe, tt, _pk, build_et, probe_et = sides
+    if reads_updating(ctx, build, probe):
+        return execute_changelog_temporal_join(ctx, sql, sides)
 
     # Probe rows release when the joint watermark passes their event time.
     probe_state = f"{ctx.step_key}-probe-buffer"

@@ -1,4 +1,5 @@
-"""Stateful Top-N with changelog corrections.
+"""Stateful Top-N with changelog corrections: every rank step, global
+(no PARTITION BY) or keyed.
 
 Reference semantics (EngineTopNTest.scala:22-155, TopNTest.scala:18-89):
 `row_number() OVER (ORDER BY score DESC)` + outer `WHERE place <= N`
@@ -7,43 +8,71 @@ emits correction pairs immediately — CorrectFrom(op=2) with the old row,
 CorrectTo(op=3) with the new — in ascending place order, per record, in
 input (offset) order. A fresh place emits Append(op=0).
 
+Flink's rank surface also accepts PARTITION BY in the OVER clause
+(`row_number() over (partition by k order by s) ... WHERE rn <= N`); the
+N=1 case is Flink's documented "Deduplication" pattern. The reference
+hands every SQL step to Flink's planner wholesale
+(TransformEngine.scala:252-262), whose one rank operator treats a missing
+PARTITION BY as an empty key list. So does this executor: the keyed form
+extends the changelog contract per key, with corrections interleaved
+across keys by arrival (ledger offset) order, and the global form is the
+keyed one over a constant key (GROUP_COL). A rank step over an UPDATING
+view goes to the retraction-aware variant (changelog_topn.py), which
+shares this module's parser and outer re-projection.
+
 Spark-first derivation: the changelog granularity is inherently sequential
-(record i's corrections depend on the state after record i-1), but almost
-no records can touch a Top-N: a distributed prefilter keeps only rows that
-beat the current N-th entry (threshold is monotone within a batch, so
-filtering against the previous state is exact), then a partition-local
-running-top-N prune bounds survivors to ~N*ln(rows/partition) per
-partition. The survivors fold through `grouped_map_batched` keyed by a
-constant, so they form one key run; the chunk-level fold
-(`make_batch_fold`, shared with the keyed variant) extracts each column
-once per Arrow chunk and replays every run on index ranges. The prune
-exists because this fold is one task; the keyed variant (keyed_topn.py)
-folds its raw slice across all key partitions, and the fold's own
-prepass drops the rows a prune would. No data row ever materializes on
-the driver; the only driver-side values are the single N-th-place
-threshold row. State is the <=N-row ranking table.
+per key (record i's corrections depend on the state after record i-1),
+but per-key changelogs are independent — only the emission order
+interleaves keys, and that is fully determined by (triggering record's
+ledger offset, place). So the fold distributes as ONE
+`grouped_map_batched` over the key columns: the chunk-level fold
+(`make_batch_fold`) extracts each column once per Arrow chunk, then
+replays every key run (previous state ∪ its slice rows in ledger order)
+on index ranges through the same running-top-N simulation, emitting
+changelog rows tagged with the trigger's offset. Its scalar prepass drops
+every row that cannot enter its key's running top-N. A hot key's run
+spans many Arrow batches; while it is carried, the same prepass
+(`make_run_filter`) keeps only its state and entering rows, so its memory
+stays bounded at about N*ln(rows).
+
+The keyed fold reads the raw slice and is the step's only Python stage.
+The global fold is one task, so it keeps a distributed pre-stage: a
+prefilter keeps only rows that beat the current N-th entry (the threshold
+is monotone within a batch, so filtering against the previous state is
+exact), then a partition-local running-top-N prune bounds survivors to
+~N*ln(rows/partition) per partition. The keyed form instead folds only
+the state of keys the slice touches when state is much larger than the
+slice. No data row ever materializes on the driver; the only driver-side
+value is the global form's single N-th-place threshold row. State is the
+per-key <=N-row ranking table (bucketed by key in the keyed form).
 
 Supported shape (the reference's only tested one): an outer projection over
-`(SELECT row_number() OVER (ORDER BY <col> [DESC]) AS <rank>, <cols> FROM
-<view>) WHERE <rank> <= N`.
+`(SELECT row_number() OVER ([PARTITION BY <keys>] ORDER BY <col> [DESC],
+...) AS <rank>, <cols> FROM <view>) WHERE <rank> <= N`.
 """
 
 from __future__ import annotations
 
 import re
 from datetime import datetime
-from typing import Any
+from typing import Any, NamedTuple
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..plans.classify import parse_topn
 from ..plans.dialect import rewrite_query
 from ..protocol.model import OP_APPEND, OP_CORRECT_FROM, OP_CORRECT_TO, InvalidQueryError
-from .base import StepContext, StepResult
+from .base import (
+    OP_COL,
+    StepContext,
+    StepResult,
+    reads_updating,
+    split_touched_state,
+    state_split_worthwhile,
+)
 
-OP_COL = "__op"
-SEQ_COL = "__emit_seq"
 SEQ_INPUT = "__seq"  # engine-provided ledger-offset column on input views
 GSEQ_COL = "__emit_gseq"  # triggering record's ledger offset
 SUB_COL = "__emit_sub"  # emission order within one record's corrections
@@ -55,8 +84,14 @@ _SHAPE_RE = re.compile(
     r"(?P<tail>where\s+.*)$",
     re.IGNORECASE | re.DOTALL,
 )
-_ORDER_RE = re.compile(
-    r"row_number\s*\(\s*\)\s+over\s*\(\s*order\s+by\s+(?P<items>[^)]+)\)",
+_RANK_RE = re.compile(
+    r"row_number\s*\(\s*\)\s+over\s*\(\s*"
+    r"(?:partition\s+by\s+(?P<keys>[`\w.]+(?:\s*,\s*[`\w.]+)*)\s+)?"
+    r"order\s+by\s+(?P<items>[^)]+)\)",
+    re.IGNORECASE,
+)
+_RANK_ITEM_RE = re.compile(
+    r"row_number\s*\(\s*\)\s+over\s*\([^)]*\)\s+as\s+[`\w]+\s*,?",
     re.IGNORECASE,
 )
 _ORDER_ITEM_RE = re.compile(r"^\s*([`\w.]+)\s*(asc|desc)?\s*$", re.IGNORECASE)
@@ -441,19 +476,37 @@ def make_run_filter(rank_col, order, limit):
     return new_run
 
 
-def execute_topn(ctx: StepContext, sql: str) -> StepResult:
-    spec = parse_topn(sql)
-    if spec is not None:
-        from .keyed_topn import execute_keyed_topn, parse_keyed_order
+class RankStep(NamedTuple):
+    """A parsed rank step. `shape` splits the query into the outer select,
+    the ranked inner select and the outer WHERE tail; `keys` are the
+    PARTITION BY columns ([] for the global form); `order` is the
+    composite [(col, descending), ...] rank order; `src` is the view the
+    inner select reads; `inner_no_rank` is the inner select without its
+    rank item; `rank_col` and `limit` come from `WHERE <rank> <= N`."""
 
-        if parse_keyed_order(sql) is not None:
-            return execute_keyed_topn(ctx, sql, spec)
+    shape: re.Match
+    keys: list[str]
+    order: list[tuple[str, bool]]
+    src: str
+    inner_no_rank: str
+    rank_col: str
+    limit: int
+
+
+def parse_rank_step(ctx: StepContext, sql: str) -> RankStep:
+    """The one rank-step parser, shared by the append-only and the
+    retraction-aware (changelog_topn.py) executors."""
+    spec = parse_topn(sql)
     shape = _SHAPE_RE.search(sql.strip())
-    order_m = _ORDER_RE.search(sql)
-    order = parse_order_items(order_m.group("items")) if order_m else []
+    rank_m = _RANK_RE.search(sql)
+    order = parse_order_items(rank_m.group("items")) if rank_m else []
     if spec is None or shape is None or not order:
         raise InvalidQueryError("unsupported Top-N query shape")
-    order_col, descending = order[0]
+    keys = [
+        k.strip().strip("`").split(".")[-1]
+        for k in (rank_m.group("keys") or "").split(",")
+        if k.strip()
+    ]
     inner_sql = shape.group("inner").strip()
     from_m = _INNER_FROM_RE.search(inner_sql)
     if not from_m:
@@ -461,34 +514,59 @@ def execute_topn(ctx: StepContext, sql: str) -> StepResult:
     src = from_m.group(1).strip("`")
     if src not in ctx.views:
         raise InvalidQueryError(f"Top-N subquery reads unknown view {src!r}")
-
-    # Ranked-subquery projection applied to this run's input rows. Input
-    # order comes from the engine-provided __seq column (ledger offset) on
-    # base input views; we thread it through the projection explicitly.
+    # A rank item at the END of the select list leaves its separating
+    # comma behind the strip — remove it.
     inner_no_rank = re.sub(
-        r"row_number\s*\(\s*\)\s+over\s*\([^)]*\)\s+as\s+[`\w]+\s*,?",
-        "",
-        inner_sql,
+        r",\s*(FROM\b)", r" \1", _RANK_ITEM_RE.sub("", inner_sql),
         flags=re.IGNORECASE,
     )
-    if SEQ_INPUT in ctx.views[src].columns and SEQ_INPUT not in inner_no_rank:
-        inner_no_rank = re.sub(
-            r"^\s*select\s+", f"SELECT {SEQ_INPUT}, ", inner_no_rank, count=1, flags=re.IGNORECASE
-        )
-    incoming = ctx.spark.sql(rewrite_query(inner_no_rank))
-    value_cols = [c for c in incoming.columns if c != SEQ_INPUT]
-
-    state_name = f"{ctx.step_key}-topn-state"
-    rank_col = spec.rank_alias  # the user's own rank alias (place, rownum, ...)
-    state_schema = StructType(
-        [StructField(rank_col, LongType())] + [incoming.schema[c] for c in value_cols]
+    return RankStep(
+        shape, keys, order, src, inner_no_rank, spec.rank_alias, spec.limit
     )
-    prev_state = ctx.state.load_df(state_name, schema=state_schema)
-    # One-time migration: engine revisions before the user-alias change
-    # persisted the rank under a literal 'place' column; rename on load so
-    # restored checkpoints keep their ranking state.
-    if rank_col not in prev_state.columns and "place" in prev_state.columns:
-        prev_state = prev_state.withColumnRenamed("place", rank_col)
+
+
+def prepend_select(sql: str, cols: str) -> str:
+    """`sql` with `cols` inserted as the first items of its select list."""
+    return re.sub(
+        r"^\s*select\s+", f"SELECT {cols}, ", sql, count=1, flags=re.IGNORECASE
+    )
+
+
+def require_keys(step: RankStep, value_cols: list[str]) -> None:
+    missing = [k for k in step.keys if k not in value_cols]
+    if missing:
+        raise InvalidQueryError(
+            f"Top-N PARTITION BY keys must appear in the subquery "
+            f"projection (state is keyed by them); missing: {missing}"
+        )
+
+
+def project_outer(ctx: StepContext, step: RankStep, changelog: DataFrame) -> StepResult:
+    """Re-apply the user's outer projection over the changelog, threading
+    the internal op/sequence columns through. The internal view is
+    dropped once the query is analyzed; the result keeps its plan."""
+    view_name = f"__topn_changelog_{ctx.step_key.replace('-', '_')}"
+    changelog.createOrReplaceTempView(view_name)
+    outer = prepend_select(step.shape.group("outer"), f"{OP_COL}, {GSEQ_COL}, {SUB_COL}")
+    final_sql = f"{outer} FROM {view_name} {step.shape.group('tail')}"
+    try:
+        result = _dedupe_columns(ctx.spark.sql(rewrite_query(final_sql)))
+    finally:
+        ctx.spark.catalog.dropTempView(view_name)
+    # __-prefixed columns (the op/sequence plumbing) are dropped by the
+    # output assembly's internal-column convention (transform.py).
+    return StepResult(
+        df=result, watermark=ctx.new_wms.get(step.src), order_cols=[GSEQ_COL, SUB_COL]
+    )
+
+
+def _global_candidates(
+    ctx: StepContext, step: RankStep, incoming: DataFrame, prev_state: DataFrame,
+    state_name: str,
+) -> DataFrame:
+    """The global form's pre-stage: the slice rows that can still enter
+    the top N, ahead of its single-task fold."""
+    order_col, descending = step.order[0]
     # Distributed prefilter: only rows beating the current N-th can matter.
     # The sole driver-side value is the N-th-place state row (bounded: ONE
     # row, fetched with limit(1) — never data rows). Null ordering matches
@@ -501,31 +579,23 @@ def execute_topn(ctx: StepContext, sql: str) -> StepResult:
     # NON-strict (a leading-column tie can still win on a later column).
     threshold = None
     if ctx.state.has_df(state_name):  # first run: skip the threshold job
-        worst = prev_state.orderBy(F.col(rank_col).desc()).limit(1).collect()
-        if worst and worst[0][rank_col] >= spec.limit:
+        worst = prev_state.orderBy(F.col(step.rank_col).desc()).limit(1).collect()
+        if worst and worst[0][step.rank_col] >= step.limit:
             threshold = worst[0][order_col]
+    candidates = incoming
     if threshold is not None:
-        strict = len(order) == 1
-        if descending:
-            cond = (
-                F.col(order_col) > F.lit(threshold)
-                if strict
-                else F.col(order_col) >= F.lit(threshold)
-            )
+        col, lit = F.col(order_col), F.lit(threshold)
+        if len(step.order) == 1:
+            cond = col > lit if descending else col < lit
         else:
-            cond = (
-                F.col(order_col) < F.lit(threshold)
-                if strict
-                else F.col(order_col) <= F.lit(threshold)
-            ) | F.col(order_col).isNull()
+            cond = col >= lit if descending else col <= lit
+        if not descending:
+            cond = cond | col.isNull()
         candidates = incoming.filter(cond)
-    else:
-        candidates = incoming
     if SEQ_INPUT not in candidates.columns:
         # Derived views without a ledger-offset column: synthesize a
-        # partition-ordered sequence (replaces the previous collect-order
-        # semantics — inputs with no defined arrival order fold in a
-        # deterministic partition-major order).
+        # partition-ordered sequence (inputs with no defined arrival
+        # order fold in a deterministic partition-major order).
         candidates = candidates.withColumn(
             SEQ_INPUT, F.monotonically_increasing_id()
         )
@@ -535,23 +605,74 @@ def execute_topn(ctx: StepContext, sql: str) -> StepResult:
     # visible top-N and never emits changelog. Bounds the fold group to
     # ~N*ln(rows/partition) survivors per partition on shuffled data
     # instead of the whole input.
-    candidates = _prune_partition_local(candidates, order, spec.limit)
+    return _prune_partition_local(candidates, step.order, step.limit)
 
-    # Distributed fold: the global changelog is inherently one sequential
-    # fold, so run it as ONE key run (constant key) over (previous state ∪
-    # pruned survivors) — the same chunk fold as the keyed variant. No data row ever materializes on the driver; the
-    # reference runs the whole job at parallelism 1 (SURVEY §3), so a
-    # single fold task over the pruned handful is the faithful — and
-    # bounded — physical shape.
-    unioned = (
-        prev_state.withColumn(SEQ_INPUT, F.lit(None).cast("long"))
-        .unionByName(
-            candidates.withColumn(rank_col, F.lit(None).cast("long")).select(
-                rank_col, *value_cols, SEQ_INPUT
-            )
-        )
-        .withColumn(GROUP_COL, F.lit(0))
+
+def execute_topn(ctx: StepContext, sql: str) -> StepResult:
+    step = parse_rank_step(ctx, sql)
+    if reads_updating(ctx, step.src):
+        # Local import: changelog_topn builds on this module.
+        from .changelog_topn import execute_changelog_topn
+
+        return execute_changelog_topn(ctx, step)
+    keys, rank_col = step.keys, step.rank_col  # the user's own rank alias
+
+    # Ranked-subquery projection applied to this run's input rows. Input
+    # order comes from the engine-provided __seq column (ledger offset) on
+    # base input views; we thread it through the projection explicitly.
+    inner = step.inner_no_rank
+    if SEQ_INPUT in ctx.views[step.src].columns and SEQ_INPUT not in inner:
+        inner = prepend_select(inner, SEQ_INPUT)
+    incoming = ctx.spark.sql(rewrite_query(inner))
+    value_cols = [c for c in incoming.columns if c != SEQ_INPUT]
+    require_keys(step, value_cols)
+    if keys and SEQ_INPUT not in incoming.columns:
+        raise InvalidQueryError("keyed Top-N requires ledger-offset sequencing")
+
+    # The two forms keep their own state names, so existing checkpoints
+    # restore.
+    state_name = f"{ctx.step_key}-{'keyed-' if keys else ''}topn-state"
+    state_schema = StructType(
+        [StructField(rank_col, LongType())] + [incoming.schema[c] for c in value_cols]
     )
+    prev_state = ctx.state.load_df(state_name, schema=state_schema)
+    # One-time migration: engine revisions before the user-alias change
+    # persisted the rank under a literal 'place' column; rename on load so
+    # restored checkpoints keep their ranking state.
+    if rank_col not in prev_state.columns and "place" in prev_state.columns:
+        prev_state = prev_state.withColumnRenamed("place", rank_col)
+
+    active_state, untouched_state = prev_state, None
+    if not keys:
+        incoming = _global_candidates(ctx, step, incoming, prev_state, state_name)
+    elif state_split_worthwhile(ctx, state_name, step.src):
+        # Touched-keys fold: a key with no row in this slice cannot change
+        # its ranking, so only the state of keys PRESENT in the slice
+        # enters the Python fold — a semi/anti probe against the slice's
+        # key set over the BUCKETED state relation (exchange-free on the
+        # state side; NULL-key groups route to active unconditionally, see
+        # base.py). Untouched keys' rows flow straight to the state save.
+        # Gated on state >> slice: when the slice plausibly touches most
+        # keys, the probes are pure overhead on an unavoidable full fold.
+        if step.src not in ctx.slice_sizes:
+            # A chained alias is not persisted: pin it, so the key probe
+            # and the union below read one computed slice.
+            incoming = ctx.pin(incoming)
+        active_state, untouched_state = split_touched_state(
+            prev_state, keys, incoming.select(*keys).distinct()
+        )
+
+    # One fold over (state ∪ slice) per key — the global form is one key
+    # run on a constant key, which the reference runs at parallelism 1
+    # too (SURVEY §3). Fold output carries both the changelog and the
+    # key's new ranking; KIND_COL splits them afterward.
+    unioned = active_state.withColumn(SEQ_INPUT, F.lit(None).cast("long")).unionByName(
+        incoming.withColumn(rank_col, F.lit(None).cast("long")).select(
+            rank_col, *value_cols, SEQ_INPUT
+        )
+    )
+    if not keys:
+        unioned = unioned.withColumn(GROUP_COL, F.lit(0))
     fold_schema = StructType(
         list(state_schema.fields)
         + [
@@ -563,37 +684,24 @@ def execute_topn(ctx: StepContext, sql: str) -> StepResult:
     )
     from ..functions.grouped import grouped_map_batched
 
-    fold_batch = make_batch_fold(value_cols, rank_col, order, spec.limit)
+    # Runs sorted by SEQ_INPUT (state rows, null, first): a hot key's run
+    # spans many Arrow batches, and the run filter keeps only the rows of
+    # it that can still enter the top N while it is carried. The pin is
+    # the one materialization: the state save and the output both read it.
     folded = ctx.pin(
-        grouped_map_batched(unioned, [GROUP_COL], fold_batch, fold_schema)
+        grouped_map_batched(
+            unioned,
+            keys or [GROUP_COL],
+            make_batch_fold(value_cols, rank_col, step.order, step.limit),
+            fold_schema,
+            sort_cols=[SEQ_INPUT],
+            run_filter=make_run_filter(rank_col, step.order, step.limit),
+        )
     )
-    # Materialize the pin NOW: the deferred state save and the output write
-    # later run as concurrent jobs, and Spark's cache races rather than
-    # blocks — both would execute the single-task Python fold. One count
-    # populates the cache; both consumers then read it.
-    folded.count()
+    keep = folded.filter(F.col(KIND_COL) == 1).select(rank_col, *value_cols)
+    if untouched_state is not None:
+        keep = untouched_state.unionByName(keep)
     ctx.state.save_df(
-        state_name,
-        folded.filter(F.col(KIND_COL) == 1).select(rank_col, *value_cols),
+        state_name, keep, bucket_by=keys or None, pre_partitioned=bool(keys)
     )
-    changelog_df = folded.filter(F.col(KIND_COL) == 0).drop(KIND_COL)
-
-    # Re-apply the user's outer projection over the changelog, threading the
-    # internal op/sequence columns through.
-    view_name = f"__topn_changelog_{ctx.step_key.replace('-', '_')}"
-    changelog_df.createOrReplaceTempView(view_name)
-    outer = shape.group("outer")
-    injected = re.sub(
-        r"^select\s+",
-        f"SELECT {OP_COL}, {GSEQ_COL}, {SUB_COL}, ",
-        outer,
-        count=1,
-        flags=re.IGNORECASE,
-    )
-    final_sql = f"{injected} FROM {view_name} {shape.group('tail')}"
-    result = _dedupe_columns(ctx.spark.sql(rewrite_query(final_sql)))
-
-    wm = ctx.new_wms.get(src)
-    # __-prefixed columns (the op/sequence plumbing) are dropped by the
-    # output assembly's internal-column convention (transform.py).
-    return StepResult(df=result, watermark=wm, order_cols=[GSEQ_COL, SUB_COL])
+    return project_outer(ctx, step, folded.filter(F.col(KIND_COL) == 0).drop(KIND_COL))

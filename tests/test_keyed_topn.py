@@ -124,6 +124,53 @@ def test_keyed_topn_changelog_and_resume(spark, tmp_path):
     ]
 
 
+def _rank_last(query):
+    """`query` with its rank item moved to the end of the inner select
+    list."""
+    (rank,) = [line for line in query.splitlines() if "row_number()" in line]
+    moved = query.replace(rank + "\n", "").replace(
+        "    score\n", f"    score,\n    {rank.strip().rstrip(',')}\n"
+    )
+    assert moved != query and "AS place\n  from" in moved
+    return moved
+
+
+def test_rank_item_last_matches_rank_first(spark, tmp_path):
+    """The rank item may be the last item of the inner select list: the
+    global and the keyed form then emit the rank-first query's changelog
+    and offsets over two resumed invocations."""
+    from .test_topn import TOPN_QUERY
+
+    slices = [
+        [
+            (0, 0, ts(5), ts(1), "Alice", 100),
+            (1, 0, ts(5), ts(1), "Bob", 80),
+            (2, 0, ts(5), ts(2), "Alice", 70),
+            (3, 0, ts(5), ts(2), "Bob", 90),
+            (4, 0, ts(5), ts(3), "Alice", 95),
+            (5, 0, ts(5), ts(3), "Charlie", 50),
+        ],
+        [
+            (6, 0, ts(6), ts(4), "Bob", 85),
+            (7, 0, ts(6), ts(4), "Dana", 120),
+        ],
+    ]
+    for form, query in (("global", TOPN_QUERY), ("keyed", KEYED_TOPN_QUERY)):
+        runs = {}
+        for variant, q in (("first", query), ("last", _rank_last(query))):
+            base = tmp_path / form / variant
+            runner = _runner(spark, base, q)
+            runs[variant] = []
+            for i, rows in enumerate(slices):
+                path = str(base / "in" / f"s{i}.parquet")
+                match_scores_slice(path, rows)
+                resp, out = runner.run([_input(path, ts(3 + i))], system_time=ts(10 + i))
+                oi = resp.new_offset_interval
+                runs[variant].append(((oi.start, oi.end), _read_rows(out)))
+        assert all(rows for _, rows in runs["first"]), form
+        assert runs["last"] == runs["first"], form
+
+
 def test_keyed_topn_randomized_vs_simulation(spark, tmp_path):
     """2000 random rows over 20 keys through the distributed fold of the
     raw slice must produce exactly the changelog of a driver-side per-key

@@ -1920,3 +1920,34 @@ def test_hop_twin_on_close_boundary_corpus(spark, tmp_path):
     start_ms = int(t(19, 18).timestamp() * 1000)
     hit = [r for r in got if r[1] == start_ms and r[2] == "click"]
     assert hit and hit[0][3] == 2, got
+
+
+def test_no_oracle_column_is_hugeint():
+    """Every integer output of an oracle is cast to BIGINT: DuckDB types
+    SUM(BIGINT) OVER (...) as a 128-bit HUGEINT, which its row fetch
+    returns as Python ints (so a value comparison cannot see it) but a
+    typed frame or hash does not. DuckDB only: the oracles are bound
+    over sf0.001 and their column types read, nothing runs."""
+    import sys
+
+    import duckdb
+
+    sys.path.insert(0, ".")
+    sys.path.insert(0, "tools")
+    import __spark_entry__ as entrymod
+    import crosscheck
+
+    from .test_dedup import SF_DIR
+
+    con = duckdb.connect()
+    for t in crosscheck.TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    hugeint = []
+    for name, sql in entrymod.oracle_sql().items():
+        rel = con.sql(sql)
+        hugeint += [
+            f"{name}.{col}"
+            for col, typ in zip(rel.columns, rel.types)
+            if str(typ) == "HUGEINT"
+        ]
+    assert hugeint == []

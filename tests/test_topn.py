@@ -51,43 +51,32 @@ def match_scores_slice(path, rows):
     )
 
 
-def test_topn_changelog(spark, tmp_path):
-    runner = TransformRunner(
-        spark,
-        tmp_path,
-        queries=[(TOPN_QUERY, None)],
-        vocab=DatasetVocabulary(event_time_column="placed_at"),
-    )
-    s1 = str(tmp_path / "in" / "s1.parquet")
-    match_scores_slice(
-        s1,
-        [
-            (0, 0, ts(5), ts(1), "Alice", 100),
-            (1, 0, ts(5), ts(1), "Bob", 80),
-            (2, 0, ts(5), ts(2), "Alice", 70),
-            (3, 0, ts(5), ts(2), "Charlie", 90),
-            (4, 0, ts(5), ts(3), "Bob", 60),
-            (5, 0, ts(5), ts(3), "Charlie", 110),
-        ],
-    )
-    vocab_in = DatasetVocabulary(event_time_column="match_time")
-    resp, out = runner.run(
-        [
-            {
-                "alias": "match_scores",
-                "data_paths": [s1],
-                "schema_file": s1,
-                "watermark": ts(3),
-                "vocab": vocab_in,
-            }
-        ],
-        system_time=ts(10),
-    )
-    assert (resp.new_offset_interval.start, resp.new_offset_interval.end) == (0, 7)
-    assert resp.new_watermark == ts(3)
+# Golden changelog from EngineTopNTest.scala:92-128 over TOPN_SLICE
+# (placed_at is now()-valued and excluded from comparison, like the
+# reference does): (offset, op, system_time, place, match_time,
+# player_name, score).
+TOPN_SLICE = [
+    (0, 0, ts(5), ts(1), "Alice", 100),
+    (1, 0, ts(5), ts(1), "Bob", 80),
+    (2, 0, ts(5), ts(2), "Alice", 70),
+    (3, 0, ts(5), ts(2), "Charlie", 90),
+    (4, 0, ts(5), ts(3), "Bob", 60),
+    (5, 0, ts(5), ts(3), "Charlie", 110),
+]
+TOPN_GOLDEN = [
+    (0, 0, ts(10), 1, ts(1), "Alice", 100),
+    (1, 0, ts(10), 2, ts(1), "Bob", 80),
+    (2, 2, ts(10), 2, ts(1), "Bob", 80),
+    (3, 3, ts(10), 2, ts(2), "Charlie", 90),
+    (4, 2, ts(10), 1, ts(1), "Alice", 100),
+    (5, 3, ts(10), 1, ts(3), "Charlie", 110),
+    (6, 2, ts(10), 2, ts(2), "Charlie", 90),
+    (7, 3, ts(10), 2, ts(1), "Alice", 100),
+]
 
-    table = pq.read_table(out)
-    rows = [
+
+def _golden_rows(table):
+    return [
         (
             r["offset"],
             r["op"],
@@ -99,18 +88,39 @@ def test_topn_changelog(spark, tmp_path):
         )
         for r in table.to_pylist()
     ]
-    # Golden changelog from EngineTopNTest.scala:92-128 (placed_at is
-    # now()-valued and excluded from comparison, like the reference does).
-    assert rows == [
-        (0, 0, ts(10), 1, ts(1), "Alice", 100),
-        (1, 0, ts(10), 2, ts(1), "Bob", 80),
-        (2, 2, ts(10), 2, ts(1), "Bob", 80),
-        (3, 3, ts(10), 2, ts(2), "Charlie", 90),
-        (4, 2, ts(10), 1, ts(1), "Alice", 100),
-        (5, 3, ts(10), 1, ts(3), "Charlie", 110),
-        (6, 2, ts(10), 2, ts(2), "Charlie", 90),
-        (7, 3, ts(10), 2, ts(1), "Alice", 100),
-    ]
+
+
+def _topn_run(runner, path, rows, watermark, system_time):
+    match_scores_slice(path, rows)
+    vocab_in = DatasetVocabulary(event_time_column="match_time")
+    return runner.run(
+        [
+            {
+                "alias": "match_scores",
+                "data_paths": [path],
+                "schema_file": path,
+                "watermark": watermark,
+                "vocab": vocab_in,
+            }
+        ],
+        system_time=system_time,
+    )
+
+
+def test_topn_changelog(spark, tmp_path):
+    runner = TransformRunner(
+        spark,
+        tmp_path,
+        queries=[(TOPN_QUERY, None)],
+        vocab=DatasetVocabulary(event_time_column="placed_at"),
+    )
+    s1 = str(tmp_path / "in" / "s1.parquet")
+    resp, out = _topn_run(runner, s1, TOPN_SLICE, ts(3), ts(10))
+    assert (resp.new_offset_interval.start, resp.new_offset_interval.end) == (0, 7)
+    assert resp.new_watermark == ts(3)
+
+    table = pq.read_table(out)
+    assert _golden_rows(table) == TOPN_GOLDEN
     # Column order parity with the golden parquet schema.
     assert table.column_names == [
         "offset",
@@ -122,6 +132,58 @@ def test_topn_changelog(spark, tmp_path):
         "player_name",
         "score",
     ]
+
+
+def test_global_topn_runs_no_count(spark, tmp_path, monkeypatch):
+    """The global fold is materialized by its pin alone, like the keyed
+    one: two resumed global Top-N invocations call DataFrame.count()
+    nowhere, and their changelogs are the golden one and its resumed
+    continuation."""
+    # Patch the class the session actually returns (see
+    # test_dense_stamp.test_dense_chain_skips_gate_count).
+    CDF = type(spark.range(1))
+    counts = []
+    real_count = CDF.count
+
+    def spy(self):
+        counts.append(1)
+        return real_count(self)
+
+    monkeypatch.setattr(CDF, "count", spy)
+    runner = TransformRunner(
+        spark,
+        tmp_path,
+        queries=[(TOPN_QUERY, None)],
+        vocab=DatasetVocabulary(event_time_column="placed_at"),
+    )
+    _, out = _topn_run(
+        runner, str(tmp_path / "in" / "s1.parquet"), TOPN_SLICE, ts(3), ts(10)
+    )
+    assert _golden_rows(pq.read_table(out)) == TOPN_GOLDEN
+    # Resume over top-2 (Charlie 110, Alice 100): Dana 105 takes place 2,
+    # Eve 50 changes nothing, Finn 120 takes place 1 and pushes Charlie
+    # down to place 2.
+    resp, out = _topn_run(
+        runner,
+        str(tmp_path / "in" / "s2.parquet"),
+        [
+            (6, 0, ts(6), ts(4), "Dana", 105),
+            (7, 0, ts(6), ts(4), "Eve", 50),
+            (8, 0, ts(6), ts(4), "Finn", 120),
+        ],
+        ts(4),
+        ts(11),
+    )
+    assert (resp.new_offset_interval.start, resp.new_offset_interval.end) == (8, 13)
+    assert _golden_rows(pq.read_table(out)) == [
+        (8, 2, ts(11), 2, ts(1), "Alice", 100),
+        (9, 3, ts(11), 2, ts(4), "Dana", 105),
+        (10, 2, ts(11), 1, ts(3), "Charlie", 110),
+        (11, 3, ts(11), 1, ts(4), "Finn", 120),
+        (12, 2, ts(11), 2, ts(4), "Dana", 105),
+        (13, 3, ts(11), 2, ts(3), "Charlie", 110),
+    ]
+    assert not counts, "a global Top-N invocation must not call count()"
 
 
 def test_partition_prune_keeps_all_global_enterers(spark):

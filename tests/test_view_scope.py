@@ -156,3 +156,43 @@ def test_transform_drops_its_views(spark, tmp_path):
     )
     with pytest.raises(AnalysisException, match="events"):
         b.run([{"alias": "other", "data_paths": [other], "schema_file": other}], ts(3))
+
+
+def test_topn_leaves_no_internal_views(spark, tmp_path):
+    """The Top-N executors register an internal view for the outer
+    re-projection; none of them outlives the invocation, for the global,
+    the keyed and the changelog form."""
+    import re
+
+    rank = "row_number() over ({}order by price desc) AS place"
+    topn = (
+        "SELECT event_time, symbol, price, place FROM (SELECT {}, event_time, "
+        "symbol, price FROM {}) WHERE place <= 2"
+    )
+    agg = (
+        "SELECT cast(now() as timestamp(3)) as event_time, symbol, "
+        "sum(price) as price FROM events GROUP BY symbol"
+    )
+    forms = {
+        "global": [(topn.format(rank.format(""), "events"), None)],
+        "keyed": [(topn.format(rank.format("partition by symbol "), "events"), None)],
+        "changelog": [(agg, "g"), (topn.format(rank.format(""), "g"), None)],
+    }
+    events = str(tmp_path / "events.parquet")
+    ticker_slice(
+        events,
+        [(0, 0, ts(2), ts(1), "A", 10), (1, 0, ts(2), ts(1), "B", 20),
+         (2, 0, ts(2), ts(1), "A", 30)],
+    )
+    for form, queries in forms.items():
+        runner = TransformRunner(spark, tmp_path / form, queries=queries)
+        resp, _ = runner.run(
+            [{"alias": "events", "data_paths": [events], "schema_file": events}],
+            ts(3),
+        )
+        assert resp.new_offset_interval is not None, form
+        left = [
+            t.name for t in spark.catalog.listTables()
+            if re.fullmatch(r"__.*topn.*", t.name)
+        ]
+        assert left == [], form
