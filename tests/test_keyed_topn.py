@@ -138,7 +138,11 @@ def _rank_last(query):
 def test_rank_item_last_matches_rank_first(spark, tmp_path):
     """The rank item may be the last item of the inner select list: the
     global and the keyed form then emit the rank-first query's changelog
-    and offsets over two resumed invocations."""
+    and offsets over two resumed invocations. The expected runs are the
+    rank-first queries' output over these slices: the keyed one is
+    test_keyed_topn_changelog_and_resume's golden; the global one is
+    hand-checked (top 2 by score: Bob 90 then Alice 95 take place 2,
+    Dana 120 takes place 1 and pushes Alice 100 down)."""
     from .test_topn import TOPN_QUERY
 
     slices = [
@@ -155,20 +159,53 @@ def test_rank_item_last_matches_rank_first(spark, tmp_path):
             (7, 0, ts(6), ts(4), "Dana", 120),
         ],
     ]
+    rank_first = {
+        "global": [
+            ((0, 5), [
+                (0, 0, 1, ts(1), "Alice", 100),
+                (1, 0, 2, ts(1), "Bob", 80),
+                (2, 2, 2, ts(1), "Bob", 80),
+                (3, 3, 2, ts(2), "Bob", 90),
+                (4, 2, 2, ts(2), "Bob", 90),
+                (5, 3, 2, ts(3), "Alice", 95),
+            ]),
+            ((6, 9), [
+                (6, 2, 1, ts(1), "Alice", 100),
+                (7, 3, 1, ts(4), "Dana", 120),
+                (8, 2, 2, ts(3), "Alice", 95),
+                (9, 3, 2, ts(1), "Alice", 100),
+            ]),
+        ],
+        "keyed": [
+            ((0, 8), [
+                (0, 0, 1, ts(1), "Alice", 100),
+                (1, 0, 1, ts(1), "Bob", 80),
+                (2, 0, 2, ts(2), "Alice", 70),
+                (3, 2, 1, ts(1), "Bob", 80),
+                (4, 3, 1, ts(2), "Bob", 90),
+                (5, 0, 2, ts(1), "Bob", 80),
+                (6, 2, 2, ts(2), "Alice", 70),
+                (7, 3, 2, ts(3), "Alice", 95),
+                (8, 0, 1, ts(3), "Charlie", 50),
+            ]),
+            ((9, 11), [
+                (9, 2, 2, ts(1), "Bob", 80),
+                (10, 3, 2, ts(4), "Bob", 85),
+                (11, 0, 1, ts(4), "Dana", 120),
+            ]),
+        ],
+    }
     for form, query in (("global", TOPN_QUERY), ("keyed", KEYED_TOPN_QUERY)):
-        runs = {}
-        for variant, q in (("first", query), ("last", _rank_last(query))):
-            base = tmp_path / form / variant
-            runner = _runner(spark, base, q)
-            runs[variant] = []
-            for i, rows in enumerate(slices):
-                path = str(base / "in" / f"s{i}.parquet")
-                match_scores_slice(path, rows)
-                resp, out = runner.run([_input(path, ts(3 + i))], system_time=ts(10 + i))
-                oi = resp.new_offset_interval
-                runs[variant].append(((oi.start, oi.end), _read_rows(out)))
-        assert all(rows for _, rows in runs["first"]), form
-        assert runs["last"] == runs["first"], form
+        base = tmp_path / form
+        runner = _runner(spark, base, _rank_last(query))
+        runs = []
+        for i, rows in enumerate(slices):
+            path = str(base / "in" / f"s{i}.parquet")
+            match_scores_slice(path, rows)
+            resp, out = runner.run([_input(path, ts(3 + i))], system_time=ts(10 + i))
+            oi = resp.new_offset_interval
+            runs.append(((oi.start, oi.end), _read_rows(out)))
+        assert runs == rank_first[form], form
 
 
 def test_keyed_topn_randomized_vs_simulation(spark, tmp_path):
