@@ -27,8 +27,6 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from ..sources.parquet import footer_schema
-
 # Append-only relations add up to num_buckets files per invocation (one
 # generation). Past this many data files the append compacts: one full
 # bucketed rewrite folds all generations back to one file per bucket, so
@@ -158,12 +156,7 @@ class StateStore:
             meta = self.load_json(self._meta_name(name))
             if meta:
                 return self._read_bucketed(path, meta)
-            # Every file of a relation has the same schema: read it from
-            # one footer on the driver instead of an inference job.
-            first = min(e for e in os.listdir(path) if not e.startswith(("_", ".")))
-            schema = footer_schema(self.spark, os.path.join(path, first))
-            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-            return reader.parquet(path)
+            return self.spark.read.parquet(path)
         if schema is not None:
             return self.spark.createDataFrame([], schema)
         return None

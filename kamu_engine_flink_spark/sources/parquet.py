@@ -21,15 +21,14 @@ from __future__ import annotations
 import os
 
 import pyarrow.parquet as pq
-from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 # (path, mtime_ns, size) per slice file -> (spark StructType, ns columns).
 # A long-lived engine process re-reads the same slice vector every
-# invocation (and the bench re-reads it every rep); each miss costs a
-# footer read on the driver (footer_schema). The ODF contract pins the
+# invocation (and the bench re-reads it every rep); Spark re-infers the
+# schema eagerly on each spark.read.parquet — a driver round trip plus a
+# footer-read job (~60-100 ms per input). The ODF contract pins the
 # schema per dataset (no evolution), so the inferred schema is a pure
 # function of the file identity; mtime+size key invalidates rewrites.
 # Metadata-only cache: never caches data or results.
@@ -65,34 +64,6 @@ def _nanos_timestamp_columns(path: str) -> list[str]:
     return out
 
 
-def footer_schema(spark: SparkSession, path: str) -> StructType | None:
-    """Spark's own schema inference for one parquet file, run on the
-    driver: the footer read and conversion that spark.read.parquet's
-    inference job runs in a task (readSchemaFromFooter, with the session's
-    converter settings, made nullable like a file relation's schema),
-    without the job. None when the footer cannot be read this way (a
-    missing or non-local path): the caller then lets spark.read.parquet
-    infer, and raise its own error."""
-    jvm = spark._jvm
-    jsess = spark._jsparkSession
-    pq_pkg = jvm.org.apache.spark.sql.execution.datasources.parquet
-    try:
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        footer = pq_pkg.ParquetFooterReader.readFooter(
-            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                hpath, jsess.sessionState().newHadoopConf()
-            ),
-            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
-        )
-        jschema = pq_pkg.ParquetFileFormat.readSchemaFromFooter(
-            jvm.org.apache.parquet.hadoop.Footer(hpath, footer),
-            pq_pkg.ParquetToSparkSchemaConverter(jsess.sessionState().conf()),
-        )
-    except Py4JError:
-        return None
-    return _parse_datatype_json_string(jschema.asNullable().json())
-
-
 def read_parquet_slices(spark: SparkSession, paths: list[str]) -> DataFrame:
     """Read an ordered vector of parquet slice files as one DataFrame.
 
@@ -119,12 +90,7 @@ def read_parquet_slices(spark: SparkSession, paths: list[str]) -> DataFrame:
         # identical.
         df = spark.read.schema(schema).parquet(*paths)
     else:
-        schema = footer_schema(spark, paths[0])
-        df = (
-            spark.read.schema(schema).parquet(*paths)
-            if schema is not None
-            else spark.read.parquet(*paths)
-        )
+        df = spark.read.parquet(*paths)
         ns_cols = _nanos_timestamp_columns(paths[0])
         if key is not None:
             _SCHEMA_CACHE[key] = (df.schema, ns_cols)

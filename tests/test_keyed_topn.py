@@ -76,25 +76,27 @@ def _input(path, watermark):
     }
 
 
-def test_keyed_topn_changelog_and_resume(spark, tmp_path):
-    runner = _runner(spark, tmp_path, KEYED_TOPN_QUERY)
-    s1 = str(tmp_path / "in" / "s1.parquet")
-    match_scores_slice(
-        s1,
-        [
-            (0, 0, ts(5), ts(1), "Alice", 100),
-            (1, 0, ts(5), ts(1), "Bob", 80),
-            (2, 0, ts(5), ts(2), "Alice", 70),
-            (3, 0, ts(5), ts(2), "Bob", 90),
-            (4, 0, ts(5), ts(3), "Alice", 95),
-            (5, 0, ts(5), ts(3), "Charlie", 50),
-        ],
-    )
-    resp, out = runner.run([_input(s1, ts(3))], system_time=ts(10))
-    assert (resp.new_offset_interval.start, resp.new_offset_interval.end) == (0, 8)
-    # Hand-derived golden changelog: per-record corrections within each
-    # key's ranking, global order = (triggering offset, place, 2-before-3).
-    assert _read_rows(out) == [
+# Two resumed keyed invocations: the input slices and, per invocation,
+# the hand-derived golden (offset interval, changelog) — per-record
+# corrections within each key's ranking, global order = (triggering
+# offset, place, 2-before-3). The second invocation resumes per-key state
+# from the checkpoint.
+KEYED_SLICES = [
+    [
+        (0, 0, ts(5), ts(1), "Alice", 100),
+        (1, 0, ts(5), ts(1), "Bob", 80),
+        (2, 0, ts(5), ts(2), "Alice", 70),
+        (3, 0, ts(5), ts(2), "Bob", 90),
+        (4, 0, ts(5), ts(3), "Alice", 95),
+        (5, 0, ts(5), ts(3), "Charlie", 50),
+    ],
+    [
+        (6, 0, ts(6), ts(4), "Bob", 85),
+        (7, 0, ts(6), ts(4), "Dana", 120),
+    ],
+]
+KEYED_GOLDEN = [
+    ((0, 8), [
         (0, 0, 1, ts(1), "Alice", 100),
         (1, 0, 1, ts(1), "Bob", 80),
         (2, 0, 2, ts(2), "Alice", 70),
@@ -104,24 +106,31 @@ def test_keyed_topn_changelog_and_resume(spark, tmp_path):
         (6, 2, 2, ts(2), "Alice", 70),
         (7, 3, 2, ts(3), "Alice", 95),
         (8, 0, 1, ts(3), "Charlie", 50),
-    ]
-
-    # Second invocation resumes per-key state from the checkpoint.
-    s2 = str(tmp_path / "in" / "s2.parquet")
-    match_scores_slice(
-        s2,
-        [
-            (6, 0, ts(6), ts(4), "Bob", 85),
-            (7, 0, ts(6), ts(4), "Dana", 120),
-        ],
-    )
-    resp2, out2 = runner.run([_input(s2, ts(4))], system_time=ts(11))
-    assert (resp2.new_offset_interval.start, resp2.new_offset_interval.end) == (9, 11)
-    assert _read_rows(out2) == [
+    ]),
+    ((9, 11), [
         (9, 2, 2, ts(1), "Bob", 80),
         (10, 3, 2, ts(4), "Bob", 85),
         (11, 0, 1, ts(4), "Dana", 120),
-    ]
+    ]),
+]
+
+
+def _keyed_runs(spark, base, query):
+    """Run `query` over KEYED_SLICES, one resumed invocation each; return
+    each invocation's (offset interval, changelog) like KEYED_GOLDEN."""
+    runner = _runner(spark, base, query)
+    runs = []
+    for i, rows in enumerate(KEYED_SLICES):
+        path = str(base / "in" / f"s{i}.parquet")
+        match_scores_slice(path, rows)
+        resp, out = runner.run([_input(path, ts(3 + i))], system_time=ts(10 + i))
+        oi = resp.new_offset_interval
+        runs.append(((oi.start, oi.end), _read_rows(out)))
+    return runs
+
+
+def test_keyed_topn_changelog_and_resume(spark, tmp_path):
+    assert _keyed_runs(spark, tmp_path, KEYED_TOPN_QUERY) == KEYED_GOLDEN
 
 
 def _rank_last(query):
@@ -138,74 +147,12 @@ def _rank_last(query):
 def test_rank_item_last_matches_rank_first(spark, tmp_path):
     """The rank item may be the last item of the inner select list: the
     global and the keyed form then emit the rank-first query's changelog
-    and offsets over two resumed invocations. The expected runs are the
-    rank-first queries' output over these slices: the keyed one is
-    test_keyed_topn_changelog_and_resume's golden; the global one is
-    hand-checked (top 2 by score: Bob 90 then Alice 95 take place 2,
-    Dana 120 takes place 1 and pushes Alice 100 down)."""
-    from .test_topn import TOPN_QUERY
+    and offsets over two resumed invocations (the goldens the rank-first
+    tests assert)."""
+    from .test_topn import TOPN_QUERY, TOPN_RUNS, global_topn_runs
 
-    slices = [
-        [
-            (0, 0, ts(5), ts(1), "Alice", 100),
-            (1, 0, ts(5), ts(1), "Bob", 80),
-            (2, 0, ts(5), ts(2), "Alice", 70),
-            (3, 0, ts(5), ts(2), "Bob", 90),
-            (4, 0, ts(5), ts(3), "Alice", 95),
-            (5, 0, ts(5), ts(3), "Charlie", 50),
-        ],
-        [
-            (6, 0, ts(6), ts(4), "Bob", 85),
-            (7, 0, ts(6), ts(4), "Dana", 120),
-        ],
-    ]
-    rank_first = {
-        "global": [
-            ((0, 5), [
-                (0, 0, 1, ts(1), "Alice", 100),
-                (1, 0, 2, ts(1), "Bob", 80),
-                (2, 2, 2, ts(1), "Bob", 80),
-                (3, 3, 2, ts(2), "Bob", 90),
-                (4, 2, 2, ts(2), "Bob", 90),
-                (5, 3, 2, ts(3), "Alice", 95),
-            ]),
-            ((6, 9), [
-                (6, 2, 1, ts(1), "Alice", 100),
-                (7, 3, 1, ts(4), "Dana", 120),
-                (8, 2, 2, ts(3), "Alice", 95),
-                (9, 3, 2, ts(1), "Alice", 100),
-            ]),
-        ],
-        "keyed": [
-            ((0, 8), [
-                (0, 0, 1, ts(1), "Alice", 100),
-                (1, 0, 1, ts(1), "Bob", 80),
-                (2, 0, 2, ts(2), "Alice", 70),
-                (3, 2, 1, ts(1), "Bob", 80),
-                (4, 3, 1, ts(2), "Bob", 90),
-                (5, 0, 2, ts(1), "Bob", 80),
-                (6, 2, 2, ts(2), "Alice", 70),
-                (7, 3, 2, ts(3), "Alice", 95),
-                (8, 0, 1, ts(3), "Charlie", 50),
-            ]),
-            ((9, 11), [
-                (9, 2, 2, ts(1), "Bob", 80),
-                (10, 3, 2, ts(4), "Bob", 85),
-                (11, 0, 1, ts(4), "Dana", 120),
-            ]),
-        ],
-    }
-    for form, query in (("global", TOPN_QUERY), ("keyed", KEYED_TOPN_QUERY)):
-        base = tmp_path / form
-        runner = _runner(spark, base, _rank_last(query))
-        runs = []
-        for i, rows in enumerate(slices):
-            path = str(base / "in" / f"s{i}.parquet")
-            match_scores_slice(path, rows)
-            resp, out = runner.run([_input(path, ts(3 + i))], system_time=ts(10 + i))
-            oi = resp.new_offset_interval
-            runs.append(((oi.start, oi.end), _read_rows(out)))
-        assert runs == rank_first[form], form
+    assert global_topn_runs(spark, tmp_path / "global", _rank_last(TOPN_QUERY)) == TOPN_RUNS
+    assert _keyed_runs(spark, tmp_path / "keyed", _rank_last(KEYED_TOPN_QUERY)) == KEYED_GOLDEN
 
 
 def test_keyed_topn_randomized_vs_simulation(spark, tmp_path):

@@ -134,11 +134,61 @@ def test_topn_changelog(spark, tmp_path):
     ]
 
 
+# The global query resumed after TOPN_SLICE, over top-2 (Charlie 110,
+# Alice 100): Dana 105 takes place 2, Eve 50 changes nothing, Finn 120
+# takes place 1 and pushes Charlie down to place 2.
+TOPN_RESUME_SLICE = [
+    (6, 0, ts(6), ts(4), "Dana", 105),
+    (7, 0, ts(6), ts(4), "Eve", 50),
+    (8, 0, ts(6), ts(4), "Finn", 120),
+]
+TOPN_RESUME_GOLDEN = [
+    (8, 2, ts(11), 2, ts(1), "Alice", 100),
+    (9, 3, ts(11), 2, ts(4), "Dana", 105),
+    (10, 2, ts(11), 1, ts(3), "Charlie", 110),
+    (11, 3, ts(11), 1, ts(4), "Finn", 120),
+    (12, 2, ts(11), 2, ts(4), "Dana", 105),
+    (13, 3, ts(11), 2, ts(3), "Charlie", 110),
+]
+# (offset interval, changelog) of the two invocations.
+TOPN_RUNS = [((0, 7), TOPN_GOLDEN), ((8, 13), TOPN_RESUME_GOLDEN)]
+
+
+def global_topn_runs(spark, base, query, before_run=None):
+    """Run `query` over TOPN_SLICE, then resumed over TOPN_RESUME_SLICE;
+    return each invocation's (offset interval, changelog) like TOPN_RUNS.
+    `before_run(i)` is called before invocation i."""
+    runner = TransformRunner(
+        spark,
+        base,
+        queries=[(query, None)],
+        vocab=DatasetVocabulary(event_time_column="placed_at"),
+    )
+    runs = []
+    for i, (rows, watermark, system_time) in enumerate(
+        [(TOPN_SLICE, ts(3), ts(10)), (TOPN_RESUME_SLICE, ts(4), ts(11))]
+    ):
+        if before_run is not None:
+            before_run(i)
+        resp, out = _topn_run(
+            runner, str(base / "in" / f"s{i}.parquet"), rows, watermark, system_time
+        )
+        oi = resp.new_offset_interval
+        runs.append(((oi.start, oi.end), _golden_rows(pq.read_table(out))))
+    return runs
+
+
 def test_global_topn_runs_no_count(spark, tmp_path, monkeypatch):
     """The global fold is materialized by its pin alone, like the keyed
     one: two resumed global Top-N invocations call DataFrame.count()
-    nowhere, and their changelogs are the golden one and its resumed
+    nowhere, the fold receives each of its input rows once per
+    invocation, and the changelogs are the golden one and its resumed
     continuation."""
+    import json
+    import uuid
+
+    from kamu_engine_flink_spark.operators import topn
+
     # Patch the class the session actually returns (see
     # test_dense_stamp.test_dense_chain_skips_gate_count).
     CDF = type(spark.range(1))
@@ -150,40 +200,38 @@ def test_global_topn_runs_no_count(spark, tmp_path, monkeypatch):
         return real_count(self)
 
     monkeypatch.setattr(CDF, "count", spy)
-    runner = TransformRunner(
-        spark,
-        tmp_path,
-        queries=[(TOPN_QUERY, None)],
-        vocab=DatasetVocabulary(event_time_column="placed_at"),
-    )
-    _, out = _topn_run(
-        runner, str(tmp_path / "in" / "s1.parquet"), TOPN_SLICE, ts(3), ts(10)
-    )
-    assert _golden_rows(pq.read_table(out)) == TOPN_GOLDEN
-    # Resume over top-2 (Charlie 110, Alice 100): Dana 105 takes place 2,
-    # Eve 50 changes nothing, Finn 120 takes place 1 and pushes Charlie
-    # down to place 2.
-    resp, out = _topn_run(
-        runner,
-        str(tmp_path / "in" / "s2.parquet"),
-        [
-            (6, 0, ts(6), ts(4), "Dana", 105),
-            (7, 0, ts(6), ts(4), "Eve", 50),
-            (8, 0, ts(6), ts(4), "Finn", 120),
-        ],
-        ts(4),
-        ts(11),
-    )
-    assert (resp.new_offset_interval.start, resp.new_offset_interval.end) == (8, 13)
-    assert _golden_rows(pq.read_table(out)) == [
-        (8, 2, ts(11), 2, ts(1), "Alice", 100),
-        (9, 3, ts(11), 2, ts(4), "Dana", 105),
-        (10, 2, ts(11), 1, ts(3), "Charlie", 110),
-        (11, 3, ts(11), 1, ts(4), "Finn", 120),
-        (12, 2, ts(11), 2, ts(4), "Dana", 105),
-        (13, 3, ts(11), 2, ts(3), "Charlie", 110),
-    ]
+
+    # The fold runs in Python workers: each call writes the rows it
+    # received to a file in the current invocation's directory.
+    real_make = topn.make_batch_fold
+    fold_dirs = [tmp_path / "fold" / str(i) for i in range(2)]
+    current = []
+
+    def recording_make(*args):
+        fold, out_dir = real_make(*args), str(current[-1])
+
+        def recording_fold(pdf, starts):
+            rows = [[str(v) for v in r] for r in pdf.itertuples(index=False)]
+            path = f"{out_dir}/{uuid.uuid4().hex}.json"
+            with open(path, "w") as f:
+                json.dump(rows, f)
+            return fold(pdf, starts)
+
+        return recording_fold
+
+    def before_run(i):
+        fold_dirs[i].mkdir(parents=True)
+        current.append(fold_dirs[i])
+
+    monkeypatch.setattr(topn, "make_batch_fold", recording_make)
+    assert global_topn_runs(spark, tmp_path, TOPN_QUERY, before_run) == TOPN_RUNS
     assert not counts, "a global Top-N invocation must not call count()"
+    for d in fold_dirs:
+        received = [
+            tuple(r) for p in d.iterdir() for r in json.loads(p.read_text())
+        ]
+        assert received, d
+        assert len(received) == len(set(received)), f"a row was folded twice: {d}"
 
 
 def test_partition_prune_keeps_all_global_enterers(spark):
