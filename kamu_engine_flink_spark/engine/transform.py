@@ -8,7 +8,7 @@ awkward run-until-marker-files-then-stop-with-savepoint machinery
 execution IS "process what's here and exit".
 
 Pipeline per invocation:
-  1. open inputs: read slices (offset-ordered), apply offsetInterval slice
+  1. open inputs: read slices (in list order), apply offsetInterval slice
      filter (TransformEngine.scala:432-449), strip offset/system_time
      before user SQL sees the table (:234-248; `op` stays visible, §1.4),
      expose the ledger offset as internal `__seq` for emission ordering;
@@ -32,7 +32,7 @@ import os
 from datetime import datetime
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import (
@@ -69,9 +69,10 @@ SEQ = "__seq"
 
 def _dense_chain_to_output(alias: str, later_steps, all_names: set) -> bool:
     """True when `alias` provably reaches the FINAL step through pure 1:1
-    projections only — the shape where the dense output fast path
-    (_assemble_output) fires. The emission is then computed exactly once,
-    inside the one output job, so the stamp needs no pin and no count.
+    projections only, so the output numbers the stamped emission by
+    position (_assemble_output). The emission is then computed exactly
+    once, inside the one output job, so the stamp needs no pin and no
+    count.
     Conservative: a second consumer, a name rebind, or any
     non-pure-projection hop returns False."""
     cur = alias
@@ -88,10 +89,10 @@ def _dense_chain_to_output(alias: str, later_steps, all_names: set) -> bool:
             return False  # a second consumer reads the alias too
         if C.classify(s2.query, all_names) != C.MAP:
             return False
-        if not map_step.dense_shape(s2.query, refs2):
+        if not map_step.ordered_shape(s2.query, refs2, allow_where=False):
             return False
         if j == len(later_steps) - 1:
-            return True  # the final step: output assembly sees dense
+            return True  # the final step: output assembly sees the order
         if s2.alias is None:
             return False
         cur = s2.alias
@@ -147,12 +148,15 @@ def _open_input(spark: SparkSession, input_def: TransformRequestInput) -> DataFr
         df = df.filter(
             (F.col(vocab.offset_column) >= oi.start) & (F.col(vocab.offset_column) <= oi.end)
         )
-    # No input-side sort: ledger order is carried relationally by the
-    # offset (as `__seq`) and re-imposed only where emission order needs
-    # it (output assembly order_cols, Top-N state fold). A global
-    # orderBy here would be a full sort+exchange of every input per
-    # invocation that no downstream operator could rely on anyway (joins
-    # and aggs destroy physical order).
+    # No input-side sort: rows arrive in slice-list order, and the offset
+    # rides along as `__seq`. Where emission order matters (output
+    # assembly order_cols, Top-N state fold) it is re-imposed by `__seq`,
+    # unless an order-preserving map reads an input whose offsets check
+    # out as strictly increasing in file order (StepContext.seq_ordered):
+    # then the output numbers rows by position. A global orderBy here
+    # would be a full sort+exchange of every input per invocation that
+    # no downstream operator could rely on anyway (joins and aggs destroy
+    # physical order).
     df = df.withColumn(SEQ, F.col(vocab.offset_column))
     return df.drop(vocab.offset_column, vocab.system_time_column)
 
@@ -217,12 +221,12 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
     steps = list(request.transform.queries)
     result: StepResult | None = None
     pinned: list[DataFrame] = []
-    # Aliases whose __seq is dense 0..n-1 in physical order this
-    # invocation (stamped below, or a pure projection over one) — lets
-    # _assemble_output derive offsets arithmetically with no second
-    # serial pass, and lets a chained projection skip an identity
-    # re-stamp. Shared across steps like `views`.
-    dense_views: set[str] = set()
+    # Views whose physical order is their __seq order with no ties
+    # (StepContext.seq_ordered_views): stamped below, a checked raw
+    # input, or an order-preserving projection over one. Raw inputs wait
+    # in `unchecked` until a map asks. Shared across steps like `views`.
+    ordered_views: set[str] = set()
+    unchecked: dict[str, tuple[list[str], str]] = {}
     # Pinned (MEMORY_AND_DISK) DataFrames and registered views must be
     # released even when an input open, an executor step, the output
     # write, or the state save raises — a long-lived adapter process runs
@@ -234,6 +238,7 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
             alias = alias_map[input_def.query_alias]
             views[alias] = _open_input(spark, input_def)
             views[alias].createOrReplaceTempView(alias)
+            unchecked[alias] = (input_def.data_paths, input_def.vocab.offset_column)
             event_time_cols[alias] = input_def.vocab.event_time_column
             prev_wms[alias] = saved_wms.get(alias)
             new_wms[alias] = _effective_watermark(prev_wms[alias], input_def)
@@ -276,7 +281,8 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                 new_wms=new_wms,
                 pinned=pinned,
                 slice_sizes=slice_sizes,
-                dense_seq_views=dense_views,
+                seq_ordered_views=ordered_views,
+                unchecked_inputs=unchecked,
             )
             kind = C.classify(step.query, set(views))
             # A chained step reading a changelog-EMITTING alias (outer
@@ -341,12 +347,13 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                 # TEMPORAL_JOIN consumers also need the stamp: version rows
                 # of one key tie on event_time within an invocation, and
                 # the emission seq is the deterministic tie-break.
-                if result.dense_seq:
-                    # A pure projection over a densely stamped alias: its
-                    # __seq is already exactly 0..n-1 in physical order,
-                    # so the stamp below would be an identity rewrite —
-                    # skip it and propagate the density instead.
-                    dense_views.add(step.alias)
+                ordered_views.discard(step.alias)
+                unchecked.pop(step.alias, None)
+                if result.seq_ordered:
+                    # An order-preserving projection over a seq_ordered
+                    # view: the stamp below would not reorder a row —
+                    # skip it and propagate the order instead.
+                    ordered_views.add(step.alias)
                 elif (
                     topn.OP_COL in adf.columns
                     and result.order_cols
@@ -365,7 +372,7 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                         pinned.append(adf)
                         adf.count()
                     adf = _stamp(adf, SEQ, result.order_cols, 0)
-                    dense_views.add(step.alias)
+                    ordered_views.add(step.alias)
                 views[step.alias] = adf
                 adf.createOrReplaceTempView(step.alias)
                 event_time_cols[step.alias] = request.vocab.event_time_column
@@ -419,22 +426,21 @@ def _stamp(
     df: DataFrame, col: str, order_cols: list[str] | None, base: int
 ) -> DataFrame:
     """Number the rows of `df` base, base+1, ... into `col` on one
-    partition: in `order_cols` order when given, else in the frame's
-    natural (narrow-plan) order. The one offset and `__seq` stamp."""
+    partition, by position: after a sort by `order_cols` when given,
+    else in the frame's natural (narrow-plan) order. The one offset and
+    `__seq` stamp."""
     if order_cols:
-        # One round-robin shuffle to a single partition, with the
-        # deterministic sort folded into the numbering window (the
-        # window operator sorts its partition anyway). A global orderBy
-        # would add a range-partitioner SAMPLING job + an extra sort for
-        # the same single-partition result.
-        w = Window.partitionBy(F.lit(0)).orderBy(
+        # One round-robin shuffle to a single partition and a local sort
+        # — a global orderBy would add a range-partitioner SAMPLING job
+        # for the same single-partition result. The order lives in the
+        # Sort operator, not in a numbering column, so it survives when a
+        # consumer prunes `col` and numbers the rows by position again.
+        df = df.repartition(1).sortWithinPartitions(
             *[F.col(c).asc() for c in order_cols]
         )
-        n = F.row_number().over(w) - 1
-        return df.repartition(1).withColumn(col, (n + F.lit(base)).cast("long"))
     # Natural order must be preserved -> coalesce (partitions concatenate
     # in index order). On the single partition 0 the id is the row's
-    # position, so no sort is needed.
+    # position.
     return df.coalesce(1).withColumn(
         col, (F.monotonically_increasing_id() + F.lit(base)).cast("long")
     )
@@ -462,24 +468,11 @@ def _assemble_output(
 
     # Deterministic emission order -> offset stamping. Sorting happens on
     # the full (possibly internal) column set, then internals are dropped.
-    if result.dense_seq and result.order_cols == [SEQ]:
-        # Dense fast path: __seq is exactly 0..n-1 and the frame's
-        # physical (partition-major) row order IS seq order — the
-        # engine's own mid-chain stamp guarantees both, and a pure
-        # projection preserves them. The offset is then arithmetic and
-        # the sink's coalesce(1) (partitions concatenate in index
-        # order) keeps rows in offset order: the serial _stamp below,
-        # a repartition(1) + whole-emission window sort, is skipped.
-        return _finalize_output(
-            df.withColumn(
-                vocab.offset_column,
-                (F.col(SEQ) + F.lit(request.next_offset)).cast("long"),
-            ),
-            request,
-            user_cols,
-        )
+    # A seq_ordered emission is already in order_cols order with no ties:
+    # numbering by position gives exactly the offsets the sort would.
+    order_cols = None if result.seq_ordered else result.order_cols
     return _finalize_output(
-        _stamp(df, vocab.offset_column, result.order_cols, request.next_offset),
+        _stamp(df, vocab.offset_column, order_cols, request.next_offset),
         request,
         user_cols,
     )

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..engine.state import StateStore
 from ..protocol.model import TransformRequest
+from ..sources.parquet import offsets_strictly_increasing
 
 OP_COL = "__op"  # the op tag column of an updating (changelog-emitting) view
 
@@ -43,14 +44,28 @@ class StepContext:
     # the new slice is broadcastable against accumulated state, instead
     # of forcing a hint that would OOM when a slice is genuinely large.
     slice_sizes: dict[str, int] = field(default_factory=dict)
-    # Aliases whose __seq is DENSE this invocation (exactly 0..n-1, with
-    # physical partition-major row order equal to seq order): the engine's
-    # mid-chain emission stamp produces this shape, and a pure 1:1
-    # projection preserves it. A final step over one of these can derive
-    # offsets as __seq + next_offset with no second serial
-    # repartition(1) + window pass (engine/transform._assemble_output).
+    # Views that are seq_ordered this invocation: partition-major row
+    # order equals __seq order, with no ties. The engine's mid-chain
+    # emission stamp produces this shape, a raw input passes it when its
+    # offsets check out, and an order-preserving projection keeps it. An
+    # emission over one of these is numbered by position, with no
+    # repartition(1) + sort (engine/transform._assemble_output).
     # Shared (mutated) across the steps of one invocation, like `views`.
-    dense_seq_views: set[str] = field(default_factory=set)
+    seq_ordered_views: set[str] = field(default_factory=set)
+    # Raw input views not yet checked: alias -> (slice paths, offset
+    # column). Checked at most once, on first use (seq_ordered).
+    unchecked_inputs: dict[str, tuple[list[str], str]] = field(default_factory=dict)
+
+    def seq_ordered(self, view: str) -> bool:
+        """True when `view` is seq_ordered. A raw input is checked on
+        first ask: its slice files, read in list order, must carry
+        strictly increasing offsets (a driver-side footer-and-column
+        read, no Spark job)."""
+        if view in self.unchecked_inputs:
+            paths, offset_col = self.unchecked_inputs.pop(view)
+            if offsets_strictly_increasing(paths, offset_col):
+                self.seq_ordered_views.add(view)
+        return view in self.seq_ordered_views
 
     def pin(self, df: DataFrame) -> DataFrame:
         """Cache `df` (memory-and-disk) so the state-save action and the
@@ -70,13 +85,12 @@ class StepResult:
     # Deterministic emission order for offset stamping; None = preserve the
     # DataFrame's natural (single-input narrow-plan) order.
     order_cols: list[str] | None = None
-    # order_cols == [__seq] AND __seq is dense 0..n-1 with the frame's
-    # physical (partition-major) row order equal to seq order — a pure
-    # projection over a densely stamped alias. Offsets then become
-    # __seq + next_offset and the output assembly skips its serial
-    # repartition(1) + window pass; a re-stamp of the alias is skipped
-    # too (it would be an identity rewrite).
-    dense_seq: bool = False
+    # order_cols == [__seq] AND the frame is seq_ordered (partition-major
+    # row order equals __seq order, no ties): an order-preserving
+    # projection over a seq_ordered view. Offsets are then numbered by
+    # position and the output assembly skips its repartition(1) + sort;
+    # a re-stamp of the alias is skipped too (it would not reorder).
+    seq_ordered: bool = False
 
 
 def min_watermark(*wms: datetime | None) -> datetime | None:

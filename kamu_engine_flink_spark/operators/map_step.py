@@ -9,7 +9,10 @@ Emission order must follow the input ledger (offset order) for the output
 offset contract. The engine exposes the ledger offset as a `__seq` column
 on input views; for simple single-SELECT steps we thread it through the
 projection so ordering survives arbitrary Spark physical plans. Complex
-shapes (set ops, subqueries) fall back to natural order.
+shapes (set ops, subqueries) fall back to natural order. An
+order-preserving projection (`ordered_shape`) over a seq_ordered view
+emits rows already in `__seq` order, and is marked so the output numbers
+them by position instead of sorting.
 """
 
 from __future__ import annotations
@@ -45,18 +48,19 @@ def _inject_seq(sql: str) -> str | None:
     return _SIMPLE_SELECT_RE.sub(f"SELECT {SEQ_INPUT}, ", sql, count=1)
 
 
-def dense_shape(sql: str, refs: list[str]) -> bool:
-    """True when `sql` is TEXTUALLY a pure 1:1 projection over a single
-    view — the only shape that preserves both dense 0..n-1 seq values
-    and the physical seq-ordered row layout the output fast path
-    (transform._assemble_output) relies on. Conservative: any
-    cardinality-changing or order-destroying construct disqualifies, as
-    does the SQL naming __seq itself (the forwarded column may then not
-    be the ledger seq). Includes the _inject_seq gate, so it also
-    excludes GROUP BY / UNION / DISTINCT / ORDER BY / LIMIT and
-    multi-SELECT shapes. Pure SQL-shape predicate (no ctx): the stamp
-    gate in engine/transform uses it to PREDICT, at stamp time, whether
-    the chain will reach the dense output path."""
+def ordered_shape(sql: str, refs: list[str], *, allow_where: bool = True) -> bool:
+    """True when `sql` is TEXTUALLY an order-preserving projection over a
+    single view: one SELECT block whose rows come out in its input's
+    physical order, so a seq_ordered input gives a seq_ordered emission
+    (transform._assemble_output then numbers rows by position). A WHERE
+    drops rows but keeps their order; `allow_where=False` also demands
+    1:1 rows. Conservative: any row-multiplying or order-destroying
+    construct disqualifies, as does the SQL naming __seq itself (the
+    forwarded column may then not be the ledger seq). Includes the
+    _inject_seq gate, so it also excludes GROUP BY / UNION / DISTINCT /
+    ORDER BY / LIMIT and multi-SELECT shapes. Pure SQL-shape predicate
+    (no ctx): the stamp gate in engine/transform uses it to PREDICT, at
+    stamp time, whether a chain reaches the output as 1:1 projections."""
     from ..plans.classify import mask_sql
 
     if len(refs) != 1:
@@ -67,8 +71,11 @@ def dense_shape(sql: str, refs: list[str]) -> bool:
         return False
     masked = mask_sql(sql, parens=True)
     if re.search(
-        r"\bwhere\b|\bjoin\b|\bover\b|\bunnest\b|\blateral\b|\bexplode\b"
-        r"|\bposexplode\b|\binline\b|\bstack\b|\btablesample\b",
+        r"\bjoin\b|\bover\b|\bunnest\b|\blateral\b|\b(?:pos)?explode(?:_outer)?\b"
+        r"|\binline(?:_outer)?\b|\bstack\b|\btablesample\b|\boffset\b"
+        # Hive-style clauses and hints repartition or reorder rows.
+        r"|\b(?:sort|distribute|cluster)\s+by\b|/\*\+"
+        + ("" if allow_where else r"|\bwhere\b"),
         masked,
         re.IGNORECASE,
     ):
@@ -78,16 +85,6 @@ def dense_shape(sql: str, refs: list[str]) -> bool:
     if m is None or "," in m.group(1):
         return False
     return True
-
-
-def _dense_projection(ctx: StepContext, sql: str, refs: list[str]) -> bool:
-    """dense_shape over a single alias whose __seq the engine stamped
-    densely this invocation (StepContext.dense_seq_views)."""
-    return (
-        len(refs) == 1
-        and refs[0] in ctx.dense_seq_views
-        and dense_shape(sql, refs)
-    )
 
 
 def _changelog_filter(ctx: StepContext, sql: str, src: str, wm) -> StepResult:
@@ -272,7 +269,6 @@ def execute_map(ctx: StepContext, sql: str) -> StepResult:
     # ops/OVER would duplicate or strand op rows, so those reject.
     changelog_refs = [r for r in refs if OP_COL in ctx.views[r].columns]
     run_sql = sql
-    dense = False
     if changelog_refs:
         from ..plans.classify import mask_sql
 
@@ -303,7 +299,6 @@ def execute_map(ctx: StepContext, sql: str) -> StepResult:
         if has_where:
             return _changelog_filter(ctx, sql, refs[0], wm)
         run_sql = simple
-        dense = _dense_projection(ctx, sql, refs)
         if OP_COL not in run_sql:
             run_sql = _SIMPLE_SELECT_RE.sub(
                 f"SELECT {OP_COL}, ", run_sql, count=1
@@ -312,15 +307,15 @@ def execute_map(ctx: StepContext, sql: str) -> StepResult:
         injected = _inject_seq(sql)
         if injected is not None:
             run_sql = injected
-            dense = _dense_projection(ctx, sql, refs)
 
-    order_cols: list[str] | None = None
     df = ctx.spark.sql(rewrite_query(run_sql, watermark=wm))
-    if SEQ_INPUT in df.columns:
-        order_cols = [SEQ_INPUT]
+    if SEQ_INPUT not in df.columns:
+        return StepResult(df=df, watermark=wm)
+    # A raw input's order check (once per input) runs only for an
+    # order-preserving map: the one emission shape that can skip the sort.
     return StepResult(
         df=df,
         watermark=wm,
-        order_cols=order_cols,
-        dense_seq=dense and order_cols == [SEQ_INPUT],
+        order_cols=[SEQ_INPUT],
+        seq_ordered=ordered_shape(sql, refs) and ctx.seq_ordered(refs[0]),
     )

@@ -64,6 +64,17 @@ def ticker_slice(path: str, rows: list[tuple]):
     )
 
 
+def assert_same_output(path_a: str, path_b: str):
+    """Two output files hold the same data: same schema, same row-group
+    count, equal tables (every column, file row order). Byte equality is
+    too strict across JVMs: parquet-mr lists a column chunk's encodings
+    in a varying order, so equal tables can hash differently."""
+    fa, fb = pq.ParquetFile(path_a), pq.ParquetFile(path_b)
+    assert fa.schema_arrow == fb.schema_arrow
+    assert fa.metadata.num_row_groups == fb.metadata.num_row_groups
+    assert fa.read().equals(fb.read())
+
+
 class TransformRunner:
     """Multi-invocation transform driver with checkpoint chaining."""
 

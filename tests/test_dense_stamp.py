@@ -1,8 +1,9 @@
-"""The dense-seq output fast path (transform._assemble_output): when the
-final step is a pure projection over an alias the engine SERIALLY
-stamped, offsets become __seq + next_offset and the second serial
-repartition(1) + window pass is skipped. The output file (offsets, row
-order, every cell) must be IDENTICAL to the non-dense path's."""
+"""The seq_ordered output path (transform._assemble_output): when the
+final step is an order-preserving projection over a seq_ordered view —
+here an alias the engine SERIALLY stamped — offsets are numbered by
+position and the second serial repartition(1) + window pass is skipped.
+The output file (offsets, row order, every cell) must be IDENTICAL to
+the sorted path's."""
 
 from types import SimpleNamespace
 
@@ -61,36 +62,36 @@ def _chain_outputs(spark, tmp_path, subdir, queries):
     return outs
 
 
-def _no_dense(monkeypatch):
-    monkeypatch.setattr(map_step, "_dense_projection", lambda *a, **k: False)
+def _no_seq_order(monkeypatch):
+    monkeypatch.setattr(StepContext, "seq_ordered", lambda self, view: False)
 
 
 def test_dense_output_identical_to_windowed_path(spark, tmp_path, monkeypatch):
     queries = [(AGG, "g"), (PROJ, None)]
-    dense = _chain_outputs(spark, tmp_path, "dense", queries)
-    _no_dense(monkeypatch)
+    positional = _chain_outputs(spark, tmp_path, "positional", queries)
+    _no_seq_order(monkeypatch)
     slow = _chain_outputs(spark, tmp_path, "slow", queries)
-    assert dense == slow  # offsets, file row order, every cell
-    # And the dense run's own invariants: contiguous offsets across runs.
-    (oi1, rows1), (oi2, rows2) = dense
+    assert positional == slow  # offsets, file row order, every cell
+    # And the positional run's own invariants: contiguous offsets across runs.
+    (oi1, rows1), (oi2, rows2) = positional
     assert [r["offset"] for r in rows1] == list(range(oi1.start, oi1.end + 1))
     assert oi2.start == oi1.end + 1
     assert [r["offset"] for r in rows2] == list(range(oi2.start, oi2.end + 1))
 
 
 def test_dense_propagates_through_chained_projection(spark, tmp_path, monkeypatch):
-    """proj1 over the stamped agg is itself dense (its identity re-stamp
-    is skipped); proj2 over proj1 still emits the correction pairs
-    adjacent and byte-identical to the non-dense chain."""
+    """proj1 over the stamped agg is itself seq_ordered (its re-stamp is
+    skipped); proj2 over proj1 still emits the correction pairs adjacent
+    and identical to the sorted chain."""
     queries = [(AGG, "g"), ("SELECT event_time, symbol, s FROM g", "p1"),
                ("SELECT event_time, symbol, s FROM p1", None)]
-    dense = _chain_outputs(spark, tmp_path, "dense", queries)
-    _no_dense(monkeypatch)
+    positional = _chain_outputs(spark, tmp_path, "positional", queries)
+    _no_seq_order(monkeypatch)
     slow = _chain_outputs(spark, tmp_path, "slow", queries)
-    assert dense == slow
+    assert positional == slow
     # Invocation 2 rewrites all 61 keys: op-2 retract immediately before
     # its op-3 replacement, per key, in file order.
-    rows2 = dense[1][1]
+    rows2 = positional[1][1]
     ops = [r["op"] for r in rows2]
     assert ops == [2, 3] * 61
     for a, b in zip(rows2[::2], rows2[1::2]):
@@ -131,12 +132,12 @@ def test_dense_chain_walk():
 
 
 def test_dense_chain_skips_gate_count(spark, tmp_path, monkeypatch):
-    """A dense-eligible chain stamps with NO materialization: no count()
+    """A chain of 1:1 projections to the output stamps with NO materialization: no count()
     action at all (the emission computes once, inside the output job)."""
     # Patch the implementation class the session ACTUALLY returns (ADVICE
     # r13: a hardcoded pyspark.sql.classic import pins the spy to the
     # non-Connect path and a module move would leave it observing nothing;
-    # the non-dense control below proves the spy fires at all).
+    # the WHERE control below proves the spy fires at all).
     CDF = type(spark.range(1))
 
     counts = []
@@ -148,39 +149,50 @@ def test_dense_chain_skips_gate_count(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(CDF, "count", spy)
     _chain_outputs(spark, tmp_path, "nocnt", [(AGG, "g"), (PROJ, None)])
-    assert not counts, "dense chain must not count the emission"
+    assert not counts, "a 1:1 projection chain must not count the emission"
     _chain_outputs(
         spark, tmp_path, "cnt",
         [(AGG, "g"), ("SELECT event_time, symbol, s FROM g WHERE s >= 0", None)],
     )
-    assert len(counts) >= 2, "a non-dense chain pins and counts per invocation"
+    assert len(counts) >= 2, "a WHERE chain pins and counts per invocation"
 
 
-def test_dense_projection_disqualifiers(spark):
-    """Shapes that change cardinality, destroy physical order, or rename
-    __seq must never be marked dense."""
+def test_seq_ordered_disqualifiers(spark):
+    """Shapes that multiply rows, destroy physical order, or rename
+    __seq never carry seq_ordered over; a WHERE does (it drops rows but
+    keeps their order), yet is not 1:1 for the pin/count walk."""
     views = {"g": spark.range(1).selectExpr("id", "id as __seq")}
     ctx = StepContext(
         spark=spark, state=None, step_key="s0", request=None, views=views,
         event_time_cols={}, prev_wms={}, new_wms={},
-        dense_seq_views={"g"},
+        seq_ordered_views={"g"},
     )
-    ok = "SELECT id FROM g"
-    assert map_step._dense_projection(ctx, ok, ["g"])
+
+    def carries(sql):
+        return map_step.ordered_shape(sql, ["g"]) and ctx.seq_ordered("g")
+
+    assert carries("SELECT id FROM g")
+    where = "SELECT id FROM g WHERE id > 0"
+    assert carries(where)
+    assert not map_step.ordered_shape(where, ["g"], allow_where=False)
     bad = [
-        "SELECT id FROM g WHERE id > 0",          # drops rows
         "SELECT id FROM g JOIN h ON g.id = h.id", # multiplies rows
         "SELECT sum(id) OVER () as t FROM g",     # window destroys order
         "SELECT id, tag FROM g, UNNEST(tags) AS t(tag)",  # expands rows
         "SELECT explode(tags) FROM g",            # expands rows
+        "SELECT explode_outer(tags) FROM g",      # expands rows
         "SELECT id as __seq FROM g",              # user-shadowed seq
         "SELECT id FROM g, h",                    # comma join
+        "SELECT id FROM g ORDER BY id",           # reorders
+        "SELECT id FROM g DISTRIBUTE BY id",      # repartitions
+        "SELECT id FROM g SORT BY id",            # reorders
+        "SELECT /*+ REPARTITION(4) */ id FROM g", # repartitions
     ]
     for sql in bad:
-        assert not map_step._dense_projection(ctx, sql, ["g"]), sql
-    # Source not dense-stamped this invocation -> not dense.
-    ctx.dense_seq_views.clear()
-    assert not map_step._dense_projection(ctx, ok, ["g"])
+        assert not carries(sql), sql
+    # Source not seq_ordered this invocation -> not carried.
+    ctx.seq_ordered_views.clear()
+    assert not carries("SELECT id FROM g")
 
 
 def test_stamp_without_order_cols_is_positional(spark, tmp_path):

@@ -361,3 +361,61 @@ def test_setop_state_merge_is_exchange_free(spark, tmp_path):
             "state side of the setop merge re-shuffled:\n"
             + offenders[0][:3000]
         )
+
+
+def _emission_plans(monkeypatch):
+    """Physical plan of each output frame the transform hands the sink."""
+    import kamu_engine_flink_spark.engine.transform as T
+
+    plans = []
+    real = T.write_single_parquet
+
+    def spy(df, path, **kw):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, path, **kw)
+
+    monkeypatch.setattr(T, "write_single_parquet", spy)
+    return plans
+
+
+TOPN_BY_SYMBOL = """SELECT event_time, symbol, price, place FROM (
+  SELECT event_time, symbol, price,
+    row_number() OVER (PARTITION BY symbol ORDER BY price DESC) AS place
+  FROM tickers
+) WHERE place <= 2"""
+
+
+def test_ordered_map_emission_has_no_exchange_or_sort(spark, tmp_path, monkeypatch):
+    """A map over slices whose offsets rise in list order is numbered by
+    position: no Exchange, no Sort, no Window in the output plan. Top-N
+    and join emissions keep the single-partition exchange and the sort
+    that order them."""
+    plans = _emission_plans(monkeypatch)
+    rows = [(i, 0, ts(2), ts(1, 0, 1), f"k{i % 50}", i) for i in range(2000)]
+    s1, s2 = str(tmp_path / "in" / "s1.parquet"), str(tmp_path / "in" / "s2.parquet")
+    ticker_slice(s1, rows[:1200])
+    ticker_slice(s2, rows[1200:])
+    inp = {"alias": "tickers", "data_paths": [s1, s2], "schema_file": s1,
+           "watermark": ts(1, 1)}
+    for name, query in (
+        ("map", "SELECT event_time, symbol, price FROM tickers WHERE price > 10"),
+        ("topn", TOPN_BY_SYMBOL),
+    ):
+        (tmp_path / name).mkdir()
+        TransformRunner(spark, tmp_path / name, queries=[(query, None)]).run(
+            [inp], system_time=ts(2)
+        )
+    (tmp_path / "rj").mkdir()
+    t1 = str(tmp_path / "in" / "t1.parquet")
+    ticker_slice(t1, rows[:300])
+    TransformRunner(spark, tmp_path / "rj", queries=[(RJ_QUERY, None)]).run(
+        [_two_stream_input("trades", t1, ts(1, 1)),
+         _two_stream_input("quotes", s1, ts(1, 1))],
+        system_time=ts(2),
+    )
+    map_plan, topn_plan, join_plan = plans
+    for node in ("Exchange", "Sort", "Window"):
+        assert node not in map_plan, map_plan
+    for plan in (topn_plan, join_plan):
+        assert "Exchange SinglePartition" in plan, plan
+        assert "Sort [" in plan, plan

@@ -4,7 +4,10 @@ Runs every __spark_entry__.queries() entry and its oracle_sql() twin on the
 same sf dir, in the engine's session (`engine_session`, local cores from
 $SPARK_GRAFT_CPUS), sorts columns by name and rows by value, and compares
 the row multisets after canonical normalization (the strictest plausible
-form of a value-hash comparison). A mismatch prints the first oracle
+form of a value-hash comparison). Each column's type family must match
+too (Spark schema against the oracle relation's DuckDB types): a value
+fetched as a Python int reads the same from BIGINT and HUGEINT, while a
+hash over a pandas frame does not. A mismatch prints the first oracle
 row Spark lacks and the first Spark row the oracle lacks. Exit 1 on any
 mismatch.
 
@@ -43,6 +46,42 @@ def canon(v):
     return str(v)
 
 
+# Type family per DuckDB type id and per Spark typeName(). HUGEINT and
+# the unsigned 64/128-bit types have no Spark counterpart (pandas reads
+# HUGEINT as float64), so they get a family no Spark type maps to.
+_DUCK_FAMILY = {
+    "tinyint": "int", "smallint": "int", "integer": "int", "bigint": "int",
+    "utinyint": "int", "usmallint": "int", "uinteger": "int",
+    "hugeint": "int128", "uhugeint": "int128", "ubigint": "int128",
+    "float": "float", "double": "float", "decimal": "decimal",
+    "varchar": "string", "boolean": "bool", "date": "date",
+    "timestamp": "timestamp", "timestamp with time zone": "timestamp",
+    "timestamp_ms": "timestamp", "timestamp_s": "timestamp",
+    "timestamp_ns": "timestamp", "blob": "binary", "list": "list",
+    "struct": "struct", "map": "map",
+}
+_SPARK_FAMILY = {
+    "byte": "int", "short": "int", "integer": "int", "long": "int",
+    "float": "float", "double": "float", "decimal": "decimal",
+    "string": "string", "varchar": "string", "char": "string",
+    "boolean": "bool", "date": "date", "timestamp": "timestamp",
+    "timestamp_ntz": "timestamp", "binary": "binary", "array": "list",
+    "struct": "struct", "map": "map",
+}
+
+
+def spark_families(schema) -> dict:
+    out = {}
+    for f in schema.fields:
+        t = f.dataType.typeName()
+        out[f.name] = _SPARK_FAMILY.get(t, t)
+    return out
+
+
+def duck_families(rel) -> dict:
+    return {c: _DUCK_FAMILY.get(t.id, t.id) for c, t in zip(rel.columns, rel.types)}
+
+
 def frame_to_rows(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = [tuple(canon(r[i]) for i in order) for r in rows]
@@ -73,6 +112,7 @@ def main():
         try:
             df = fn(spark, sf_dir)
             s_cols = df.columns
+            s_types = spark_families(df.schema)
             s_rows = [tuple(r) for r in df.collect()]
         except Exception as e:
             failures.append((name, f"SPARK ERROR: {e}"))
@@ -82,9 +122,10 @@ def main():
             print(f"pass {name}: rows-only ({len(s_rows)} rows, no oracle)")
             continue
         try:
-            cur = con.execute(oracles[name])
-            d_cols = [d[0] for d in cur.description]
-            d_rows = cur.fetchall()
+            rel = con.sql(oracles[name])
+            d_cols = rel.columns
+            d_types = duck_families(rel)
+            d_rows = rel.fetchall()
         except Exception as e:
             failures.append((name, f"ORACLE ERROR: {e}"))
             print(f"FAIL {name}: oracle error: {e}")
@@ -94,6 +135,13 @@ def main():
         if sc != dc:
             failures.append((name, f"columns {sc} vs {dc}"))
             print(f"FAIL {name}: columns {sc} vs {dc}")
+            continue
+        bad_types = {
+            c: (s_types[c], d_types[c]) for c in sc if s_types[c] != d_types[c]
+        }
+        if bad_types:
+            failures.append((name, f"type families (spark, oracle) {bad_types}"))
+            print(f"FAIL {name}: type families (spark, oracle) {bad_types}")
             continue
         missing = list((Counter(dr) - Counter(sr)).elements())
         extra = list((Counter(sr) - Counter(dr)).elements())
