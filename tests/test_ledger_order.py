@@ -108,8 +108,8 @@ def _ticker_file(path, offsets, row_group_size=700):
 
 
 def _run_chain(spark, base, slices):
-    """One WHERE map invocation per list of slice offsets vectors; returns
-    [(response, output path)]."""
+    """One WHERE-map invocation per entry of `slices` (one offset vector
+    per file); returns [(response, output path)]."""
     runner = TransformRunner(spark, base, queries=[(WHERE_MAP, None)])
     out = []
     for i, files in enumerate(slices):
@@ -136,7 +136,15 @@ def test_positional_output_equals_sorted(spark, tmp_path, monkeypatch):
     ]
     (tmp_path / "pos").mkdir()
     (tmp_path / "sorted").mkdir()
+    answers, real = [], StepContext.seq_ordered
+
+    def recording(self, view):
+        answers.append(real(self, view))
+        return answers[-1]
+
+    monkeypatch.setattr(StepContext, "seq_ordered", recording)
     positional = _run_chain(spark, tmp_path / "pos", slices)
+    assert answers == [True, True]  # both invocations took the positional path
     monkeypatch.setattr(StepContext, "seq_ordered", lambda self, view: False)
     forced = _run_chain(spark, tmp_path / "sorted", slices)
     for (r1, p1), (r2, p2) in zip(positional, forced):
