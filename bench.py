@@ -82,7 +82,7 @@ PINS = {
     # baseline (2026-08-17, dedicated session, n=5, cold dropped): warm
     # median 2.02, floor 1.75; full-session runs ~10-25% above isolated.
     "dedup_minhash_fast": 3.0,              # r13 idle warm 2.02
-    # 2M-row emission stamp (serial window + dense output path); the pin
+    # 2M-row emission stamp (serial sort + positional output path); the pin
     # covers full-session aging.
     "stamp_2m_gate_default": 10.5,          # warm 6.98 (r10 full 9.58)
     # Suite-total tripwire (round-11 verdict ask #5; renamed from
@@ -363,7 +363,7 @@ FROM purchases as p LEFT JOIN clicks as c ON p.user_id = c.user_id""",
 
 # Group-per-row aggregate feeding a projection over the 2M-row stamp
 # ledger (_stamp_2m_ledger): a ~2M-row emission stamped by the serial
-# window and written through the dense output path.
+# sort and numbered by position in the output.
 STAMP2M_STEPS = [
     (
         "g",

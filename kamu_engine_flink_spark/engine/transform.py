@@ -8,7 +8,7 @@ awkward run-until-marker-files-then-stop-with-savepoint machinery
 execution IS "process what's here and exit".
 
 Pipeline per invocation:
-  1. open inputs: read slices (in list order), apply offsetInterval slice
+  1. open inputs: read slices (one scan), apply offsetInterval slice
      filter (TransformEngine.scala:432-449), strip offset/system_time
      before user SQL sees the table (:234-248; `op` stays visible, §1.4),
      expose the ledger offset as internal `__seq` for emission ordering;
@@ -67,14 +67,18 @@ from .state import StateStore
 SEQ = "__seq"
 
 
-def _dense_chain_to_output(alias: str, later_steps, all_names: set) -> bool:
-    """True when `alias` provably reaches the FINAL step through pure 1:1
-    projections only, so the output numbers the stamped emission by
-    position (_assemble_output). The emission is then computed exactly
-    once, inside the one output job, so the stamp needs no pin and no
-    count.
-    Conservative: a second consumer, a name rebind, or any
-    non-pure-projection hop returns False."""
+def _ordered_chain_to_output(
+    alias: str, later_steps, all_names: set, *, allow_where: bool
+) -> bool:
+    """True when `alias` provably reaches the FINAL step through
+    order-preserving projections only (map_step.ordered_shape), so an
+    order it carries reaches the output, which then numbers rows by
+    position (_assemble_output). allow_where=False also demands 1:1
+    hops: the stamp's pin/count decision, where the emission is then
+    computed exactly once, inside the one output job, so the stamp needs
+    no pin and no count.
+    Conservative: a second consumer, a name rebind, or any other hop
+    returns False."""
     cur = alias
     for j, s2 in enumerate(later_steps):
         refs2 = C.referenced_views(s2.query, all_names)
@@ -89,7 +93,7 @@ def _dense_chain_to_output(alias: str, later_steps, all_names: set) -> bool:
             return False  # a second consumer reads the alias too
         if C.classify(s2.query, all_names) != C.MAP:
             return False
-        if not map_step.ordered_shape(s2.query, refs2, allow_where=False):
+        if not map_step.ordered_shape(s2.query, refs2, allow_where=allow_where):
             return False
         if j == len(later_steps) - 1:
             return True  # the final step: output assembly sees the order
@@ -148,15 +152,15 @@ def _open_input(spark: SparkSession, input_def: TransformRequestInput) -> DataFr
         df = df.filter(
             (F.col(vocab.offset_column) >= oi.start) & (F.col(vocab.offset_column) <= oi.end)
         )
-    # No input-side sort: rows arrive in slice-list order, and the offset
-    # rides along as `__seq`. Where emission order matters (output
-    # assembly order_cols, Top-N state fold) it is re-imposed by `__seq`,
-    # unless an order-preserving map reads an input whose offsets check
-    # out as strictly increasing in file order (StepContext.seq_ordered):
-    # then the output numbers rows by position. A global orderBy here
-    # would be a full sort+exchange of every input per invocation that
-    # no downstream operator could rely on anyway (joins and aggs destroy
-    # physical order).
+    # No input-side sort: the offset rides along as `__seq`, and where
+    # emission order matters (output assembly order_cols, Top-N state
+    # fold) it is re-imposed by `__seq` — unless an order-preserving map
+    # reads a one-file, one-row-group input whose offsets check out as
+    # strictly increasing (StepContext.seq_ordered): that file scans in
+    # one task in file order, so the output numbers rows by position. A
+    # global orderBy here would be a full sort+exchange of every input
+    # per invocation that no downstream operator could rely on anyway
+    # (joins and aggs destroy physical order).
     df = df.withColumn(SEQ, F.col(vocab.offset_column))
     return df.drop(vocab.offset_column, vocab.system_time_column)
 
@@ -224,7 +228,8 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
     # Views whose physical order is their __seq order with no ties
     # (StepContext.seq_ordered_views): stamped below, a checked raw
     # input, or an order-preserving projection over one. Raw inputs wait
-    # in `unchecked` until a map asks. Shared across steps like `views`.
+    # in `unchecked` until a map whose emission reaches the output asks.
+    # Shared across steps like `views`.
     ordered_views: set[str] = set()
     unchecked: dict[str, tuple[list[str], str]] = {}
     # Pinned (MEMORY_AND_DISK) DataFrames and registered views must be
@@ -270,6 +275,8 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                     for q, a in expanded
                 ]
                 step = steps[i]
+            kind = C.classify(step.query, set(views))
+            all_names = set(views) | {s.alias for s in steps if s.alias}
             ctx = StepContext(
                 spark=spark,
                 state=state,
@@ -283,8 +290,20 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                 slice_sizes=slice_sizes,
                 seq_ordered_views=ordered_views,
                 unchecked_inputs=unchecked,
+                # Only a map whose emission reaches the output can use a
+                # raw input's order: the check is not worth its read
+                # for any other step.
+                check_inputs=kind == C.MAP
+                and (
+                    i == len(steps) - 1
+                    or (
+                        step.alias is not None
+                        and _ordered_chain_to_output(
+                            step.alias, steps[i + 1 :], all_names, allow_where=True
+                        )
+                    )
+                ),
             )
-            kind = C.classify(step.query, set(views))
             # A chained step reading a changelog-EMITTING alias (outer
             # regular-join pads/retractions, continuous-agg correction
             # pairs): Flink propagates the retractions into the consumer.
@@ -343,7 +362,6 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                 # single-partition sort of the WHOLE per-invocation
                 # emission, the one O(emission) serial point in these
                 # chains) is skipped for them.
-                all_names = set(views) | {s.alias for s in steps if s.alias}
                 # TEMPORAL_JOIN consumers also need the stamp: version rows
                 # of one key tie on event_time within an invocation, and
                 # the emission seq is the deterministic tie-break.
@@ -364,8 +382,8 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                         for s2 in steps[i + 1 :]
                     )
                 ):
-                    if not _dense_chain_to_output(
-                        step.alias, steps[i + 1 :], all_names
+                    if not _ordered_chain_to_output(
+                        step.alias, steps[i + 1 :], all_names, allow_where=False
                     ):
                         # Read concurrently by flush_deferred's state-save and output jobs.
                         adf = adf.persist(StorageLevel.MEMORY_AND_DISK)

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..engine.state import StateStore
 from ..protocol.model import TransformRequest
-from ..sources.parquet import offsets_strictly_increasing
+from ..sources.parquet import serial_scan_in_ledger_order
 
 OP_COL = "__op"  # the op tag column of an updating (changelog-emitting) view
 
@@ -55,15 +55,21 @@ class StepContext:
     # Raw input views not yet checked: alias -> (slice paths, offset
     # column). Checked at most once, on first use (seq_ordered).
     unchecked_inputs: dict[str, tuple[list[str], str]] = field(default_factory=dict)
+    # This step's emission can reach the output through order-preserving
+    # maps, so a raw input's order is worth checking; otherwise an
+    # unchecked input answers False and stays unchecked.
+    check_inputs: bool = False
 
     def seq_ordered(self, view: str) -> bool:
         """True when `view` is seq_ordered. A raw input is checked on
-        first ask: its slice files, read in list order, must carry
-        strictly increasing offsets (a driver-side footer-and-column
-        read, no Spark job)."""
-        if view in self.unchecked_inputs:
+        first ask from a step with `check_inputs`: it must be one slice
+        file of one row group with strictly increasing offsets (a
+        driver-side column read, no Spark job). Its scan is then one
+        task either way, so numbering by position gives up no
+        parallelism."""
+        if self.check_inputs and view in self.unchecked_inputs:
             paths, offset_col = self.unchecked_inputs.pop(view)
-            if offsets_strictly_increasing(paths, offset_col):
+            if serial_scan_in_ledger_order(paths, offset_col):
                 self.seq_ordered_views.add(view)
         return view in self.seq_ordered_views
 

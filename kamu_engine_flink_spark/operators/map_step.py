@@ -312,7 +312,8 @@ def execute_map(ctx: StepContext, sql: str) -> StepResult:
     if SEQ_INPUT not in df.columns:
         return StepResult(df=df, watermark=wm)
     # A raw input's order check (once per input) runs only for an
-    # order-preserving map: the one emission shape that can skip the sort.
+    # order-preserving map whose emission reaches the output
+    # (StepContext.check_inputs): the one shape that can skip the sort.
     return StepResult(
         df=df,
         watermark=wm,

@@ -1,9 +1,9 @@
 """The seq_ordered output path (transform._assemble_output): when the
 final step is an order-preserving projection over a seq_ordered view —
 here an alias the engine SERIALLY stamped — offsets are numbered by
-position and the second serial repartition(1) + window pass is skipped.
-The output file (offsets, row order, every cell) must be IDENTICAL to
-the sorted path's."""
+position and the output's own repartition(1) + sort is skipped. The
+output file (offsets, row order, every cell) must be IDENTICAL to the
+sorted path's. (Test names keep the older "dense" label of this path.)"""
 
 from types import SimpleNamespace
 
@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 import kamu_engine_flink_spark.operators.map_step as map_step
 from kamu_engine_flink_spark.engine.transform import (
     _assemble_output,
-    _dense_chain_to_output,
+    _ordered_chain_to_output,
 )
 from kamu_engine_flink_spark.operators.base import StepContext, StepResult
 from kamu_engine_flink_spark.protocol.model import Transform, TransformRequest
@@ -67,6 +67,7 @@ def _no_seq_order(monkeypatch):
 
 
 def test_dense_output_identical_to_windowed_path(spark, tmp_path, monkeypatch):
+    """Positional output equals the sorted (formerly windowed) path's."""
     queries = [(AGG, "g"), (PROJ, None)]
     positional = _chain_outputs(spark, tmp_path, "positional", queries)
     _no_seq_order(monkeypatch)
@@ -103,17 +104,25 @@ def _steps(*qa):
 
 
 def test_dense_chain_walk():
-    """The stamp's chain predictor (skip the pin + count or not): alias
-    must reach the FINAL step through single-consumer pure projections
-    only."""
+    """The chain predictor: alias must reach the FINAL step through
+    single-consumer order-preserving projections only. The stamp's
+    pin/count decision (allow_where=False) also demands 1:1 hops; the
+    raw-input order check (allow_where=True) lets a WHERE hop through."""
     names = {"a", "g", "p1", "t"}
+
+    def walk(steps, allow_where=False):
+        return _ordered_chain_to_output("g", steps, names, allow_where=allow_where)
+
     ok = _steps(("SELECT x, y FROM g", None))
-    assert _dense_chain_to_output("g", ok, names)
+    assert walk(ok)
     two_hop = _steps(("SELECT x, y FROM g", "p1"), ("SELECT x FROM p1", None))
-    assert _dense_chain_to_output("g", two_hop, names)
+    assert walk(two_hop)
+    # WHERE hop: keeps order, but the correction-pair rewrite of a
+    # changelog filter changes cardinality, so it pins and counts.
+    where = _steps(("SELECT x FROM g WHERE x > 0", "p1"), ("SELECT x FROM p1", None))
+    assert not walk(where)
+    assert walk(where, allow_where=True)
     bad = [
-        # WHERE hop (correction-pair rewrite changes cardinality)
-        _steps(("SELECT x FROM g WHERE x > 0", None)),
         # final step does not read the chain
         _steps(("SELECT x, y FROM g", "p1"), ("SELECT x FROM a", None)),
         # a second consumer reads the alias too
@@ -128,7 +137,8 @@ def test_dense_chain_walk():
         _steps(("SELECT g.x FROM g JOIN a ON g.x = a.x", None)),
     ]
     for steps in bad:
-        assert not _dense_chain_to_output("g", steps, names), steps
+        for allow_where in (False, True):
+            assert not walk(steps, allow_where), steps
 
 
 def test_dense_chain_skips_gate_count(spark, tmp_path, monkeypatch):

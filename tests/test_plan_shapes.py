@@ -386,16 +386,15 @@ TOPN_BY_SYMBOL = """SELECT event_time, symbol, price, place FROM (
 
 
 def test_ordered_map_emission_has_no_exchange_or_sort(spark, tmp_path, monkeypatch):
-    """A map over slices whose offsets rise in list order is numbered by
+    """A map over a slice whose offsets rise in file order is numbered by
     position: no Exchange, no Sort, no Window in the output plan. Top-N
     and join emissions keep the single-partition exchange and the sort
     that order them."""
     plans = _emission_plans(monkeypatch)
     rows = [(i, 0, ts(2), ts(1, 0, 1), f"k{i % 50}", i) for i in range(2000)]
-    s1, s2 = str(tmp_path / "in" / "s1.parquet"), str(tmp_path / "in" / "s2.parquet")
-    ticker_slice(s1, rows[:1200])
-    ticker_slice(s2, rows[1200:])
-    inp = {"alias": "tickers", "data_paths": [s1, s2], "schema_file": s1,
+    s1 = str(tmp_path / "in" / "s1.parquet")
+    ticker_slice(s1, rows)
+    inp = {"alias": "tickers", "data_paths": [s1], "schema_file": s1,
            "watermark": ts(1, 1)}
     for name, query in (
         ("map", "SELECT event_time, symbol, price FROM tickers WHERE price > 10"),
