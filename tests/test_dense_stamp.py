@@ -3,7 +3,7 @@ final step is an order-preserving projection over a seq_ordered view —
 here an alias the engine SERIALLY stamped — offsets are numbered by
 position and the output's own repartition(1) + sort is skipped. The
 output file (offsets, row order, every cell) must be IDENTICAL to the
-sorted path's. (Test names keep the older "dense" label of this path.)"""
+sorted path's."""
 
 from types import SimpleNamespace
 
@@ -67,7 +67,7 @@ def _no_seq_order(monkeypatch):
 
 
 def test_dense_output_identical_to_windowed_path(spark, tmp_path, monkeypatch):
-    """Positional output equals the sorted (formerly windowed) path's."""
+    """Positional output equals the sorted path's."""
     queries = [(AGG, "g"), (PROJ, None)]
     positional = _chain_outputs(spark, tmp_path, "positional", queries)
     _no_seq_order(monkeypatch)
