@@ -31,7 +31,7 @@ from typing import Any
 import yaml
 
 from .protocol.model import TransformRequest
-from .protocol.yaml_io import dump_request
+from .protocol.yaml_io import dump_request, load_transform_request, respond
 
 
 def untar_checkpoint(archive: str, dest_dir: str) -> None:
@@ -44,6 +44,29 @@ def tar_checkpoint(src_dir: str, archive: str) -> None:
     with tarfile.open(archive, "w") as tar:
         for name in sorted(os.listdir(src_dir)):
             tar.add(os.path.join(src_dir, name), arcname=name)
+
+
+def launch_app(module: str, request_path: str, response_path: str) -> dict:
+    """Run engine app `module` (transform_app or raw_query_app) in a fresh
+    Python process over request/response YAML files, the per-invocation
+    contract of the reference's `flink run` (adapter.rs:120-176), and
+    return its response document. An engine that dies before it writes
+    one answers `internalError` with the tail of its stderr."""
+    proc = subprocess.run(
+        [sys.executable, "-m", module, request_path, response_path],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    if not os.path.exists(response_path):
+        return {
+            "kind": "internalError",
+            "message": f"engine produced no response (rc={proc.returncode})",
+            "backtrace": (proc.stderr or "")[-4000:],
+        }
+    with open(response_path) as f:
+        return yaml.safe_load(f)
 
 
 class EngineAdapter:
@@ -82,25 +105,20 @@ class EngineAdapter:
 
         if self.in_process:
             from .engine.transform import execute_transform
-            from .protocol.yaml_io import dump_response, load_transform_request
             from .session import engine_session
 
-            try:
-                resp = execute_transform(engine_session(), load_transform_request(req_path))
-                dump_response(resp, resp_path)
-            except Exception as e:  # mirror transform_app's error contract
-                with open(resp_path, "w") as f:
-                    yaml.safe_dump({"kind": "internalError", "message": str(e)}, f)
-        else:
-            subprocess.run(
-                [sys.executable, "-m", "kamu_engine_flink_spark.transform_app", req_path, resp_path],
-                cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                capture_output=True,
-                text=True,
-                timeout=600,
+            respond(
+                req_path,
+                resp_path,
+                load_transform_request,
+                lambda r: execute_transform(engine_session(), r),
             )
-        with open(resp_path) as f:
-            response = yaml.safe_load(f)
+            with open(resp_path) as f:
+                response = yaml.safe_load(f)
+        else:
+            response = launch_app(
+                "kamu_engine_flink_spark.transform_app", req_path, resp_path
+            )
 
         new_tar = os.path.join(self.workspace, "checkpoint.tar")
         if os.path.isdir(new_cp_dir):

@@ -33,6 +33,7 @@ def run_query_steps(spark: SparkSession, steps, *, watermark=None) -> DataFrame:
             # Spark has no native MATCH_RECOGNIZE; run the bounded matcher
             # (whole input watermark-complete). The total order the matcher
             # needs comes from the pattern's ORDER BY attribute.
+            from ..operators.base import SEQ_INPUT
             from ..operators.match_recognize import (
                 match_recognize_batch,
                 parse_match_recognize,
@@ -42,17 +43,17 @@ def run_query_steps(spark: SparkSession, steps, *, watermark=None) -> DataFrame:
             if spec is None:
                 raise InvalidQueryError("unsupported MATCH_RECOGNIZE shape")
             src = spark.table(spec["src"])
-            if "__seq" not in src.columns:
+            if SEQ_INPUT not in src.columns:
                 if "offset" in src.columns:
                     # ODF inputs carry the ledger offset — the natural
                     # total order, no sort needed.
-                    src = src.withColumn("__seq", F.col("offset").cast("long"))
+                    src = src.withColumn(SEQ_INPUT, F.col("offset").cast("long"))
                 else:
                     # Fallback: a global row_number (single-partition sort —
                     # acceptable for the bounded raw-query surface, which
                     # writes a single output file anyway).
                     src = src.withColumn(
-                        "__seq",
+                        SEQ_INPUT,
                         F.row_number()
                         .over(Window.orderBy(F.col(spec["time_col"]).asc()))
                         .cast("long"),

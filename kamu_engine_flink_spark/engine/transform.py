@@ -49,7 +49,7 @@ from ..operators import (
     window_agg,
     window_join,
 )
-from ..operators.base import StepContext, StepResult
+from ..operators.base import OP_COL, SEQ_INPUT, StepContext, StepResult
 from ..plans import classify as C
 from ..plans import multi_join as MJ
 from ..protocol.model import (
@@ -63,8 +63,6 @@ from ..protocol.model import (
 from ..sinks.parquet import write_single_parquet
 from ..sources.parquet import read_parquet_slices, table_schema
 from .state import StateStore
-
-SEQ = "__seq"
 
 
 def _ordered_chain_to_output(
@@ -161,7 +159,7 @@ def _open_input(spark: SparkSession, input_def: TransformRequestInput) -> DataFr
     # global orderBy here would be a full sort+exchange of every input
     # per invocation that no downstream operator could rely on anyway
     # (joins and aggs destroy physical order).
-    df = df.withColumn(SEQ, F.col(vocab.offset_column))
+    df = df.withColumn(SEQ_INPUT, F.col(vocab.offset_column))
     return df.drop(vocab.offset_column, vocab.system_time_column)
 
 
@@ -232,6 +230,7 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
     # Shared across steps like `views`.
     ordered_views: set[str] = set()
     unchecked: dict[str, tuple[list[str], str]] = {}
+    bound: dict[str, DataFrame] = {}  # StepContext.bound_views
     # Pinned (MEMORY_AND_DISK) DataFrames and registered views must be
     # released even when an input open, an executor step, the output
     # write, or the state save raises — a long-lived adapter process runs
@@ -290,6 +289,7 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                 slice_sizes=slice_sizes,
                 seq_ordered_views=ordered_views,
                 unchecked_inputs=unchecked,
+                bound_views=bound,
                 # Only a map whose emission reaches the output can use a
                 # raw input's order: the check is not worth its read
                 # for any other step.
@@ -318,7 +318,7 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
             changelog_refs = sorted(
                 v
                 for v in C.referenced_views(step.query, set(views))
-                if topn.OP_COL in views[v].columns
+                if OP_COL in views[v].columns
             )
             if changelog_refs and kind not in (
                 C.UNBOUNDED_AGG,
@@ -348,6 +348,7 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
             # Executors of the accepted kinds pick their changelog variant
             # themselves when a view they read is updating.
             result = _EXECUTORS[kind](ctx, step.query)
+            ctx.release_views()
             if step.alias:
                 adf = result.df
                 # A changelog-emitting alias consumed by a downstream
@@ -373,7 +374,7 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                     # skip it and propagate the order instead.
                     ordered_views.add(step.alias)
                 elif (
-                    topn.OP_COL in adf.columns
+                    OP_COL in adf.columns
                     and result.order_cols
                     and any(
                         step.alias in C.referenced_views(s2.query, {step.alias})
@@ -389,7 +390,7 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
                         adf = adf.persist(StorageLevel.MEMORY_AND_DISK)
                         pinned.append(adf)
                         adf.count()
-                    adf = _stamp(adf, SEQ, result.order_cols, 0)
+                    adf = _stamp(adf, SEQ_INPUT, result.order_cols, 0)
                     ordered_views.add(step.alias)
                 views[step.alias] = adf
                 adf.createOrReplaceTempView(step.alias)
@@ -424,10 +425,11 @@ def execute_transform(spark: SparkSession, request: TransformRequest) -> Transfo
     finally:
         for df in pinned:
             df.unpersist()
-        # Inputs, step and multi-join aliases, temporal-table names: on a
-        # shared session a leftover view would let a later request's SQL
-        # read this invocation's data instead of failing.
-        for name in set(views) | set(alias_map.values()):
+        # Inputs, step and multi-join aliases, temporal-table names and
+        # the views a failed step bound: on a shared session a leftover
+        # view would let a later request's SQL read this invocation's
+        # data instead of failing.
+        for name in set(views) | set(alias_map.values()) | set(bound):
             spark.catalog.dropTempView(name)
 
     return TransformResponse(
@@ -508,8 +510,8 @@ def _finalize_output(
         df = df.withColumn(
             vocab.operation_type_column, F.col(vocab.operation_type_column).cast("int")
         )
-    elif topn.OP_COL in df.columns:
-        df = df.withColumn(vocab.operation_type_column, F.col(topn.OP_COL).cast("int"))
+    elif OP_COL in df.columns:
+        df = df.withColumn(vocab.operation_type_column, F.col(OP_COL).cast("int"))
     else:
         df = df.withColumn(vocab.operation_type_column, F.lit(OP_APPEND).cast("int"))
 

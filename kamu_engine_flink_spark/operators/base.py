@@ -16,13 +16,15 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from ..engine.state import StateStore
+from ..plans.dialect import rewrite_query
 from ..protocol.model import TransformRequest
 from ..sources.parquet import serial_scan_in_ledger_order
 
 OP_COL = "__op"  # the op tag column of an updating (changelog-emitting) view
+SEQ_INPUT = "__seq"  # the ledger offset of an input row, hidden from user SQL
 
 
 @dataclass
@@ -59,6 +61,42 @@ class StepContext:
     # maps, so a raw input's order is worth checking; otherwise an
     # unchecked input answers False and stays unchecked.
     check_inputs: bool = False
+    # Temp views that sql() registered, name -> the frame now registered
+    # under it. Shared across the steps of one invocation, like `views`;
+    # the engine releases them after every step (release_views).
+    bound_views: dict[str, DataFrame] = field(default_factory=dict)
+
+    def sql(
+        self, query: str, wm: datetime | None = None, /, **bindings: DataFrame
+    ) -> DataFrame:
+        """Run one Flink-dialect `query` (current_watermark() reads `wm`)
+        with each of `bindings` registered as the temp view of its name.
+        A name an earlier call bound and this one does not goes back to
+        its `views` frame first, so consecutive calls over the same names
+        re-register nothing else. `spark.sql` resolves views when it
+        analyzes the query, so the result keeps its bindings after the
+        names are released."""
+        for name in [n for n in self.bound_views if n not in bindings]:
+            self._rebind(name, self.views.get(name))
+        for name, df in bindings.items():
+            self._rebind(name, df)
+        return self.spark.sql(rewrite_query(query, watermark=wm))
+
+    def release_views(self) -> None:
+        """Put every name sql() bound back to its `views` frame, or drop
+        it when `views` has none: the next step, and the next invocation
+        on a shared session, see only the engine's own views."""
+        for name in list(self.bound_views):
+            self._rebind(name, self.views.get(name))
+        self.bound_views.clear()
+
+    def _rebind(self, name: str, df: DataFrame | None) -> None:
+        if df is None:
+            self.spark.catalog.dropTempView(name)
+            del self.bound_views[name]
+        elif self.bound_views.get(name) is not df:
+            df.createOrReplaceTempView(name)
+            self.bound_views[name] = df
 
     def seq_ordered(self, view: str) -> bool:
         """True when `view` is seq_ordered. A raw input is checked on
@@ -97,6 +135,14 @@ class StepResult:
     # position and the output assembly skips its repartition(1) + sort;
     # a re-stamp of the alias is skipped too (it would not reorder).
     seq_ordered: bool = False
+
+
+def sql_expr(expr: str, wm: datetime | None = None) -> Column:
+    """One Flink-dialect SQL expression as a Column (current_watermark()
+    reads `wm`)."""
+    from pyspark.sql import functions as F
+
+    return F.expr(rewrite_query(expr, watermark=wm))
 
 
 def min_watermark(*wms: datetime | None) -> datetime | None:

@@ -34,10 +34,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-OP_APPEND = 0
-OP_RETRACT = 1
-OP_CORRECT_FROM = 2
-OP_CORRECT_TO = 3
+from ..protocol.model import OP_APPEND, OP_CORRECT_FROM, OP_CORRECT_TO, OP_RETRACT
 
 
 def snapshot(

@@ -44,19 +44,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..protocol.model import InvalidQueryError
-from .base import OP_COL, StepContext, StepResult, min_watermark
-from .map_step import SEQ_INPUT
-from .regular_join import _run_with_views, _view_scope, equi_keys
+from ..protocol.model import OP_APPEND, OP_RETRACT, InvalidQueryError
+from .base import OP_COL, SEQ_INPUT, StepContext, StepResult, min_watermark
+from .regular_join import equi_keys
 
 _SELF_RIGHT = "__cj_self_right"
 
 SIGN = "__cj_sign"
 CNT = "__cj_cnt"
 _PHASE = "__emit_phase"  # 0 = retractions, 1 = inserts/pads
-
-_OP_APPEND = 0
-_OP_RETRACT = 1
 
 
 # Engine-internal columns an updating alias may carry: the op tag, the
@@ -149,16 +145,6 @@ def _explode_copies(net: DataFrame, strict: bool = False) -> DataFrame:
 def execute_changelog_join(ctx: StepContext, sql: str, spec) -> StepResult:
     """The regular join `spec` (parsed by regular_join) with at least one
     updating side."""
-    rv_bind = (
-        _SELF_RIGHT if spec.left_view == spec.right_view else spec.right_view
-    )
-    # One deferred view restore for the whole executor (up to 8
-    # _run_with_views calls per invocation over the same two names).
-    with _view_scope(ctx, (spec.left_view, rv_bind)):
-        return _changelog_join_body(ctx, sql, spec)
-
-
-def _changelog_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
     import re
 
     lv, rv = spec.left_view, spec.right_view
@@ -283,10 +269,7 @@ def _changelog_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
     parts: list[tuple[DataFrame, int]] = []  # (user-projection rows, op)
 
     def _run_pairs(left_bind: DataFrame, right_bind: DataFrame) -> DataFrame:
-        return _run_with_views(
-            ctx, inner_sql, {lv: left_bind, rv_bind: right_bind}, wm,
-            restore=False,
-        )
+        return ctx.sql(inner_sql, wm, **{lv: left_bind, rv_bind: right_bind})
 
     # Term 1: DeltaL >< net(R + DeltaR), keys restricted to DeltaL's. The
     # DELTA is key-restricted too: a delta row whose key is absent from
@@ -304,10 +287,10 @@ def _changelog_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
         strict=True,
     )
     r_new_net = ctx.pin(r_new_net)
-    parts.append((_run_pairs(dl.filter(F.col(SIGN) > 0).drop(SIGN), r_new_net), _OP_APPEND))
+    parts.append((_run_pairs(dl.filter(F.col(SIGN) > 0).drop(SIGN), r_new_net), OP_APPEND))
     if l_updating:
         parts.append(
-            (_run_pairs(dl.filter(F.col(SIGN) < 0).drop(SIGN), r_new_net), _OP_RETRACT)
+            (_run_pairs(dl.filter(F.col(SIGN) < 0).drop(SIGN), r_new_net), OP_RETRACT)
         )
 
     # Term 2: net(L) >< DeltaR — the PRE-slice left relation only (the
@@ -320,13 +303,13 @@ def _changelog_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
             )
         )
         parts.append(
-            (_run_pairs(l_old_net, dr.filter(F.col(SIGN) > 0).drop(SIGN)), _OP_APPEND)
+            (_run_pairs(l_old_net, dr.filter(F.col(SIGN) > 0).drop(SIGN)), OP_APPEND)
         )
         if r_updating:
             parts.append(
                 (
                     _run_pairs(l_old_net, dr.filter(F.col(SIGN) < 0).drop(SIGN)),
-                    _OP_RETRACT,
+                    OP_RETRACT,
                 )
             )
 
@@ -368,7 +351,7 @@ def _changelog_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
     union = None
     for df, op in parts:
         signed = df.withColumn(
-            "__cj_d", F.lit(1 if op == _OP_APPEND else -1).cast("long")
+            "__cj_d", F.lit(1 if op == OP_APPEND else -1).cast("long")
         )
         union = signed if union is None else union.unionByName(signed)
     user_cols = [c for c in union.columns if c != "__cj_d"]
@@ -383,8 +366,8 @@ def _changelog_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
         )
         .withColumn(
             OP_COL,
-            F.when(F.col("__cj_d") > 0, F.lit(_OP_APPEND))
-            .otherwise(F.lit(_OP_RETRACT))
+            F.when(F.col("__cj_d") > 0, F.lit(OP_APPEND))
+            .otherwise(F.lit(OP_RETRACT))
             .cast(IntegerType()),
         )
         .withColumn(
@@ -530,9 +513,6 @@ def _pad_deltas(
     def _run_pad(rows: DataFrame) -> DataFrame:
         # Bind padded-side rows under its view name, empty other side —
         # the user's OUTER sql projects exactly the padded shape.
-        return _run_with_views(
-            ctx, sql, {side_view: rows, other_view: empty_other}, wm,
-            restore=False,
-        )
+        return ctx.sql(sql, wm, **{side_view: rows, other_view: empty_other})
 
-    return [(_run_pad(pads), _OP_APPEND), (_run_pad(retr), _OP_RETRACT)]
+    return [(_run_pad(pads), OP_APPEND), (_run_pad(retr), OP_RETRACT)]

@@ -56,11 +56,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from ..plans.dialect import rewrite_query
-from .base import OP_COL, StepContext, StepResult, maintain_signed_ledger
+from .base import OP_COL, SEQ_INPUT, StepContext, StepResult, maintain_signed_ledger
 from .topn import (
     GSEQ_COL,
-    SEQ_INPUT,
     SUB_COL,
     RankStep,
     prepend_select,
@@ -82,7 +80,7 @@ def execute_changelog_topn(ctx: StepContext, step: RankStep) -> StepResult:
     inner_no_rank = step.inner_no_rank
     if OP_COL not in inner_no_rank:
         inner_no_rank = prepend_select(inner_no_rank, OP_COL)
-    incoming = ctx.spark.sql(rewrite_query(inner_no_rank))
+    incoming = ctx.sql(inner_no_rank)
     if SEQ_INPUT in incoming.columns:  # star projection pulled it through
         incoming = incoming.drop(SEQ_INPUT)
     value_cols = [c for c in incoming.columns if c != OP_COL]

@@ -31,9 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..plans.classify import referenced_views
-from ..plans.dialect import rewrite_query
-from .base import StepContext, StepResult, min_watermark
-from .map_step import SEQ_INPUT
+from .base import OP_COL, SEQ_INPUT, StepContext, StepResult, min_watermark
 
 _DISTINCT_HEAD_RE = re.compile(r"^\s*select\s+distinct\b", re.IGNORECASE)
 
@@ -100,8 +98,6 @@ def execute_distinct(ctx: StepContext, sql: str) -> StepResult:
     refs = referenced_views(sql, set(ctx.views))
     wm = min_watermark(*[ctx.new_wms.get(r) for r in refs]) if refs else None
 
-    from .topn import OP_COL
-
     if len(refs) == 1 and OP_COL in ctx.views[refs[0]].columns:
         # UPDATING input: Flink's DISTINCT over a changelog keeps a
         # per-value count instead of a seen-set (below).
@@ -110,7 +106,7 @@ def execute_distinct(ctx: StepContext, sql: str) -> StepResult:
     run_sql = None
     if len(refs) == 1 and SEQ_INPUT in ctx.views[refs[0]].columns:
         run_sql = _inject_seq_distinct(sql)
-    df = ctx.spark.sql(rewrite_query(run_sql or sql, watermark=wm))
+    df = ctx.sql(run_sql or sql, wm)
 
     value_cols = [c for c in df.columns if c != SEQ_INPUT]
     if SEQ_INPUT in df.columns:
@@ -169,7 +165,6 @@ def _changelog_distinct(ctx: StepContext, sql: str, src: str, wm) -> StepResult:
 
     from ..protocol.model import InvalidQueryError
     from .base import split_touched_state, state_split_worthwhile
-    from .topn import OP_COL
 
     # The fold itself is order-free (per-tuple signed counts), so the
     # engine does NOT stamp the upstream emission for a DISTINCT consumer
@@ -189,7 +184,7 @@ def _changelog_distinct(ctx: StepContext, sql: str, src: str, wm) -> StepResult:
             r"^\s*select\s+", f"SELECT {OP_COL}, ", inner, count=1,
             flags=re.IGNORECASE,
         )
-    df = ctx.spark.sql(rewrite_query(inner, watermark=wm))
+    df = ctx.sql(inner, wm)
     value_cols = [c for c in df.columns if c not in (SEQ_INPUT, OP_COL)]
 
     # Per-tuple slice delta: +1 for op 0/3 rows, -1 for op 1/2; the tuple's

@@ -30,13 +30,11 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.classify import IntervalJoinSpec, parse_interval_join
+from ..plans.classify import parse_interval_join
 from ..protocol.model import InvalidQueryError
 from .base import StepContext, StepResult, min_watermark
-from .regular_join import _run_with_views, _view_scope
 
 _MATCHED = "__matched"
 _OUTER_JOIN_RE = re.compile(r"\b(?:LEFT|RIGHT|FULL)\s+(?:OUTER\s+)?JOIN\b", re.IGNORECASE)
@@ -46,14 +44,6 @@ def execute_interval_join(ctx: StepContext, sql: str) -> StepResult:
     spec = parse_interval_join(sql, set(ctx.views))
     if spec is None:
         raise InvalidQueryError("interval join executor could not parse the join shape")
-    # One deferred view restore for the whole executor (2-4
-    # _run_with_views calls per invocation over the same two names) —
-    # see regular_join._view_scope.
-    with _view_scope(ctx, (spec.left_view, spec.right_view)):
-        return _interval_join_body(ctx, sql, spec)
-
-
-def _interval_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
     lv, rv = spec.left_view, spec.right_view
     wm_l, wm_r = ctx.new_wms.get(lv), ctx.new_wms.get(rv)
 
@@ -84,19 +74,11 @@ def _interval_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
     def _r(df):
         return df.drop(_MATCHED) if spec.is_right_outer else df
 
-    matches = _run_with_views(
-        ctx,
-        inner_sql,
-        {lv: new_left.drop(_MATCHED), rv: _r(all_right)},
-        joint_wm,
-        restore=False,
+    matches = ctx.sql(
+        inner_sql, joint_wm, **{lv: new_left.drop(_MATCHED), rv: _r(all_right)}
     ).unionByName(
-        _run_with_views(
-            ctx,
-            inner_sql,
-            {lv: old_left.drop(_MATCHED), rv: _r(new_right)},
-            joint_wm,
-            restore=False,
+        ctx.sql(
+            inner_sql, joint_wm, **{lv: old_left.drop(_MATCHED), rv: _r(new_right)}
         )
     )
 
@@ -139,8 +121,7 @@ def _interval_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
         )
         pad_lefts = flagged_left.filter(~F.col(_MATCHED)).filter(horizon_passed).drop(_MATCHED)
         empty_right = _r(all_right).limit(0)
-        padded = _run_with_views(ctx, sql, {lv: pad_lefts, rv: empty_right}, joint_wm, restore=False)
-        emit_parts.append(padded)
+        emit_parts.append(ctx.sql(sql, joint_wm, **{lv: pad_lefts, rv: empty_right}))
 
     # RIGHT/FULL: NULL-pad right rows whose match horizon passed — a right
     # row r matches lefts with l.et in [r.et - upper, r.et - lower]; once
@@ -167,7 +148,7 @@ def _interval_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
         )
         empty_left = new_left.drop(_MATCHED).limit(0)
         emit_parts.append(
-            _run_with_views(ctx, sql, {lv: empty_left, rv: pad_rights}, joint_wm, restore=False)
+            ctx.sql(sql, joint_wm, **{lv: empty_left, rv: pad_rights})
         )
     else:
         flagged_right = all_right

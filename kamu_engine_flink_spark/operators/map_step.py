@@ -20,10 +20,7 @@ from __future__ import annotations
 import re
 
 from ..plans.classify import referenced_views
-from ..plans.dialect import rewrite_query
-from .base import StepContext, StepResult, min_watermark
-
-SEQ_INPUT = "__seq"
+from .base import OP_COL, SEQ_INPUT, StepContext, StepResult, min_watermark
 
 _SIMPLE_SELECT_RE = re.compile(r"^\s*select\s+", re.IGNORECASE)
 
@@ -101,7 +98,6 @@ def _changelog_filter(ctx: StepContext, sql: str, src: str, wm) -> StepResult:
 
     from ..plans.classify import mask_sql
     from ..protocol.model import InvalidQueryError
-    from .topn import OP_COL
 
     # Locate the TOP-LEVEL keywords on a masked copy (literal contents and
     # paren-nested regions blanked): an EXTRACT(... FROM col) in the
@@ -127,9 +123,7 @@ def _changelog_filter(ctx: StepContext, sql: str, src: str, wm) -> StepResult:
         # internal seq/op columns.
         extras = f"{SEQ_INPUT}, {OP_COL}, " + extras
     inner_sql = head[: fm.start()] + ", " + extras + " " + head[fm.start() :]
-    from ..plans.dialect import rewrite_query
-
-    df = ctx.spark.sql(rewrite_query(inner_sql, watermark=wm))
+    df = ctx.sql(inner_sql, wm)
     w = Window.partitionBy(F.lit(0)).orderBy(SEQ_INPUT)
     flt = F.coalesce(F.col("__flt"), F.lit(False))
     prev_flt = F.coalesce(F.lag("__flt").over(w), F.lit(False))
@@ -172,19 +166,21 @@ def _split_union_all(sql: str) -> list[str] | None:
 UNION_BRANCH = "__union_branch"
 
 
-def _changelog_union(ctx: StepContext, segs: list[str], wm) -> StepResult:
+def _changelog_union(
+    ctx: StepContext, segs: list[str], wm, /, **bindings
+) -> StepResult:
     """UNION ALL with at least one UPDATING input — Flink unions
     changelogs freely (the result is an updating stream). Each branch is
     a single-view projection; op tags forward per branch (an append-only
     branch contributes op-0 inserts), and emission orders branch-major so
     each input's correction-pair adjacency survives — any interleaving
     preserving per-input order is a valid changelog. Stateless: one
-    unionByName, no shuffle."""
+    unionByName, no shuffle. `bindings` are extra views the branches
+    read (a set operation's sub-step changelogs)."""
     from pyspark.sql import functions as F
 
     from ..plans.classify import mask_sql
     from ..protocol.model import InvalidQueryError
-    from .topn import OP_COL
 
     branches = []
     for bi, seg in enumerate(segs):
@@ -228,7 +224,7 @@ def _changelog_union(ctx: StepContext, segs: list[str], wm) -> StepResult:
         )
         if is_cl and OP_COL not in run and not star:
             run = _SIMPLE_SELECT_RE.sub(f"SELECT {OP_COL}, ", run, count=1)
-        df = ctx.spark.sql(rewrite_query(run, watermark=wm))
+        df = ctx.sql(run, wm, **bindings)
         # A star branch also expands the view's OTHER internals (e.g. the
         # regular join's __emit_phase ordering column) which the sibling
         # branches don't carry; __seq already captures emission order, so
@@ -255,7 +251,6 @@ def _changelog_union(ctx: StepContext, segs: list[str], wm) -> StepResult:
 
 def execute_map(ctx: StepContext, sql: str) -> StepResult:
     from ..protocol.model import InvalidQueryError
-    from .topn import OP_COL
 
     refs = referenced_views(sql, set(ctx.views))
     wm = min_watermark(*[ctx.new_wms.get(r) for r in refs]) if refs else None
@@ -308,7 +303,7 @@ def execute_map(ctx: StepContext, sql: str) -> StepResult:
         if injected is not None:
             run_sql = injected
 
-    df = ctx.spark.sql(rewrite_query(run_sql, watermark=wm))
+    df = ctx.sql(run_sql, wm)
     if SEQ_INPUT not in df.columns:
         return StepResult(df=df, watermark=wm)
     # A raw input's order check (once per input) runs only for an

@@ -77,16 +77,16 @@ from typing import Any
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
-from ..plans.dialect import rewrite_query
 from ..protocol.model import InvalidQueryError
 from .base import (
+    SEQ_INPUT,
     StepContext,
     StepResult,
     split_touched_state,
+    sql_expr,
     state_split_worthwhile,
 )
 
-SEQ_INPUT = "__seq"
 KIND_COL = "__kind"  # 0 = match row, 1 = per-key keep-from marker
 
 _MR_RE = re.compile(
@@ -852,7 +852,7 @@ def _fold_matches(buf, spec, wm_val, process_all=False):
         pred = spec["defines"].get(var)
         with_preds = with_preds.withColumn(
             name,
-            F.coalesce(F.expr(rewrite_query(pred, watermark=wm_val)), F.lit(False))
+            F.coalesce(sql_expr(pred, wm_val), F.lit(False))
             if pred
             else F.lit(True),
         )
@@ -1519,7 +1519,6 @@ def execute_match_recognize(ctx: StepContext, sql: str) -> StepResult:
     # Outer projection: SELECT * keeps (keys + measures); otherwise apply
     # the user's column list over the match relation.
     view_name = f"__mr_{ctx.step_key.replace('-', '_')}"
-    matches.createOrReplaceTempView(view_name)
     proj = spec["proj"]
     if proj == "*":
         # ONE ROW: keys + measures; ALL ROWS: input columns + measures —
@@ -1527,8 +1526,9 @@ def execute_match_recognize(ctx: StepContext, sql: str) -> StepResult:
         sel = ", ".join(c for c in matches.columns if not c.startswith("__"))
     else:
         sel = proj
-    result = ctx.spark.sql(
-        f"SELECT __final_ts, __final_seq, __start_seq, {sel} FROM {view_name}"
+    result = ctx.sql(
+        f"SELECT __final_ts, __final_seq, __start_seq, {sel} FROM {view_name}",
+        **{view_name: matches},
     )
     return StepResult(
         df=result,

@@ -27,16 +27,14 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..plans.classify import parse_over_agg, referenced_views
-from ..plans.dialect import rewrite_query
 from ..protocol.model import InvalidQueryError
 from .base import (
+    SEQ_INPUT,
     StepContext,
     StepResult,
     split_touched_state,
     state_split_worthwhile,
 )
-
-SEQ_INPUT = "__seq"
 
 _ROWS_ORDER_RE = re.compile(
     r"(ORDER\s+BY\s+[`\w.]+)((?:\s+ASC)?\s+ROWS\s+(?:BETWEEN|UNBOUNDED))",
@@ -125,11 +123,7 @@ def execute_over_agg(ctx: StepContext, sql: str) -> StepResult:
     run_sql = re.sub(
         r"^\s*select\s+", f"SELECT {SEQ_INPUT}, ", run_sql, count=1, flags=re.IGNORECASE
     )
-    buf.createOrReplaceTempView(src)
-    try:
-        result = ctx.spark.sql(rewrite_query(run_sql, watermark=new_wm))
-    finally:
-        ctx.views[src].createOrReplaceTempView(src)
+    result = ctx.sql(run_sql, new_wm, **{src: buf})
     if spec.time_col not in result.columns:
         raise InvalidQueryError(
             f"over aggregation must project its rowtime attribute {spec.time_col!r} "
@@ -245,11 +239,7 @@ def _execute_forward(ctx: StepContext, sql: str, spec) -> StepResult:
     run_sql = re.sub(
         r"^\s*select\s+", f"SELECT {SEQ_INPUT}, ", run_sql, count=1, flags=re.IGNORECASE
     )
-    buf.createOrReplaceTempView(src)
-    try:
-        result = ctx.spark.sql(rewrite_query(run_sql, watermark=new_wm))
-    finally:
-        ctx.views[src].createOrReplaceTempView(src)
+    result = ctx.sql(run_sql, new_wm, **{src: buf})
     if spec.time_col not in result.columns:
         raise InvalidQueryError(
             f"over aggregation must project its rowtime attribute {spec.time_col!r} "
@@ -401,11 +391,7 @@ def _execute_unbounded(ctx: StepContext, sql: str, spec) -> StepResult:
             flags=re.IGNORECASE,
         )
         run_sql = _ROWS_ORDER_RE.sub(rf"\1, {SEQ_INPUT}\2", run_sql)
-    buf.createOrReplaceTempView(src)
-    try:
-        local = ctx.spark.sql(rewrite_query(run_sql, watermark=new_wm))
-    finally:
-        ctx.views[src].createOrReplaceTempView(src)
+    local = ctx.sql(run_sql, new_wm, **{src: buf})
     if spec.time_col not in local.columns:
         raise InvalidQueryError(
             f"over aggregation must project its rowtime attribute {spec.time_col!r}"

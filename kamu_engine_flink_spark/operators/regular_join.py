@@ -44,60 +44,18 @@ view; distinct relation aliases are required, as in any SQL self-join.
 from __future__ import annotations
 
 import re
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType
 
 from ..plans.classify import parse_regular_join
-from ..plans.dialect import rewrite_query
 from ..protocol.model import OP_APPEND, OP_RETRACT, InvalidQueryError
 from .base import OP_COL, StepContext, StepResult, min_watermark, reads_updating
 
 _MATCHED = "__rj_matched"
 _PHASE = "__emit_phase"  # 0 = pad retractions, 1 = pads + pairs
 _SELF_RIGHT = "__rj_self_right"
-
-
-def _restore_views(ctx: StepContext, names) -> None:
-    for name in names:
-        if name in ctx.views:
-            ctx.views[name].createOrReplaceTempView(name)
-        else:
-            ctx.spark.catalog.dropTempView(name)
-
-
-@contextmanager
-def _view_scope(ctx: StepContext, names):
-    """Defer temp-view restoration to scope exit. The join executors issue
-    several `_run_with_views` calls over the SAME view names per
-    invocation (a FULL regular join: 7); `spark.sql` binds each returned
-    DataFrame to the views at ANALYSIS time, so restoring between
-    consecutive calls that immediately re-bind the same names is pure
-    py4j churn (~4 round trips per call). One restore at scope exit keeps
-    the executor contract — ctx bindings are back before the next step —
-    at 1/N of the cost."""
-    try:
-        yield
-    finally:
-        _restore_views(ctx, names)
-
-
-def _run_with_views(
-    ctx: StepContext,
-    sql: str,
-    bindings: dict[str, DataFrame],
-    wm,
-    restore: bool = True,
-) -> DataFrame:
-    for name, df in bindings.items():
-        df.createOrReplaceTempView(name)
-    try:
-        return ctx.spark.sql(rewrite_query(sql, watermark=wm))
-    finally:
-        if restore:
-            _restore_views(ctx, bindings)
 
 
 _EQ_TERM_RE = re.compile(
@@ -159,12 +117,6 @@ def execute_regular_join(ctx: StepContext, sql: str) -> StepResult:
         from .changelog_join import execute_changelog_join
 
         return execute_changelog_join(ctx, sql, spec)
-    rv_bind = _SELF_RIGHT if spec.left_view == spec.right_view else spec.right_view
-    with _view_scope(ctx, (spec.left_view, rv_bind)):
-        return _regular_join_body(ctx, sql, spec)
-
-
-def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
     kind = spec.join_kind  # "", "LEFT", "RIGHT", "FULL"
     pad_left = kind in ("LEFT", "FULL")
     pad_right = kind in ("RIGHT", "FULL")
@@ -247,15 +199,15 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
     # is joined DIRECTLY (a union with the new slice would discard its
     # output partitioning and force a full-history exchange).
     wm = min_watermark(ctx.new_wms.get(lv), ctx.new_wms.get(rv))
-    pairs_new = _run_with_views(ctx, inner_sql, {lv: new_left, rv_bind: new_right}, wm, restore=False)
+    pairs_new = ctx.sql(inner_sql, wm, **{lv: new_left, rv_bind: new_right})
     if first:
         pairs = pairs_new
     else:
         pairs = (
-            _run_with_views(ctx, inner_sql, {lv: new_left, rv_bind: old_right}, wm, restore=False)
+            ctx.sql(inner_sql, wm, **{lv: new_left, rv_bind: old_right})
             .unionByName(pairs_new)
             .unionByName(
-                _run_with_views(ctx, inner_sql, {lv: old_left, rv_bind: new_right}, wm, restore=False)
+                ctx.sql(inner_sql, wm, **{lv: old_left, rv_bind: new_right})
             )
         )
 
@@ -308,10 +260,10 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
             left_unm_name, still_unmatched_l.unionByName(new_unmatched_l), lkeys
         )
         pad_parts.append(
-            _run_with_views(ctx, sql, {lv: new_unmatched_l, rv_bind: empty_right}, wm, restore=False)
+            ctx.sql(sql, wm, **{lv: new_unmatched_l, rv_bind: empty_right})
         )
         retract_parts.append(
-            _run_with_views(ctx, sql, {lv: newly_matched_l, rv_bind: empty_right}, wm, restore=False)
+            ctx.sql(sql, wm, **{lv: newly_matched_l, rv_bind: empty_right})
         )
 
     if pad_right:
@@ -344,10 +296,10 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
             right_unm_name, still_unmatched_r.unionByName(new_unmatched_r), rkeys
         )
         pad_parts.append(
-            _run_with_views(ctx, sql, {lv: empty_left, rv_bind: new_unmatched_r}, wm, restore=False)
+            ctx.sql(sql, wm, **{lv: empty_left, rv_bind: new_unmatched_r})
         )
         retract_parts.append(
-            _run_with_views(ctx, sql, {lv: empty_left, rv_bind: newly_matched_r}, wm, restore=False)
+            ctx.sql(sql, wm, **{lv: empty_left, rv_bind: newly_matched_r})
         )
 
     if kind:
@@ -365,7 +317,7 @@ def _regular_join_body(ctx: StepContext, sql: str, spec) -> StepResult:
             # pad runs; identical output (the slice-invariance tests
             # cross-validate this path against the general one). The
             # probes above still feed the unmatched state.
-            result = _tag(_run_with_views(ctx, sql, {lv: new_left, rv_bind: new_right}, wm, restore=False), OP_APPEND, 1)
+            result = _tag(ctx.sql(sql, wm, **{lv: new_left, rv_bind: new_right}), OP_APPEND, 1)
         else:
             result = _tag(pairs, OP_APPEND, 1)
             for p in pad_parts:

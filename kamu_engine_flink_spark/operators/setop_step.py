@@ -60,12 +60,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from ..plans import classify as C
-from ..plans.dialect import rewrite_query
 from ..protocol.model import InvalidQueryError
-from .base import StepContext, StepResult, min_watermark
+from .base import OP_COL, SEQ_INPUT, StepContext, StepResult, min_watermark
 from .distinct_step import _row_fingerprint
-from .map_step import SEQ_INPUT
-from .topn import OP_COL
 
 
 def _live_expr(op: str, all_flag: bool, cnt_exprs: list):
@@ -105,6 +102,7 @@ def _exec_node(ctx: StepContext, node) -> StepResult:
         return _exec_union_all(ctx, children)
     views = dict(ctx.views)
     new_wms = dict(ctx.new_wms)
+    synth = {}  # sub-step changelogs, bound as views for the branch SQL
     branches: list[str] = []
     for i, child in enumerate(children):
         if isinstance(child, str):
@@ -120,13 +118,12 @@ def _exec_node(ctx: StepContext, node) -> StepResult:
             *[c for c in sub.df.columns if c.startswith("__") and c != OP_COL]
         )
         vname = "__setop_" + sub_key.replace(".", "_").replace("-", "_")
-        sub_df.createOrReplaceTempView(vname)
-        views[vname] = sub_df
+        synth[vname] = views[vname] = sub_df
         new_wms[vname] = sub.watermark
         cols = ", ".join(f"`{c}`" for c in sub_df.columns)
         branches.append(f"SELECT {cols} FROM {vname}")
     return _exec_flat(
-        replace(ctx, views=views, new_wms=new_wms), op, all_flag, branches
+        replace(ctx, views=views, new_wms=new_wms), op, all_flag, branches, synth
     )
 
 
@@ -147,6 +144,7 @@ def _exec_union_all(ctx: StepContext, children) -> StepResult:
 
     views = dict(ctx.views)
     new_wms = dict(ctx.new_wms)
+    synth = {}
     segs: list[str] = []
     wms = []
     for i, child in enumerate(children):
@@ -183,8 +181,7 @@ def _exec_union_all(ctx: StepContext, children) -> StepResult:
                 SEQ_INPUT, F.monotonically_increasing_id()
             )
         vname = "__setop_" + sub_key.replace(".", "_").replace("-", "_")
-        sub_df.createOrReplaceTempView(vname)
-        views[vname] = sub_df
+        synth[vname] = views[vname] = sub_df
         new_wms[vname] = sub.watermark
         wms.append(sub.watermark)
         cols = ", ".join(
@@ -193,12 +190,12 @@ def _exec_union_all(ctx: StepContext, children) -> StepResult:
         segs.append(f"SELECT {cols} FROM {vname}")
     wm = min_watermark(*wms)
     return _changelog_union(
-        replace(ctx, views=views, new_wms=new_wms), segs, wm
+        replace(ctx, views=views, new_wms=new_wms), segs, wm, **synth
     )
 
 
 def _exec_flat(
-    ctx: StepContext, op: str, all_flag: bool, branches: list[str]
+    ctx: StepContext, op: str, all_flag: bool, branches: list[str], synth: dict
 ) -> StepResult:
     known = set(ctx.views)
     branch_dfs, wms = [], []
@@ -251,13 +248,13 @@ def _exec_flat(
                     "join the value tuple): list the value columns "
                     "explicitly"
                 )
-            bdf = ctx.spark.sql(rewrite_query(b, watermark=bwm))
+            bdf = ctx.sql(b, bwm, **synth)
             if OP_COL not in bdf.columns:
                 inner = re.sub(
                     r"^\s*select\s+", f"SELECT {OP_COL}, ", b, count=1,
                     flags=re.IGNORECASE,
                 )
-                bdf = ctx.spark.sql(rewrite_query(inner, watermark=bwm))
+                bdf = ctx.sql(inner, bwm, **synth)
             sign = (
                 F.when(F.col(OP_COL).isin(1, 2), F.lit(-1))
                 .otherwise(F.lit(1))
@@ -265,7 +262,7 @@ def _exec_flat(
             )
             bdf = bdf.withColumn("__sign", sign).drop(OP_COL)
         else:
-            bdf = ctx.spark.sql(rewrite_query(b, watermark=bwm)).withColumn(
+            bdf = ctx.sql(b, bwm, **synth).withColumn(
                 "__sign", F.lit(1).cast(LongType())
             )
         if SEQ_INPUT in bdf.columns:

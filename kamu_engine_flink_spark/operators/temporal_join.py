@@ -28,9 +28,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.classify import referenced_views
-from ..plans.dialect import VALID_FROM, VALID_TO, VERSIONS_SUFFIX, rewrite_query
+from ..plans.dialect import VALID_FROM, VALID_TO, VERSIONS_SUFFIX
 from ..protocol.model import InvalidQueryError, TemporalTable
-from .base import OP_COL, StepContext, StepResult, min_watermark, reads_updating
+from .base import (
+    OP_COL,
+    SEQ_INPUT,
+    StepContext,
+    StepResult,
+    min_watermark,
+    reads_updating,
+)
 
 
 def with_validity(versions: DataFrame, primary_key: list[str], event_time_col: str) -> DataFrame:
@@ -237,8 +244,6 @@ def _changelog_version_state(
     """
     from pyspark.sql.types import BooleanType, LongType, StructField, StructType
 
-    from .map_step import SEQ_INPUT
-
     value_cols = [c for c in build_df.columns if not c.startswith("__")]
     if any(p not in value_cols for p in pk) or build_et not in value_cols:
         raise InvalidQueryError(
@@ -368,12 +373,9 @@ def execute_changelog_temporal_join(ctx: StepContext, sql: str, sides) -> StepRe
         ctx, ctx.views[build], build_et, pk, joint_wm
     )
 
-    release.createOrReplaceTempView(probe)
-    resolvable.createOrReplaceTempView(build + VERSIONS_SUFFIX)
-    try:
-        result = ctx.spark.sql(rewrite_query(sql, watermark=joint_wm))
-    finally:
-        ctx.views[probe].createOrReplaceTempView(probe)
+    result = ctx.sql(
+        sql, joint_wm, **{probe: release, build + VERSIONS_SUFFIX: resolvable}
+    )
 
     order_cols = list(result.columns)
     out_et = ctx.request.vocab.event_time_column
@@ -437,7 +439,6 @@ def _execute_updating_probe(
     """
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    from .map_step import SEQ_INPUT
 
     probe_df = ctx.views[probe]
     if SEQ_INPUT not in probe_df.columns:
@@ -499,15 +500,14 @@ def _execute_updating_probe(
         )
     ctx.state.save_json(pmeta_name, {"inv": pinv + 1})
 
-    release.createOrReplaceTempView(probe)
-    resolvable.createOrReplaceTempView(build + VERSIONS_SUFFIX)
-    try:
-        # Pinned: the dangling-half repair below self-joins the
-        # resolution output, which would otherwise recompute the whole
-        # state-union + range-join subtree twice.
-        raw = ctx.pin(ctx.spark.sql(rewrite_query(injected, watermark=joint_wm)))
-    finally:
-        ctx.views[probe].createOrReplaceTempView(probe)
+    # Pinned: the dangling-half repair below self-joins the
+    # resolution output, which would otherwise recompute the whole
+    # state-union + range-join subtree twice.
+    raw = ctx.pin(
+        ctx.sql(
+            injected, joint_wm, **{probe: release, build + VERSIONS_SUFFIX: resolvable}
+        )
+    )
 
     # Dangling-half repair: a correction half whose partner (seq +- 1)
     # is absent from THIS emission — buffered past the watermark or
@@ -626,12 +626,9 @@ def execute_temporal_join(ctx: StepContext, sql: str) -> StepResult:
         ctx, build, build_et, tt.primary_key, joint_wm
     )
 
-    release.createOrReplaceTempView(probe)
-    versioned.createOrReplaceTempView(build + VERSIONS_SUFFIX)
-    try:
-        result = ctx.spark.sql(rewrite_query(sql, watermark=joint_wm))
-    finally:
-        ctx.views[probe].createOrReplaceTempView(probe)
+    result = ctx.sql(
+        sql, joint_wm, **{probe: release, build + VERSIONS_SUFFIX: versioned}
+    )
 
     order_cols = list(result.columns)
     out_et = ctx.request.vocab.event_time_column

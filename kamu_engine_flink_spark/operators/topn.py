@@ -62,10 +62,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..plans.classify import parse_topn
-from ..plans.dialect import rewrite_query
 from ..protocol.model import OP_APPEND, OP_CORRECT_FROM, OP_CORRECT_TO, InvalidQueryError
 from .base import (
     OP_COL,
+    SEQ_INPUT,
     StepContext,
     StepResult,
     reads_updating,
@@ -73,7 +73,6 @@ from .base import (
     state_split_worthwhile,
 )
 
-SEQ_INPUT = "__seq"  # engine-provided ledger-offset column on input views
 GSEQ_COL = "__emit_gseq"  # triggering record's ledger offset
 SUB_COL = "__emit_sub"  # emission order within one record's corrections
 KIND_COL = "__kind"  # fold output: 0 = changelog row, 1 = state row
@@ -543,16 +542,11 @@ def require_keys(step: RankStep, value_cols: list[str]) -> None:
 
 def project_outer(ctx: StepContext, step: RankStep, changelog: DataFrame) -> StepResult:
     """Re-apply the user's outer projection over the changelog, threading
-    the internal op/sequence columns through. The internal view is
-    dropped once the query is analyzed; the result keeps its plan."""
+    the internal op/sequence columns through."""
     view_name = f"__topn_changelog_{ctx.step_key.replace('-', '_')}"
-    changelog.createOrReplaceTempView(view_name)
     outer = prepend_select(step.shape.group("outer"), f"{OP_COL}, {GSEQ_COL}, {SUB_COL}")
     final_sql = f"{outer} FROM {view_name} {step.shape.group('tail')}"
-    try:
-        result = _dedupe_columns(ctx.spark.sql(rewrite_query(final_sql)))
-    finally:
-        ctx.spark.catalog.dropTempView(view_name)
+    result = _dedupe_columns(ctx.sql(final_sql, **{view_name: changelog}))
     # __-prefixed columns (the op/sequence plumbing) are dropped by the
     # output assembly's internal-column convention (transform.py).
     return StepResult(
@@ -623,7 +617,7 @@ def execute_topn(ctx: StepContext, sql: str) -> StepResult:
     inner = step.inner_no_rank
     if SEQ_INPUT in ctx.views[step.src].columns and SEQ_INPUT not in inner:
         inner = prepend_select(inner, SEQ_INPUT)
-    incoming = ctx.spark.sql(rewrite_query(inner))
+    incoming = ctx.sql(inner)
     value_cols = [c for c in incoming.columns if c != SEQ_INPUT]
     require_keys(step, value_cols)
     if keys and SEQ_INPUT not in incoming.columns:

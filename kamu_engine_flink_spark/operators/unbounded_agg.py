@@ -31,7 +31,7 @@ expressions over aggregates, DISTINCT) keep their MAP route.
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructType
+from pyspark.sql.types import IntegerType, LongType
 
 from ..plans.classify import (
     LIVE_COL,
@@ -40,30 +40,22 @@ from ..plans.classify import (
     referenced_views,
     unbounded_agg_group_cols,
 )
-from ..plans.dialect import rewrite_query
-from ..protocol.model import InvalidQueryError
+from ..protocol.model import (
+    OP_APPEND,
+    OP_CORRECT_FROM,
+    OP_CORRECT_TO,
+    OP_RETRACT,
+    InvalidQueryError,
+)
 from .base import (
+    OP_COL,
     StepContext,
     StepResult,
     split_touched_state,
     state_split_worthwhile,
 )
-from .topn import OP_COL
 
 SUB_COL = "__emit_sub"  # 0 for op 0/2 rows, 1 for op 3 — pair order per key
-
-_OP_APPEND = 0
-_OP_RETRACT = 1
-_OP_CORRECT_FROM = 2
-_OP_CORRECT_TO = 3
-
-
-def _probe_schema(ctx: StepContext, sql: str, src: str) -> StructType:
-    ctx.views[src].limit(0).createOrReplaceTempView(src)
-    try:
-        return ctx.spark.sql(rewrite_query(sql)).schema
-    finally:
-        ctx.views[src].createOrReplaceTempView(src)
 
 
 def execute_unbounded_agg(ctx: StepContext, sql: str) -> StepResult:
@@ -76,7 +68,7 @@ def execute_unbounded_agg(ctx: StepContext, sql: str) -> StepResult:
         raise InvalidQueryError("continuous aggregation must read exactly one view")
     src = refs[0]
     group_cols = unbounded_agg_group_cols(sql)
-    out_schema = _probe_schema(ctx, sql, src)
+    out_schema = ctx.sql(sql, **{src: ctx.views[src].limit(0)}).schema
 
     # A CHANGELOG input (a chained step emitting op-tagged rows: outer
     # regular-join pads/retractions, upstream correction pairs) folds op
@@ -101,7 +93,7 @@ def execute_unbounded_agg(ctx: StepContext, sql: str) -> StepResult:
                 "could not rewrite the projection for retraction folding"
             )
         folded, sum_guards, minmax = folded
-        partials = ctx.spark.sql(rewrite_query(folded))
+        partials = ctx.sql(folded)
         out_types = {f.name: f.dataType for f in out_schema.fields}
         for alias in minmax:
             # Placeholder so slice partials and persisted state share one
@@ -116,7 +108,7 @@ def execute_unbounded_agg(ctx: StepContext, sql: str) -> StepResult:
     else:
         # Slice partials (the now() emission-time item stripped; avg
         # decomposed into sum+count when present).
-        partials = ctx.spark.sql(rewrite_query(mspec.slice_sql or spec.core_sql))
+        partials = ctx.sql(mspec.slice_sql or spec.core_sql)
     prev = ctx.state.load_df(acc_name, schema=partials.schema)
 
     use_split = bool(group_cols) and state_split_worthwhile(ctx, acc_name, src)
@@ -141,10 +133,8 @@ def execute_unbounded_agg(ctx: StepContext, sql: str) -> StepResult:
             hist_specs.setdefault(arg, []).append((alias, fn))
         for i, (arg, outs) in enumerate(sorted(hist_specs.items())):
             h_name = f"{ctx.step_key}-unbounded-hist{i}"
-            h_delta = ctx.spark.sql(
-                rewrite_query(
-                    changelog_hist_slice_sql(spec.core_sql, OP_COL, group_cols, arg)
-                )
+            h_delta = ctx.sql(
+                changelog_hist_slice_sql(spec.core_sql, OP_COL, group_cols, arg)
             )
             h_prev = ctx.state.load_df(h_name, schema=h_delta.schema)
             merge_hist = (
@@ -318,8 +308,8 @@ def execute_unbounded_agg(ctx: StepContext, sql: str) -> StepResult:
         )
 
     pair = F.array(
-        _emit_struct("o", _OP_CORRECT_FROM, 0),
-        _emit_struct("n", _OP_CORRECT_TO, 1),
+        _emit_struct("o", OP_CORRECT_FROM, 0),
+        _emit_struct("n", OP_CORRECT_TO, 1),
     )
     if is_changelog:
         live = F.col(f"n.{LIVE_COL}") > 0
@@ -327,14 +317,14 @@ def execute_unbounded_agg(ctx: StepContext, sql: str) -> StepResult:
         # inconsistent changelog) emit nothing; dead existing keys emit
         # the op-1 delete with their last-emitted values.
         emissions = (
-            F.when(is_new, F.array(_emit_struct("n", _OP_APPEND, 0)))
-            .when(~live, F.array(_emit_struct("o", _OP_RETRACT, 0)))
+            F.when(is_new, F.array(_emit_struct("n", OP_APPEND, 0)))
+            .when(~live, F.array(_emit_struct("o", OP_RETRACT, 0)))
             .otherwise(pair)
         )
         keep = (is_new & live) | (~is_new & (~live | changed))
     else:
         emissions = F.when(
-            is_new, F.array(_emit_struct("n", _OP_APPEND, 0))
+            is_new, F.array(_emit_struct("n", OP_APPEND, 0))
         ).otherwise(pair)
         keep = is_new | changed
     result = (

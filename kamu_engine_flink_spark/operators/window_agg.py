@@ -32,28 +32,21 @@ from ..plans.classify import (
     parse_tumble,
     referenced_views,
 )
-from ..plans.dialect import rewrite_cumulate_as_step_tumble, rewrite_query
-from .base import StepContext, StepResult, min_watermark
+from ..plans.dialect import rewrite_cumulate_as_step_tumble
+from .base import StepContext, StepResult
 
 
-def _probe_output_schema(ctx: StepContext, sql: str, src: str):
-    """Output schema (names, order, types) of the user's query — resolved
-    against an empty slice of the source view. Plan-only analysis: no job
-    runs."""
-    ctx.views[src].limit(0).createOrReplaceTempView(src)
-    try:
-        return ctx.spark.sql(rewrite_query(sql)).schema
-    finally:
-        ctx.views[src].createOrReplaceTempView(src)
-
-
-def _finalize_avgs(df: DataFrame, mspec, out_schema) -> DataFrame:
+def _finalize_avgs(
+    ctx: StepContext, df: DataFrame, mspec, sql: str, src: str
+) -> DataFrame:
     """Replace each avg's (sum, count) partial pair with the final
     quotient (sum-of-sums / sum-of-counts — Flink's AvgAggFunction merge)
     cast to the type Spark's own avg() would produce, and restore the
-    user's projection order."""
+    user's projection order. The user's query is analyzed over an empty
+    slice of `src` for its output schema: plan only, no job runs."""
     if not mspec.avgs:
         return df
+    out_schema = ctx.sql(sql, **{src: ctx.views[src].limit(0)}).schema
     types = {f.name: f.dataType for f in out_schema.fields}
     for alias, (s_col, c_col) in mspec.avgs.items():
         df = df.withColumn(alias, (F.col(s_col) / F.col(c_col)).cast(types[alias]))
@@ -142,11 +135,7 @@ def execute_window_agg(ctx: StepContext, sql: str) -> StepResult:
 
     ctx.state.save_df(buffer_name, still_open)
 
-    closed.createOrReplaceTempView(src)
-    try:
-        result = ctx.spark.sql(rewrite_query(sql, watermark=new_wm))
-    finally:
-        ctx.views[src].createOrReplaceTempView(src)
+    result = ctx.sql(sql, new_wm, **{src: closed})
 
     return _ordered_result(ctx, src, result, new_wm)
 
@@ -173,19 +162,12 @@ def _execute_with_partials(
         size_secs = int(spec.size.total_seconds())
         end_col = F.col(mspec.start_alias) + F.expr(f"INTERVAL '{size_secs}' SECOND")
 
-    incoming.createOrReplaceTempView(src)
-    try:
-        slice_partials = ctx.spark.sql(
-            rewrite_query(mspec.slice_sql or sql, watermark=new_wm)
-        )
-    finally:
-        ctx.views[src].createOrReplaceTempView(src)
+    slice_partials = ctx.sql(mspec.slice_sql or sql, new_wm, **{src: incoming})
 
     result = _merge_partials(
         ctx, partials_name, slice_partials, mspec, end_col, new_wm
     )
-    if mspec.avgs:
-        result = _finalize_avgs(result, mspec, _probe_output_schema(ctx, sql, src))
+    result = _finalize_avgs(ctx, result, mspec, sql, src)
     return _ordered_result(ctx, src, result, new_wm)
 
 
@@ -274,11 +256,7 @@ def _emit_and_order(
     pushdown_safe=False (the SESSION caller): the window-end emission
     filter must NOT sink below the session-merging aggregation — see
     _pushdown_barrier."""
-    buf.createOrReplaceTempView(src)
-    try:
-        result = ctx.spark.sql(rewrite_query(sql, watermark=new_wm))
-    finally:
-        ctx.views[src].createOrReplaceTempView(src)
+    result = ctx.sql(sql, new_wm, **{src: buf})
     if new_wm is None:
         result = result.limit(0)
     else:
@@ -341,20 +319,13 @@ def execute_hop_agg(ctx: StepContext, sql: str) -> StepResult:
         else:
             p_end = F.col(mspec.start_alias) + F.expr(f"INTERVAL '{size_secs}' SECOND")
             lead = mspec.start_alias
-        incoming.createOrReplaceTempView(src)
-        try:
-            slice_partials = ctx.spark.sql(
-                rewrite_query(mspec.slice_sql or sql, watermark=new_wm)
-            )
-        finally:
-            ctx.views[src].createOrReplaceTempView(src)
+        slice_partials = ctx.sql(mspec.slice_sql or sql, new_wm, **{src: incoming})
         if prev_wm is not None:
             slice_partials = slice_partials.filter(p_end > F.lit(prev_wm))
         result = _merge_partials(
             ctx, f"{ctx.step_key}-hop-partials", slice_partials, mspec, p_end, new_wm
         )
-        if mspec.avgs:
-            result = _finalize_avgs(result, mspec, _probe_output_schema(ctx, sql, src))
+        result = _finalize_avgs(ctx, result, mspec, sql, src)
         order_cols = list(result.columns)
         if lead in order_cols:
             order_cols.remove(lead)
@@ -429,11 +400,7 @@ def execute_cumulate_agg(ctx: StepContext, sql: str) -> StepResult:
             )
         # Slice partials at step grain: CUMULATE -> step-sized TUMBLE.
         step_sql = rewrite_cumulate_as_step_tumble(mspec.slice_sql or sql)
-        incoming.createOrReplaceTempView(src)
-        try:
-            slice_partials = ctx.spark.sql(rewrite_query(step_sql, watermark=new_wm))
-        finally:
-            ctx.views[src].createOrReplaceTempView(src)
+        slice_partials = ctx.sql(step_sql, new_wm, **{src: incoming})
 
         # Step end (exclusive) — derivable from either projected alias.
         if mspec.end_alias is not None:
@@ -517,8 +484,7 @@ def execute_cumulate_agg(ctx: StepContext, sql: str) -> StepResult:
         if mspec.end_alias is not None:
             result = result.withColumn(mspec.end_alias, F.col("__cum_end"))
         result = result.select(*slice_partials.columns)
-        if mspec.avgs:
-            result = _finalize_avgs(result, mspec, _probe_output_schema(ctx, sql, src))
+        result = _finalize_avgs(ctx, result, mspec, sql, src)
         lead = mspec.end_alias or mspec.start_alias
         order_cols = list(result.columns)
         if lead in order_cols:

@@ -37,7 +37,7 @@ from datetime import timedelta
 from pyspark.sql import functions as F
 
 from ..plans.classify import _WINDOW_TVF_RE, interval_to_timedelta
-from ..plans.dialect import rewrite_query, window_tvf_subquery
+from ..plans.dialect import window_tvf_subquery
 from ..protocol.model import InvalidQueryError
 from .base import StepContext, StepResult, min_watermark
 
@@ -153,6 +153,7 @@ def execute_window_join(ctx: StepContext, sql: str) -> StepResult:
     new_wm = min_watermark(*new_sides) if all(w is not None for w in new_sides) else None
 
     inst_names = []
+    insts = {}  # closed-instance view name -> frame
     for side_idx, (view, tcol, groups, _ivals, align, size) in enumerate(sides):
         if side_idx == 1 and self_same:
             inst_names.append(inst_names[0])
@@ -179,9 +180,8 @@ def execute_window_join(ctx: StepContext, sql: str) -> StepResult:
         # Expand window instances over the FULL buffer, keep only the
         # instances of windows closing THIS invocation.
         raw_name = f"__wjoin_buf{side_idx}"
-        buf.createOrReplaceTempView(raw_name)
         sub = window_tvf_subquery(kind, raw_name, tcol, *groups)
-        inst = ctx.spark.sql(f"SELECT * FROM {sub} __w{side_idx}")
+        inst = ctx.sql(f"SELECT * FROM {sub} __w{side_idx}", **{raw_name: buf})
         if new_wm is None:
             inst = inst.limit(0)
         else:
@@ -189,7 +189,7 @@ def execute_window_join(ctx: StepContext, sql: str) -> StepResult:
             if prev_wm is not None:
                 inst = inst.filter(F.col("window_end") > F.lit(prev_wm))
         inst_name = f"__wjoin_closed{side_idx}"
-        inst.createOrReplaceTempView(inst_name)
+        insts[inst_name] = inst
         inst_names.append(inst_name)
 
     # Swap each TVF span for its closed-instance view (right-to-left so
@@ -201,7 +201,7 @@ def execute_window_join(ctx: StepContext, sql: str) -> StepResult:
         zip(tvfs, inst_names), key=lambda p: -p[0].start()
     ):
         rewritten = rewritten[: m.start()] + inst_name + rewritten[m.end() :]
-    result = ctx.spark.sql(rewrite_query(rewritten, watermark=new_wm))
+    result = ctx.sql(rewritten, new_wm, **insts)
 
     # Deterministic emission order: output event-time column (usually the
     # projected window_start) first, remaining columns as tie-breakers.

@@ -203,23 +203,6 @@ def select_count(sql: str) -> int:
     return len(_SELECT_WORD_RE.findall(sql))
 
 
-def _split_top_level(s: str) -> list[str]:
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur).strip())
-    return parts
-
-
 def mask_sql(sql: str, parens: bool = False) -> str:
     """Same-length copy of `sql` with string-literal and backquoted
     contents blanked out — and, with parens=True, everything inside

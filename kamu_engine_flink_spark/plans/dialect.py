@@ -62,8 +62,8 @@ Rewrites:
     array-of-rows / unresolvable -> inline(). WITH ORDINALITY and
     alias-less UNNEST reject loudly below.)
 
-Temporal rewrites target the `<name>__versions` views the transform engine
-registers for declared temporal tables (operators/asof_join.py): each
+Temporal rewrites target the `<name>__versions` views the temporal-join
+executor binds for declared temporal tables (operators/temporal_join.py): each
 version carries [__valid_from, __valid_to) computed from the next version
 of the same primary key, which turns Flink's temporal-table-function join
 (README.md "Temporal Table Joins") into a plain range join Catalyst can

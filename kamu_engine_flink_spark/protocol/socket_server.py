@@ -28,12 +28,13 @@ import os
 import socket
 import socketserver
 import struct
-import subprocess
 import sys
 import tempfile
 import threading
 
 import yaml
+
+from ..adapter import launch_app
 
 DEFAULT_PORT = 2884  # the reference's listen port (main.rs:21)
 _MAX_FRAME = 64 * 1024 * 1024
@@ -61,31 +62,14 @@ def write_frame(sock: socket.socket, payload: bytes) -> None:
 
 
 def _run_app(module: str, request_doc: dict, workspace: str) -> dict:
-    """Engine invocation as a subprocess over request/response YAML files —
-    the same per-invocation contract the reference uses (`flink run` with
-    request.yaml/response.yaml, adapter.rs:120-176)."""
+    """Engine invocation as a subprocess (adapter.launch_app) over a
+    request file written from `request_doc`."""
     os.makedirs(workspace, exist_ok=True)
     fd, req_path = tempfile.mkstemp(suffix=".yaml", dir=workspace)
     os.close(fd)
-    resp_path = req_path.replace(".yaml", ".resp.yaml")
     with open(req_path, "w") as f:
         yaml.safe_dump(request_doc, f)
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    proc = subprocess.run(
-        [sys.executable, "-m", module, req_path, resp_path],
-        cwd=repo_root,
-        capture_output=True,
-        text=True,
-        timeout=600,
-    )
-    if not os.path.exists(resp_path):
-        return {
-            "kind": "internalError",
-            "message": f"engine produced no response (rc={proc.returncode})",
-            "backtrace": (proc.stderr or "")[-4000:],
-        }
-    with open(resp_path) as f:
-        return yaml.safe_load(f)
+    return launch_app(module, req_path, req_path.replace(".yaml", ".resp.yaml"))
 
 
 class _Handler(socketserver.BaseRequestHandler):

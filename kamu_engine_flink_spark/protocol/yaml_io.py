@@ -8,6 +8,8 @@ We accept both camelCase (the ODF manifest spelling) and snake_case keys.
 from __future__ import annotations
 
 import re
+import traceback
+from collections.abc import Callable
 from dataclasses import asdict
 from datetime import datetime, timezone
 from typing import Any
@@ -16,6 +18,7 @@ import yaml
 
 from .model import (
     DatasetVocabulary,
+    InvalidQueryError,
     OffsetInterval,
     RawQueryRequest,
     RawQueryResponse,
@@ -144,3 +147,37 @@ def dump_request(req: TransformRequest | RawQueryRequest, path: str) -> None:
     (adapter.rs:120-125 writes request.yaml the same way)."""
     with open(path, "w") as f:
         yaml.safe_dump(_clean(asdict(req)), f, sort_keys=False)
+
+
+def respond(
+    request_path: str,
+    response_path: str,
+    load: Callable[[str], Any],
+    execute: Callable[[Any], TransformResponse | RawQueryResponse],
+) -> int:
+    """Load the request at `request_path`, run `execute` on it and write
+    its response, or a typed error document, to `response_path`. Errors
+    map to the reference's response kinds (TransformApp.scala:73-83): a
+    request that does not load is `invalidRequest`, bad SQL is
+    `invalidQuery` (exit 1), anything else `internalError` with its
+    backtrace (exit 2)."""
+    try:
+        request = load(request_path)
+    except Exception as e:  # noqa: BLE001 — every request gets a response
+        doc, code = {"kind": "invalidRequest", "message": str(e)}, 1
+    else:
+        try:
+            dump_response(execute(request), response_path)
+            return 0
+        except InvalidQueryError as e:
+            doc, code = {"kind": "invalidQuery", "message": str(e)}, 1
+        except Exception as e:  # noqa: BLE001
+            doc = {
+                "kind": "internalError",
+                "message": str(e),
+                "backtrace": traceback.format_exc(),
+            }
+            code = 2
+    with open(response_path, "w") as f:
+        yaml.safe_dump(doc, f)
+    return code

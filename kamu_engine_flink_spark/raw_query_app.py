@@ -6,34 +6,21 @@ Usage: python -m kamu_engine_flink_spark.raw_query_app <request.yaml> <response.
 from __future__ import annotations
 
 import sys
-import traceback
-
-import yaml
 
 from .engine.raw_query import execute_raw_query
-from .protocol.model import InvalidQueryError
-from .protocol.yaml_io import dump_response, load_raw_query_request
+from .protocol.yaml_io import load_raw_query_request, respond
 from .session import engine_session
 
 
 def main(request_path: str, response_path: str) -> int:
-    request = load_raw_query_request(request_path)
-    spark = engine_session(app_name="kamu-engine-spark-rawquery")
-    try:
-        response = execute_raw_query(spark, request)
-    except InvalidQueryError as e:
-        with open(response_path, "w") as f:
-            yaml.safe_dump({"kind": "invalidQuery", "message": str(e)}, f)
-        return 1
-    except Exception as e:  # noqa: BLE001
-        with open(response_path, "w") as f:
-            yaml.safe_dump(
-                {"kind": "internalError", "message": str(e), "backtrace": traceback.format_exc()},
-                f,
-            )
-        return 2
-    dump_response(response, response_path)
-    return 0
+    return respond(
+        request_path,
+        response_path,
+        load_raw_query_request,
+        lambda request: execute_raw_query(
+            engine_session(app_name="kamu-engine-spark-rawquery"), request
+        ),
+    )
 
 
 if __name__ == "__main__":

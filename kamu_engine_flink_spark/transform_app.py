@@ -3,7 +3,8 @@
 Mirrors TransformApp.scala:22-91: load request.yaml, run the transform,
 write response.yaml. Errors map to the reference's response kinds
 (InvalidQuery for bad SQL at :73-77, InternalError with backtrace at
-:78-83) — here encoded as YAML documents with a `kind` field.
+:78-83) — here encoded as YAML documents with a `kind` field
+(protocol/yaml_io.respond).
 
 Usage: python -m kamu_engine_flink_spark.transform_app <request.yaml> <response.yaml>
 """
@@ -11,34 +12,21 @@ Usage: python -m kamu_engine_flink_spark.transform_app <request.yaml> <response.
 from __future__ import annotations
 
 import sys
-import traceback
-
-import yaml
 
 from .engine.transform import execute_transform
-from .protocol.model import InvalidQueryError
-from .protocol.yaml_io import dump_response, load_transform_request
+from .protocol.yaml_io import load_transform_request, respond
 from .session import engine_session
 
 
 def main(request_path: str, response_path: str) -> int:
-    request = load_transform_request(request_path)
-    spark = engine_session(app_name="kamu-engine-spark-transform")
-    try:
-        response = execute_transform(spark, request)
-    except InvalidQueryError as e:
-        with open(response_path, "w") as f:
-            yaml.safe_dump({"kind": "invalidQuery", "message": str(e)}, f)
-        return 1
-    except Exception as e:  # noqa: BLE001 — protocol requires a response file
-        with open(response_path, "w") as f:
-            yaml.safe_dump(
-                {"kind": "internalError", "message": str(e), "backtrace": traceback.format_exc()},
-                f,
-            )
-        return 2
-    dump_response(response, response_path)
-    return 0
+    return respond(
+        request_path,
+        response_path,
+        load_transform_request,
+        lambda request: execute_transform(
+            engine_session(app_name="kamu-engine-spark-transform"), request
+        ),
+    )
 
 
 if __name__ == "__main__":

@@ -5,11 +5,12 @@ opaque checkpoint archives.
 """
 
 import shutil
+from dataclasses import replace
 
 import pyarrow.parquet as pq
 import pytest
 
-from kamu_engine_flink_spark.adapter import EngineAdapter
+from kamu_engine_flink_spark.adapter import EngineAdapter, launch_app
 from kamu_engine_flink_spark.protocol.model import (
     DatasetVocabulary,
     SqlQueryStep,
@@ -75,3 +76,32 @@ def test_adapter_checkpoint_tar_roundtrip(tmp_path):
         assert out.column("price").to_pylist() == [110]
     finally:
         shutil.rmtree(adapter.workspace, ignore_errors=True)
+
+
+def test_in_process_adapter_answers_invalid_query(spark, tmp_path):
+    """The in-process path maps errors like transform_app: a query whose
+    output has no event_time is `invalidQuery`, not an internal error."""
+    slice1 = str(tmp_path / "slice1.parquet")
+    ticker_slice(slice1, [(0, 0, ts(1), ts(1, 1), "A", 10)])
+    request = replace(
+        _request(tmp_path, 1, [slice1], slice1, 0),
+        transform=Transform(queries=[SqlQueryStep(query="SELECT symbol FROM `in`")]),
+    )
+    adapter = EngineAdapter(workspace=str(tmp_path / "ws"), in_process=True)
+    resp, _ = adapter.execute_transform(request)
+    assert resp["kind"] == "invalidQuery"
+    assert "event_time" in resp["message"]
+
+
+def test_launch_without_response_is_internal_error(tmp_path):
+    """An engine process that dies before it writes its response (here:
+    its response directory does not exist) answers `internalError` with
+    its stderr, for the adapter and the socket server alike."""
+    resp = launch_app(
+        "kamu_engine_flink_spark.transform_app",
+        str(tmp_path / "missing.yaml"),
+        str(tmp_path / "no-such-dir" / "response.yaml"),
+    )
+    assert resp["kind"] == "internalError"
+    assert resp["message"].startswith("engine produced no response (rc=")
+    assert "FileNotFoundError" in resp["backtrace"]

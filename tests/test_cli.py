@@ -109,3 +109,16 @@ def test_raw_query_cli(tmp_path):
     assert resp["num_records"] == 1
     out = pq.read_table(str(tmp_path / "raw-out.parquet"))
     assert out.column("price2").to_pylist() == [40]
+
+
+def test_transform_app_answers_a_request_that_does_not_parse(tmp_path):
+    """A request YAML that does not parse still gets a typed response
+    document. The load fails before any Spark session is built."""
+    from kamu_engine_flink_spark import transform_app
+
+    req_path = tmp_path / "req.yaml"
+    req_path.write_text("transform: [unclosed\n")
+    resp_path = tmp_path / "resp.yaml"
+    assert transform_app.main(str(req_path), str(resp_path)) == 1
+    resp = yaml.safe_load(resp_path.read_text())
+    assert resp["kind"] == "invalidRequest"

@@ -47,3 +47,24 @@ def test_every_package_def_and_module_is_reached_outside_tests():
             if all(site == (path, node.lineno) for site in sites.get(node.name, [])):
                 unreached.append(f"{rel}:{node.name}")
     assert unreached == []
+
+
+def test_no_module_defines_a_top_level_name_twice():
+    """A second top-level def, class or assignment of one name silently
+    replaces the first at import, leaving the first as dead code."""
+    twice = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        seen: set[str] = set()
+        for node in ast.parse(path.read_text()).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [t.id for t in targets if isinstance(t, ast.Name)]
+            else:
+                continue
+            for name in names:
+                if name in seen:
+                    twice.append(f"{path.relative_to(ROOT)}:{node.lineno}:{name}")
+                seen.add(name)
+    assert twice == []

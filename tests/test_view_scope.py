@@ -1,13 +1,15 @@
-"""View-restore contract of the join executors' deferred `_view_scope`.
+"""Temp-view contract of `StepContext.sql`, the one way an executor runs
+SQL over substituted inputs.
 
-Round-13 optimization: the join executors defer temp-view restoration to
-one scope exit instead of restoring after every `_run_with_views` call
-(py4j churn — a FULL regular join makes 7 calls per invocation). These
-tests pin the contract the deferral must keep: after the executor step
-returns, every ctx view name resolves to its ORIGINAL slice binding (a
-downstream chained step re-reading a raw input view sees the slice, not a
-leftover branch binding), and a self-join's private right-side temp name
-is dropped.
+An executor binds its own frames under view names for one query (a join
+branch's slice against state, a window's closed rows, an internal
+re-projection view); consecutive calls over the same names re-register
+nothing else, and the engine releases every bound name after the step.
+These tests pin what that release must keep: after the step, every input
+view name resolves to its ORIGINAL slice (a downstream step re-reading a
+raw input sees the slice, not a leftover binding), an executor's private
+names are dropped, and an invocation leaves the session's temp-view set
+as it found it.
 """
 
 import pyarrow.parquet as pq
@@ -196,3 +198,127 @@ def test_topn_leaves_no_internal_views(spark, tmp_path):
             if re.fullmatch(r"__.*topn.*", t.name)
         ]
         assert left == [], form
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+_TOPN = (
+    "SELECT event_time, symbol, price, place FROM (SELECT row_number() OVER "
+    "(PARTITION BY symbol ORDER BY price DESC) AS place, event_time, symbol, "
+    "price FROM events) WHERE place <= 2"
+)
+_AGG_OTHER = (
+    "SELECT max(event_time) AS event_time, symbol, sum(price) AS rate "
+    "FROM other GROUP BY symbol"
+)
+# Each executor kind that binds views, as (steps before the read-back,
+# temporal tables). The kind's own step is aliased `k` and reads `events`.
+BINDING_KINDS = {
+    "regular_join": ([(
+        "SELECT e.event_time, e.symbol, e.price, o.price AS other_price "
+        "FROM events e FULL JOIN other o ON e.symbol = o.symbol", "k")], []),
+    "interval_join": ([(
+        "SELECT e.event_time, e.symbol, e.price, o.price AS other_price "
+        "FROM events e LEFT JOIN other o ON e.symbol = o.symbol "
+        "AND o.event_time BETWEEN e.event_time AND e.event_time + INTERVAL '1' DAY",
+        "k")], []),
+    "changelog_join": ([(_AGG_OTHER, "g"), (
+        "SELECT e.event_time, e.symbol, g.rate FROM events e "
+        "JOIN g ON e.symbol = g.symbol", "k")], []),
+    "temporal_join": ([(
+        "SELECT e.event_time, e.symbol, e.price, o.price AS rate FROM events e "
+        "JOIN other FOR SYSTEM_TIME AS OF e.event_time AS o "
+        "ON e.symbol = o.symbol", "k")], [("other", "symbol")]),
+    "changelog_temporal_join": ([(_AGG_OTHER, "rates"), (
+        "SELECT e.event_time, e.symbol, e.price, rt.rate FROM events e "
+        "JOIN rates FOR SYSTEM_TIME AS OF e.event_time AS rt "
+        "ON e.symbol = rt.symbol", "k")], [("rates", "symbol")]),
+    "window_join": ([(
+        "SELECT L.window_start AS event_time, L.symbol, L.price AS a_price, "
+        "R.price AS b_price "
+        "FROM TABLE(TUMBLE(TABLE events, DESCRIPTOR(event_time), INTERVAL '10' MINUTE)) L "
+        "JOIN TABLE(TUMBLE(TABLE other, DESCRIPTOR(event_time), INTERVAL '10' MINUTE)) R "
+        "ON L.window_start = R.window_start AND L.symbol = R.symbol", "k")], []),
+    "tumble": ([(
+        "SELECT TUMBLE_START(event_time, INTERVAL '1' HOUR) AS event_time, symbol, "
+        "avg(price) AS avg_price FROM events "
+        "GROUP BY TUMBLE(event_time, INTERVAL '1' HOUR), symbol", "k")], []),
+    "hop": ([(
+        "SELECT HOP_START(event_time, INTERVAL '1' HOUR, INTERVAL '2' HOUR) AS "
+        "event_time, symbol, min(price) AS lo FROM events "
+        "GROUP BY HOP(event_time, INTERVAL '1' HOUR, INTERVAL '2' HOUR), symbol",
+        "k")], []),
+    "cumulate": ([(
+        "SELECT CUMULATE_END(event_time, INTERVAL '1' HOUR, INTERVAL '4' HOUR) AS "
+        "event_time, symbol, avg(price) AS avg_price FROM events "
+        "GROUP BY CUMULATE(event_time, INTERVAL '1' HOUR, INTERVAL '4' HOUR), symbol",
+        "k")], []),
+    "session": ([(
+        "SELECT SESSION_START(event_time, INTERVAL '2' HOUR) AS event_time, "
+        "SESSION_END(event_time, INTERVAL '2' HOUR) AS sess_end, "
+        "symbol, count(*) AS n FROM events "
+        "GROUP BY SESSION(event_time, INTERVAL '2' HOUR), symbol", "k")], []),
+    "over": ([(
+        "SELECT event_time, symbol, price, sum(price) OVER (PARTITION BY symbol "
+        "ORDER BY event_time RANGE BETWEEN INTERVAL '2' MINUTE PRECEDING AND "
+        "CURRENT ROW) AS s FROM events", "k")], []),
+    "unbounded": ([(
+        "SELECT max(event_time) AS event_time, symbol, avg(price) AS avg_price "
+        "FROM events GROUP BY symbol", "k")], []),
+    "setop_nested": ([(
+        "SELECT symbol FROM events UNION SELECT symbol FROM other "
+        "EXCEPT SELECT symbol FROM other", "k")], []),
+    "match_recognize": ([(
+        """SELECT * FROM events MATCH_RECOGNIZE (
+  PARTITION BY symbol ORDER BY event_time
+  MEASURES LAST(C.event_time) AS event_time, COUNT(B.*) AS n_mid
+  ONE ROW PER MATCH AFTER MATCH SKIP PAST LAST ROW
+  PATTERN (A B* C)
+  DEFINE A AS A.price < 10, B AS B.price >= 10 AND B.price < 100,
+    C AS C.price >= 100
+)""", "k")], []),
+    "topn": ([(_TOPN, "k")], []),
+}
+READBACK_EVENTS = "SELECT event_time, symbol, price FROM events"
+_EVENTS = [
+    [(0, 0, ts(5), ts(1, 0, 1), "A", 5), (1, 0, ts(5), ts(1, 0, 2), "A", 50),
+     (2, 0, ts(5), ts(1, 0, 3), "A", 150), (3, 0, ts(5), ts(1, 1), "B", 20)],
+    [(4, 0, ts(6), ts(2, 0, 1), "A", 3), (5, 0, ts(6), ts(2, 0, 2), "B", 120)],
+]
+_OTHER = [
+    [(0, 0, ts(5), ts(1), "A", 7), (1, 0, ts(5), ts(1, 0, 5), "B", 8)],
+    [(2, 0, ts(6), ts(2), "A", 9)],
+]
+
+
+@pytest.mark.parametrize("kind", sorted(BINDING_KINDS))
+def test_executor_leaves_the_temp_view_set_as_found(spark, tmp_path, kind):
+    """Two invocations of the kind on the shared session: the set of temp
+    views afterwards equals the set before, and a later step re-reading
+    the raw input `events` gets its full slice."""
+    steps, temporal = BINDING_KINDS[kind]
+    runner = TransformRunner(
+        spark, tmp_path, queries=[*steps, (READBACK_EVENTS, None)],
+        temporal_tables=temporal,
+    )
+    before = _temp_views(spark)
+    for inv, (events_rows, other_rows) in enumerate(zip(_EVENTS, _OTHER)):
+        events = str(tmp_path / f"events{inv}.parquet")
+        other = str(tmp_path / f"other{inv}.parquet")
+        ticker_slice(events, events_rows)
+        ticker_slice(other, other_rows)
+        wm = ts(1 + inv, 12)
+        _, out = runner.run(
+            [
+                {"alias": "events", "data_paths": [events], "schema_file": events,
+                 "watermark": wm},
+                {"alias": "other", "data_paths": [other], "schema_file": other,
+                 "watermark": wm},
+            ],
+            system_time=ts(5 + inv),
+        )
+        got = sorted((r["symbol"], r["price"]) for r in pq.read_table(out).to_pylist())
+        assert got == sorted((r[4], r[5]) for r in events_rows), inv
+        assert _temp_views(spark) == before, inv
