@@ -78,9 +78,17 @@ def test_adapter_checkpoint_tar_roundtrip(tmp_path):
         shutil.rmtree(adapter.workspace, ignore_errors=True)
 
 
-def test_in_process_adapter_answers_invalid_query(spark, tmp_path):
+def test_in_process_adapter_answers_invalid_query(spark, tmp_path, monkeypatch):
     """The in-process path maps errors like transform_app: a query whose
     output has no event_time is `invalidQuery`, not an internal error."""
+    # The in-process path calls engine_session(), whose getOrCreate()
+    # re-applies the engine defaults to the running session. Keep the
+    # shared session's partition count: every later test (and the state
+    # bucket count of every relation they create) runs on it.
+    monkeypatch.setattr(
+        "kamu_engine_flink_spark.session._DEFAULT_SHUFFLE_PARTITIONS",
+        spark.conf.get("spark.sql.shuffle.partitions"),
+    )
     slice1 = str(tmp_path / "slice1.parquet")
     ticker_slice(slice1, [(0, 0, ts(1), ts(1, 1), "A", 10)])
     request = replace(
