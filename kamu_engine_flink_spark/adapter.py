@@ -104,14 +104,20 @@ class EngineAdapter:
         dump_request(request, req_path)
 
         if self.in_process:
+            from pyspark.sql import SparkSession
+
             from .engine.transform import execute_transform
             from .session import engine_session
 
+            # A running session keeps its caller's settings: building one
+            # through engine_session() would re-apply the engine defaults.
             respond(
                 req_path,
                 resp_path,
                 load_transform_request,
-                lambda r: execute_transform(engine_session(), r),
+                lambda r: execute_transform(
+                    SparkSession.getActiveSession() or engine_session(), r
+                ),
             )
             with open(resp_path) as f:
                 response = yaml.safe_load(f)

@@ -77,6 +77,7 @@ from typing import Any
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from ..plans.classify import mask_sql, matching_paren, split_top_level
 from ..protocol.model import InvalidQueryError
 from .base import (
     SEQ_INPUT,
@@ -102,23 +103,6 @@ _MEASURES_RE = re.compile(
     re.IGNORECASE | re.DOTALL,
 )
 _PATTERN_KW_RE = re.compile(r"\bPATTERN\s*\(", re.IGNORECASE)
-
-
-def _extract_pattern(body: str) -> str | None:
-    """Balanced-paren extraction of the PATTERN (...) text — alternation
-    groups nest parens, so a [^)]* regex would stop early."""
-    m = _PATTERN_KW_RE.search(body)
-    if not m:
-        return None
-    depth, start = 1, m.end()
-    for i in range(start, len(body)):
-        if body[i] == "(":
-            depth += 1
-        elif body[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return body[start:i]
-    return None
 _WITHIN_RE = re.compile(
     r"WITHIN\s+INTERVAL\s+'(?P<n>\d+)'\s+(?P<unit>\w+)", re.IGNORECASE
 )
@@ -142,23 +126,6 @@ _AFTER_RE = re.compile(
     r"AFTER\s+MATCH\s+SKIP\s+(?!PAST\s+LAST\s+ROW|TO\s+NEXT\s+ROW|TO\s+(?:FIRST|LAST)\b)",
     re.IGNORECASE,
 )
-
-
-def _split_top_level(s: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return [p.strip() for p in out if p.strip()]
 
 
 QUANT_MAP = {
@@ -539,8 +506,8 @@ def parse_match_recognize(sql: str):
     if not mm:
         raise InvalidQueryError("MATCH_RECOGNIZE requires a MEASURES clause")
     measures = []
-    for item in _split_top_level(mm.group("body")):
-        im = _MEASURE_RE.match(item.strip())
+    for item in filter(None, split_top_level(mm.group("body"))):
+        im = _MEASURE_RE.match(item)
         if not im:
             raise InvalidQueryError(
                 f"MATCH_RECOGNIZE: unsupported measure {item!r} (supported: "
@@ -566,9 +533,13 @@ def parse_match_recognize(sql: str):
         else:
             fn, var, col = "last", im.group("var2"), im.group("col2").strip("`")
         measures.append((fn, var, col, im.group("alias").strip("`"), mode, off))
-    pat_text = _extract_pattern(body)
-    if pat_text is None:
+    # Alternation groups nest parentheses inside PATTERN (...).
+    masked = mask_sql(body)
+    patm = _PATTERN_KW_RE.search(masked)
+    close = matching_paren(masked, patm.end() - 1) if patm else None
+    if close is None:
         raise InvalidQueryError("MATCH_RECOGNIZE requires a PATTERN clause")
+    pat_text = body[patm.end() : close]
     pat_text, excluded_vars = _split_exclusions(pat_text)
     elements = _parse_pattern(pat_text)
     if not elements:
@@ -586,8 +557,8 @@ def parse_match_recognize(sql: str):
     pat_vars = {v for vars_, *_ in elements for v in vars_}
     lags: set[tuple[str, int]] = set()  # (column, offset) pairs PREV needs
     if dm:
-        for item in _split_top_level(dm.group("body")):
-            dm2 = re.match(r"([A-Za-z_]\w*)\s+AS\s+(.*)$", item.strip(),
+        for item in filter(None, split_top_level(dm.group("body"))):
+            dm2 = re.match(r"([A-Za-z_]\w*)\s+AS\s+(.*)$", item,
                            re.IGNORECASE | re.DOTALL)
             if not dm2:
                 raise InvalidQueryError(f"MATCH_RECOGNIZE: bad DEFINE item {item!r}")
@@ -1319,7 +1290,11 @@ def match_recognize_batch(spark, df, sql: str):
     if spec["proj"] != "*":
         view_name = "__mr_batch"
         matches.createOrReplaceTempView(view_name)
-        return spark.sql(f"SELECT {spec['proj']} FROM {view_name}")
+        try:
+            # Analysis resolves the view, so the result outlives it.
+            return spark.sql(f"SELECT {spec['proj']} FROM {view_name}")
+        finally:
+            spark.catalog.dropTempView(view_name)
     return matches
 
 

@@ -202,7 +202,6 @@ def _exec_flat(
     any_updating = False
     for i, branch_sql in enumerate(branches):
         b = branch_sql.strip()
-        b = C._strip_outer_parens(b)  # matched strip: `(A) x (B)` survives
         from ..plans.dialect import _rewrite_unnest
 
         if C.classify(b, known) != C.MAP or re.search(

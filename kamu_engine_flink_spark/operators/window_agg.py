@@ -33,6 +33,7 @@ from ..plans.classify import (
     referenced_views,
 )
 from ..plans.dialect import rewrite_cumulate_as_step_tumble
+from ..protocol.model import InvalidQueryError
 from .base import StepContext, StepResult
 
 
@@ -80,10 +81,12 @@ def _ordered_result(ctx: StepContext, src: str, result: DataFrame, new_wm) -> St
 def execute_window_agg(ctx: StepContext, sql: str) -> StepResult:
     spec = parse_tumble(sql)
     if spec is None:
-        raise ValueError("window_agg executor requires a TUMBLE clause")
+        raise InvalidQueryError("window_agg executor requires a TUMBLE clause")
     refs = referenced_views(sql, set(ctx.views))
     if len(refs) != 1:
-        raise ValueError(f"tumbling aggregation must read exactly one view, got {refs}")
+        raise InvalidQueryError(
+            f"tumbling aggregation must read exactly one view, got {refs}"
+        )
     src = refs[0]
     prev_wm = ctx.prev_wms.get(src)
     new_wm = ctx.new_wms.get(src)
@@ -222,7 +225,7 @@ def _merge_partials(
 def _single_source(ctx: StepContext, sql: str, what: str) -> str:
     refs = referenced_views(sql, set(ctx.views))
     if len(refs) != 1:
-        raise ValueError(f"{what} must read exactly one view, got {refs}")
+        raise InvalidQueryError(f"{what} must read exactly one view, got {refs}")
     return refs[0]
 
 
@@ -281,9 +284,9 @@ def execute_hop_agg(ctx: StepContext, sql: str) -> StepResult:
     TUMBLE_START)."""
     spec = parse_hop(sql)
     if spec is None:
-        raise ValueError("hop_agg executor requires a HOP clause")
+        raise InvalidQueryError("hop_agg executor requires a HOP clause")
     if spec.start_alias is None and spec.end_alias is None:
-        raise ValueError(
+        raise InvalidQueryError(
             "incremental HOP aggregation requires HOP_START(...) AS <alias> or "
             "HOP_END(...) AS <alias> in the projection"
         )
@@ -371,7 +374,7 @@ def execute_cumulate_agg(ctx: StepContext, sql: str) -> StepResult:
     so results are attributable to windows."""
     spec = parse_cumulate(sql)
     if spec is None:
-        raise ValueError("cumulate_agg executor requires a CUMULATE clause")
+        raise InvalidQueryError("cumulate_agg executor requires a CUMULATE clause")
     src = _single_source(ctx, sql, "cumulative aggregation")
     prev_wm = ctx.prev_wms.get(src)
     new_wm = ctx.new_wms.get(src)
@@ -394,7 +397,7 @@ def execute_cumulate_agg(ctx: StepContext, sql: str) -> StepResult:
     mspec = parse_mergeable_cumulate_aggs(sql)
     if mspec is not None and not ctx.state.has_df(buffer_name):
         if mspec.start_alias is None and mspec.end_alias is None:
-            raise ValueError(
+            raise InvalidQueryError(
                 "incremental CUMULATE aggregation requires CUMULATE_START(...) AS "
                 "<alias> or CUMULATE_END(...) AS <alias> in the projection"
             )
@@ -495,7 +498,7 @@ def execute_cumulate_agg(ctx: StepContext, sql: str) -> StepResult:
     # Raw-row fallback: arbitrary aggregates via the dialect's explode
     # rewrite over the full buffer.
     if spec.end_alias is None:
-        raise ValueError(
+        raise InvalidQueryError(
             "CUMULATE with non-mergeable aggregates requires CUMULATE_END(...) AS "
             "<alias> in the projection"
         )
@@ -526,14 +529,14 @@ def execute_session_agg(ctx: StepContext, sql: str) -> StepResult:
     sessions."""
     spec = parse_session(sql)
     if spec is None:
-        raise ValueError("session_agg executor requires a SESSION clause")
+        raise InvalidQueryError("session_agg executor requires a SESSION clause")
     if spec.end_alias is None:
-        raise ValueError(
+        raise InvalidQueryError(
             "incremental SESSION aggregation requires SESSION_END(...) AS <alias> "
             "in the projection"
         )
     if spec.group_keys is None:
-        raise ValueError(
+        raise InvalidQueryError(
             "incremental SESSION aggregation supports only plain column group keys"
         )
     src = _single_source(ctx, sql, "session aggregation")

@@ -203,46 +203,76 @@ def select_count(sql: str) -> int:
     return len(_SELECT_WORD_RE.findall(sql))
 
 
+# A quoted run, to its closing quote or the end of the text ('' escapes
+# a quote inside a string literal); the one group that matches is the
+# contents.
+_QUOTED_RE = re.compile(r"'((?:[^']|'')*)'?|\"([^\"]*)\"?|`([^`]*)`?")
+_PAREN_RE = re.compile(r"[()]")
+
+
+def _blank_quoted(m: re.Match) -> str:
+    body = m[m.lastindex]
+    return m[0][0] + " " * len(body) + m[0][1 + len(body) :]
+
+
 def mask_sql(sql: str, parens: bool = False) -> str:
     """Same-length copy of `sql` with string-literal and backquoted
-    contents blanked out — and, with parens=True, everything inside
-    parentheses as well — so regex scans see only top-level SQL tokens.
+    contents blanked out — and, with parens=True, every parenthesized
+    group (parentheses included; an unclosed one to the end) and every
+    stray `)` as well — so regex scans see only top-level SQL tokens.
     An `EXTRACT(YEAR FROM x)` no longer exposes a FROM, a literal
     `'where it is'` no longer exposes a WHERE, and positions transfer
-    1:1 back to the original string."""
-    out = list(sql)
-    depth = 0
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch in ("'", '"', "`"):
-            j = i + 1
-            while j < n:
-                if sql[j] == ch:
-                    if ch == "'" and j + 1 < n and sql[j + 1] == "'":
-                        j += 2  # doubled-quote escape
-                        continue
-                    break
-                j += 1
-            for k in range(i + 1, min(j, n)):
-                out[k] = " "
-            if parens and depth > 0:
-                out[i] = " "
-                if j < n:
-                    out[j] = " "
-            i = j + 1
-            continue
-        if parens:
-            if ch == "(":
-                depth += 1
-                out[i] = " "
-            elif ch == ")":
-                depth = max(0, depth - 1)
-                out[i] = " "
-            elif depth > 0:
-                out[i] = " "
-        i += 1
+    1:1 back to the original string.
+
+    This, `split_top_level` and `matching_paren` are the one scanner for
+    top-level SQL text: every other module scans through them."""
+    masked = _QUOTED_RE.sub(_blank_quoted, sql)
+    if not parens:
+        return masked
+    out, end = list(masked), 0
+    for m in _PAREN_RE.finditer(masked):
+        if m.start() < end:
+            continue  # inside a group already blanked
+        close = matching_paren(masked, m.start()) if m[0] == "(" else m.start()
+        end = len(masked) if close is None else close + 1
+        out[m.start() : end] = " " * (end - m.start())
     return "".join(out)
+
+
+def matching_paren(masked: str, open_pos: int) -> int | None:
+    """Position of the `)` that closes the `(` at `open_pos` in `masked`,
+    a `mask_sql` copy of the SQL (so parentheses inside quotes do not
+    count), or None when it never closes."""
+    depth = 0
+    for m in _PAREN_RE.finditer(masked, open_pos):
+        if m[0] == "(":
+            depth += 1
+        else:
+            depth -= 1
+            if depth == 0:
+                return m.start()
+    return None
+
+
+def split_top_level(sql: str, sep: str | re.Pattern = ",") -> list[str | None]:
+    """`sql` split, like `re.split`, on every match of `sep` (a literal
+    string or a compiled regex) that lies outside quotes and outside
+    parentheses, each piece stripped. The separator's groups, if any,
+    come between the pieces as `re.split` puts them."""
+    pattern = re.compile(re.escape(sep)) if isinstance(sep, str) else sep
+    flat, top = mask_sql(sql), mask_sql(sql, parens=True)
+    out, pos = [], 0
+    for m in pattern.finditer(flat):
+        if top[m.start() : m.end()] != flat[m.start() : m.end()]:
+            continue  # inside parentheses
+        out.append(sql[pos : m.start()].strip())
+        out.extend(
+            sql[m.start(g) : m.end(g)] if m.start(g) >= 0 else None
+            for g in range(1, pattern.groups + 1)
+        )
+        pos = m.end()
+    out.append(sql[pos:].strip())
+    return out
 
 
 def _parse_mergeable_aggs(
@@ -273,7 +303,7 @@ def _parse_mergeable_aggs(
     merges: dict[str, str] = {}
     avgs: dict[str, tuple[str, str]] = {}
     new_items: list[str] = []
-    for item in _split_top_level(m.group(1)):
+    for item in split_top_level(m.group(1)):
         pm = proj_re.match(item)
         if pm:
             if pm.group(1).upper() == "START":
@@ -371,7 +401,7 @@ def changelog_fold_slice_sql(core_sql: str, op_col: str) -> str | None:
     items: list[str] = []
     sum_guards: dict[str, str] = {}
     minmax: dict[str, tuple[str, str]] = {}
-    for item in _split_top_level(m.group(1)):
+    for item in split_top_level(m.group(1)):
         am = _SIMPLE_AGG_ITEM_RE.match(item)
         if am:
             fn, arg, alias = am.group(1).lower(), am.group(2), am.group(3)
@@ -461,8 +491,7 @@ def parse_unbounded_aggs(sql: str) -> UnboundedAggSpec | None:
     merge across runs — here it is re-stamped per emission instead)."""
     gm = _GROUP_BY_RE.search(sql)
     if gm and any(
-        not re.fullmatch(r"[`\w.]+", c.strip())
-        for c in _split_top_level(gm.group(1))
+        not re.fullmatch(r"[`\w.]+", c) for c in split_top_level(gm.group(1))
     ):
         return None  # expression group keys — stateless MAP keeps them
     if not gm and not _AGG_CALL_RE.search(sql):
@@ -472,7 +501,7 @@ def parse_unbounded_aggs(sql: str) -> UnboundedAggSpec | None:
         return None
     now_alias = None
     kept: list[str] = []
-    for item in _split_top_level(m.group(1)):
+    for item in split_top_level(m.group(1)):
         nm = _NOW_ITEM_RE.match(item)
         if nm and now_alias is None:
             now_alias = nm.group(1)
@@ -492,7 +521,7 @@ def unbounded_agg_group_cols(sql: str) -> list[str]:
     if not gm:
         return []  # global (keyless) continuous aggregation: one group
     return [
-        c.strip().strip("`").split(".")[-1] for c in _split_top_level(gm.group(1))
+        c.strip("`").split(".")[-1] for c in split_top_level(gm.group(1))
     ]
 
 
@@ -610,23 +639,6 @@ class SessionSpec:
     group_keys: list[str] | None  # non-window GROUP BY columns
 
 
-def _split_top_level(clause: str) -> list[str]:
-    parts, depth, cur = [], 0, []
-    for ch in clause:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur).strip())
-    return parts
-
-
 def parse_hop(sql: str) -> HopSpec | None:
     m = _HOP_RE.search(sql)
     if m:
@@ -691,10 +703,10 @@ def parse_session(sql: str) -> SessionSpec | None:
     keys: list[str] | None = []
     gm = _GROUP_BY_RE.search(sql)
     if gm:
-        for term in _split_top_level(gm.group(1)):
+        for term in split_top_level(gm.group(1)):
             if _SESSION_RE.search(term):
                 continue
-            name = term.strip().strip("`")
+            name = term.strip("`")
             if re.fullmatch(r"[\w.]+", name):
                 keys.append(name.split(".")[-1])
             else:
@@ -1039,45 +1051,6 @@ _SETOP_RE = re.compile(
 )
 
 
-def _strip_outer_parens(s: str) -> str:
-    """Strip enclosing parens only when the FIRST `(` matches the LAST
-    `)` — `(A) UNION (B)` must survive intact. Literal-masked scan."""
-    s = s.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth = 0
-        for i, ch in enumerate(mask_sql(s)):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i != len(s) - 1:
-                    return s
-        s = s[1:-1].strip()
-    return s
-
-
-def _top_level_setops(sql: str):
-    """(op_upper, all_flag, start, end) for every set operator at paren
-    depth 0, scanned on the literal-masked text (parens KEPT so the
-    `(SELECT ...)` branch spelling still matches the lookahead)."""
-    masked = mask_sql(sql)
-    depths, d = [], 0
-    for ch in masked:
-        if ch == "(":
-            depths.append(d)
-            d += 1
-        elif ch == ")":
-            d = max(0, d - 1)
-            depths.append(d)
-        else:
-            depths.append(d)
-    return [
-        (m.group(1).upper(), bool(m.group(2)), m.start(), m.end())
-        for m in _SETOP_RE.finditer(masked)
-        if depths[m.start()] == 0
-    ]
-
-
 def parse_setop(sql: str):
     """Top-level set-operator parse: a NODE `(op, all_flag, [children])`
     or None. Each child is either a leaf SQL string (a plain branch; may
@@ -1097,24 +1070,26 @@ def parse_setop(sql: str):
     children) node: Flink unions changelogs freely, so the executor runs
     the stateful children as sub-steps and forwards every branch's
     changelog through the map executor's changelog union."""
-    found = _top_level_setops(sql)
-    if not found:
-        stripped = _strip_outer_parens(sql)
-        if stripped != sql.strip() and _top_level_setops(stripped):
-            return parse_setop(stripped)
-        return None
-    segs, pos = [], 0
-    for (_, _, s, e) in found:
-        segs.append(sql[pos:s])
-        pos = e
-    segs.append(sql[pos:])
+    node = _setop_operand(sql)
+    return None if isinstance(node, str) else node
 
-    def _operand(seg: str):
-        s = _strip_outer_parens(seg)
-        sub = parse_setop(s)
-        return sub if sub is not None else s
 
-    if not any(not (op == "UNION" and allf) for (op, allf, _, _) in found):
+def _setop_operand(sql: str):
+    """`sql` as a set-operation operand: its parse node, or, when it has
+    no stateful top-level set operator, its text without the parentheses
+    that enclose all of it (`(A) UNION (B)` keeps its own)."""
+    sql = sql.strip()
+    if sql.startswith("(") and matching_paren(mask_sql(sql), 0) == len(sql) - 1:
+        return _setop_operand(sql[1:-1])
+    parts = split_top_level(sql, _SETOP_RE)
+    if len(parts) == 1:
+        return sql
+    segs = parts[::3]
+    found = [
+        (op.upper(), allf is not None)
+        for op, allf in zip(parts[1::3], parts[2::3])
+    ]
+    if not any(not (op == "UNION" and allf) for (op, allf) in found):
         # Every depth-0 operator is UNION ALL — but a PARENTHESIZED
         # segment may hide a stateful sub-chain (`(A EXCEPT B) UNION ALL
         # C`). Decompose each segment first; only when every operand is a
@@ -1122,9 +1097,9 @@ def parse_setop(sql: str):
         # stateful operand anywhere makes the whole chain a UNIONALL
         # changelog-concatenation node, exactly like the unparenthesized
         # `A EXCEPT B UNION ALL C` spelling.
-        operands = [_operand(s) for s in segs]
+        operands = [_setop_operand(s) for s in segs]
         if all(isinstance(o, str) for o in operands):
-            return None  # pure stateless UNION ALL chain
+            return sql  # pure stateless UNION ALL chain
         if re.search(
             r"\b(ORDER\s+BY|LIMIT)\b", mask_sql(sql, parens=True),
             re.IGNORECASE,
@@ -1158,10 +1133,10 @@ def parse_setop(sql: str):
         return (kind, allf, [cur, nxt])
 
     # Pass 1 — INTERSECT (higher precedence) binds adjacent operands.
-    red_operands = [_operand(segs[0])]
+    red_operands = [_setop_operand(segs[0])]
     red_ops: list[tuple[str, bool]] = []
-    for (kind, allf, _, _), seg in zip(found, segs[1:]):
-        nxt = _operand(seg)
+    for (kind, allf), seg in zip(found, segs[1:]):
+        nxt = _setop_operand(seg)
         if kind == "INTERSECT":
             red_operands[-1] = _fold(red_operands[-1], "INTERSECT", allf, nxt)
         else:
@@ -1192,7 +1167,7 @@ def parse_setop(sql: str):
         else:
             cur = _fold(cur, kind, allf, nxt)
     if isinstance(cur, str):  # pragma: no cover — pure-ALL handled above
-        return None
+        return sql
     return cur
 
 

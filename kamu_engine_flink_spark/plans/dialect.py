@@ -76,6 +76,7 @@ import re
 from datetime import datetime
 
 from ..protocol.model import InvalidQueryError
+from .classify import _WINDOW_TVF_RE, mask_sql, matching_paren, split_top_level
 
 _UNIT_MAP = {
     "SECOND": "second",
@@ -111,16 +112,6 @@ _FROM_VIEW_RE = re.compile(
     r"(\bFROM\s+)(`?[\w.]+`?)((?:\s+AS\s+[`\w]+|\s+(?!WHERE\b|GROUP\b|ORDER\b|HAVING\b|LIMIT\b|JOIN\b|LEFT\b|RIGHT\b|INNER\b|CROSS\b|UNION\b)[`\w]+)?)",
     re.IGNORECASE,
 )
-# Flink 1.13+ windowing TVFs: TUMBLE(TABLE t, DESCRIPTOR(ts), size),
-# HOP(TABLE t, DESCRIPTOR(ts), slide, size),
-# CUMULATE(TABLE t, DESCRIPTOR(ts), step, size).
-_WINDOW_TVF_RE = re.compile(
-    r"TABLE\s*\(\s*(TUMBLE|HOP|CUMULATE)\s*\(\s*TABLE\s+([`\w.]+)\s*,"
-    r"\s*DESCRIPTOR\s*\(\s*([`\w.]+)\s*\)\s*,"
-    r"\s*INTERVAL\s+'(\d+)'\s+(\w+)"
-    r"(?:\s*,\s*INTERVAL\s+'(\d+)'\s+(\w+))?\s*\)\s*\)",
-    re.IGNORECASE,
-)
 _TS_PRECISION_RE = re.compile(r"\bTIMESTAMP\s*\(\s*\d\s*\)", re.IGNORECASE)
 # Flink scalar builtins Spark spells differently (README/Flink docs public
 # surface; each maps 1:1 with identical semantics).
@@ -131,55 +122,26 @@ _CURRENT_ROW_TS_RE = re.compile(r"\bCURRENT_ROW_TIMESTAMP\s*\(\s*\)", re.IGNOREC
 _REGEX_META = set(".^$*+?()[]{}|\\")
 
 
-def _split_top_level_args(text: str) -> list[str]:
-    """Split a function-call argument string on top-level commas,
-    respecting nested parens and single-quoted strings."""
-    args, depth, in_str, start = [], 0, False, 0
-    for i, ch in enumerate(text):
-        if in_str:
-            if ch == "'":
-                in_str = False
-        elif ch == "'":
-            in_str = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            args.append(text[start:i].strip())
-            start = i + 1
-    args.append(text[start:].strip())
-    return args
-
-
 def _rewrite_call(sql: str, name: str, repl_fn) -> str:
     """Rewrite every `name(args...)` call (case-insensitive, arguments may
-    nest calls/strings) via repl_fn(list_of_arg_strings) -> replacement."""
+    nest calls/strings) via repl_fn(list_of_arg_strings) -> replacement.
+    A call inside an earlier rewritten call's arguments stays as written."""
     pattern = re.compile(r"\b" + name + r"\s*\(", re.IGNORECASE)
+    masked = mask_sql(sql)
     out, pos = [], 0
-    while True:
-        m = pattern.search(sql, pos)
-        if not m:
-            out.append(sql[pos:])
-            return "".join(out)
-        depth, in_str, i = 1, False, m.end()
-        while i < len(sql) and depth:
-            ch = sql[i]
-            if in_str:
-                in_str = ch != "'"
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        if depth:  # unbalanced — leave untouched, Spark will report it
-            out.append(sql[pos:])
-            return "".join(out)
+    for m in pattern.finditer(masked):
+        if m.start() < pos:
+            continue
+        close = matching_paren(masked, m.end() - 1)
+        if close is None:  # unbalanced — leave untouched, Spark will report it
+            break
         out.append(sql[pos : m.start()])
-        out.append(repl_fn(_split_top_level_args(sql[m.end() : i - 1])))
-        pos = i
+        out.append(repl_fn(split_top_level(sql[m.end() : close])))
+        pos = close + 1
+    out.append(sql[pos:])
+    return "".join(out)
+
+
 _TO_TS_LTZ_RE = re.compile(
     r"\bTO_TIMESTAMP_LTZ\s*\(\s*([^,()]+?)\s*,\s*([03])\s*\)", re.IGNORECASE
 )
@@ -473,8 +435,6 @@ def _unnest_from_tables(sql: str) -> dict:
     scan, so `FROM a, UNNEST(...) u, b` records table b too and the
     unqualified-uniqueness checks below see EVERY referenced table
     (ADVICE r11 + r12)."""
-    from .classify import mask_sql
-
     tables: dict[str, str] = {}
     # The alias group must NOT consume a following keyword — matching
     # `FROM a JOIN b` with alias=JOIN would eat the JOIN token and hide
@@ -504,26 +464,6 @@ def _unnest_from_tables(sql: str) -> dict:
         re.IGNORECASE,
     )
 
-    def _skip_expansion_item(start: int) -> int | None:
-        """Consume `UNNEST(...)`/`LATERAL ...(...)` plus its alias tail
-        starting at `start`; return the position after it, or None if
-        the parens never balance (malformed — abandon this chain)."""
-        p = masked.find("(", start)
-        if p < 0:
-            return None
-        depth = 0
-        while p < len(masked):
-            if masked[p] == "(":
-                depth += 1
-            elif masked[p] == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            p += 1
-        if depth != 0:
-            return None
-        return tail_re.match(masked, p + 1).end()
-
     for lead in re.finditer(r"\b(?:FROM|JOIN)\s+", masked, re.IGNORECASE):
         pos = lead.end()
         while True:
@@ -532,10 +472,13 @@ def _unnest_from_tables(sql: str) -> dict:
                 break
             name = _orig(rm.span(1))
             if name.upper() in ("UNNEST", "LATERAL"):
-                nxt = _skip_expansion_item(rm.start(1))
-                if nxt is None:
+                # Skip `UNNEST(...)`/`LATERAL ...(...)` plus its alias
+                # tail; a call that never closes ends this chain.
+                p = masked.find("(", rm.start(1))
+                close = matching_paren(masked, p) if p >= 0 else None
+                if close is None:
                     break
-                pos = nxt
+                pos = tail_re.match(masked, close + 1).end()
             else:
                 alias = _orig(rm.span(2)) if rm.group(2) else None
                 tables[(alias or name)] = name
@@ -700,30 +643,17 @@ def _rewrite_unnest(sql: str) -> str:
     delegation (TransformEngine.scala:252-262 hands the full query text
     to the Flink parser, which accepts UNNEST).
     """
-    from .classify import mask_sql
-
     while True:
-        m = _UNNEST_LEAD_RE.search(mask_sql(sql))
+        masked = mask_sql(sql)
+        m = _UNNEST_LEAD_RE.search(masked)
         if not m:
             return sql
         lead = m.group(1)
-        # Balanced-paren scan for the array expression (may nest calls).
-        depth, in_str, i = 1, False, m.end()
-        while i < len(sql) and depth:
-            ch = sql[i]
-            if in_str:
-                in_str = ch != "'"
-            elif ch == "'":
-                in_str = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            i += 1
-        if depth:
+        close = matching_paren(masked, m.end() - 1)
+        if close is None:
             return sql  # unbalanced — leave for Spark to report
-        expr = sql[m.end() : i - 1]
-        rest = sql[i:]
+        expr = sql[m.end() : close]
+        rest = sql[close + 1 :]
         ordinality = re.match(r"\s*WITH\s+ORDINALITY\b", rest, re.IGNORECASE)
         if ordinality:
             rest = rest[ordinality.end() :]

@@ -33,6 +33,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
+from .classify import split_top_level
+
 _FROM_RE = re.compile(
     r"^\s*SELECT\s+(?P<proj>.*?)\s+FROM\s+(?P<rest>.*)$",
     re.IGNORECASE | re.DOTALL,
@@ -78,24 +80,6 @@ class _Parsed:
     asofs: list[str | None] = None
 
 
-def _split_top_level_joins(text: str) -> tuple[list[str], list[str]]:
-    """Split on [LEFT|RIGHT|FULL [OUTER]] JOIN outside parentheses;
-    returns (segments, join kinds)."""
-    parts, kinds, depth, last = [], [], 0, 0
-    for m in re.finditer(r"[()]|" + _JOIN_KW_RE.pattern, text, re.IGNORECASE):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            parts.append(text[last : m.start()])
-            kinds.append((m.group(1) or "").upper())
-            last = m.end()
-    parts.append(text[last:])
-    return parts, kinds
-
-
 def _parse(sql: str, known_views: set[str]) -> _Parsed | None:
     if _DECLINE_RE.search(sql):
         return None
@@ -109,7 +93,8 @@ def _parse(sql: str, known_views: set[str]) -> _Parsed | None:
         rest, where = rest[: wm.start()], rest[wm.end() :]
         if _JOIN_SPLIT_RE.search(where):
             return None
-    segs, kinds = _split_top_level_joins(rest)
+    parts = split_top_level(rest, _JOIN_KW_RE)
+    segs, kinds = parts[::2], [(k or "").upper() for k in parts[1::2]]
     if len(segs) < 3:  # FROM source + at least two JOIN segments
         return None
     sm = _SOURCE_RE.match(segs[0])

@@ -78,17 +78,9 @@ def test_adapter_checkpoint_tar_roundtrip(tmp_path):
         shutil.rmtree(adapter.workspace, ignore_errors=True)
 
 
-def test_in_process_adapter_answers_invalid_query(spark, tmp_path, monkeypatch):
+def test_in_process_adapter_answers_invalid_query(spark, tmp_path):
     """The in-process path maps errors like transform_app: a query whose
     output has no event_time is `invalidQuery`, not an internal error."""
-    # The in-process path calls engine_session(), whose getOrCreate()
-    # re-applies the engine defaults to the running session. Keep the
-    # shared session's partition count: every later test (and the state
-    # bucket count of every relation they create) runs on it.
-    monkeypatch.setattr(
-        "kamu_engine_flink_spark.session._DEFAULT_SHUFFLE_PARTITIONS",
-        spark.conf.get("spark.sql.shuffle.partitions"),
-    )
     slice1 = str(tmp_path / "slice1.parquet")
     ticker_slice(slice1, [(0, 0, ts(1), ts(1, 1), "A", 10)])
     request = replace(
@@ -99,6 +91,23 @@ def test_in_process_adapter_answers_invalid_query(spark, tmp_path, monkeypatch):
     resp, _ = adapter.execute_transform(request)
     assert resp["kind"] == "invalidQuery"
     assert "event_time" in resp["message"]
+
+
+def test_in_process_adapter_keeps_the_callers_session_settings(spark, tmp_path):
+    """An in-process invocation runs on the caller's active session as
+    the caller configured it: the engine defaults are not re-applied."""
+    key = "spark.sql.shuffle.partitions"
+    own = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        slice1 = str(tmp_path / "slice1.parquet")
+        ticker_slice(slice1, [(0, 0, ts(1), ts(1, 1), "A", 10)])
+        adapter = EngineAdapter(workspace=str(tmp_path / "ws"), in_process=True)
+        resp, _ = adapter.execute_transform(_request(tmp_path, 1, [slice1], slice1, 0))
+        assert resp["new_offset_interval"] == {"start": 0, "end": 0}
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, own)
 
 
 def test_launch_without_response_is_internal_error(tmp_path):

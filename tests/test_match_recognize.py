@@ -1153,3 +1153,35 @@ def test_no_partition_by_matches_constant_key(spark, tmp_path):
 
     assert len(batch(MR_QUERY)) == 3
     assert batch(no_keys) == batch(MR_QUERY)
+
+
+def test_define_string_literal_with_comma(spark, tmp_path):
+    """A comma inside a DEFINE predicate's string literal does not split
+    the DEFINE list (Flink accepts `A AS A.symbol = 'x,y'`)."""
+    query = """select * from tickers
+MATCH_RECOGNIZE (
+  ORDER BY event_time
+  MEASURES A.price AS start_price, C.price AS end_price,
+    LAST(C.event_time) AS event_time
+  ONE ROW PER MATCH
+  AFTER MATCH SKIP PAST LAST ROW
+  PATTERN (A C)
+  DEFINE A AS A.symbol = 'x,y', C AS C.price >= 100
+)"""
+    runner = TransformRunner(spark, tmp_path, queries=[(query, None)])
+    s1 = str(tmp_path / "in" / "s1.parquet")
+    ticker_slice(
+        s1,
+        [
+            (0, 0, ts(2), ts(1, 0, 1), "x,y", 5),
+            (1, 0, ts(2), ts(1, 0, 2), "x,y", 120),
+            (2, 0, ts(2), ts(1, 0, 3), "B", 5),
+            (3, 0, ts(2), ts(1, 0, 4), "B", 130),
+            (4, 0, ts(2), ts(1, 0, 5), "x,y", 7),
+            (5, 0, ts(2), ts(1, 0, 6), "x,y", 150),
+        ],
+    )
+    _, out = runner.run([_input(s1, ts(1, 0, 10))], system_time=ts(2))
+    assert [
+        (r["start_price"], r["end_price"]) for r in pq.read_table(out).to_pylist()
+    ] == [(5, 120), (7, 150)]

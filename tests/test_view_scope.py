@@ -322,3 +322,39 @@ def test_executor_leaves_the_temp_view_set_as_found(spark, tmp_path, kind):
         got = sorted((r["symbol"], r["price"]) for r in pq.read_table(out).to_pylist())
         assert got == sorted((r[4], r[5]) for r in events_rows), inv
         assert _temp_views(spark) == before, inv
+
+
+def test_raw_match_recognize_leaves_the_temp_view_set_as_found(spark, tmp_path):
+    """The raw-query matcher's projection view is dropped once the
+    projection is analyzed."""
+    from kamu_engine_flink_spark.engine.raw_query import execute_raw_query
+    from kamu_engine_flink_spark.protocol.model import (
+        RawQueryRequest,
+        SqlQueryStep,
+        Transform,
+    )
+
+    in_path = str(tmp_path / "input.parquet")
+    ticker_slice(
+        in_path,
+        [(0, 0, ts(5), ts(1), "A", 5), (1, 0, ts(5), ts(2), "A", 120)],
+    )
+    query = """SELECT symbol, event_time FROM input
+MATCH_RECOGNIZE (
+  PARTITION BY symbol
+  ORDER BY event_time
+  MEASURES LAST(C.event_time) AS event_time
+  PATTERN (A C)
+  DEFINE A AS A.price < 10, C AS C.price >= 100
+)"""
+    before = _temp_views(spark)
+    resp = execute_raw_query(
+        spark,
+        RawQueryRequest(
+            input_data_paths=[in_path],
+            transform=Transform(queries=[SqlQueryStep(query=query)]),
+            output_data_path=str(tmp_path / "out.parquet"),
+        ),
+    )
+    assert resp.num_records == 1
+    assert _temp_views(spark) == before

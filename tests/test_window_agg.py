@@ -798,3 +798,66 @@ def test_multi_unit_calendar_tumble_rejected(spark, tmp_path):
 
     with pytest.raises(InvalidQueryError, match="INTERVAL '1' MONTH"):
         rq("SELECT TUMBLE_START(et, INTERVAL '2' MONTH) FROM t GROUP BY TUMBLE(et, INTERVAL '2' MONTH)")
+
+
+def test_hop_without_window_alias_answers_invalid_query(spark, tmp_path):
+    """A HOP aggregation that projects neither HOP_START nor HOP_END is a
+    user-query error: `invalidQuery`, exit 1, like the reference's
+    InvalidQuery response."""
+    from dataclasses import replace
+
+    import yaml
+
+    from kamu_engine_flink_spark.engine.transform import execute_transform
+    from kamu_engine_flink_spark.protocol.model import SqlQueryStep, Transform
+    from kamu_engine_flink_spark.protocol.yaml_io import (
+        dump_request,
+        load_transform_request,
+        respond,
+    )
+
+    from .test_adapter import _request
+
+    slice1 = str(tmp_path / "slice1.parquet")
+    ticker_slice(slice1, [(0, 0, ts(1), ts(1, 1), "A", 10)])
+    query = (
+        "SELECT symbol, count(*) AS n FROM `in` GROUP BY symbol, "
+        "HOP(event_time, INTERVAL '1' HOUR, INTERVAL '2' HOUR)"
+    )
+    request = replace(
+        _request(tmp_path, 1, [slice1], slice1, 0),
+        transform=Transform(queries=[SqlQueryStep(query=query)]),
+        new_checkpoint_path=str(tmp_path / "cp"),
+    )
+    req_path, resp_path = str(tmp_path / "request.yaml"), str(tmp_path / "response.yaml")
+    dump_request(request, req_path)
+    code = respond(
+        req_path, resp_path, load_transform_request,
+        lambda r: execute_transform(spark, r),
+    )
+    with open(resp_path) as f:
+        resp = yaml.safe_load(f)
+    assert (code, resp["kind"]) == (1, "invalidQuery")
+    assert "HOP_START" in resp["message"]
+
+
+def test_projected_literal_with_comma_is_emitted_verbatim(spark, tmp_path):
+    """A comma inside a projected string literal is not a select-list
+    separator: the accumulator path's slice SQL (avg split into its
+    sum/count partials) keeps the literal, and it reaches the output
+    unchanged."""
+    query = (
+        "SELECT TUMBLE_START(event_time, INTERVAL '1' DAY) AS event_time, "
+        "'x,y' AS tag, avg(price) AS avg_price FROM `in` "
+        "GROUP BY TUMBLE(event_time, INTERVAL '1' DAY)"
+    )
+    runner = TransformRunner(spark, tmp_path, queries=[(query, None)])
+    s1 = str(tmp_path / "in" / "s1.parquet")
+    ticker_slice(s1, [(0, 0, ts(5), ts(1, 1), "A", 10), (1, 0, ts(5), ts(1, 2), "B", 20)])
+    _, out = runner.run(
+        [{"alias": "in", "data_paths": [s1], "schema_file": s1, "watermark": ts(2)}],
+        system_time=ts(10),
+    )
+    assert [(r["tag"], r["avg_price"]) for r in pq.read_table(out).to_pylist()] == [
+        ("x,y", 15.0)
+    ]
